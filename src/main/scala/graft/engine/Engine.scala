@@ -572,10 +572,6 @@ final class Engine(root: SparkSession) {
       statements.entrySet().asScala.filter(_.getValue.session eq s)
         .map(_.getKey).toSeq.foreach(statements.remove)
       graft.operators.OperatorCache.release(s)
-      // drop the session's cached CC child session too (r19): weak keys
-      // alone cannot promise collection while Spark internals reference
-      // the closed parent, so the engine evicts deterministically here
-      graft.operators.Dedup.releaseLoopSession(s)
     }
   }
 

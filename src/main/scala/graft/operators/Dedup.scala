@@ -21,129 +21,45 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  /** One AQE-off child session per caller session for the iterative CC
-    * loops' generic DataFrame path (see [[starLoopDf]]) — session-state
-    * init is ~0.5 s, so a fresh newSession per call would eat the
-    * latency the child session exists to remove. WEAK KEYS (r19, the
-    * r18 verdict's leak): a long-lived multi-session service creates
-    * one parent session per client, and a strong map entry would pin
-    * every closed parent's SessionState (plus its child's) forever.
-    * `newSession` children hold the SparkContext and SharedState but
-    * NOT the parent session, so once the engine drops a closed parent
-    * the entry is GC-collectible. Synchronized: WeakHashMap is not
-    * thread-safe (the fine-grained per-loop lock is the child session
-    * itself, inside [[starLoopDf]]). */
-  private val loopSessions = new java.util.WeakHashMap[
-    org.apache.spark.sql.SparkSession, org.apache.spark.sql.SparkSession]()
-
-  private def loopSessionFor(parent: org.apache.spark.sql.SparkSession)
-      : org.apache.spark.sql.SparkSession = loopSessions.synchronized {
-    var s = loopSessions.get(parent)
-    if (s == null) {
-      s = parent.newSession()
-      s.conf.set("spark.sql.adaptive.enabled", "false")
-      loopSessions.put(parent, s)
-    }
-    s
-  }
-
-  /** Deterministic eviction for the engine's session lifecycle (the GC
-    * backstop above is not enough on its own: live Spark internals can
-    * reference a closed parent session for an unbounded time, e.g.
-    * thread-locals on pool threads). [[graft.engine.Engine.closeSession]]
-    * calls this next to its OperatorCache release, so a service's
-    * child-session footprint returns to baseline when the client
-    * session closes. Safe while a concurrent loop of the same parent
-    * runs: that loop holds its own reference to the child; a LATER call
-    * on the same parent just pays one fresh newSession. */
-  def releaseLoopSession(parent: org.apache.spark.sql.SparkSession): Unit =
-    loopSessions.synchronized { loopSessions.remove(parent); () }
-
-  /** Test hook: live child-session entries (collected parents pruned). */
-  private[graft] def loopSessionCount: Int =
-    loopSessions.synchronized { loopSessions.size }
-
   /** Candidate pairs from an exploded (id, band, key) table, with a skew
     * guard: a bucket of m members normally yields m(m-1)/2 candidates, so
     * an adversarial corpus (everything identical) turns one bucket into a
     * quadratic blowup. Buckets larger than `maxBucket` instead emit a
     * min-id STAR — each member paired with the bucket's min id: O(m)
-    * candidates, connectivity preserved for [[clusterPairs]], and every
-    * emitted pair still passes the exact verification downstream. Below
-    * the cap, semantics are unchanged (all in-bucket pairs).
+    * candidates, connectivity preserved for [[clusterPairsStar]], and
+    * every emitted pair still passes the exact verification downstream.
+    * Below the cap, semantics are unchanged (all in-bucket pairs).
     *
-    * Shape: ONE join, with the guard fused into its left side. Bucket
-    * count and min id are WINDOW functions over (band, key) — computed
-    * on the same hash-partitioning the bucket join needs — and the
-    * left side keeps small-bucket rows plus ONLY the hub (min-id) row
-    * of each whale bucket, so oversized buckets enter the join with a
-    * single build row and can never go quadratic. The right side is
-    * the RAW banded table: no window, no filter — when the left side
-    * fits a broadcast (AQE decides) the right side streams with zero
-    * exchanges, so the whole candidate step costs one shuffle of bare
-    * (id, band, key) triples. The pair predicate dispatches per row:
-    * small buckets emit `a.id < b.id` (all in-bucket pairs, each
-    * once), whale hubs emit `a.id != b.id` (the min-id star, each
-    * member once, and `hub < member` holds by construction). Earlier
-    * formulations paid more: a count/min HashAggregate directory +
-    * left-anti fence + star inner join priced an always-on ~1.2s even
-    * with zero whales (VERDICT r4: 4.9× the unguarded baseline), and
-    * a three-branch window form before this one evaluated the banded
-    * exchange 3× because AQE would not reuse the identical stages. A
-    * still-earlier TypedImperativeAggregate that collected bucket ids
-    * in-row fell back to sort-based aggregation on real-corpus key
-    * cardinality (buckets are overwhelmingly singletons), ~3× slower
-    * and pathological under memory pressure. The window buffers one
-    * bucket per partition (spilling, rows are bare triples) and
-    * streams count/min in one pass. */
+    * Shape: no join. Bucket count and min id are WINDOW functions over
+    * (band, key), and that window's exchange is the candidate step's
+    * only shuffle; the per-bucket aggregate and the pair Generates ride
+    * its partitioning. A self-join of the banded table would read it
+    * twice, and the two consumer exchanges never canonicalize equal
+    * (filter placement differs), so ReusedExchange would not fire and
+    * the triples would shuffle twice. A TypedImperativeAggregate that
+    * collected unbounded bucket ids in-row falls back to sort-based
+    * aggregation on real-corpus key cardinality (buckets are
+    * overwhelmingly singletons); the window instead buffers one bucket
+    * per partition (spilling, rows are bare triples) and streams
+    * count/min in one pass. */
   def bandedCandidates(banded: DataFrame, maxBucket: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("band"), col("key"))
-    // PERSISTED: both join inputs (the windowed left and the raw build
-    // side) consume this table, and Spark does NOT de-duplicate the two
-    // subtrees — the join's inferred IsNotNull(id) pushes below the b
-    // side's Generate but is blocked above the a side's Window, the
-    // copies canonicalize differently, and ReusedExchange never fires
-    // (same nullability-sensitivity as the q_tpch_q18 note in
-    // Headline.scala) — so without the persist the band explode and its
-    // 5-MB-per-side shuffle ran TWICE (measured: the duplicated
-    // Generate+Exchange pair was the single largest cost of this query
-    // at sf0.1). The block is bare (id, band, key) triples — docs×bands
-    // rows of ~24 B, MEMORY_AND_DISK — the "materialize the banded
-    // table" step every production MinHash pipeline has; registered in
-    // [[OperatorCache]] so engine statements release it automatically.
-    // JOIN-FREE candidate enumeration (r19, guide §2.4/§3 — the
-    // Fingerprint pairs-within-bucket rewrite, extended to cover the
-    // whale star). The r18 shape joined the windowed left side with the
-    // RAW banded table; both subtrees consumed one persisted block, and
-    // the two consumer exchanges never canonicalize equal (filter
-    // placement differs), so ReusedExchange never fired and the
-    // candidate step paid TWO materialized exchanges of the banded
-    // triples plus a shuffled-hash build (r19 EXPLAIN ANALYZE; on a
-    // machine with slow shuffle-file creates those twin tiny-map-task
-    // writes alone ran 0.6–0.9 s per 32-task stage vs 20–50 ms at 8
-    // tasks). Per-bucket enumeration needs no join at all:
+    // Per-bucket enumeration:
     //   - small buckets (cnt <= maxBucket): collect the bucket's ids —
-    //     BOUNDED by the cap, never the unbounded collect-skew-bomb —
-    //     and emit ascending (ida, idb) pairs, exactly the old
-    //     `a.id < b.id` join output;
+    //     BOUNDED by the cap, never an unbounded collect — and emit
+    //     ascending (ida, idb) pairs;
     //   - whale rows: each member row already KNOWS its pair — the
-    //     min-id star edge (bmin, id) — so it needs no bucket state at
-    //     all. Grouping whale rows by their own id makes them singleton
+    //     min-id star edge (bmin, id) — so it needs no bucket state.
+    //     Grouping whale rows by their own id makes them singleton
     //     groups (hashpartitioning(band, key) still satisfies the
     //     3-key clustering, so no new exchange), and `ids2` below turns
-    //     each into the 2-element ascending array [bmin, id] — the hub
+    //     each into the 2-element ascending array [bmin, id]; the hub
     //     row itself (id = bmin) degenerates to a 1-element array and
     //     emits nothing. Aggregate state stays O(maxBucket) on EVERY
     //     corpus, adversarial ones included.
-    // ONE chain, one consumer: the window's (band, key) exchange is the
-    // candidate step's only shuffle, the per-bucket aggregate and the
-    // pair Generates ride its partitioning, and the persist (which
-    // existed only because the join read the block twice) is gone.
-    // The trailing strict `ida < idb` guard keeps exact old-shape
-    // parity even for degenerate duplicate-id buckets (the sorted-list
-    // enumeration would otherwise emit an (x, x) self-pair the join's
-    // strict predicate never produced).
+    // The trailing strict `ida < idb` guard drops the (x, x) self-pair a
+    // degenerate duplicate-id bucket would otherwise emit.
     val win = banded.filter(col("id").isNotNull)
       .select(col("id"), col("band"), col("key"))
       .withColumn("cnt", count(lit(1)).over(w))
@@ -365,7 +281,7 @@ object Dedup {
     * Scale shape: ONE exchange of (id, 16-byte fp) on the fingerprint —
     * the window aggregate needs no second join-back pass, and the text
     * column never shuffles. For NEAR-dup downweighting compose
-    * [[clusterPairs]] with [[softDedupWeightsFromClusters]] instead. */
+    * [[clusterPairsStar]] with [[softDedupWeightsFromClusters]] instead. */
   def softDedupWeights(df: DataFrame, idCol: String,
       textCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
@@ -376,7 +292,7 @@ object Dedup {
   }
 
   /** Near-dup tier of SoftDedup: weight = 1/|cluster| from a
-    * [[clusterPairs]] assignment; ids in no cluster keep weight 1.
+    * [[clusterPairsStar]] assignment; ids in no cluster keep weight 1.
     * One aggregate over the (id, cluster) table + one id-keyed join —
     * nothing document-sized moves. */
   def softDedupWeightsFromClusters(df: DataFrame, idCol: String,
@@ -1248,81 +1164,30 @@ object Dedup {
   def simhashVector(text: Column): Column =
     simhashVectorFromHashes(transform(words(text), w => xxhash64(w)))
 
-  /** Duplicate CLUSTERS from near-dup pairs: connected components by
-    * iterative min-label propagation — the step a real dedup pipeline
-    * needs after pair generation (pairs (a,b),(b,c) are ONE duplicate
-    * group; keep min-id, drop the rest). Each iteration is one
-    * groupBy-min over the edge list; iterations = component diameter,
-    * which for near-dup clusters is tiny. At 100 TB the same join
-    * primitive runs as the large-star/small-star CC algorithm (alternate
-    * the two propagation directions to keep components shallow); the
-    * fixpoint test is a metadata-cheap `isEmpty` on the changed set.
-    *
-    * Input: (ida, idb) pairs. Output: (id, cluster) for every id that
-    * appears in a pair, cluster = min id of its component. */
-  def clusterPairs(pairs: DataFrame, idaCol: String = "ida",
-      idbCol: String = "idb"): DataFrame = {
-    val edges = pairs.select(col(idaCol).as("src"), col(idbCol).as("dst"))
-      .union(pairs.select(col(idbCol).as("src"), col(idaCol).as("dst")))
-      .distinct()
-      .transform(OperatorCache.persist)
-    // Checkpoints.truncate per round: `labels` is referenced TWICE per
-    // iteration, so without lineage truncation the logical plan doubles
-    // every round and a deep component (diameter ≳ 10) OOMs the driver
-    // building AQE's plan strings — caching materializes data but does
-    // NOT cut the plan tree. Eager checkpoint does both (leaf plan);
-    // graft.checkpoint.dir switches local blocks → reliable files.
-    var labels = Checkpoints.truncate(
-      edges.select(col("src").as("id")).distinct()
-        .withColumn("cluster", col("id")))
-    var converged = false
-    while (!converged) {
-      // each node offers its label to every neighbour; take the min seen
-      val offers = labels.join(edges, col("id") === col("src"))
-        .groupBy(col("dst").as("id2")).agg(min(col("cluster")).as("nbr_min"))
-      val next = Checkpoints.truncate(
-        labels.join(offers, col("id") === col("id2"), "left")
-          .select(col("id"),
-            least(col("cluster"), coalesce(col("nbr_min"), col("cluster")))
-              .as("cluster")))
-      converged = next.alias("n")
-        .join(labels.alias("o"), col("n.id") === col("o.id"))
-        .filter(col("n.cluster") =!= col("o.cluster"))
-        .isEmpty
-      Checkpoints.discard(labels) // superseded round's reliable files
-      labels = next
-    }
-    edges.unpersist()
-    labels // checkpoint-materialized; blocks are ContextCleaner-reclaimed
-  }
-
-  /** Connected components by the ALTERNATING large-star/small-star
-    * algorithm (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SOCC '14) — the scale path [[clusterPairs]]'s doc promises.
-    * Min-label propagation converges in DIAMETER rounds: a 100 TB corpus
-    * whose boilerplate chains into one deep component (page-1 ~ page-2 ~
-    * page-3 ...) crawls through hundreds of shuffle rounds. The
-    * alternating algorithm converges in O(log^2 n) rounds regardless of
-    * diameter, and each round's edge count never exceeds the input's.
+  /** Duplicate CLUSTERS from near-dup pairs — the step a real dedup
+    * pipeline needs after pair generation (pairs (a,b),(b,c) are ONE
+    * duplicate group; keep min-id, drop the rest) — as connected
+    * components by the ALTERNATING large-star/small-star algorithm
+    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    * SOCC '14). Min-label propagation converges in DIAMETER rounds: a
+    * 100 TB corpus whose boilerplate chains into one deep component
+    * (page-1 ~ page-2 ~ page-3 ...) would crawl through hundreds of
+    * shuffle rounds. The alternating algorithm converges in
+    * O(log^2 n) rounds regardless of diameter, and each round's edge
+    * count never exceeds the input's.
     *
     * Per round, two phases over the directed edge list (u, v):
     *   - large-star: symmetrize; per node u with m = min(N(u) ∪ {u}),
     *     re-point every STRICTLY LARGER neighbour v > u at m;
     *   - small-star: on big→small edges, per node u with m = min(N(u)),
     *     re-point u and every other smaller neighbour at m.
-    * Both phases are a groupBy-min plus an equi-join of the edge list
-    * back onto its own per-node mins — no collect_list hub blowup (a
-    * giant component's root has millions of neighbours; grouping them
-    * into an array would be the skew bomb the join form avoids). The
-    * fixpoint is disjoint min-rooted stars; the convergence check is a
-    * count comparison plus ONE anti-join — the compared per-round sets
-    * are both smallStar outputs, which end in .distinct() (load-bearing
-    * for this), so equal counts + one-direction inclusion proves set
-    * equality; largeStar's intermediate is deliberately NOT deduped
-    * (see the note inside).
+    * The fixpoint is disjoint min-rooted stars.
     *
-    * Same contract as [[clusterPairs]]: input (ida, idb) pairs, output
-    * (id, cluster) for every id in a pair, cluster = component min. */
+    * Input: (ida, idb) pairs of any one orderable id type. Output:
+    * (id, cluster) for every id that appears in a pair, cluster = min id
+    * of its component, both columns of the input id type. The pair table
+    * (and, for non-integral ids, the id dictionary) is persisted through
+    * [[OperatorCache]], so the Engine's statement close releases it. */
   def clusterPairsStar(pairs: DataFrame, idaCol: String = "ida",
       idbCol: String = "idb", maxRounds: Int = 100): DataFrame =
     clusterPairsStarWithRounds(pairs, idaCol, idbCol, maxRounds)._1
@@ -1330,12 +1195,14 @@ object Dedup {
   private[graft] def clusterPairsStarWithRounds(pairs: DataFrame,
       idaCol: String, idbCol: String,
       maxRounds: Int): (DataFrame, Int) = {
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    val canon = pairs
+    import org.apache.spark.sql.types._
+    // Persisted: the loop input and the label assembly both read it, and
+    // the pair subtree is usually an expensive upstream join that must
+    // run once.
+    val canon = OperatorCache.persist(pairs
       .select(greatest(col(idaCol), col(idbCol)).as("u"),
-        least(col(idaCol), col(idbCol)).as("v"))
-    // Contract parity with clusterPairs for both loop paths: EVERY id
-    // appearing in a pair is labeled — ids whose only pair is a
+        least(col(idaCol), col(idbCol)).as("v")))
+    // EVERY id appearing in a pair is labeled — ids whose only pair is a
     // self-pair (a, a) have no edge after the self-loop filter and
     // label themselves.
     def assembleLabels(forest: DataFrame): DataFrame = {
@@ -1348,29 +1215,38 @@ object Dedup {
       allIds.join(starLabels, Seq("id"), "left")
         .select(col("id"), coalesce(col("cluster"), col("id")).as("cluster"))
     }
-    // TYPED FAST PATH for integral ids (r19): the round state is bare
-    // (long, long) pairs, so the loop runs as raw RDD stages — 2 sorted
-    // shuffles per round instead of 3 exchanges, one job per round
-    // instead of checkpoint+count+anti-join, and zero Catalyst/AQE
-    // planning in the loop (at sf0.1 the DF loop's wall was per-round
-    // driver latency, not data — r18 stage listener). Ids of any other
-    // type keep the generic DataFrame loop below.
+    // The loop runs on Long keys. Every phase only compares ids, so any
+    // order-preserving injection into Long yields the same star forest
+    // up to that mapping, and the min key decodes to the min id.
     canon.schema("u").dataType match {
-      case LongType =>
-        val (forest, rounds) = starLoopRdd(canon, maxRounds)
-        (assembleLabels(forest), rounds)
-      case IntegerType =>
-        val widened = canon.select(col("u").cast(LongType).as("u"),
-          col("v").cast(LongType).as("v"))
-        val (forestL, rounds) = starLoopRdd(widened, maxRounds)
-        // int→long→int round-trips losslessly, so the narrowed forest
-        // is exactly what the generic loop would have produced
-        val forest = forestL.select(col("u").cast(IntegerType).as("u"),
-          col("v").cast(IntegerType).as("v"))
-        (assembleLabels(forest), rounds)
-      case _ =>
-        val (forest, rounds) = starLoopDf(canon, maxRounds)
-        (assembleLabels(forest), rounds)
+      case t @ (ByteType | ShortType | IntegerType | LongType) =>
+        // widening to long round-trips losslessly
+        val (forest, rounds) = starLoopRdd(canon.select(
+          col("u").cast(LongType).as("u"), col("v").cast(LongType).as("v")),
+          maxRounds)
+        (assembleLabels(forest.select(col("u").cast(t).as("u"),
+          col("v").cast(t).as("v"))), rounds)
+      case t =>
+        // Dense rank over the distinct edge ids: a cluster-wide range
+        // sort, then zipWithIndex — no single-task unpartitioned window.
+        // The codes are a pure function of the id set, so a recomputed
+        // dictionary block decodes identically.
+        val edges = canon.where(col("u") =!= col("v"))
+        val sorted = edges.select(col("u").as("id"))
+          .union(edges.select(col("v").as("id"))).distinct().orderBy("id")
+        val dict = OperatorCache.persist(canon.sparkSession.createDataFrame(
+          sorted.rdd.zipWithIndex().map { case (r, i) =>
+            org.apache.spark.sql.Row(r.get(0), i) },
+          StructType(Seq(StructField("id", t), StructField("code", LongType)))))
+        def recode(e: DataFrame, from: String, to: String): DataFrame = {
+          def side(c: String) =
+            dict.select(col(from).as(c), col(to).as("__" + c))
+          e.join(side("u"), "u").join(side("v"), "v")
+            .select(col("__u").as("u"), col("__v").as("v"))
+        }
+        val (forest, rounds) =
+          starLoopRdd(recode(edges, "id", "code"), maxRounds)
+        (assembleLabels(recode(forest, "code", "id")), rounds)
     }
   }
 
@@ -1394,39 +1270,34 @@ object Dedup {
     override def hashCode: Int = parts
   }
 
-  /** The alternating-star loop over RDD[((u, v), Unit)] — semantics
-    * bit-identical to [[starLoopDf]] round by round (the per-round
-    * DISTINCT edge sets, the convergence criterion and the round count
-    * all match; OperatorsSpec pins star-vs-propagation equality and the
-    * deep-chain round bound on this path). Differences are purely
-    * physical, per guide §2.4/§1.2:
-    *   - 2 shuffles per round, not 3 exchanges: each phase is ONE
+  /** The alternating-star loop over RDD[((u, v), Unit)] of Long keys
+    * (see [[clusterPairsStar]] for the algorithm):
+    *   - 2 shuffles per round: each phase is ONE
     *     repartitionAndSortWithinPartitions on the composite (u, v) key
     *     (partitioned by u), and the phase function streams each sorted
     *     group — the group's min is its first v, duplicates are
     *     adjacent, so groupBy-min+join+distinct collapse into the sort.
-    *     smallStar's output keeps benign CROSS-group duplicates (the DF
-    *     loop's trailing .distinct() paid a third exchange to drop
-    *     them); the next round's sorted shuffle dedups them for free,
-    *     and the convergence compare reads the explicitly deduped set.
+    *     smallStar's output keeps benign CROSS-group duplicates; the next
+    *     round's sorted shuffle dedups them for free, and the convergence
+    *     compare reads the explicitly deduped set.
     *   - convergence is a co-partitioned zipPartitions stream-compare
     *     of this round's deduped edge set against last round's (both
     *     sorted, same partitioner) — no count job, no anti-join, and it
     *     is the round's ONE action, so largeStar+smallStar+compare run
-    *     as a single back-to-back job.
-    *   - a giant component's hub still lands its group in one task
-    *     (same as the DF loop's sym⋈mins join partition), but the
+    *     as a single back-to-back job with no Catalyst/AQE planning in
+    *     the loop.
+    *   - a giant component's hub lands its group in one task, but the
     *     streaming iterators hold O(1) state, so a 10⁶-degree hub costs
     *     sequential time, never memory (OperatorsSpec pins the skewed
     *     hub case).
-    * Durability parity with [[Checkpoints]]: when `graft.checkpoint.dir`
+    * Durability matches [[Checkpoints]]: when `graft.checkpoint.dir`
     * is set, each round's deduped set is reliably checkpointed and the
     * superseded round's files are deleted; the final round's files are
-    * left for the caller (same FINAL-cut lifetime as the DF loop).
+    * left for the caller.
     * Partition count is derived once from the measured input edge count
-    * (~2 MB of pair bytes per task, floor 1, cap 4× parallelism — the
-    * same scale-adaptive sizing as the DF loop; fixed across rounds so
-    * consecutive rounds stay co-partitioned for the compare).
+    * (~2 MB of pair bytes per task, floor 1, cap 4× parallelism), fixed
+    * across rounds so consecutive rounds stay co-partitioned for the
+    * compare.
     * Returns the fixpoint star forest as a (u, v) DataFrame. */
   private def starLoopRdd(canon: DataFrame,
       maxRounds: Int): (DataFrame, Int) = {
@@ -1441,15 +1312,11 @@ object Dedup {
         val p = new org.apache.hadoop.fs.Path(f)
         p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
       } catch { case _: Exception => () } // reclamation must never fail
-    // No pre-distinct of the input (the DF loop pays an exchange for
-    // it): round 1's sorted shuffle dedups while streaming, and
-    // largeStar is duplicate-insensitive. Persisted so the input
-    // subtree (often an expensive upstream join) runs once for the
-    // sizing count and once into round 1's shuffle map side, then
-    // released at the first convergence compare.
+    // No pre-distinct of the input: round 1's sorted shuffle dedups
+    // while streaming, and largeStar is duplicate-insensitive. The caller
+    // persists `canon`, so the sizing count and round 1 read it once.
     val input = canon.where(col("u") =!= col("v")).rdd
       .map(r => ((r.getLong(0), r.getLong(1)), ()))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val par = sc.defaultParallelism
     val n0 = input.count()
     val part = new EdgeKeyPartitioner(
@@ -1504,7 +1371,6 @@ object Dedup {
       }.fold(true)(_ && _)
     var state: RDD[((Long, Long), Unit)] = input
     var prevSet: RDD[((Long, Long), Unit)] = null
-    var inputLive = true
     var rounds = 0
     var result: RDD[((Long, Long), Unit)] = null
     while (result == null) {
@@ -1518,12 +1384,13 @@ object Dedup {
         // largeStar+smallStar, this round's sym shuffle, the deduped
         // set, and the convergence compare, back to back
         val same = sameSets(fwdSet, prevSet)
-        if (inputLive) { input.unpersist(blocking = false); inputLive = false }
         if (same) result = fwdSet
       }
       if (result == null) {
-        // parity with the DF loop: a non-fixpoint edge list after
-        // maxRounds applications is NOT a star forest — never return it
+        // a non-fixpoint edge list after maxRounds applications is NOT a
+        // star forest — labels built from it would carry conflicting
+        // clusters per id, so never return it (the paper bound is
+        // O(log² n) rounds; hitting maxRounds means something is wrong)
         if (rounds >= maxRounds) throw new IllegalStateException(
           s"clusterPairsStar did not converge within $maxRounds rounds")
         state = smallStar(
@@ -1547,113 +1414,6 @@ object Dedup {
     val rows = result.map { case ((u, v), _) =>
       org.apache.spark.sql.Row(u, v) }
     (parent.createDataFrame(rows, schema), rounds)
-  }
-
-  /** The generic DataFrame alternating-star loop — any orderable id
-    * type. Returns the fixpoint star forest as a (u, v) DataFrame. */
-  private def starLoopDf(canon: DataFrame,
-      maxRounds: Int): (DataFrame, Int) = {
-    def largeStar(e: DataFrame): DataFrame = {
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val mins = sym.groupBy("u")
-        .agg(least(min(col("v")), col("u")).as("m"))
-      // NO trailing .distinct() (r18): smallStar is dup-insensitive (its
-      // groupBy-min ignores duplicates; its own final distinct restores
-      // the set invariant the convergence check compares), and the
-      // un-deduped output is bounded by |sym| = 2·|e| rows — so dropping
-      // the dedup here removes one full Exchange+HashAgg barrier per
-      // round (per-round wall is exchange-count-bound: the iteration
-      // state is fixed-width metadata rows at every corpus scale) at the
-      // cost of ≤|e| extra tiny rows flowing into smallStar's first
-      // shuffle. The per-round CHECKPOINTED set is bit-identical, so the
-      // paper's round bound and the spec's round-count pin are untouched.
-      sym.join(mins, "u").where(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-    }
-    def smallStar(e: DataFrame): DataFrame = {
-      // input invariant: u > v on every edge (largeStar emits big→small)
-      val mins = e.groupBy("u").agg(min(col("v")).as("m"))
-      e.join(mins, "u").where(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .union(mins.select(col("u"), col("m").as("v")))
-        .distinct()
-    }
-    // Lineage MUST be truncated per round: largeStar/smallStar reference
-    // their input 4+ times, so without truncation the logical plan grows
-    // exponentially with rounds (persist caches data, not the plan tree).
-    // Checkpoints.truncate materializes the round's edges and cuts the
-    // plan to a leaf; set graft.checkpoint.dir on a real cluster so the
-    // per-round state survives executor loss (local blocks don't — an
-    // hours-long CC job at 1000 executors must not restart from zero).
-    var edges = Checkpoints.truncate(
-      canon.where(col("u") =!= col("v")).distinct())
-    var rounds = 0
-    var converged = false
-    var edgeCount = edges.count()
-    // The loop runs in a CHILD SESSION (shared SparkContext and block
-    // manager, ISOLATED SQLConf) with AQE OFF and shuffle partitions
-    // DERIVED FROM THE MEASURED EDGE COUNT (r18, guide §2:
-    // scale-adaptive partitioning). Round state is bare (u, v) pairs
-    // whose count is known exactly from the previous round, so AQE has
-    // nothing to discover — but it charges one driver re-optimization +
-    // stage-materialization barrier per exchange, and a round is 3
-    // exchanges: at sf0.1 that overhead IS the query (~100 stages of
-    // 8-47 ms per pass). With AQE off each action runs its whole
-    // multi-exchange DAG as one back-to-back job. Partition count
-    // targets ~2 MB of raw pair bytes per task (16 B/edge), floor 1,
-    // cap 4× the cluster's parallelism — a 1B-edge round still fans out
-    // cluster-wide, a 5k-edge round runs on 1 task instead of 32 sorted
-    // ones (the unparameterized AQE-off A/B at a fixed 32 measured
-    // 4.4 s → 32 s). The child session keeps the conf flip invisible to
-    // concurrent statements; checkpointed round state is a LogicalRDD
-    // leaf, which rebinds across sessions of one context losslessly.
-    val parent = canon.sparkSession
-    val loopSession = loopSessionFor(parent)
-    val par = parent.sparkContext.defaultParallelism
-    def roundPartitions(n: Long): Int =
-      math.max(1L, math.min(n / 131072L + 1L, par.toLong * 4L)).toInt
-    import org.apache.spark.sql.graftaccess.Internals
-    def rebind(df: DataFrame, to: org.apache.spark.sql.SparkSession) =
-      Internals.ofRows(to, Internals.analyzedPlan(df))
-    // SERIALIZED per child session (r19, ADVICE r18): two concurrent
-    // loops on one parent would otherwise race on the child's mutable
-    // conf (per-round shuffle partitions, checkpoint dir) and plan
-    // rounds at each other's edge-count-derived sizes. One child per
-    // parent is the cache's whole point, so concurrent CC statements
-    // of one session queue here; statements of different sessions (the
-    // engine's normal multiplexing) never contend.
-    loopSession.synchronized {
-      // newSession starts from the context's BASE conf: a runtime-set
-      // checkpoint dir on the caller's session must follow the loop, or
-      // reliable mode would silently degrade to local blocks
-      parent.conf.getOption(Checkpoints.DirKey)
-        .foreach(loopSession.conf.set(Checkpoints.DirKey, _))
-      edges = rebind(edges, loopSession)
-      while (!converged && rounds < maxRounds) {
-        loopSession.conf.set("spark.sql.shuffle.partitions",
-          roundPartitions(edgeCount).toString)
-        val next = Checkpoints.truncate(smallStar(largeStar(edges)))
-        // both sides are DISTINCT sets, so equal counts + one-direction
-        // inclusion proves set equality — one anti-join per round, not
-        // two; the count is a cheap job over the checkpointed blocks and
-        // short-circuits the anti-join entirely when sizes differ
-        val nextCount = next.count()
-        converged = nextCount == edgeCount && next.except(edges).isEmpty
-        Checkpoints.discard(edges) // superseded round's reliable files
-        edges = next
-        edgeCount = nextCount
-        rounds += 1
-      }
-    }
-    // back to the caller's session (and its conf) for label assembly
-    edges = rebind(edges, parent)
-    // a non-fixpoint edge list is NOT a star forest — labels built from
-    // it would carry conflicting clusters per id; corrupt output must
-    // never be returned silently (the paper bound is O(log² n) rounds,
-    // so hitting maxRounds means something is genuinely wrong)
-    if (!converged) throw new IllegalStateException(
-      s"clusterPairsStar did not converge within $maxRounds rounds")
-    (edges, rounds)
   }
 
   /** INCREMENTAL connected components — the continual-ingest shape (the

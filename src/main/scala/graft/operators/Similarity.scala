@@ -167,7 +167,7 @@ object Similarity {
     * Recall contract under the skew guard: buckets larger than
     * `maxBucket` emit a min-id STAR (each member paired with the
     * bucket's min id) instead of all in-bucket pairs — O(m) candidates,
-    * connectivity preserved for [[Dedup.clusterPairs]], but non-star
+    * connectivity preserved for [[Dedup.clusterPairsStar]], but non-star
     * in-bucket pairs from a whale bucket are NOT emitted as direct
     * pairs (they remain reachable through the star's hub). Raise
     * `maxBucket` if direct pair enumeration inside giant buckets
@@ -342,10 +342,9 @@ object Similarity {
         .withColumn("cnt", count(lit(1)).over(w))
         .filter(col("cnt") <= maxBucket).drop("cnt")
     }
-    // shuffle_hash for the same reason as Dedup.bandedCandidates: both
-    // sides arrive hash-partitioned by (band, key) from their windows,
-    // so the join adds no third exchange — and AQE's alternative
-    // (driver-broadcasting a banded table) is exactly what a
+    // shuffle_hash: both sides arrive hash-partitioned by (band, key)
+    // from their windows, so the join adds no third exchange — and AQE's
+    // alternative (driver-broadcasting a banded table) is exactly what a
     // 1000-executor plan must not do.
     val cand = banded(bl).alias("a")
       .join(banded(br).alias("b").hint("shuffle_hash"),

@@ -333,7 +333,7 @@ object Pipeline {
         .replace("WITH w AS", "WITH RECURSIVE w AS")) { (s, dir) =>
       val pairs = Dedup.ngramJaccardPairs(Tables.load(s, dir, "documents"),
         "doc_id", "text", "lang", 3, 0.5)
-      Dedup.clusterPairs(pairs).orderBy("id")
+      Dedup.clusterPairsStar(pairs).orderBy("id")
     },
 
     // Large-star/small-star connected components (Kiveris SOCC '14) on

@@ -327,16 +327,33 @@ class OperatorsSpec extends AnyFunSuite {
     assert(b(1L) == b(2L))
   }
 
+  /** Driver-side connected components reference (union-find, root =
+    * min id): id -> min id of its component for every id in a pair. */
+  private def ccRef[T](pairs: Seq[(T, T)])(
+      implicit ord: Ordering[T]): Map[T, T] = {
+    val parent = scala.collection.mutable.Map.empty[T, T]
+    def find(x: T): T = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ord.lt(ra, rb)) parent(rb) = ra
+      else if (ord.lt(rb, ra)) parent(ra) = rb
+    }
+    parent.keys.toList.map(x => x -> find(x)).toMap
+  }
+
   test("clusterPairs merges transitive pairs into min-id components") {
     val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L), (3L, 5L))
       .toDF("ida", "idb")
-    val clusters = graft.operators.Dedup.clusterPairs(pairs)
+    val clusters = graft.operators.Dedup.clusterPairsStar(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(clusters == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 1L,
       7L -> 7L, 9L -> 7L))
   }
 
-  test("clusterPairsStar equals clusterPairs on random graphs") {
+  test("clusterPairsStar equals a union-find reference on random graphs") {
     val rnd = new scala.util.Random(42)
     for (trial <- 0 until 5) {
       val n = 30 + trial * 10
@@ -345,9 +362,8 @@ class OperatorsSpec extends AnyFunSuite {
       val pairs = edges.toDF("ida", "idb")
       val star = Dedup.clusterPairsStar(pairs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val prop = Dedup.clusterPairs(pairs)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(star == prop, s"trial $trial: star $star vs prop $prop")
+      val ref = ccRef(edges)
+      assert(star == ref, s"trial $trial: star $star vs ref $ref")
     }
   }
 
@@ -356,10 +372,8 @@ class OperatorsSpec extends AnyFunSuite {
     val pairs = Seq((4L, 4L), (1L, 2L)).toDF("ida", "idb")
     val star = Dedup.clusterPairsStar(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val prop = Dedup.clusterPairs(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(star == Map(1L -> 1L, 2L -> 1L, 4L -> 4L))
-    assert(star == prop)
+    assert(star == ccRef(Seq((4L, 4L), (1L, 2L))))
   }
 
   test("clusterPairsDelta merges new pairs into an existing assignment " +
@@ -374,10 +388,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(out == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L, 9L -> 1L,
       5L -> 5L, 11L -> 11L, 12L -> 11L))
     // equivalent to full CC over old+new pairs (plus the singleton)
-    val full = Dedup.clusterPairs(
-      Seq((1L, 2L), (2L, 3L), (7L, 9L), (3L, 9L), (11L, 12L))
-        .toDF("ida", "idb"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val full = ccRef(Seq((1L, 2L), (2L, 3L), (7L, 9L), (3L, 9L), (11L, 12L)))
     assert(out - 5L == full)
   }
 
@@ -398,39 +409,55 @@ class OperatorsSpec extends AnyFunSuite {
     assert(agg.getLong(1) == 0L && agg.getLong(2) == 0L) // one root: min id
   }
 
-  test("clusterPairsStar on non-integral ids (the generic DataFrame " +
-      "loop) equals clusterPairs") {
+  test("clusterPairsStar on string and decimal ids equals a union-find " +
+      "reference") {
+    // string order differs from numeric order ("d10" < "d9"), so a
+    // dictionary code that does not preserve id order picks wrong mins;
+    // the fixed chain d9-d10-d100 must label "d10"
     val rnd = new scala.util.Random(7)
-    val edges = Seq.fill(60)((s"d${rnd.nextInt(30)}", s"d${rnd.nextInt(30)}"))
-      .filter(p => p._1 != p._2)
-    val pairs = edges.toDF("ida", "idb")
-    val star = Dedup.clusterPairsStar(pairs)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    val prop = Dedup.clusterPairs(pairs)
-      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(star == prop)
+    for (trial <- 0 until 3) {
+      val edges = (Seq(("d9", "d10"), ("d100", "d9")) ++
+        Seq.fill(60)((s"d${rnd.nextInt(30)}", s"d${rnd.nextInt(30)}")))
+        .filter(p => p._1 != p._2)
+      val star = Dedup.clusterPairsStar(edges.toDF("ida", "idb"))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      assert(star == ccRef(edges), s"trial $trial")
+      assert(star("d9") <= "d10")
+    }
+    // DecimalType(10,2), negatives included
+    val dec = org.apache.spark.sql.types.DecimalType(10, 2)
+    for (trial <- 0 until 3) {
+      val edges = Seq.fill(50)((BigDecimal(rnd.nextInt(60) - 30) * 1.25,
+        BigDecimal(rnd.nextInt(60) - 30) * 1.25)).filter(p => p._1 != p._2)
+      val pairs = edges.toDF("a", "b")
+        .select($"a".cast(dec).as("ida"), $"b".cast(dec).as("idb"))
+      val star = Dedup.clusterPairsStar(pairs).collect()
+        .map(r => BigDecimal(r.getDecimal(0)) -> BigDecimal(r.getDecimal(1)))
+        .toMap
+      assert(star == ccRef(edges), s"decimal trial $trial")
+    }
+    // the deep-chain round bound holds on the dictionary-coded path
+    val chain = (1 until 64).map(i => (s"c$i", s"c${i + 1}"))
+    val (labels, rounds) = Dedup.clusterPairsStarWithRounds(
+      chain.toDF("ida", "idb"), "ida", "idb", maxRounds = 100)
+    val out = labels.collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(out == (1 to 64).map(i => s"c$i" -> "c1").toMap)
+    assert(rounds <= 12, s"expected O(log^2 n) rounds, took $rounds")
   }
 
-  test("CC child-session cache is bounded: a collected parent session's " +
-      "entry is pruned (VERDICT r18 loopSessions leak)") {
-    def runGenericCc(p: org.apache.spark.sql.SparkSession): Unit = {
-      // string ids force the generic loop, which is what caches a child
-      val pairs = p.createDataFrame(Seq(("a", "b"), ("b", "c")))
-        .toDF("ida", "idb")
-      Dedup.clusterPairsStar(pairs).collect()
+  test("clusterPairsStar keeps the input id type for byte, short, int, " +
+      "long and string ids") {
+    import org.apache.spark.sql.types._
+    val pairs = Seq((1, 2), (2, 3), (7, 9)).toDF("a", "b")
+    for (t <- Seq(ByteType, ShortType, IntegerType, LongType, StringType)) {
+      val out = Dedup.clusterPairsStar(
+        pairs.select($"a".cast(t).as("ida"), $"b".cast(t).as("idb")))
+      assert(out.schema.map(_.dataType) == Seq(t, t), s"$t: ${out.schema}")
+      val got = out.collect().map(r => r.get(0).toString -> r.get(1).toString)
+        .toMap
+      assert(got == Map("1" -> "1", "2" -> "1", "3" -> "1",
+        "7" -> "7", "9" -> "7"), s"$t: $got")
     }
-    val before = Dedup.loopSessionCount
-    val parents = (1 to 3).map(_ => spark.newSession())
-    parents.foreach(runGenericCc)
-    assert(Dedup.loopSessionCount == before + 3)
-    // the engine's closeSession lifecycle evicts deterministically
-    // (weak keys alone cannot promise collection while Spark internals
-    // still reference a closed parent)
-    parents.foreach(Dedup.releaseLoopSession)
-    assert(Dedup.loopSessionCount == before,
-      "closed parents' child-session entries were not evicted")
-    Dedup.releaseLoopSession(parents.head) // absent key: no-op
-    assert(Dedup.loopSessionCount == before)
   }
 
   test("substring dedup (cross-doc AND intra-doc) matches a driver-side " +
@@ -651,13 +678,12 @@ class OperatorsSpec extends AnyFunSuite {
   test("softDedup near-dup tier weights by cluster size, singletons keep 1") {
     import graft.operators.Dedup
     // pairs (1,2),(2,3) form one 3-cluster; (7,9) a 2-cluster; 5 alone
-    val pairs = Seq((1L, 2L), (2L, 3L), (7L, 9L)).toDF("ida", "idb")
-    val clusters = Dedup.clusterPairs(pairs)
+    val clusters = ccRef(Seq((1L, 2L), (2L, 3L), (7L, 9L))).toSeq
+      .toDF("id", "cluster")
     val docs = Seq(1L, 2L, 3L, 5L, 7L, 9L).toDF("doc_id")
     val out = Dedup.softDedupWeightsFromClusters(docs, "doc_id", clusters)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getDouble(2))))
       .toMap
-    clusters.unpersist()
     assert(out == Map(
       1L -> ((3L, 1.0 / 3)), 2L -> ((3L, 1.0 / 3)), 3L -> ((3L, 1.0 / 3)),
       5L -> ((1L, 1.0)), 7L -> ((2L, 0.5)), 9L -> ((2L, 0.5))))
@@ -734,8 +760,7 @@ class OperatorsSpec extends AnyFunSuite {
     assert(pairs.length == n - 1, s"expected star of ${n - 1}, got ${pairs.length}")
     assert(pairs.forall(_._1 == 1L), "star must anchor at the bucket min id")
     // connectivity preserved: clustering still yields ONE component
-    val clusters = Dedup.clusterPairs(pairs.toSeq.toDF("ida", "idb"))
-      .collect().map(_.getLong(1)).toSet
+    val clusters = ccRef(pairs.toSeq).values.toSet
     assert(clusters == Set(1L))
   }
 
