@@ -82,22 +82,23 @@ object Dedup {
       .distinct()
   }
 
-  /** Verify-join sizing, dispatched on the CORPUS's optimizer size
-    * estimate (metadata-only): broadcast-small corpora feed their
-    * payload table (shingle sets / sign vectors / embeddings) straight
-    * into the verify joins — fewest stages, AQE broadcasts a side; large
-    * corpora first SEMI-REDUCE the payload table to candidate ids, so
-    * the verify exchange carries heavy payload columns only for
-    * colliding documents — at 100 TB candidates ≪ corpus and shuffling
-    * every document's payload would dominate the whole job. On that path
-    * the candidate pairs get persisted (the id-set union reads them
-    * twice, the verify join once; small by construction, post-cap).
+  /** Verify-join sizing, dispatched on the CORPUS's size
+    * ([[OpConf.sizeBytes]]): corpora known to fit
+    * [[OpConf.SemiReduceBytes]] feed their payload table (shingle sets /
+    * sign vectors / embeddings) straight into the verify joins — fewest
+    * stages, AQE broadcasts a side; any other corpus first SEMI-REDUCEs
+    * the payload table to candidate ids, so the verify exchange carries
+    * heavy payload columns only for colliding documents — at 100 TB
+    * candidates ≪ corpus and shuffling every document's payload would
+    * dominate the whole job. On that path the candidate pairs get
+    * persisted (the id-set union reads them twice, the verify join
+    * once; small by construction, post-cap).
     *
     * CACHE LIFECYCLE: the persisted candidate block is registered in
     * [[OperatorCache]] against the owning session — the Engine's
-    * closeStatement/closeSession release it automatically (VERDICT r7
-    * #4), and batch drivers (Bench/Verify) clearCache() between
-    * queries. Plain library callers in a long-lived session can call
+    * closeStatement/closeSession release it automatically, and the
+    * batch mains (Bench/Verify) clearCache() between queries. Plain
+    * library callers in a long-lived session can call
     * `OperatorCache.release(session)` (or clearCache) when done with
     * the returned lazy DataFrame. */
   /** Returns (candidates, payload, small). On the small-corpus path the
@@ -112,10 +113,9 @@ object Dedup {
     * persisted candidates' runtime size is known to AQE and the payload
     * is semi-reduced, so the planner's own choice is sound. */
   private[operators] def semiReduceForVerify(corpus: DataFrame,
-      semiReduceBytes: Long, candPairs: DataFrame,
+      candPairs: DataFrame,
       payload: DataFrame): (DataFrame, DataFrame, Boolean) = {
-    val small = org.apache.spark.sql.graftaccess.Internals
-      .planSizeInBytes(corpus) <= semiReduceBytes
+    val small = OpConf.sizeBytes(corpus).exists(_ <= OpConf.SemiReduceBytes)
     if (small) (candPairs, payload, true)
     else {
       val c = OperatorCache.persist(candPairs)
@@ -157,11 +157,10 @@ object Dedup {
     // persisted bare-pair projection (re-joining the original `cand`
     // for extras would re-execute the whole un-persisted candidate
     // pipeline, square any duplicate pairs, and hand AQE a
-    // payload-carrying side to runtime-broadcast — the ADVICE r9
-    // failure mode, invisible to the static-broadcast PlanSpec pin).
+    // payload-carrying side to runtime-broadcast — an out-of-memory
+    // failure mode invisible to the static-broadcast PlanSpec pin).
     // A caller needing per-pair columns should join them onto the
-    // RESULT by (ida, idb) instead. (Review r11 finding: the previous
-    // silent drop/carry asymmetry is now a loud error.)
+    // RESULT by (ida, idb) instead.
     require(cand.columns.toSet == Set("ida", "idb"),
       s"attachPairPayloads expects bare (ida, idb) pairs, got " +
         cand.columns.mkString("(", ", ", ")"))
@@ -572,7 +571,7 @@ object Dedup {
   }
 
   /** WINNOWED exact-substring dedup — the 100 TB gram-selection tier of
-    * [[exactSubstrDedup]] (VERDICT r14 #2; Schleimer et al. '03
+    * [[exactSubstrDedup]] (Schleimer et al. '03
     * winnowing composed with Lee et al. '22 §4.2 span removal). Where
     * the exact tier fingerprints EVERY L-char gram (O(total chars)
     * gram rows — the price of the every-match-≥L contract), this tier
@@ -820,7 +819,7 @@ object Dedup {
        |ORDER BY w.$idCol""".stripMargin
     // NULL text passes through as NULL clean_text on BOTH sides (the
     // Spark CASE keeps text; a blanket coalesce('') here would diverge
-    // from the operator — third-review finding).
+    // from the operator).
   }
 
   /** Shared DuckDB replay of the span-removal pipeline ([[dupSpanDedup]]
@@ -1016,8 +1015,7 @@ object Dedup {
   def minhashLshPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numPerms: Int = 128, bands: Int = 32,
-      threshold: Double = 0.5, maxBucket: Int = 4096,
-      semiReduceBytes: Long = 256L << 20): DataFrame = {
+      threshold: Double = 0.5, maxBucket: Int = 4096): DataFrame = {
     require(numPerms % bands == 0, "bands must divide numPerms")
     // Repartition FIRST (on the raw rows — cheap shuffle of ids+text):
     // shingling, hashing and signatures then all run post-shuffle across
@@ -1048,8 +1046,8 @@ object Dedup {
 
     val candPairs = bandedCandidates(banded, maxBucket)
 
-    val (cand, sets, small) = semiReduceForVerify(df, semiReduceBytes,
-      candPairs, base.select(col("id"), col("sh")))
+    val (cand, sets, small) = semiReduceForVerify(df, candPairs,
+      base.select(col("id"), col("sh")))
     attachPairPayloads(cand, sets, small)
       .select(col("ida"), col("idb"),
         (size(array_intersect(col("sha"), col("shb"))).cast("double") /
@@ -1068,12 +1066,10 @@ object Dedup {
   def minhashLshPairsAuto(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, numPerms: Int = 128, threshold: Double = 0.7,
-      maxBucket: Int = 4096,
-      semiReduceBytes: Long = 256L << 20): DataFrame = {
+      maxBucket: Int = 4096): DataFrame = {
     val (r, b) = Similarity.lshPick(df.sparkSession, threshold, numPerms)
     minhashLshPairs(df, idCol, textCol, n, numPerms, bands = b,
-        threshold = threshold, maxBucket = maxBucket,
-        semiReduceBytes = semiReduceBytes)
+        threshold = threshold, maxBucket = maxBucket)
       .withColumn("pick_r", lit(r))
       .withColumn("pick_b", lit(b))
   }
@@ -1468,7 +1464,6 @@ object Dedup {
   def simhashPairs(
       df: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3, maxBucket: Int = 4096,
-      semiReduceBytes: Long = 256L << 20,
       hashFn: Column => Column = xxhash64(_)): DataFrame = {
     val base = df.select(col(idCol).as("id"), col(textCol).as("__text"))
       .repartition(col("id"))  // parallelism first, as in minhash
@@ -1483,7 +1478,7 @@ object Dedup {
         graft.functions.SimHashBands(
           org.apache.spark.sql.graftaccess.Internals.expression(col("sv")))))
         .as(Seq("band", "key")))
-    val (cand, sets, small) = semiReduceForVerify(df, semiReduceBytes,
+    val (cand, sets, small) = semiReduceForVerify(df,
       bandedCandidates(banded, maxBucket), base.select(col("id"), col("sv")))
     // Hamming via the codegen kernel — the zip_with+filter HOF form ran
     // interpreted; only candidate pairs reach this stage, but the kernel

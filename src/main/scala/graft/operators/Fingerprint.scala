@@ -22,7 +22,7 @@ import graft.functions.{WinnowFingerprints, WinnowPairKeys}
   * headers, navigation chrome) before they can quadratically blow up a
   * bucket.
   *
-  * Selectivity caveat (measured, BASELINE.md round-5 notes): blocking on
+  * Selectivity caveat (measured, BASELINE.md): blocking on
   * a SINGLE fingerprint assumes k-grams are high-entropy. On a
   * tiny-vocabulary corpus (the synthetic testdata: ~40 distinct words)
   * fingerprints go ubiquitous and the self-join degenerates toward
@@ -90,7 +90,7 @@ object Fingerprint {
     * equality there).
     *
     * Two measured guards keep the candidate step subquadratic on
-    * low-entropy corpora (BASELINE.md round-6):
+    * low-entropy corpora (BASELINE.md):
     *   - `maxDocFreq` caps a pair-key bucket's document count (the same
     *     fused-window guard [[overlapPairs]] uses — it rides the
     *     candidate join's own bk-partitioning, zero extra exchanges):
@@ -110,25 +110,25 @@ object Fingerprint {
       k: Int = 8, w: Int = 4, minJaccard: Double = 0.5,
       maxDocFreq: Int = 20, minKeys: Int = 2): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // Size-dispatched parallelism (same planSizeInBytes dispatch as
-    // Dedup.semiReduceForVerify). A compact corpus arrives in few scan
+    // Size-dispatched parallelism ([[OpConf.sizeBytes]], limit
+    // [[OpConf.SpreadBytes]]). A compact corpus arrives in few scan
     // partitions (one 600 KB file at sf0.1 = ONE task), which would
     // serialize every kernel evaluation behind single-task stages: an
     // explicit-count repartition (REPARTITION_BY_NUM, so AQE cannot
     // coalesce the ~1 MB shuffle back to one task) spreads the raw
     // text and the winnow/pair-key kernels run 32-way in each consumer
-    // branch. A LARGE corpus skips it: its scan is already wide, and a
-    // full-text repartition is exactly the 100-TB shuffle this
-    // operator must not pay.
+    // branch. A corpus not known to be compact skips it: a large scan is
+    // already wide, and a full-text repartition is exactly the 100-TB
+    // shuffle this operator must not pay.
     val sel = df.select(col(idCol).as("id"), col(textCol).as("__text"))
-    val compact = Internals.planSizeInBytes(sel) <= (1L << 30)
+    val compact = OpConf.sizeBytes(sel).exists(_ <= OpConf.SpreadBytes)
     val par = df.sparkSession.sparkContext.defaultParallelism
     val spread = if (compact) sel.repartition(par, col("id")) else sel
     // Persisted: four consumer branches (kept, raw right side, and the
     // two verify joins on fps) would otherwise each re-execute the
     // scan + both kernels — differently-aliased subtrees defeat
-    // exchange/broadcast reuse, so the winnow kernel ran 4× in the r7
-    // shape. One MEMORY_AND_DISK block of (id, fps, keys) pays the
+    // exchange/broadcast reuse, so the winnow kernel ran 4× without
+    // it. One MEMORY_AND_DISK block of (id, fps, keys) pays the
     // kernels once; lifecycle via [[OperatorCache]] (engine statement
     // close / clearCache releases it, same as [[Dedup]]/[[LmScore]]).
     val base = spread.select(col("id"),
@@ -143,10 +143,9 @@ object Fingerprint {
     val kept = e
       .withColumn("__df", count(lit(1)).over(Window.partitionBy("bk")))
       .where(col("__df") <= maxDocFreq).drop("__df")
-    // Candidate pairs WITHOUT a self-join (r19, guide §2.4). The r18
-    // shape joined `kept ⋈ raw` on bk (one windowed side is exact: a
-    // whale bucket keeps no left rows, so raw rows from it never find a
-    // partner) — but that same argument cuts deeper: since whale
+    // Candidate pairs WITHOUT a self-join. Joining `kept ⋈ raw` on bk
+    // would be exact (one windowed side suffices: a whale bucket keeps
+    // no left rows, so raw rows from it never find a partner) — but that same argument cuts deeper: since whale
     // buckets contribute NOTHING, every surviving pair lives entirely
     // inside a ≤ maxDocFreq bucket, where kept == raw. So the join is
     // pairs-within-kept, and post-cap buckets are small enough to
@@ -155,7 +154,7 @@ object Fingerprint {
     // avoids — the window filter runs first and streams), rides the
     // window's own bk-partitioning with zero new exchanges, and two
     // codegen Generates emit each bucket's ascending (d1, d2) pairs.
-    // vs r18 (measured, EXPLAIN ANALYZE at sf0.1): the second 5.7 MB /
+    // vs the join (measured, EXPLAIN ANALYZE at sf0.1): the second 5.7 MB /
     // 569k-row exchange of the exploded table and the 34 MB
     // shuffled-hash build both disappear (AQE never reused the twin
     // exchanges — rename placement defeats canonical equality); the
@@ -171,7 +170,7 @@ object Fingerprint {
       .groupBy("d1", "d2").agg(count(lit(1)).as("__nk"))
       .where(col("__nk") >= minKeys)
       .select("d1", "d2")
-    // (r18 negative A/B: pinning these two verify joins to shuffle_hash
+    // (Negative A/B: pinning these two verify joins to shuffle_hash
     // — to avoid the planner's ~1 s-per-side driver collect of the 8.4 MB
     // fps-array broadcast — measured 1.86 s → 2.66 s: the two extra
     // exchanges of the candidate pairs cost more than the collects,

@@ -198,8 +198,8 @@ object LmScore {
     val wVal = Window.partitionBy("lang", "avg_q").orderBy(col(idCol))
     // NULL-SAFE lang equality: the window form keeps NULL-lang docs as
     // their own partition (language-ID failures are real data); a
-    // null-unsafe using-join here would silently drop them (round-13
-    // second review). avg_q is never null (coalesced to −1 above).
+    // null-unsafe using-join here would silently drop them. avg_q is
+    // never null (coalesced to −1 above).
     val cumS = cum.select(col("lang").as("__clang"),
       col("avg_q").as("__cavg"), col("__cumBefore"), col("__nLang"))
     withLang
@@ -366,20 +366,20 @@ object LmScore {
     val cont = bi.groupBy("w2").agg(count(lit(1)).as("nprec"))
     val types = bi.agg(count(lit(1)).as("ntypes"))
     val D = lit(0.75)
-    // Build-side dispatch (r19, guide §3.1 — measured wrong-side
-    // broadcast): these joins are INNER (unlike [[scoreBigrams]]'s
-    // left-outer form, where the stream side can never be the build),
-    // so the planner may broadcast EITHER side — and static estimates
+    // Build-side dispatch (measured wrong-side broadcast): these joins
+    // are INNER (unlike [[scoreBigrams]]'s left-outer form, where the
+    // stream side can never be the build), so the planner may
+    // broadcast EITHER side — and static estimates
     // inverted at sf0.1: it collected the 42 MB / 265k-row bigram
     // STREAM through the driver (collectTime 1.28 s) and streamed the
-    // 931-row model table. When the CORPUS estimate is broadcast-small
-    // the model tables are too (bigram types ≤ bigram tokens ≤ corpus
-    // bytes), so pin them as the broadcast build; a large corpus keeps
-    // planner choice — vocabulary-sized model tables must never be
+    // 931-row model table. When the CORPUS is known to fit
+    // [[OpConf.SmallInputBytes]] ([[OpConf.sizeBytes]]) the model tables
+    // are too (bigram types ≤ bigram tokens ≤ corpus bytes), so pin
+    // them as the broadcast build; any other corpus keeps planner
+    // choice — vocabulary-sized model tables must never be
     // force-broadcast at 100 TB (they shuffle on the word key, same
     // scale contract as PrefixFilter's freq table).
-    val modelSmall = org.apache.spark.sql.graftaccess.Internals
-      .planSizeInBytes(df) <= (64L << 20)
+    val modelSmall = OpConf.sizeBytes(df).exists(_ <= OpConf.SmallInputBytes)
     def build(t: DataFrame): DataFrame = if (modelSmall) broadcast(t) else t
     val p = bg
       .join(build(bi), Seq("w1", "w2"))

@@ -1,14 +1,46 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.Join
 
-/** Shared operator-level config lookups. */
+/** Shared operator-level helpers: the size signal and its limits behind
+  * every tier choice, shuffle parallelism, kernel spreading, UTF-8 order. */
 private[graft] object OpConf {
 
+  /** The one size signal behind every operator tier choice: the
+    * optimizer's size estimate of `df` (metadata-only, no job — for a
+    * file scan it is the sum of file sizes, carried through filters,
+    * projections and unions), or `None` when the optimized plan holds
+    * any `Join`. Without CBO a join's estimate is the product of its
+    * sides, which can be wrong by orders of magnitude, so it is treated
+    * as unknown. Callers test `sizeBytes(df).exists(_ <= Limit)`: an
+    * unknown size always takes the tier that is safe at 100 TB. */
+  def sizeBytes(df: DataFrame): Option[BigInt] = {
+    val plan = df.queryExecution.optimizedPlan
+    if (plan.exists(_.isInstanceOf[Join])) None
+    else Some(plan.stats.sizeInBytes)
+  }
+
+  /** Largest input the single-task tiers take: a partition-less window,
+    * a broadcast nested-loop pair scan, a pinned broadcast build. */
+  val SmallInputBytes: Long = 64L << 20
+
+  /** Largest input whose per-id payload table is broadcast into a verify
+    * or rerank join. */
+  val BroadcastPayloadBytes: Long = 32L << 20
+
+  /** Largest corpus whose payload table feeds a verify join without
+    * first being semi-reduced to candidate ids. */
+  val SemiReduceBytes: Long = 256L << 20
+
+  /** Largest corpus still spread by an explicit round-robin repartition
+    * before a per-row kernel stage. */
+  val SpreadBytes: Long = 1L << 30
+
   /** The session's shuffle parallelism, for EXPLICIT-count repartitions
-    * (`repartition(N, cols…)` is exempt from AQE coalescing — the
-    * STATUS round-10 lesson; a by-column repartition gets squeezed to a
-    * handful of tasks whenever the shuffled BYTES are small, which
+    * (`repartition(N, cols…)` is exempt from AQE coalescing; a
+    * by-column repartition gets squeezed to a handful of tasks
+    * whenever the shuffled BYTES are small, which
     * starves any stage whose per-ROW cost dominates: similarity-join
     * verifies, gram explodes, per-doc kernels). One copy of the lookup:
     * six operators used to hand-roll it. */
@@ -20,7 +52,7 @@ private[graft] object OpConf {
     * cheap-bytes/expensive-rows KERNEL stage (gram explodes, per-doc
     * hashing — one or more md5s per input unit): a small local file
     * plans a handful of scan splits and serializes the kernel on them
-    * (6 of 32 threads, 3.6× slower — measured round 14). CONDITIONAL
+    * (6 of 32 threads, 3.6× slower, measured at local[32]). CONDITIONAL
     * on the planned partition count, so a corpus whose scan already
     * splits finely — any real cluster table — never pays a
     * corpus-wide round-robin text shuffle for it; the exchange only
@@ -30,8 +62,8 @@ private[graft] object OpConf {
     // A plan that already SHUFFLES is at the session's shuffle
     // parallelism — no spread needed, and probing it with .rdd under
     // AQE would eagerly EXECUTE the upstream stages at construction
-    // time (third-review finding). Only narrow (scan/filter/project)
-    // plans consult .rdd, where partition planning runs no jobs.
+    // time. Only narrow (scan/filter/project) plans consult .rdd,
+    // where partition planning runs no jobs.
     val hasShuffle = df.queryExecution.sparkPlan.collectFirst {
       case e: org.apache.spark.sql.execution.exchange.Exchange => e
     }.isDefined

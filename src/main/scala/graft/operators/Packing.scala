@@ -29,19 +29,17 @@ object Packing {
     * how many full budgets precede the document's first token. Output:
     * input columns + `bin` (0-based) + `cum_tokens` (inclusive).
     *
-    * Size-dispatched (r19, window-audit): the PARTITION-BY-less window
-    * moves every row to ONE task (WindowExec's single-partition
-    * warning), which is fine at probe scale but a serialization point
-    * at corpus scale — inputs whose optimizer size estimate exceeds
-    * `smallBytes` take [[cumsumDistributed]] (two-pass range-partitioned
-    * prefix sum) instead. Both tiers produce the IDENTICAL integer
-    * running totals (exact int64 sums over the same total order), so
-    * the dispatch can never change a result — PackingSpec pins tier
-    * equality. */
+    * Size-dispatched: the PARTITION-BY-less window moves every row to
+    * ONE task (WindowExec's single-partition warning), which is fine at
+    * probe scale but a serialization point at corpus scale — inputs not
+    * known to fit [[OpConf.SmallInputBytes]] (see [[OpConf.sizeBytes]])
+    * take [[cumsumDistributed]] (two-pass range-partitioned prefix sum)
+    * instead. Both tiers produce the IDENTICAL integer running totals
+    * (exact int64 sums over the same total order), so the dispatch can
+    * never change a result — OperatorsSpec pins tier equality. */
   def packByCumsum(df: DataFrame, orderCol: String, tokensCol: String,
-      budget: Long, smallBytes: Long = 64L << 20): DataFrame = {
-    val small = org.apache.spark.sql.graftaccess.Internals
-      .planSizeInBytes(df) <= smallBytes
+      budget: Long): DataFrame = {
+    val small = OpConf.sizeBytes(df).exists(_ <= OpConf.SmallInputBytes)
     val cum = if (small) {
       val w = Window.orderBy(col(orderCol))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)

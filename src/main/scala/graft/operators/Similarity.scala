@@ -103,26 +103,26 @@ object Similarity {
   }
 
   /** Embedding-cosine near-duplicate pairs: all (a, b) with
-    * cosine >= threshold. Dispatches on corpus size: inputs whose
-    * optimizer size estimate (metadata-only — file sizes, no job) fits a
-    * broadcast take the exact quadratic path
-    * ([[cosineNearDupPairsExact]]); anything larger takes the banded
+    * cosine >= threshold. Dispatches on corpus size
+    * ([[OpConf.sizeBytes]]): inputs known to fit
+    * [[OpConf.SmallInputBytes]] take the exact quadratic broadcast path
+    * ([[cosineNearDupPairsExact]]); anything else takes the banded
     * sign-LSH candidate path ([[cosineNearDupPairsLsh]]), whose cost is
     * governed by bucket collisions instead of n². */
   def cosineNearDupPairs(
       df: DataFrame, idCol: String, vecCol: String, threshold: Double,
-      smallBytes: Long = 64L << 20, bands: Int = 8, planesPerBand: Int = 8,
+      bands: Int = 8, planesPerBand: Int = 8,
       maxBucket: Int = 4096): DataFrame = {
-    val small = org.apache.spark.sql.graftaccess.Internals
-      .planSizeInBytes(df) <= smallBytes
+    val small = OpConf.sizeBytes(df).exists(_ <= OpConf.SmallInputBytes)
     if (small) cosineNearDupPairsExact(df, idCol, vecCol, threshold)
     else df.where(col(vecCol).isNotNull)
       .select(size(col(vecCol))).take(1) match {
-      // size estimates can be large while the actual row count is zero
-      // (selective filters without column stats) — fall back to the
-      // exact path rather than crash probing the dimension (null rows
-      // are skipped by the probe: size(null) would NPE the getInt)
-      case Array() => cosineNearDupPairsExact(df, idCol, vecCol, threshold)
+      // no non-null vector: no pair can pass the cosine filter (null
+      // rows are skipped by the probe: size(null) would NPE the
+      // getInt). Rows may still exist, so emit the empty result WITHOUT
+      // broadcasting the frame the dispatch just judged too large.
+      case Array() =>
+        cosineNearDupPairsExact(df.limit(0), idCol, vecCol, threshold)
       case Array(row) => cosineNearDupPairsLsh(df, idCol, vecCol, threshold,
         bands, planesPerBand, row.getInt(0), maxBucket = maxBucket)
     }
@@ -172,12 +172,11 @@ object Similarity {
     * pairs (they remain reachable through the star's hub). Raise
     * `maxBucket` if direct pair enumeration inside giant buckets
     * matters more than skew safety. Persist note: on the large-corpus
-    * path (`semiReduceBytes` exceeded) see
-    * [[Dedup.semiReduceForVerify]]'s caller contract. */
+    * path see [[Dedup.semiReduceForVerify]]'s caller contract. */
   def cosineNearDupPairsLsh(
       df: DataFrame, idCol: String, vecCol: String, threshold: Double,
       bands: Int, planesPerBand: Int, dim: Int,
-      semiReduceBytes: Long = 256L << 20, maxBucket: Int = 4096): DataFrame = {
+      maxBucket: Int = 4096): DataFrame = {
     // all band keys in ONE kernel call (bit-identical to summing
     // CASE WHEN dot_product(v, plane) > 0 columns — the declarative form
     // built 64 expression nodes and traversed the vector 64 times)
@@ -199,22 +198,19 @@ object Similarity {
     // Large corpora also semi-reduce the vector table to candidate ids
     // before the verify joins (Dedup.semiReduceForVerify contract).
     //
-    // Broadcast tier (round 12, measured on the cross-relation twin):
-    // when the SOURCE estimate is broadcast-small the candidate pairs
-    // stream through two chained hash joins whose build sides are the
-    // PER-ID vector table — bounded by corpus size, never by the pair
-    // count, so the no-payload-pair-broadcast contract (ADVICE r9)
-    // still holds. The generic stitch-by-pair-key shape
-    // (attachPairPayloads) planned a SortMergeJoin on (ida, idb) here —
-    // two payload-carrying exchanges + sorts that the broadcast form
-    // does for free (2.55 s → 1.76 s on 37k candidates at sf0.1).
-    // Unlike the minhash/simhash shingle payloads, an embedding
-    // column's size estimate comes straight from the parquet scan, so
-    // the dispatch is trustworthy.
+    // Broadcast tier (measured on the cross-relation twin): when the
+    // SOURCE is known to fit [[OpConf.BroadcastPayloadBytes]] (see
+    // [[OpConf.sizeBytes]]) the candidate pairs stream through two
+    // chained hash joins whose build sides are the PER-ID vector table
+    // — bounded by corpus size, never by the pair count, so no
+    // payload-carrying pair table is ever broadcast. The generic
+    // stitch-by-pair-key shape (attachPairPayloads) planned a
+    // SortMergeJoin on (ida, idb) here — two payload-carrying exchanges
+    // + sorts that the broadcast form does for free (2.55 s → 1.76 s on
+    // 37k candidates at sf0.1).
     val candPairs = Dedup.bandedCandidates(banded, maxBucket)
     val attached =
-      if (org.apache.spark.sql.graftaccess.Internals
-          .planSizeInBytes(df) <= (32L << 20)) {
+      if (OpConf.sizeBytes(df).exists(_ <= OpConf.BroadcastPayloadBytes)) {
         candPairs
           .join(broadcast(base.select(col("id").as("ida"),
             col("v").as("va"), col("nrm").as("nrma"))), "ida")
@@ -222,8 +218,7 @@ object Similarity {
             col("v").as("vb"), col("nrm").as("nrmb"))), "idb")
       } else {
         val (cand, vecs, small) = Dedup.semiReduceForVerify(df,
-          semiReduceBytes, candPairs,
-          base.select(col("id"), col("v"), col("nrm")))
+          candPairs, base.select(col("id"), col("v"), col("nrm")))
         Dedup.attachPairPayloads(cand, vecs, small)
       }
     attached
@@ -257,24 +252,22 @@ object Similarity {
     * Extends the reference's similarity surface the same way
     * (reference scopes search to its engine's SQL; lib.rs:678).
     *
-    * Dispatch mirrors [[cosineNearDupPairs]]: a right side whose
-    * optimizer size estimate fits a broadcast takes the exact
-    * nested-loop path; anything larger takes banded sign-LSH blocking
-    * over BOTH relations with one shared plane family. */
+    * Dispatch mirrors [[cosineNearDupPairs]]: a right side known to fit
+    * [[OpConf.SmallInputBytes]] (see [[OpConf.sizeBytes]]) takes the
+    * exact nested-loop path; anything else takes banded sign-LSH
+    * blocking over BOTH relations with one shared plane family. */
   def cosineJoin(left: DataFrame, right: DataFrame, idCol: String,
-      vecCol: String, threshold: Double, smallBytes: Long = 64L << 20,
+      vecCol: String, threshold: Double,
       bands: Int = 8, planesPerBand: Int = 8,
       maxBucket: Int = 4096): DataFrame = {
-    val small = org.apache.spark.sql.graftaccess.Internals
-      .planSizeInBytes(right) <= smallBytes
+    val small = OpConf.sizeBytes(right).exists(_ <= OpConf.SmallInputBytes)
     if (small) cosineJoinExact(left, right, idCol, vecCol, threshold)
     else left.where(col(vecCol).isNotNull)
       .select(size(col(vecCol))).take(1) match {
       // the dimension probe found no usable left row: the join is
       // empty. Emit the empty result WITHOUT broadcasting the right
-      // side the dispatch just judged too large (self-review catch —
-      // the self-join's analogous fallback is safe only because it
-      // broadcasts the same empty frame it probed)
+      // side the dispatch just judged too large (the self-join's
+      // fallback does the same)
       case Array() =>
         cosineJoinExact(left.limit(0), right.limit(0), idCol, vecCol,
           threshold)
@@ -319,15 +312,14 @@ object Similarity {
     * replayed-band oracle ([[cosineJoinLshOracleSql]]) is exact. */
   def cosineJoinLsh(left: DataFrame, right: DataFrame, idCol: String,
       vecCol: String, threshold: Double, bands: Int, planesPerBand: Int,
-      dim: Int, semiReduceBytes: Long = 256L << 20,
-      maxBucket: Int = 4096): DataFrame = {
+      dim: Int, maxBucket: Int = 4096): DataFrame = {
     import org.apache.spark.sql.graftaccess.Internals
     val ps = planes(bands * planesPerBand, dim)
     // (id, vector, norm, band keys) once per relation — one kernel call
     // computes all band keys. PERSISTED: each side feeds its banded
     // explode AND the verify join; unpersisted, the source would be
-    // re-scanned per consumer (the round-12 OperatorCache lesson on
-    // SetJoin/FuzzyJoin inputs).
+    // re-scanned per consumer (as measured on the SetJoin/FuzzyJoin
+    // inputs).
     def prep(df: DataFrame): DataFrame = OperatorCache.persist(
       df.select(col(idCol).as("id"), col(vecCol).as("v"),
           normKernel(col(vecCol)).as("nrm"))
@@ -351,13 +343,13 @@ object Similarity {
         col("a.band") === col("b.band") && col("a.key") === col("b.key"))
       .select(col("a.id").as("id_l"), col("b.id").as("id_r"))
       .distinct()
-    val szL = Internals.planSizeInBytes(left)
-    val szR = Internals.planSizeInBytes(right)
+    def fits(df: DataFrame, limit: Long) = OpConf.sizeBytes(df).exists(_ <= limit)
     val lv = bl.select(col("id").as("id_l"), col("v").as("vl"),
       col("nrm").as("nl"))
     val rv = br.select(col("id").as("id_r"), col("v").as("vr"),
       col("nrm").as("nr"))
-    val attached = if (szL <= (64L << 20) && szR <= (64L << 20)) {
+    val attached = if (fits(left, OpConf.SmallInputBytes) &&
+        fits(right, OpConf.SmallInputBytes)) {
       // small path: the bare pair table STREAMS through two chained
       // broadcast hash joins whose build sides are the PER-ID payload
       // tables — bounded by corpus size, never by the (potentially
@@ -373,22 +365,22 @@ object Similarity {
       // large path: spread the bare pair table with an EXPLICIT-count
       // repartition — candidate rows are two longs, so AQE's
       // bytes-based coalescing would otherwise fuse the expensive
-      // per-pair verify onto a handful of tasks (the round-12 SetJoin
-      // lesson) — and shuffle_hash keeps the chained joins sort-free
-      // (pair order is useless). Sides past `semiReduceBytes` are
-      // first SEMI-REDUCED to colliding ids so the verify exchanges
-      // carry vectors for candidates only; the id sets feed off the
-      // PERSISTED pair table directly (c0), NOT the repartitioned
-      // view — they have no use for the pair spread, and routing them
-      // through it would re-execute the explicit exchange per
-      // consumer whenever ReusedExchange declines to fire
-      // (self-review catch).
+      // per-pair verify onto a handful of tasks (as measured on SetJoin)
+      // — and shuffle_hash keeps the chained joins sort-free (pair
+      // order is useless). Sides not known to fit
+      // [[OpConf.SemiReduceBytes]] are first SEMI-REDUCED to colliding
+      // ids so the verify exchanges carry vectors for candidates only;
+      // the id sets feed off the PERSISTED pair table directly (c0),
+      // NOT the repartitioned view — they have no use for the pair
+      // spread, and routing them through it would re-execute the
+      // explicit exchange per consumer whenever ReusedExchange
+      // declines to fire.
       val c0 = OperatorCache.persist(cand)
       val bare = c0.repartition(OpConf.shufflePartitions(left),
         col("id_l"), col("id_r"))
-      val lvr = if (szL <= semiReduceBytes) lv
+      val lvr = if (fits(left, OpConf.SemiReduceBytes)) lv
         else lv.join(c0.select("id_l").distinct(), Seq("id_l"), "left_semi")
-      val rvr = if (szR <= semiReduceBytes) rv
+      val rvr = if (fits(right, OpConf.SemiReduceBytes)) rv
         else rv.join(c0.select("id_r").distinct(), Seq("id_r"), "left_semi")
       bare.join(lvr.hint("shuffle_hash"), "id_l")
         .join(rvr.hint("shuffle_hash"), "id_r")
@@ -864,24 +856,19 @@ object Similarity {
       p => p.getField("i"))
   }
 
-  /** Broadcast ceiling (bytes, SQL conf) for [[binaryRerank]]'s
-    * candidate/query broadcasts; the shuffle-join fallback engages
-    * above it. */
-  val RerankBroadcastMaxBytesKey = "graft.ann.rerankBroadcastMaxBytes"
-
   /** Shared exact-cosine rerank of a (qid, nid, hamming) candidate set.
     * At serving scale the candidates are the SMALL side (nq·cands
     * rows) — broadcast them at the corpus, never the reverse. A BATCH
     * scoring job (millions of queries) outgrows that broadcast, so the
     * dispatch mirrors the cosine verify's: decide on the QUERY SOURCE's
-    * optimizer estimate (trustworthy — it comes from the scan), bounding
-    * the candidate table from above by nq·cands 24-byte rows with
-    * nq ≤ qBytes/(8+4·dim). Beyond [[RerankBroadcastMaxBytesKey]]
-    * (default 32 MB), plain shuffle joins take over: candidates join the
-    * corpus on nid, then the queries on qid — and that final qid
-    * partitioning is exactly the rerank window's, so no extra exchange
-    * follows. Identical results either way (OperatorsSpec pins the
-    * forced-shuffle plan + equality). */
+    * size ([[OpConf.sizeBytes]]), bounding the candidate table from
+    * above by nq·cands 24-byte rows with nq ≤ qBytes/(8+4·dim). Unless
+    * both are known to fit [[OpConf.BroadcastPayloadBytes]], plain
+    * shuffle joins take over: candidates join the corpus on nid, then
+    * the queries on qid — and that final qid partitioning is exactly
+    * the rerank window's, so no extra exchange follows. Identical
+    * results either way (OperatorsSpec pins the shuffle plan +
+    * equality). */
   private def binaryRerank(cand: DataFrame, queries: DataFrame,
       corpus: DataFrame, idCol: String, vecCol: String, dim: Int,
       k: Int, cands: Int): DataFrame = {
@@ -891,14 +878,13 @@ object Similarity {
       normKernel(col(vecCol)).as("qn"))
     val rerankW = Window.partitionBy(col("qid"))
       .orderBy(col("cos").desc, col("nid"))
-    val maxBytes = queries.sparkSession.conf
-      .getOption(RerankBroadcastMaxBytesKey)
-      .map(_.trim.toLong).getOrElse(32L << 20)
-    val qBytes = org.apache.spark.sql.graftaccess.Internals
-      .planSizeInBytes(queries)
-    val nqUpper = qBytes / (8L + 4L * dim) + 1L // id + float4 vector
+    val maxBytes = OpConf.BroadcastPayloadBytes
+    val small = OpConf.sizeBytes(queries).exists { qBytes =>
+      val nqUpper = qBytes / (8L + 4L * dim) + 1L // id + float4 vector
+      qBytes <= maxBytes && nqUpper * 24L * cands <= maxBytes
+    }
     val joined =
-      if (qBytes <= maxBytes && nqUpper * 24L * cands <= maxBytes)
+      if (small)
         nv.join(broadcast(cand), "nid").join(broadcast(qv), "qid")
       else
         cand.join(nv, "nid").join(qv, "qid")

@@ -205,13 +205,6 @@ object Internals {
     }
   }
 
-  /** Optimizer size estimate for a DataFrame (bytes) — metadata-only (no
-    * job): for file relations it is the sum of file sizes. The broadcast
-    * planner keys off the same statistic. */
-  def planSizeInBytes(df: org.apache.spark.sql.DataFrame): BigInt =
-    df.asInstanceOf[org.apache.spark.sql.classic.DataFrame]
-      .queryExecution.optimizedPlan.stats.sizeInBytes
-
   /** The session's name resolver (case-insensitive under the default
     * spark.sql.caseSensitive=false) — private[sql] via sessionState. */
   def resolver(spark: SparkSession): (String, String) => Boolean =

@@ -558,17 +558,17 @@ class EngineSpec extends AnyFunSuite {
     val Right(t2) = engine.handshake("admin", "password")
     val s = engine.session(t2)
     import s.implicits._
-    // a q_dedup_minhash-shaped corpus on the ENGINE's session, with
-    // semiReduceBytes = 0 forcing the large-corpus path that persists
-    // the candidate-pair block on top of the signature table
+    // a q_dedup_minhash-shaped corpus on the ENGINE's session, with a
+    // join above it (unknown size) forcing the large-corpus path that
+    // persists the candidate-pair block on top of the signature table
     val docs = (0L until 300L).map { i =>
       val fam = i % 3
       (i, s"alpha beta gamma delta epsilon zeta eta theta fam$fam " +
         s"iota kappa lambda mu nu xi omicron pi word${i % 5}")
     }.toDF("doc_id", "text")
     val rddsBefore = s.sparkContext.getPersistentRDDs.size
-    val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-      threshold = 0.5, semiReduceBytes = 0L)
+    val pairs = Dedup.minhashLshPairs(TestSpark.joinedAbove(docs, "doc_id"),
+      "doc_id", "text", threshold = 0.5)
     pairs.createOrReplaceTempView("minhash_dups")
     assert(OperatorCache.trackedCount(s) > 0,
       "operator persists must register against the engine session")
@@ -661,8 +661,8 @@ class EngineSpec extends AnyFunSuite {
         s"iota kappa lambda mu nu xi omicron pi word${i % 5}")
     }.toDF("doc_id", "text")
     val rddsBefore = s.sparkContext.getPersistentRDDs.size
-    val pairs = Dedup.minhashLshPairs(docs, "doc_id", "text",
-      threshold = 0.5, semiReduceBytes = 0L)
+    val pairs = Dedup.minhashLshPairs(TestSpark.joinedAbove(docs, "doc_id"),
+      "doc_id", "text", threshold = 0.5)
     pairs.createOrReplaceTempView("gc_minhash_dups")
     val (h, _) = engine.prepare(t2, "SELECT count(*) AS c FROM gc_minhash_dups")
     assert(engine.execute(h) == 1L)

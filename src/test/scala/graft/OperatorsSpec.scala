@@ -647,8 +647,8 @@ class OperatorsSpec extends AnyFunSuite {
     import graft.operators.Similarity
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val queries = emb.filter($"vec_id" < 3)
-    def run() = Similarity.binaryAnnTopK(queries, emb, "vec_id",
-      "embedding", dim = 64, k = 5, cands = 50)
+    def run(q: org.apache.spark.sql.DataFrame) = Similarity.binaryAnnTopK(
+      q, emb, "vec_id", "embedding", dim = 64, k = 5, cands = 50)
     // disable the planner's own size-based auto-broadcast so the plans
     // show the DISPATCH's decision: the broadcast tier places hints
     // (which override the threshold), the fallback places none (at real
@@ -656,13 +656,13 @@ class OperatorsSpec extends AnyFunSuite {
     // table then plans a shuffle join, as pinned here)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val dflt = run()
+      val dflt = run(queries)
       assert(!dflt.queryExecution.sparkPlan.toString.contains("SortMergeJoin"),
         "default rerank must stay broadcast at probe scale")
       val before = dflt.collect().map(r => (r.getLong(0), r.getLong(1),
         r.getInt(2), r.getInt(4))).toSet
-      spark.conf.set(Similarity.RerankBroadcastMaxBytesKey, "1")
-      val forced = run()
+      // a join above the queries makes their size unknown
+      val forced = run(TestSpark.joinedAbove(queries, "vec_id"))
       assert(forced.queryExecution.sparkPlan.toString
           .contains("SortMergeJoin"),
         "forced-large rerank must plan shuffle joins")
@@ -670,7 +670,6 @@ class OperatorsSpec extends AnyFunSuite {
         r.getInt(2), r.getInt(4))).toSet
       assert(after == before, "dispatch must not change results")
     } finally {
-      spark.conf.unset(Similarity.RerankBroadcastMaxBytesKey)
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
@@ -832,25 +831,41 @@ class OperatorsSpec extends AnyFunSuite {
     assert(exact.nonEmpty)
     // small right → dispatcher takes the exact path
     assert(pairs(Similarity.cosineJoin(l, r, "vec_id", "embedding", 0.4)) == exact)
-    // smallBytes = 0 forces the dim probe + LSH tier through the
-    // dispatcher; 8x8 banded recall on this corpus at 0.4 is partial,
-    // so assert the LSH answer is a SUBSET that includes the planted
-    // certainty tier (none here) — i.e. no false positives
-    val lsh = pairs(Similarity.cosineJoin(l, r, "vec_id", "embedding", 0.4,
-      smallBytes = 0))
+    // a join above the right side (unknown size) forces the dim probe +
+    // LSH tier through the dispatcher; 8x8 banded recall on this corpus
+    // at 0.4 is partial, so assert the LSH answer is a SUBSET that
+    // includes the planted certainty tier (none here) — i.e. no false
+    // positives
+    val rLarge = TestSpark.joinedAbove(r, "vec_id")
+    val lsh = pairs(Similarity.cosineJoin(l, rLarge, "vec_id", "embedding",
+      0.4))
     assert(lsh.subsetOf(exact), s"LSH emitted non-pairs: ${lsh -- exact}")
     // empty left with large-judged right must not broadcast the right
     // side — and must return the empty result
-    val none = Similarity.cosineJoin(l.filter($"vec_id" < 0), r,
-      "vec_id", "embedding", 0.4, smallBytes = 0)
+    val none = Similarity.cosineJoin(l.filter($"vec_id" < 0), rLarge,
+      "vec_id", "embedding", 0.4)
     assert(none.count() == 0)
     // null embeddings are skipped by the dimension probe
     val withNull = l.select($"vec_id",
       when($"vec_id" === 0, lit(null)).otherwise($"embedding").as("embedding"))
-    val probed = Similarity.cosineJoin(withNull, r, "vec_id", "embedding", 0.4,
-      smallBytes = 0)
+    val probed = Similarity.cosineJoin(withNull, rLarge, "vec_id",
+      "embedding", 0.4)
     assert(probed.columns.toSeq == Seq("id_l", "id_r", "cos"))
     probed.count() // must not NPE
+  }
+
+  test("cosineNearDupPairs on an all-null-embedding input judged large " +
+      "returns no rows and broadcasts nothing") {
+    // every embedding null, but not a foldable literal: the rows exist
+    // and the optimizer cannot prove the pair set empty
+    val nulls = spark.range(0, 200).select($"id".as("vec_id"),
+      when($"id" < 0, array(lit(1.0f))).as("embedding"))
+    val out = Similarity.cosineNearDupPairs(
+      TestSpark.joinedAbove(nulls, "vec_id"), "vec_id", "embedding", 0.4)
+    assert(out.count() == 0)
+    val plan = out.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastExchange"),
+      s"a large-judged input must not be broadcast:\n$plan")
   }
 
   test("cosine join whale-bucket cap drops the band but keeps other-band recall") {
@@ -947,10 +962,11 @@ class OperatorsSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(dist == global,
       "two-pass prefix sum must equal the single-window cumsum")
-    // packByCumsum's size dispatch: forcing the distributed tier
-    // (smallBytes = 0) yields bit-identical (cum_tokens, bin) rows
-    val forced = Packing.packByCumsum(docs, "doc_id", "tokens",
-        budget = 512, smallBytes = 0L)
+    // packByCumsum's size dispatch: forcing the distributed tier (a
+    // join above the input: unknown size) yields bit-identical
+    // (cum_tokens, bin) rows
+    val forced = Packing.packByCumsum(TestSpark.joinedAbove(docs, "doc_id"),
+        "doc_id", "tokens", budget = 512)
       .select("doc_id", "cum_tokens", "bin").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val viaWindow = Packing.packByCumsum(docs, "doc_id", "tokens", 512)
@@ -973,6 +989,41 @@ class OperatorsSpec extends AnyFunSuite {
     val boundary = global.toSeq.sortBy(_._1)
       .takeWhile(_._2 <= 500L).map(_._1)
     assert(sel.map(_._1).toSeq == boundary)
+  }
+
+  test("OpConf.sizeBytes: a join above makes the size unknown; scans and " +
+      "projections keep their estimate") {
+    import graft.operators.{OpConf, Packing}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.window.WindowExec
+    val sc = spark.sparkContext
+    // every sizeBytes call runs in this job group, which must stay
+    // empty: the signal is metadata-only
+    def sized(df: DataFrame): Option[BigInt] = {
+      sc.setJobGroup("opconf-sizebytes", "sizeBytes")
+      try OpConf.sizeBytes(df) finally sc.clearJobGroup()
+    }
+    def partitionLessWindows(df: DataFrame): Int =
+      df.queryExecution.sparkPlan.collect {
+        case w: WindowExec if w.partitionSpec.isEmpty => w
+      }.size
+    // a tiny table self-joined: unknown, so packByCumsum takes the
+    // distributed tier
+    val tiny = Seq((1L, 3L), (2L, 5L), (3L, 7L)).toDF("doc_id", "tokens")
+    val joined = TestSpark.joinedAbove(tiny, "doc_id")
+    assert(sized(joined).isEmpty)
+    assert(partitionLessWindows(
+      Packing.packByCumsum(joined, "doc_id", "tokens", budget = 4)) == 0)
+    // a 2^32-row range projection: known and far above every limit
+    val huge = spark.range(1L << 32)
+      .select($"id".as("doc_id"), ($"id" % 7).as("tokens"))
+    assert(sized(huge).exists(_ > (1L << 30)))
+    // the sf0.001 documents scan: known small, takes the window tier
+    val documents = Tables.load(spark, "/root/testdata/sf0.001", "documents")
+    assert(sized(documents).exists(_ <= (64L << 20)))
+    assert(partitionLessWindows(
+      Packing.packByCumsum(documents, "doc_id", "n_chars", budget = 4096)) == 1)
+    assert(sc.statusTracker.getJobIdsForGroup("opconf-sizebytes").isEmpty)
   }
 
   test("greedy packing: every doc once, no bin overflows, order respected") {
@@ -1034,13 +1085,13 @@ class OperatorsSpec extends AnyFunSuite {
   }
 
   test("minhash semi-reduced verify path returns the same pairs") {
-    // semiReduceBytes = 0 forces the large-corpus shape (candidate-id
-    // semi reduction before the verify joins); results must be identical
-    // to the direct-join small path.
+    // a join above the corpus (unknown size) forces the large-corpus
+    // shape (candidate-id semi reduction before the verify joins);
+    // results must be identical to the direct-join small path.
     val direct = Dedup.minhashLshPairs(docs, "doc_id", "text", threshold = 0.5)
       .orderBy("ida", "idb").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val reduced = Dedup.minhashLshPairs(docs, "doc_id", "text",
-        threshold = 0.5, semiReduceBytes = 0L)
+    val reduced = Dedup.minhashLshPairs(TestSpark.joinedAbove(docs, "doc_id"),
+        "doc_id", "text", threshold = 0.5)
       .orderBy("ida", "idb").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(direct.toSeq == reduced.toSeq && direct.nonEmpty)
   }

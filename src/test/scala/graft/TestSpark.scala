@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col}
 
 /** One shared local session for the whole ScalaTest run. */
 object TestSpark {
@@ -22,4 +23,14 @@ object TestSpark {
       org.apache.logging.log4j.Level.ERROR)
     s
   }
+
+  /** `df` with a `Join` above it: a broadcast self-join on its unique,
+    * non-null `idCol`. Same rows, same columns in the same order, but
+    * [[graft.operators.OpConf.sizeBytes]] reports an unknown size, so
+    * every size-dispatched operator takes its large-input tier. The
+    * hint keeps the helper's own join a broadcast hash join, so a plan
+    * assertion about shuffle joins sees only the operator's. */
+  def joinedAbove(df: DataFrame, idCol: String): DataFrame =
+    df.join(broadcast(df.select(idCol)), Seq(idCol))
+      .select(df.columns.map(col): _*)
 }
