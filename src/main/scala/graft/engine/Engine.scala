@@ -6,6 +6,8 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
+import org.apache.spark.sql.graftaccess.Internals
+
 import graft.DFCompat
 
 /** Session → prepare → bind → execute → fetch statement lifecycle, the
@@ -34,23 +36,10 @@ final class Engine(root: SparkSession) {
       token: String,
       sql: String,
       var params: Seq[String] = Nil,
-      // (schema, row count) once executed. The Row payload lives in
-      // `rows` only until the first Arrow encode: after that the cached
-      // IPC bytes are the single resident copy (the reference keeps
-      // only its encoded batches, lib.rs:333-344) — a row-shaped fetch
-      // on an already-encoded statement decodes from the bytes.
-      //
-      // The (result, rows, ipc) triple is guarded by `this.synchronized`
-      // in execute/fetch/fetchArrowFramed: the encode-and-release
-      // transition (publish ipc, drop rows) is two writes, and the
-      // engine models a multi-client Flight do_get — two concurrent
-      // fetches racing that transition could both miss the ipc cache
-      // and the loser crash on rows=None (ADVICE r10).
-      var result: Option[(StructType, Long)] = None,
-      var rows: Option[Array[Row]] = None,
-      // Arrow IPC encoding, cached at first fetch:
-      // (stream bytes, message-boundary offsets for per-batch framing).
-      var ipc: Option[(Array[Byte], Array[Int])] = None,
+      // The last successful execute's result, published in one write:
+      // readers take the whole immutable value or None, never a mix of
+      // two executes, so fetches need no lock.
+      @volatile var result: Option[Engine.Result] = None,
       var touchedMs: Long = System.currentTimeMillis()) {
     // Per-execute job-group suffix: cancelQuery is STICKY (future jobs
     // of the cancelled group fail too, closing the AQE inter-job gap
@@ -58,14 +47,13 @@ final class Engine(root: SparkSession) {
     // re-executable after a cancel.
     val executeAttempt = new java.util.concurrent.atomic.AtomicInteger(0)
     // The attempts whose workers are CURRENTLY running: the cancel
-    // targets. cancelQuery used to read executeAttempt, which a
-    // concurrent re-execute increments before its worker starts — a
-    // cancel aimed at running attempt N could sticky-cancel the
-    // just-started N+1 instead and leave N running (ADVICE r11). A SET,
-    // not a scalar: two overlapping executes of one handle are
-    // supported, and a single slot would lose attempt N when N+1
-    // finishes first and clears it (round-12 self-review). Workers add
-    // themselves before their first job and remove on finish.
+    // targets. executeAttempt alone is not enough: a concurrent
+    // re-execute increments it before its worker starts, so a cancel
+    // aimed at running attempt N could sticky-cancel the just-started
+    // N+1 instead and leave N running. A SET, not a scalar: two
+    // overlapping executes of one handle are supported, and a single
+    // slot would lose attempt N when N+1 finishes first and clears it.
+    // Workers add themselves before their first job and remove on finish.
     val runningAttempts =
       java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
   }
@@ -89,9 +77,11 @@ final class Engine(root: SparkSession) {
     * statement-count cap standing between, so a deployment should set
     * GRAFT_MAX_RESULT_ROWS (enforced BEFORE materialization: the collect
     * runs under a limit probe of cap+1 rows, so an over-limit result
-    * never becomes resident) and/or GRAFT_MAX_RESULT_BYTES (estimated on
-    * the collected rows before they enter the statement cache). Read per
-    * execute — system properties override env as the test hook. */
+    * never becomes resident) and/or GRAFT_MAX_RESULT_BYTES (the exact
+    * length of the encoded Arrow IPC stream — the bytes the statement
+    * holds and a client receives — checked before it enters the
+    * statement cache). Read per execute — system properties override
+    * env as the test hook. */
   private def sizeGuard(prop: String, env: String): Option[Long] =
     sys.props.get(prop).orElse(sys.env.get(env)).map(_.trim.toLong)
       .filter(_ > 0)
@@ -136,8 +126,7 @@ final class Engine(root: SparkSession) {
       // reference): execute fully, report the plan tree with runtime
       // metric values, one row per node.
       case ExplainAnalyze(body) =>
-        val lines = org.apache.spark.sql.graftaccess.Internals
-          .explainAnalyze(plan(st.copy(sql = body)))
+        val lines = Internals.explainAnalyze(plan(st.copy(sql = body)))
         val s = st.session
         import s.implicits._
         return lines.toDF("plan_with_metrics")
@@ -283,8 +272,14 @@ final class Engine(root: SparkSession) {
   /** Execute and cache the full result (collect-then-cache semantics of
     * lib.rs:333-344 — by design, NOT a streaming fetch; the distributed
     * heavy lifting still happens on executors, only the final result
-    * lands in driver memory, same as the reference's server memory). */
-  def execute(handle: String): Long = {
+    * lands in driver memory, same as the reference's server memory).
+    * The collected rows are encoded to Arrow IPC once, here, and the
+    * statement holds only those bytes — the reference likewise caches
+    * the `Vec<RecordBatch>` its collect returns and serves every later
+    * `do_get` from it (lib.rs:82, 288-295). Returns the row count. */
+  def execute(handle: String): Long = run(handle).rowCount
+
+  private def run(handle: String): Engine.Result = {
     val st = statement(handle)
     // every Spark job this statement submits carries its handle as the
     // job group, so cancelQuery from ANOTHER connection can abort it —
@@ -304,16 +299,16 @@ final class Engine(root: SparkSession) {
     // poisons every unrelated job that thread later submits. Pool
     // threads set the group per task and CLEAR it in finally, so no
     // value outlives its execute; the pool bounds worker threads under
-    // load where thread-per-execute was unbounded (ADVICE r11).
+    // load where thread-per-execute was unbounded.
     val attempt = st.executeAttempt.incrementAndGet()
     val outcome = new java.util.concurrent.atomic.AtomicReference[
-      Either[Throwable, (org.apache.spark.sql.DataFrame, Array[Row])]]()
+      Either[Throwable, Engine.Result]]()
     val task: Runnable = () => {
       val sc = st.session.sparkContext
       sc.setJobGroup(Engine.jobGroup(handle) + "-" + attempt,
         s"graft statement $handle", interruptOnCancel = true)
       st.runningAttempts.add(attempt)
-      try { // outside the lock: old-result fetches stay servable
+      try { // the old result stays fetchable until the new one publishes
         val d = plan(st)
         val rows = maxResultRows match {
           case Some(cap) =>
@@ -322,21 +317,23 @@ final class Engine(root: SparkSession) {
             // CollectLimit stops executors early); an under-limit
             // result is byte-identical to the unguarded collect
             val lim = math.min(cap, Int.MaxValue.toLong - 1).toInt
-            val r = d.limit(lim + 1).collect()
+            val r = Internals.collectInternalRows(d.limit(lim + 1))
             if (r.length > lim) throw new IllegalStateException(
               s"result exceeds GRAFT_MAX_RESULT_ROWS=$cap for statement " +
                 s"$handle; narrow the query or raise the cap")
             r
-          case None => d.collect()
+          case None => Internals.collectInternalRows(d)
         }
+        val (ipc, offsets) =
+          Internals.encodeArrowIpc(st.session, d.schema, rows.iterator)
         maxResultBytes.foreach { cap =>
-          val est = org.apache.spark.util.SizeEstimator.estimate(rows)
-          if (est > cap) throw new IllegalStateException(
-            s"result estimated at $est bytes exceeds " +
+          if (ipc.length > cap) throw new IllegalStateException(
+            s"result of ${ipc.length} Arrow IPC bytes exceeds " +
               s"GRAFT_MAX_RESULT_BYTES=$cap for statement $handle; " +
               "narrow the query or raise the cap")
         }
-        outcome.set(Right((d, rows)))
+        outcome.set(Right(
+          Engine.Result(d.schema, rows.length.toLong, ipc, offsets)))
       } catch { case e: Throwable => outcome.set(Left(e)) }
       finally {
         st.runningAttempts.remove(attempt)
@@ -349,23 +346,19 @@ final class Engine(root: SparkSession) {
       case ie: InterruptedException =>
         // The CALLER was interrupted (client gone, server shutting
         // down): without this, the worker's Spark jobs would run to
-        // completion unobserved, their result discarded (ADVICE r11).
+        // completion unobserved, their result discarded.
         // Sticky-cancel the attempt's group — the worker unwinds with a
         // cancellation SparkException and releases its pool slot.
         st.session.sparkContext.cancelJobGroupAndFutureJobs(
           Engine.jobGroup(handle) + "-" + attempt)
         throw ie
     }
-    val (df, rows) = outcome.get() match {
+    val r = outcome.get() match {
       case Left(e) => throw e
       case Right(r) => r
     }
-    st.synchronized {
-      st.result = Some((df.schema, rows.length.toLong))
-      st.rows = Some(rows)
-      st.ipc = None // new result: any cached encoding is stale
-    }
-    rows.length.toLong
+    st.result = Some(r)
+    r
   }
 
   /** Cancel a RUNNING statement's Spark jobs (`cancel_query` verb —
@@ -383,15 +376,15 @@ final class Engine(root: SparkSession) {
     // Target every RUNNING attempt, not the latest allocated one: a
     // concurrent re-execute bumps executeAttempt before its worker
     // starts, and a cancel aimed at running attempt N must not land on
-    // the fresh N+1 instead (ADVICE r11); with overlapping executes of
-    // one handle, BOTH in-flight attempts are this statement's query
-    // and both are cancelled. executeAttempt.get() is ALWAYS unioned in
-    // (not only when the running set is empty — ADVICE r12): with one
-    // attempt running and a second freshly allocated but not yet in
-    // runningAttempts (the window between incrementAndGet and the pool
-    // worker's add, which includes any pool-queue wait), both are this
-    // statement's query; a sticky cancel on a not-yet-started group is
-    // harmless and attempt ids are never reused.
+    // the fresh N+1 instead; with overlapping executes of one handle,
+    // BOTH in-flight attempts are this statement's query and both are
+    // cancelled. executeAttempt.get() is ALWAYS unioned in (not only
+    // when the running set is empty): with one attempt running and a
+    // second freshly allocated but not yet in runningAttempts (the
+    // window between incrementAndGet and the pool worker's add, which
+    // includes any pool-queue wait), both are this statement's query; a
+    // sticky cancel on a not-yet-started group is harmless and attempt
+    // ids are never reused.
     import scala.jdk.CollectionConverters._
     val targets =
       (st.runningAttempts.asScala.toSeq :+ st.executeAttempt.get())
@@ -402,70 +395,44 @@ final class Engine(root: SparkSession) {
     }
   }
 
-  def fetch(handle: String): (StructType, Array[Row]) = {
-    val st = statement(handle)
-    st.synchronized {
-      val (schema, _) = st.result.getOrElse(
-        throw new IllegalStateException("statement not executed"))
-      val rows = st.rows.getOrElse {
-        // Rows were released at the first Arrow encode — rebuild them
-        // from the cached bytes. A transient decode on the (rare) row-
-        // fetch-after-arrow-fetch path, instead of BOTH copies resident
-        // for the statement's whole lifetime (VERDICT r9 #6).
-        org.apache.spark.sql.graftaccess.Internals
-          .arrowIpcToRows(schema, st.ipc.get._1)
-      }
-      (schema, rows)
-    }
-  }
+  private def result(st: Statement): Engine.Result =
+    st.result.getOrElse(throw new IllegalStateException("statement not executed"))
+
+  private def decode(r: Engine.Result): (StructType, Array[Row]) =
+    (r.schema, Internals.arrowIpcToRows(r.schema, r.ipc))
+
+  /** Row-shaped fetch, decoded from the cached Arrow bytes. */
+  def fetch(handle: String): (StructType, Array[Row]) =
+    decode(result(statement(handle)))
 
   /** Result as ONE Arrow IPC stream — the reference's actual wire format
-    * (`do_get_fallback` serves cached batches, lib.rs:288-295). Encodes
-    * the result [[execute]] cached — NO second execution, no Spark job:
-    * a fetch always returns exactly the rows execute() counted, even if
-    * the underlying table mutated in between (repeatable read within one
-    * statement lifecycle, like the reference's server-side cache).
-    * The encoding itself is ALSO cached: the first fetch pays the
-    * Row→Arrow serialize once (like the reference's encode-once batch
-    * cache, lib.rs:333-344); every later fetch returns the same bytes
-    * (reference-equal) until a re-execute invalidates them. */
-  def fetchArrow(handle: String): Array[Byte] = fetchArrowFramed(handle)._1
+    * (`do_get_fallback` serves cached batches, lib.rs:288-295). Returns
+    * the bytes [[execute]] encoded — NO second execution, no Spark job,
+    * no encode: a fetch always returns exactly the rows execute()
+    * counted, even if the underlying table mutated in between
+    * (repeatable read within one statement lifecycle, like the
+    * reference's server-side cache), and every fetch returns the same
+    * array until a re-execute replaces it. */
+  def fetchArrow(handle: String): Array[Byte] = result(statement(handle)).ipc
 
   /** [[fetchArrow]] plus the IPC message-boundary offsets: slicing the
     * stream at the offsets gives schema-message / record-batch frames a
     * Flight `DoGet` would carry one FlightData each — the transport can
     * frame per-batch with zero copies. */
   def fetchArrowFramed(handle: String): (Array[Byte], Array[Int]) = {
-    val st = statement(handle)
-    // The whole read-or-encode is one critical section: the encode-and-
-    // release transition (ipc := Some, rows := None) must be atomic with
-    // respect to concurrent fetches, or a second fetch could miss the
-    // ipc cache and then find rows already gone (ADVICE r10). Encoding
-    // under the lock serializes concurrent first-fetches — which is also
-    // what makes the encode happen ONCE.
-    st.synchronized {
-      st.ipc.getOrElse {
-        val (schema, _) = st.result.getOrElse(
-          throw new IllegalStateException("statement not executed"))
-        val enc = org.apache.spark.sql.graftaccess.Internals
-          .rowsToArrowIpcFramed(st.session, schema, st.rows.get)
-        st.ipc = Some(enc)
-        // Single residency from here on: fetches are served from the
-        // cached bytes (row-shaped ones decode), re-execute rebuilds.
-        st.rows = None
-        enc
-      }
-    }
+    val r = result(statement(handle))
+    (r.ipc, r.offsets)
+  }
+
+  /** One-shot statement: prepare + execute, closed before returning. */
+  private def runOnce(token: String, sql: String): Engine.Result = {
+    val (h, _) = prepare(token, sql)
+    try run(h) finally closeStatement(h)
   }
 
   /** One-shot convenience: prepare + execute + fetch. */
-  def executeQuery(token: String, sql: String): (StructType, Array[Row]) = {
-    val (h, _) = prepare(token, sql)
-    execute(h)
-    val r = fetch(h)
-    closeStatement(h)
-    r
-  }
+  def executeQuery(token: String, sql: String): (StructType, Array[Row]) =
+    decode(runOnce(token, sql))
 
   /** SQL string literal with doubled quotes (introspection filters). */
   private def sqlLit(s: String): String = "'" + s.replace("'", "''") + "'"
@@ -476,8 +443,8 @@ final class Engine(root: SparkSession) {
     * SQL instead (lib.rs:92); these verbs serve exactly that listing —
     * same snapshot, Flight SQL's column names — so a fresh client can
     * discover catalogs/schemas/tables without knowing the dialect. */
-  def getCatalogs(token: String): (StructType, Array[Row]) =
-    executeQuery(token,
+  def getCatalogs(token: String): Engine.Result =
+    runOnce(token,
       "SELECT DISTINCT table_catalog AS catalog_name " +
         "FROM information_schema.tables ORDER BY catalog_name")
 
@@ -485,11 +452,11 @@ final class Engine(root: SparkSession) {
     * `schemaPattern` is a SQL LIKE pattern (`%`/`_`), both optional —
     * Flight SQL's filter semantics. */
   def getDbSchemas(token: String, catalog: Option[String] = None,
-      schemaPattern: Option[String] = None): (StructType, Array[Row]) = {
+      schemaPattern: Option[String] = None): Engine.Result = {
     val conds = catalog.map(c => s"table_catalog = ${sqlLit(c)}").toSeq ++
       schemaPattern.map(p => s"table_schema LIKE ${sqlLit(p)}")
     val where = if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
-    executeQuery(token,
+    runOnce(token,
       "SELECT DISTINCT table_catalog AS catalog_name, " +
         "table_schema AS db_schema_name " +
         s"FROM information_schema.tables$where " +
@@ -503,14 +470,14 @@ final class Engine(root: SparkSession) {
   def getTables(token: String, catalog: Option[String] = None,
       schemaPattern: Option[String] = None,
       tablePattern: Option[String] = None,
-      tableTypes: Seq[String] = Nil): (StructType, Array[Row]) = {
+      tableTypes: Seq[String] = Nil): Engine.Result = {
     val conds = catalog.map(c => s"table_catalog = ${sqlLit(c)}").toSeq ++
       schemaPattern.map(p => s"table_schema LIKE ${sqlLit(p)}") ++
       tablePattern.map(p => s"table_name LIKE ${sqlLit(p)}") ++
       (if (tableTypes.isEmpty) None
        else Some(tableTypes.map(sqlLit).mkString("table_type IN (", ", ", ")")))
     val where = if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
-    executeQuery(token,
+    runOnce(token,
       "SELECT table_catalog AS catalog_name, " +
         "table_schema AS db_schema_name, table_name, table_type " +
         s"FROM information_schema.tables$where " +
@@ -526,13 +493,13 @@ final class Engine(root: SparkSession) {
   def getColumns(token: String, catalog: Option[String] = None,
       schemaPattern: Option[String] = None,
       tablePattern: Option[String] = None,
-      columnPattern: Option[String] = None): (StructType, Array[Row]) = {
+      columnPattern: Option[String] = None): Engine.Result = {
     val conds = catalog.map(c => s"table_catalog = ${sqlLit(c)}").toSeq ++
       schemaPattern.map(p => s"table_schema LIKE ${sqlLit(p)}") ++
       tablePattern.map(p => s"table_name LIKE ${sqlLit(p)}") ++
       columnPattern.map(p => s"column_name LIKE ${sqlLit(p)}")
     val where = if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
-    executeQuery(token,
+    runOnce(token,
       "SELECT table_catalog AS catalog_name, " +
         "table_schema AS db_schema_name, table_name, column_name, " +
         "ordinal_position, data_type, is_nullable " +
@@ -544,7 +511,7 @@ final class Engine(root: SparkSession) {
     * Result rows are NEVER materialized on the driver: commands execute
     * eagerly at `sql()`, query-shaped text drains on the executors. */
   def executeUpdate(token: String, sql: String): Long = {
-    org.apache.spark.sql.graftaccess.Internals.runWithoutCollect(
+    Internals.runWithoutCollect(
       session(token).sql(Engine.rewriteSimilarTo(sql)))
     -1L
   }
@@ -554,7 +521,7 @@ final class Engine(root: SparkSession) {
     * like Dedup/LmScore persist heavy intermediates behind lazy
     * DataFrames, and the statement close is the engine-side point where
     * "the caller's last action ran" is known — executor storage returns
-    * to baseline here (VERDICT r7 #4). Unpersist is recompute-safe, so a
+    * to baseline here. Unpersist is recompute-safe, so a
     * concurrent statement of the same session at worst recomputes. */
   def closeStatement(handle: String): Unit = {
     val st = statements.remove(handle)
@@ -575,12 +542,6 @@ final class Engine(root: SparkSession) {
     }
   }
 
-  /** Test hook: whether the statement still holds its Row array — it
-    * must NOT after the first Arrow encode (single-residency contract,
-    * VERDICT r9 #6). */
-  private[graft] def rowsResident(handle: String): Boolean =
-    statement(handle).rows.isDefined
-
   private def statement(handle: String): Statement = {
     val st = statements.get(handle)
     if (st == null) throw new IllegalArgumentException("unknown statement handle")
@@ -594,12 +555,19 @@ final class Engine(root: SparkSession) {
 
 object Engine {
 
+  /** A statement's cached result: the Arrow IPC stream [[Engine.execute]]
+    * encoded once, with its schema, row count and the message-boundary
+    * offsets (see `Internals.encodeArrowIpc`). Immutable; `ipc.length` is
+    * the result's size in bytes, in driver memory and on the wire. */
+  final case class Result(schema: StructType, rowCount: Long,
+      ipc: Array[Byte], offsets: Array[Int])
+
   /** Spark job-group name tagging every job a statement submits —
     * the cancellation key for [[Engine.cancelQuery]]. */
   private[graft] def jobGroup(handle: String): String = s"graft-stmt-$handle"
 
-  /** Bounded worker pool for [[Engine.execute]] (ADVICE r11: a thread
-    * per execute is unbounded under load). Daemon threads, shared by
+  /** Bounded worker pool for [[Engine.execute]] (a thread per execute
+    * is unbounded under load). Daemon threads, shared by
     * all engines in the JVM — they carry no state between tasks (the
     * job-group property is set per task and cleared in its finally).
     * Sized by GRAFT_EXEC_THREADS (floor 1, default 16 — matches the

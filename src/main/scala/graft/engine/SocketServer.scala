@@ -19,7 +19,11 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
   *
   * Framing: 4-byte big-endian length + UTF-8 JSON body, both directions.
   * A `fetch_arrow` response is its JSON header frame (carrying the payload
-  * size) followed by ONE raw frame of Arrow IPC bytes.
+  * size) followed by ONE raw frame of Arrow IPC bytes. A request frame
+  * longer than [[SocketServer.MaxRequestBytes]] (or with a negative
+  * length) is answered with an `ok: false` frame and the connection is
+  * closed, since the stream is out of sync; a body that is not JSON is
+  * answered with an `ok: false` frame and the connection stays open.
   *
   * Verbs (all responses carry `ok: Boolean`, failures add `error`):
   *  - handshake {user, password}        → {token}        (lib.rs:223-240)
@@ -136,10 +140,22 @@ final class SocketServer(engine: Engine, requestedPort: Int = 31337,
         val len =
           try in.readInt()
           catch { case _: EOFException | _: SocketException => open = false; -1 }
-        if (open) {
+        if (open && (len < 0 || len > SocketServer.MaxRequestBytes)) {
+          // the body was not read, so the next frame boundary is unknown
+          writeError(out, s"request frame length $len is outside " +
+            s"0..${SocketServer.MaxRequestBytes}")
+          open = false
+        } else if (open) {
           val buf = new Array[Byte](len)
           in.readFully(buf)
-          respond(mapper.readTree(new String(buf, UTF_8)), out)
+          val req =
+            try Some(mapper.readTree(new String(buf, UTF_8)))
+            catch {
+              case e: com.fasterxml.jackson.core.JsonProcessingException =>
+                writeError(out, s"request is not JSON: ${e.getOriginalMessage}")
+                None
+            }
+          req.foreach(respond(_, out))
         }
       }
     } finally sock.close()
@@ -150,6 +166,10 @@ final class SocketServer(engine: Engine, requestedPort: Int = 31337,
     out.write(bytes)
     out.flush()
   }
+
+  private def writeError(out: DataOutputStream, error: String): Unit =
+    writeFrame(out, mapper.createObjectNode().put("ok", false)
+      .put("error", error).toString.getBytes(UTF_8))
 
   private def respond(req: JsonNode, out: DataOutputStream): Unit = {
     val res = mapper.createObjectNode()
@@ -227,7 +247,7 @@ final class SocketServer(engine: Engine, requestedPort: Int = 31337,
           val token = text("token")
           def opt(f: String): Option[String] =
             Option(req.get(f)).map(_.asText()).filter(_.nonEmpty)
-          val (schema, rows) = cmd match {
+          val r = cmd match {
             case "get_catalogs" => engine.getCatalogs(token)
             case "get_db_schemas" =>
               engine.getDbSchemas(token, opt("catalog"),
@@ -243,9 +263,8 @@ final class SocketServer(engine: Engine, requestedPort: Int = 31337,
               engine.getTables(token, opt("catalog"),
                 opt("db_schema_pattern"), opt("table_pattern"), types)
           }
-          arrow = org.apache.spark.sql.graftaccess.Internals
-            .rowsToArrowIpc(engine.session(token), schema, rows)
-          res.put("ok", true).put("rows", rows.length)
+          arrow = r.ipc
+          res.put("ok", true).put("rows", r.rowCount)
             .put("bytes", arrow.length)
         case "cancel_query" =>
           // Flight SQL CancelQuery (the reference's
@@ -276,12 +295,17 @@ final class SocketServer(engine: Engine, requestedPort: Int = 31337,
 }
 
 object SocketServer {
+  /** Largest request frame the server reads. Requests carry SQL text and
+    * a few fields, so 16 MiB is far above any real one; without a bound a
+    * client's 4-byte header alone would choose the server's allocation. */
+  val MaxRequestBytes: Int = 16 << 20
+
   /** Env-driven TTLs are clamped to >= 1s with a parse-failure fallback,
     * like GRAFT_MAX_STATEMENTS: an unvalidated `0`/negative value would
     * make the sweeper run every 10 ms with `cutoff >= now` — collecting
     * statements actively between execute and fetch, i.e. an env typo
     * renders the server unusable — and a non-numeric value would throw
-    * at construction (ADVICE r9). */
+    * at construction. */
   private[graft] def clampTtl(raw: Option[String], default: Long): Long =
     raw.flatMap(s => scala.util.Try(s.trim.toLong).toOption)
       .map(math.max(1000L, _)).getOrElse(default)
@@ -302,8 +326,8 @@ object ServerMain {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       // long-lived service: many distinct statements overflow the
-      // 100-entry generated-class cache default (Bench.scala round-11
-      // note) — size for a service workload
+      // 100-entry generated-class cache default — size for a service
+      // workload
       .config("spark.sql.codegen.cache.maxEntries", "2000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -68,47 +68,34 @@ object Internals {
     ofRows(spark, org.apache.spark.sql.execution.datasources.v2
       .DataSourceV2Relation.create(table, None, None))
 
-  /** Encode a DataFrame's result as ONE Arrow IPC stream (schema message +
-    * record batch + EOS) — the wire format of the reference's Flight
-    * `do_get` (lib.rs:288-295 encodes cached batches the same way). The
-    * distributed plan still executes on executors; only the final result
-    * is driver-encoded, mirroring the reference's server-side cache. */
-  def toArrowIpc(df: org.apache.spark.sql.DataFrame): Array[Byte] = {
-    val ds = df.asInstanceOf[org.apache.spark.sql.classic.DataFrame]
-    val rows = ds.queryExecution.executedPlan.executeCollect()
-    encodeArrowIpc(ds.sparkSession, ds.schema, rows.iterator)._1
+  /** Run a DataFrame's plan and collect its result as `InternalRow`s —
+    * `Dataset.collect` without the Row deserializer. Runs under
+    * `SQLExecution.withNewExecutionId` exactly as `collect` does, so SQL
+    * listeners (UI, QueryExecutionListener, tracing) see the same
+    * execution. `executeCollect` returns an independent copy per row. */
+  def collectInternalRows(df: org.apache.spark.sql.DataFrame)
+      : Array[org.apache.spark.sql.catalyst.InternalRow] = {
+    val qe = df.asInstanceOf[org.apache.spark.sql.classic.DataFrame].queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(
+        qe, Some("collect")) {
+      org.apache.spark.sql.execution.QueryExecution.withInternalError(
+          """The "collect" action failed.""") {
+        qe.executedPlan.resetMetrics()
+        qe.executedPlan.executeCollect()
+      }
+    }
   }
 
-  /** Encode ALREADY-COLLECTED external rows as the same one-stream Arrow
-    * IPC format — the cached-result path of the reference's `do_get`
-    * (lib.rs:288-295 re-encodes its server-side cache rather than
-    * re-running the plan). Launches NO Spark job: the rows live on the
-    * driver already; only a per-row Row→InternalRow serialize + Arrow
-    * vector write happens here. */
-  def rowsToArrowIpc(
-      spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      rows: Array[org.apache.spark.sql.Row]): Array[Byte] =
-    rowsToArrowIpcFramed(spark, schema, rows)._1
-
-  /** Same one-stream encoding, plus the IPC MESSAGE boundaries: `offsets`
-    * are the byte positions after the schema message and after each
-    * record-batch message (the final entry is the total length, i.e. the
-    * EOS marker rides with the last batch). Slicing the stream at these
-    * offsets yields frames a Flight `DoGet` would carry one FlightData
-    * each (lib.rs:288-295): a server can frame per-batch with zero
-    * copies (`write(bytes, off, len)`) and a client reassembles the
-    * identical stream by concatenation. */
-  def rowsToArrowIpcFramed(
-      spark: SparkSession,
-      schema: org.apache.spark.sql.types.StructType,
-      rows: Array[org.apache.spark.sql.Row]): (Array[Byte], Array[Int]) = {
-    val toInternal = org.apache.spark.sql.catalyst.encoders
-      .ExpressionEncoder(schema).createSerializer()
-    encodeArrowIpc(spark, schema, rows.iterator.map(toInternal(_)))
-  }
-
-  private def encodeArrowIpc(
+  /** Encode rows as ONE Arrow IPC stream (schema message + record
+    * batches + EOS) — the wire format of the reference's Flight `do_get`
+    * (lib.rs:288-295). `offsets` are the byte positions after the schema
+    * message and after each record-batch message (the final entry is the
+    * total length, i.e. the EOS marker rides with the last batch).
+    * Slicing the stream at these offsets yields frames a Flight `DoGet`
+    * would carry one FlightData each: a server can frame per-batch with
+    * zero copies (`write(bytes, off, len)`) and a client reassembles the
+    * identical stream by concatenation. Launches no Spark job. */
+  def encodeArrowIpc(
       spark: SparkSession,
       schema: org.apache.spark.sql.types.StructType,
       rows: Iterator[org.apache.spark.sql.catalyst.InternalRow])
@@ -131,10 +118,8 @@ object Internals {
       sw.start()
       val offsets = Array.newBuilder[Int]
       offsets += out.size() // end of the schema message
-      // Streaming write, NO grouped() buffering: the Row→InternalRow
-      // serializer reuses one UnsafeRow, so buffering a chunk would
-      // capture n references to the same mutated row. write() copies
-      // values into the Arrow vectors immediately, which is safe.
+      // Streaming write: write() copies values into the Arrow vectors
+      // immediately, so the input iterator may reuse one mutable row.
       var total = 0L
       var inBatch = 0
       while (rows.hasNext) {
@@ -158,10 +143,10 @@ object Internals {
     } finally { root.close(); allocator.close() }
   }
 
-  /** Inverse of [[rowsToArrowIpcFramed]]: decode an Arrow IPC stream
-    * back to external Rows. Lets the engine keep ONE resident copy of a
-    * cached result (the encoded bytes) and still serve the row-shaped
-    * fetch verb by transiently rebuilding the rows (VERDICT r9 #6). */
+  /** Inverse of [[encodeArrowIpc]]: decode an Arrow IPC stream back to
+    * external Rows. Lets the engine keep ONE resident form of a cached
+    * result (the encoded bytes) and still serve the row-shaped fetch
+    * verb by transiently rebuilding the rows. */
   def arrowIpcToRows(
       schema: org.apache.spark.sql.types.StructType,
       bytes: Array[Byte]): Array[org.apache.spark.sql.Row] = {

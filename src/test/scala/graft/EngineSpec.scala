@@ -474,21 +474,20 @@ class EngineSpec extends AnyFunSuite {
     engine.closeStatement(h)
   }
 
-  test("first Arrow encode releases the Row array — single residency; " +
-      "row fetch decodes from the cached bytes (VERDICT r9 #6)") {
-    val (h, _) = engine.prepare(token,
-      "SELECT id, CAST(id AS STRING) AS s, id * 2.5 AS d, id % 2 = 0 AS b," +
-        " array(id, id + 1) AS arr FROM range(37)")
+  test("one cached result form: repeat fetches return the same bytes; " +
+      "row fetch decodes them to the collected values") {
+    val sql = "SELECT id, CAST(id AS STRING) AS s, id * 2.5 AS d, " +
+      "id % 2 = 0 AS b, array(id, id + 1) AS arr FROM range(37)"
+    val (h, _) = engine.prepare(token, sql)
     engine.execute(h)
-    assert(engine.rowsResident(h), "rows resident until the first encode")
-    val (schema0, before) = engine.fetch(h)
+    val collected = engine.session(token).sql(sql)
+    val (schema0, before) = (collected.schema, collected.collect())
     val first = engine.fetchArrow(h)
-    assert(!engine.rowsResident(h), "encode must release the Row array")
-    // repeat fetches still serve the identical cached bytes
+    // repeat fetches serve the identical cached bytes
     assert(engine.fetchArrow(h) eq first)
     assert(engine.fetchArrowFramed(h)._1 eq first)
-    // row-shaped fetch after the release: decoded from the bytes,
-    // value- and schema-identical to the pre-encode fetch
+    // row-shaped fetch: decoded from the bytes, value- and
+    // schema-identical to Spark's own collect of the same text
     val (schema1, after) = engine.fetch(h)
     assert(schema1 == schema0)
     assert(after.length == before.length)
@@ -501,10 +500,10 @@ class EngineSpec extends AnyFunSuite {
         case v => v
       })
     }
-    assert(!engine.rowsResident(h), "a row fetch must not re-pin the rows")
-    // re-execute rebuilds rows and drops the stale encoding
+    // a row fetch leaves the cached bytes as they were
+    assert(engine.fetchArrow(h) eq first)
+    // re-execute replaces the result with a new encoding
     engine.execute(h)
-    assert(engine.rowsResident(h))
     assert(!(engine.fetchArrow(h) eq first))
     engine.closeStatement(h)
   }
@@ -617,8 +616,8 @@ class EngineSpec extends AnyFunSuite {
       .unset("spark.sql.execution.arrow.maxRecordsPerBatch")
   }
 
-  test("concurrent fetches race the encode-and-release transition " +
-      "safely — one encode, no crash (ADVICE r10)") {
+  test("concurrent fetches read the one cached result safely — " +
+      "one encode, no crash") {
     val (h, _) = engine.prepare(token,
       "SELECT id, CAST(id AS STRING) AS s FROM range(5000)")
     engine.execute(h)
@@ -631,8 +630,8 @@ class EngineSpec extends AnyFunSuite {
       val t = new Thread(() => {
         try {
           start.await()
-          // odd threads interleave a row-shaped fetch (which reads the
-          // rows/ipc pair) with the arrow fetches driving the release
+          // odd threads interleave a row-shaped fetch (which decodes
+          // the cached bytes) with the arrow fetches
           if (i % 2 == 1) engine.fetch(h)
           results.add(engine.fetchArrow(h))
         } catch { case t: Throwable => errors.add(t) }
@@ -776,6 +775,28 @@ class EngineSpec extends AnyFunSuite {
       val (ok, _) = engine.prepare(token, "SELECT 1 AS one")
       assert(engine.execute(ok) == 1)
       engine.closeStatement(ok)
+    } finally sys.props.remove("graft.max.result.bytes")
+  }
+
+  test("GRAFT_MAX_RESULT_BYTES compares the exact encoded length: a cap " +
+      "equal to it passes, one byte less fails") {
+    val sql = "SELECT 1 AS one"
+    val (h, _) = engine.prepare(token, sql)
+    engine.execute(h)
+    val n = engine.fetchArrow(h).length
+    engine.closeStatement(h)
+    try {
+      sys.props("graft.max.result.bytes") = n.toString
+      val (ok, _) = engine.prepare(token, sql)
+      assert(engine.execute(ok) == 1)
+      assert(engine.fetchArrow(ok).length == n)
+      engine.closeStatement(ok)
+      sys.props("graft.max.result.bytes") = (n - 1).toString
+      val (big, _) = engine.prepare(token, sql)
+      val err = intercept[IllegalStateException] { engine.execute(big) }
+      assert(err.getMessage.contains(s"GRAFT_MAX_RESULT_BYTES=${n - 1}"),
+        err.getMessage)
+      engine.closeStatement(big)
     } finally sys.props.remove("graft.max.result.bytes")
   }
 

@@ -206,6 +206,44 @@ class ServerSpec extends AnyFunSuite {
     }
   }
 
+  test("request frames outside 0..MaxRequestBytes get an error frame and " +
+      "a close; a non-JSON body gets an error frame and the socket stays") {
+    withServer { (server, _) =>
+      // every read times out instead of hanging if the server never answers
+      def connect(): Socket = {
+        val s = new Socket("127.0.0.1", server.port)
+        s.setSoTimeout(20000)
+        s
+      }
+      for (len <- Seq(SocketServer.MaxRequestBytes + 1, -1)) {
+        val sock = connect()
+        val c = new Client(sock)
+        try {
+          new DataOutputStream(sock.getOutputStream).writeInt(len)
+          val r = mapper.readTree(new String(c.readFrame(), UTF_8))
+          assert(!r.get("ok").asBoolean, r.toString)
+          assert(r.get("error").asText.contains(len.toString), r.toString)
+          assert(sock.getInputStream.read() == -1,
+            s"the server must close the connection after length $len")
+        } finally c.close()
+        // the server still serves a new client
+        val fresh = new Client(connect())
+        try auth(fresh) finally fresh.close()
+      }
+      val sock = connect()
+      val c = new Client(sock)
+      try {
+        val body = "{not json".getBytes(UTF_8)
+        val out = new DataOutputStream(sock.getOutputStream)
+        out.writeInt(body.length); out.write(body); out.flush()
+        val r = mapper.readTree(new String(c.readFrame(), UTF_8))
+        assert(!r.get("ok").asBoolean, r.toString)
+        // same socket, next frame: served normally
+        auth(c)
+      } finally c.close()
+    }
+  }
+
   test("reference parity details pinned to their lib.rs anchors (PROTOCOL.md)") {
     withServer { (_, c) =>
       // handshake failure wording — lib.rs:237-240
