@@ -136,9 +136,9 @@ object SparkEntry {
     // S-curve-auto-tuned minhash pairs, best-fit-decreasing packing
     // (per-part imperative fold after one hash exchange), and the
     // blocklist word filter (distinct-word explode + broadcast semi).
-    // q_wordpiece_train stays standalone-tier with the other trainers
-    // (AdhocBench): 8 rounds × two aggregates each dominate the 3-pass
-    // suite budget the same way bpe_train64 does.
+    // q_wordpiece_train stays out of the bench set with the other
+    // trainers: 8 rounds × two aggregates each dominate the 3-pass
+    // suite budget the same way q_bpe_train does.
     "q_ann_binary", "q_dedup_minhash_auto", "q_pack_bfd", "q_blocklist",
     // round 13 extension, late: the IVF-composed binary tier (routed
     // Hamming scan + exact rerank) and sentence-boundary chunking (one

@@ -21,9 +21,9 @@ import org.apache.spark.sql.sources.Filter
   * WHY: every copy-on-write DELETE / MERGE runtime group filter and
   * every `.files`/`.partitions` metadata query used to open O(table
   * files) parquet footers ON THE DRIVER. At 100 TB that pass — not the
-  * rewrite I/O — dominates a narrow MERGE's wall time (the round-18
-  * ScaleBench measured the merge's wall growing ~6× with table size
-  * for this exact reason while rewrite amplification stayed 1.0).
+  * rewrite I/O — dominates a narrow MERGE's wall time (a 10× table
+  * grew the merge's wall ~6× for this exact reason while rewrite
+  * amplification stayed 1.0; BASELINE.md has the numbers).
   * With the cache, prune time is O(commits-since-last-merge) small
   * file reads, independent of table file count.
   *

@@ -29,7 +29,15 @@ import graft.DFCompat
   *  - executeUpdate: DDL/DML/SET acknowledged with rowcount -1
   *    (lib.rs:645-654).
   */
-final class Engine(root: SparkSession) {
+final class Engine private[graft] (root: SparkSession, maxStatements: Int) {
+
+  /** Cached results live in driver memory (collect-then-cache, like the
+    * reference's server-side cache at lib.rs:333-344) — a long-lived
+    * service must bound them. Prepare evicts the oldest-idle statement
+    * beyond GRAFT_MAX_STATEMENTS (default 1024); [[gc]] sweeps
+    * idle/orphaned ones. */
+  def this(root: SparkSession) = this(root,
+    math.max(1, sys.env.getOrElse("GRAFT_MAX_STATEMENTS", "1024").toInt))
 
   final case class Statement(
       session: SparkSession,
@@ -63,13 +71,6 @@ final class Engine(root: SparkSession) {
   // last activity per session token — statement touches count, so a
   // session is "idle" only when NOTHING of it has been used (gcSessions)
   private val sessionTouched = new ConcurrentHashMap[String, Long]()
-
-  /** Cached results live in driver memory (collect-then-cache, like the
-    * reference's server-side cache at lib.rs:333-344) — a long-lived
-    * service must bound them. Prepare evicts the oldest-idle statement
-    * beyond this cap; [[gc]] sweeps idle/orphaned ones. */
-  private val maxStatements: Int =
-    math.max(1, sys.env.getOrElse("GRAFT_MAX_STATEMENTS", "1024").toInt)
 
   /** Result-size guards on execute. The reference materializes results
     * unbounded (lib.rs:333-344) and so does the default here — but at
@@ -132,11 +133,9 @@ final class Engine(root: SparkSession) {
         return lines.toDF("plan_with_metrics")
       case _ => ()
     }
-    val sql = Engine.rewriteSimilarTo(
-      if (InfoSchema.mentionsInfoSchema(st.sql)) {
-        InfoSchema.refresh(st.session)
-        InfoSchema.rewrite(st.sql)
-      } else st.sql)
+    val infoSql = InfoSchema.rewrite(st.sql)
+    if (infoSql != st.sql) InfoSchema.refresh(st.session)
+    val sql = Engine.rewriteSimilarTo(infoSql)
     if (st.params.nonEmpty) st.session.sql(sql, st.params.toArray[Any])
     else st.session.sql(sql)
   }
@@ -147,34 +146,14 @@ final class Engine(root: SparkSession) {
     * (surfacing as a spurious "unknown statement handle"). */
   private val prepareLock = new Object
 
-  /** `?` placeholders outside single-quoted literals (doubled AND
-    * backslash-escaped quotes handled) and outside line or block
-    * comments. */
+  /** `?` placeholders outside literals, quoted identifiers and
+    * comments ([[Engine.skipQuoted]]). */
   private def countPlaceholders(sql: String): Int = {
     var n = 0; var i = 0
-    val len = sql.length
-    while (i < len) {
-      sql.charAt(i) match {
-        case '\'' => // string literal: skip to its end
-          i += 1
-          var closed = false
-          while (i < len && !closed) {
-            sql.charAt(i) match {
-              case '\\' => i += 2 // Spark-dialect escaped char
-              case '\'' => closed = true; i += 1
-              case _ => i += 1
-            }
-          }
-        case '-' if i + 1 < len && sql.charAt(i + 1) == '-' => // line comment
-          while (i < len && sql.charAt(i) != '\n') i += 1
-        case '/' if i + 1 < len && sql.charAt(i + 1) == '*' => // block comment
-          i += 2
-          while (i + 1 < len &&
-            !(sql.charAt(i) == '*' && sql.charAt(i + 1) == '/')) i += 1
-          i += 2
-        case '?' => n += 1; i += 1
-        case _ => i += 1
-      }
+    while (i < sql.length) {
+      val j = Engine.skipQuoted(sql, i)
+      if (j > i) i = j
+      else { if (sql.charAt(i) == '?') n += 1; i += 1 }
     }
     n
   }
@@ -277,10 +256,10 @@ final class Engine(root: SparkSession) {
     * statement holds only those bytes — the reference likewise caches
     * the `Vec<RecordBatch>` its collect returns and serves every later
     * `do_get` from it (lib.rs:82, 288-295). Returns the row count. */
-  def execute(handle: String): Long = run(handle).rowCount
+  def execute(handle: String): Long = run(statement(handle), handle).rowCount
 
-  private def run(handle: String): Engine.Result = {
-    val st = statement(handle)
+  /** Plan, collect and encode `st`; `handle` names its Spark job group. */
+  private def run(st: Statement, handle: String): Engine.Result = {
     // every Spark job this statement submits carries its handle as the
     // job group, so cancelQuery from ANOTHER connection can abort it —
     // the verb the reference leaves Status::unimplemented
@@ -424,11 +403,11 @@ final class Engine(root: SparkSession) {
     (r.ipc, r.offsets)
   }
 
-  /** One-shot statement: prepare + execute, closed before returning. */
-  private def runOnce(token: String, sql: String): Engine.Result = {
-    val (h, _) = prepare(token, sql)
-    try run(h) finally closeStatement(h)
-  }
+  /** One-shot statement (executeQuery and the get_* verbs): planned and
+    * run once, never registered, so it neither counts against the
+    * statement cap nor evicts a client's handle. */
+  private def runOnce(token: String, sql: String): Engine.Result =
+    run(Statement(session(token), token, sql), UUID.randomUUID().toString)
 
   /** One-shot convenience: prepare + execute + fetch. */
   def executeQuery(token: String, sql: String): (StructType, Array[Row]) =
@@ -594,8 +573,62 @@ object Engine {
     "(?is)(NOT\\s+)?SIMILAR\\s+TO\\s+'((?:[^']|'')*)'" +
       "(?:\\s+ESCAPE\\s+'([^']|'')')?")
 
-  private def isWordChar(c: Char): Boolean =
+  private[engine] def isWordChar(c: Char): Boolean =
     Character.isLetterOrDigit(c) || c == '_'
+
+  /** The one SQL lexing rule every text pass of the engine shares: if a
+    * string literal or quoted identifier (`'…'`, `"…"`, backticks;
+    * doubled quotes stay inside the span, and in `'` / `"` literals a
+    * backslash escapes the next char, as Spark's default parser reads
+    * them), a `--` line comment or a block comment starts at `i`, the
+    * index just past its end; otherwise `i`. Placeholder counting, the
+    * information_schema rewrite and the SIMILAR TO rewrite all scan with
+    * it, so none of them acts on text inside a literal or a comment. */
+  private[engine] def skipQuoted(sql: String, i: Int): Int = {
+    val n = sql.length
+    sql.charAt(i) match {
+      case c @ ('\'' | '"' | '`') =>
+        var j = i + 1
+        var done = false
+        while (!done && j < n) {
+          val cj = sql.charAt(j)
+          if (cj == '\\' && c != '`' && j + 1 < n) j += 2
+          else if (cj == c) {
+            if (j + 1 < n && sql.charAt(j + 1) == c) j += 2 else done = true
+          } else j += 1
+        }
+        math.min(j + 1, n)
+      case '-' if i + 1 < n && sql.charAt(i + 1) == '-' =>
+        val nl = sql.indexOf('\n', i + 2)
+        if (nl < 0) n else nl
+      case '/' if i + 1 < n && sql.charAt(i + 1) == '*' =>
+        val close = sql.indexOf("*/", i + 2)
+        if (close < 0) n else close + 2
+      case _ => i
+    }
+  }
+
+  /** `sql` with `at`'s replacements applied: `at(i)` is asked only at
+    * positions outside literals, quoted identifiers and comments
+    * ([[skipQuoted]]) and returns the text to emit plus the index to
+    * resume at, or None to keep the char. */
+  private[engine] def rewriteOutsideQuotes(sql: String)(
+      at: Int => Option[(String, Int)]): String = {
+    val n = sql.length
+    // java.lang.StringBuilder: the 3-arg subsequence append (Scala's
+    // would auto-tuple a 3-arg call into append(Any))
+    val out = new java.lang.StringBuilder(n + 16)
+    var i = 0
+    while (i < n) {
+      val j = skipQuoted(sql, i)
+      if (j > i) { out.append(sql, i, j); i = j }
+      else at(i) match {
+        case Some((text, end)) => out.append(text); i = end
+        case None => out.append(sql.charAt(i)); i += 1
+      }
+    }
+    out.toString
+  }
 
   /** Rewrite SQL's `SIMILAR TO` (in the reference's grammar via
     * sqlparser — iceberg-datafusion-arrow-flight consumes it through
@@ -612,67 +645,28 @@ object Engine {
     * Literal-pattern occurrences only; applied in the Engine's
     * prepare/plan path so every service entry point sees it.
     *
-    * The scan is quote/comment-aware: string literals (`'…''…'`),
-    * quoted identifiers (`"…"`, backticks), `--` line comments and
-    * `/* */` block comments are copied verbatim, so `SIMILAR TO` text
-    * INSIDE them is never rewritten — only the keyword occurrence in
-    * actual SQL position is. */
+    * The scan is quote/comment-aware ([[rewriteOutsideQuotes]]):
+    * `SIMILAR TO` text inside a literal, a quoted identifier or a
+    * comment is never rewritten — only the keyword occurrence in actual
+    * SQL position is. */
   def rewriteSimilarTo(sql: String): String = {
     if (sql.toLowerCase(java.util.Locale.ROOT).indexOf("similar") < 0)
       return sql
-    val n = sql.length
-    // java.lang.StringBuilder: the 3-arg subsequence append (Scala's
-    // would auto-tuple a 3-arg call into append(Any))
-    val out = new java.lang.StringBuilder(n + 16)
     val m = SimilarToRe.matcher(sql)
-    var i = 0
-    while (i < n) {
+    rewriteOutsideQuotes(sql) { i =>
       val c = sql.charAt(i)
-      c match {
-        case '\'' | '"' | '`' =>
-          // literal / quoted identifier: copy verbatim (doubled-quote
-          // escapes stay inside the span; in ' and " string literals
-          // Spark's default parser also accepts backslash-escaped
-          // chars — 'don\'t' — so a backslash skips the next char lest
-          // the span end early; backticked identifiers double only)
-          var j = i + 1
-          var done = false
-          while (!done && j < n) {
-            val cj = sql.charAt(j)
-            if (cj == '\\' && c != '`' && j + 1 < n) j += 2
-            else if (cj == c) {
-              if (j + 1 < n && sql.charAt(j + 1) == c) j += 2 else done = true
-            } else j += 1
-          }
-          val end = math.min(j + 1, n)
-          out.append(sql, i, end); i = end
-        case '-' if i + 1 < n && sql.charAt(i + 1) == '-' =>
-          var j = i + 2
-          while (j < n && sql.charAt(j) != '\n') j += 1
-          out.append(sql, i, j); i = j
-        case '/' if i + 1 < n && sql.charAt(i + 1) == '*' =>
-          val close = sql.indexOf("*/", i + 2)
-          val end = if (close < 0) n else close + 2
-          out.append(sql, i, end); i = end
-        case 'n' | 'N' | 's' | 'S'
-            if (i == 0 || !isWordChar(sql.charAt(i - 1))) => {
-          m.region(i, n)
-          if (m.lookingAt()) {
-            val not = if (m.group(1) == null) "" else "NOT "
-            val esc = m.group(3) match {
-              case null => '\\' // PostgreSQL's default SIMILAR TO escape
-              case "''" => '\''
-              case s => s.charAt(0)
-            }
-            val rx = similarToRegex(m.group(2), esc)
-            out.append(s"${not}RLIKE '$rx'")
-            i = m.end()
-          } else { out.append(c); i += 1 }
+      val atWord = "nNsS".indexOf(c.toInt) >= 0 &&
+        (i == 0 || !isWordChar(sql.charAt(i - 1)))
+      if (atWord && { m.region(i, sql.length); m.lookingAt() }) {
+        val not = if (m.group(1) == null) "" else "NOT "
+        val esc = m.group(3) match {
+          case null => '\\' // PostgreSQL's default SIMILAR TO escape
+          case "''" => '\''
+          case s => s.charAt(0)
         }
-        case other => out.append(other); i += 1
-      }
+        Some((s"${not}RLIKE '${similarToRegex(m.group(2), esc)}'", m.end()))
+      } else None
     }
-    out.toString
   }
 
   /** SIMILAR TO pattern → anchored Java regex, escaped for a Spark SQL

@@ -11,12 +11,19 @@ import org.apache.spark.sql.SparkSession
   * names — metadata-only, driver-side, a few hundred rows at most.
   */
 object InfoSchema {
-  private val Marker = "(?i)information_schema\\.".r
+  private val Marker = "information_schema."
 
-  def mentionsInfoSchema(sql: String): Boolean =
-    Marker.findFirstIn(sql).isDefined
-
-  def rewrite(sql: String): String = Marker.replaceAllIn(sql, "__infoschema_")
+  /** `sql` with each `information_schema.` qualifier (any case, at a word
+    * start, outside literals and comments) replaced by the snapshot
+    * views' `__infoschema_` prefix; the same string when there is none. */
+  def rewrite(sql: String): String =
+    if (!sql.toLowerCase(java.util.Locale.ROOT).contains(Marker)) sql
+    else Engine.rewriteOutsideQuotes(sql) { i =>
+      if (sql.regionMatches(true, i, Marker, 0, Marker.length) &&
+          (i == 0 || !Engine.isWordChar(sql.charAt(i - 1))))
+        Some(("__infoschema_", i + Marker.length))
+      else None
+    }
 
   def refresh(spark: SparkSession): Unit = {
     import spark.implicits._

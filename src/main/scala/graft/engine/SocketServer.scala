@@ -147,9 +147,13 @@ final class SocketServer(engine: Engine, requestedPort: Int = 31337,
           open = false
         } else if (open) {
           val buf = new Array[Byte](len)
-          in.readFully(buf)
+          // a client that disconnects mid-body ends the connection
+          // like one that disconnects between frames
+          try in.readFully(buf)
+          catch { case _: EOFException | _: SocketException => open = false }
           val req =
-            try Some(mapper.readTree(new String(buf, UTF_8)))
+            if (!open) None
+            else try Some(mapper.readTree(new String(buf, UTF_8)))
             catch {
               case e: com.fasterxml.jackson.core.JsonProcessingException =>
                 writeError(out, s"request is not JSON: ${e.getOriginalMessage}")

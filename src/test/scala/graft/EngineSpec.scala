@@ -806,4 +806,51 @@ class EngineSpec extends AnyFunSuite {
     assert(engine.execute(h) == 200000)
     engine.closeStatement(h)
   }
+
+  test("one-shot statements are never registered: at the statement cap, " +
+      "get_tables and executeQuery evict no client handle") {
+    val capped = new Engine(TestSpark.spark, 3)
+    val t = capped.handshake("admin", "password").toOption.get
+    val handles = (1 to 3).map { i =>
+      val (h, _) = capped.prepare(t, s"SELECT $i AS v")
+      capped.execute(h)
+      h
+    }
+    capped.getTables(t)
+    capped.executeQuery(t, "SELECT 0 AS v")
+    handles.zipWithIndex.foreach { case (h, i) =>
+      assert(capped.fetch(h)._2.head.getInt(0) == i + 1)
+    }
+    capped.closeSession(t)
+  }
+
+  test("the information_schema rewrite skips literals and comments, and " +
+      "text that only quotes it walks no catalog") {
+    val Right(t2) = engine.handshake("admin", "password")
+    val (_, rows) = engine.executeQuery(t2,
+      "SELECT 'information_schema.tables' AS s -- information_schema.views")
+    assert(rows.head.getString(0) == "information_schema.tables")
+    assert(!engine.session(t2).catalog.tableExists("__infoschema_tables"),
+      "a quoted mention must not refresh the information_schema views")
+    val (_, both) = engine.executeQuery(t2,
+      "SELECT 'information_schema.tables' AS s, count(*) AS n " +
+        "FROM information_schema.tables")
+    assert(both.head.getString(0) == "information_schema.tables")
+    assert(engine.session(t2).catalog.tableExists("__infoschema_tables"),
+      "the unquoted qualifier must still rewrite and refresh")
+    engine.closeSession(t2)
+  }
+
+  test("a nested struct with duplicate field names fails execute with " +
+      "DUPLICATED_FIELD_NAME_IN_ARROW_STRUCT; the handle stays usable") {
+    val (h, _) = engine.prepare(token, "SELECT named_struct('a', 1, ?, 2) AS s")
+    engine.bind(h, Seq("a"))
+    val e = intercept[Exception](engine.execute(h))
+    assert(e.getMessage.contains("DUPLICATED_FIELD_NAME_IN_ARROW_STRUCT"),
+      e.getMessage)
+    engine.bind(h, Seq("b"))
+    assert(engine.execute(h) == 1)
+    assert(engine.fetch(h)._2.head.getStruct(0).getInt(1) == 2)
+    engine.closeStatement(h)
+  }
 }

@@ -633,4 +633,45 @@ class PlanSpec extends AnyFunSuite {
     assert(!scans2.head.description().contains("mor split"))
     assert(df2.collect().map(_.getInt(0)).sorted.toSeq == Seq(1, 2, 4))
   }
+
+  test("unpartitioned windows appear only in the declared queries: every " +
+      "SparkEntry query's analyzed plan, checked against an allow-list") {
+    // A Window with no partition keys runs on ONE task (WindowExec's "No
+    // Partition Defined" warning): inside an operator it would serialize
+    // a 100 TB stage. Each allowed query says why its global window only
+    // ever sees bounded rows. The set must match EXACTLY, so a new hit
+    // and a stale entry both fail.
+    val scaffolding = "probe scaffolding: row_number over doc_id builds " +
+      "the test chain graph; clusterPairsStar itself has no window"
+    val postAggregate = "bounded post-aggregate input"
+    val smallTier = "bounded input: packByCumsum's window tier runs only " +
+      "below OpConf's size threshold; above it cumsumDistributed " +
+      "partitions every window by __pid"
+    val globalRank = "declared global-rank semantics of the query"
+    val allowed = Map(
+      "q_dedup_cc_star" -> scaffolding,
+      "q_dedup_cc_delta" -> scaffolding,
+      "q_tpch_q15" -> s"$postAggregate (supplier revenue, |suppliers| rows)",
+      "q_skew_profile" -> s"$postAggregate (the distinct-key profile)",
+      "q_dict_encode" -> s"$postAggregate (the distinct-token vocabulary)",
+      "q_pack_cumsum" -> smallTier,
+      "q_pack_cuseqlens" -> smallTier,
+      "q_win_global" -> s"$globalRank (row_number over all orders)",
+      "q_histogram_depth" -> s"$globalRank (equi-depth ntile bins)",
+      "q_curriculum" -> s"$globalRank (global curriculum deciles)")
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    // a child session: probes set confs and temp views of their own
+    val s = spark.newSession()
+    val hits = SparkEntry.queries.toSeq.sortBy(_._1).filter { case (_, mk) =>
+      try mk(s, "/root/testdata/sf0.001").queryExecution.analyzed.exists {
+        case w: Window => w.partitionSpec.isEmpty
+        case _ => false
+      } finally s.catalog.clearCache()
+    }.map(_._1).toSet
+    assert(hits -- allowed.keySet == Set.empty,
+      "new unpartitioned window(s): attribute them or partition them")
+    val stale = allowed -- hits
+    assert(stale.isEmpty, "stale allow-list entries, these queries no " +
+      s"longer have an unpartitioned window: ${stale.mkString("; ")}")
+  }
 }

@@ -661,4 +661,26 @@ class ServerSpec extends AnyFunSuite {
       assert(res.get("error").asText.contains("no session"))
     } finally { c.close(); server.stop() }
   }
+
+  test("a client that disconnects mid-body ends its connection quietly; " +
+      "the next connection is served") {
+    val uncaught = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val prev = Thread.getDefaultUncaughtExceptionHandler
+    Thread.setDefaultUncaughtExceptionHandler((_, e) => uncaught.add(e))
+    try {
+      withServer { (server, _) =>
+        val sock = new Socket("127.0.0.1", server.port)
+        val out = new DataOutputStream(sock.getOutputStream)
+        out.writeInt(100); out.write(new Array[Byte](50)); out.flush()
+        sock.close()
+        val fresh = new Client(server.port)
+        try auth(fresh) finally fresh.close()
+      }
+      // every connection is closed now: wait for their threads to end
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala
+        .filter(_.getName == "graft-server-conn").foreach(_.join(10000))
+      assert(uncaught.isEmpty, uncaught.asScala.mkString("; "))
+    } finally Thread.setDefaultUncaughtExceptionHandler(prev)
+  }
 }

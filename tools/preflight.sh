@@ -41,7 +41,14 @@ echo "$cres" | grep -q "CONTEND KILL OK" || { echo "CONTEND KILL FAILED"; exit 1
 echo "$cres" | grep -q "CONTEND MOR OK" || { echo "CONTEND MOR FAILED"; exit 1; }
 
 echo "== bench sf0.1 =="
-bjson=$(SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 ./tools/run.sh graft.Bench 2>/tmp/preflight_bench.log) \
+# Bench writes BENCH_LOCAL.json and tools/bench_attach.json into its cwd
+# and may ratchet tools/bench_bands.json: run it from a scratch cwd with
+# a copy of the bands file so the tracked files stay untouched.
+repo=$(pwd)
+bdir=$(mktemp -d /tmp/preflight_bench.XXXXXX)
+mkdir -p "$bdir/tools" && cp tools/bench_bands.json "$bdir/tools/"
+bjson=$(cd "$bdir" && SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
+  "$repo/tools/run.sh" graft.Bench 2>/tmp/preflight_bench.log) \
   || { echo "BENCH FAILED (see /tmp/preflight_bench.log)"; exit 1; }
 echo "$bjson"
 echo "$bjson" | grep -q '"metric":"total"' || { echo "BENCH OUTPUT MALFORMED"; exit 1; }
