@@ -4,7 +4,10 @@ import java.util.UUID
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{BooleanType, IntegerType, StringType,
+  StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 import org.apache.spark.sql.graftaccess.Internals
 
@@ -30,6 +33,8 @@ import graft.DFCompat
   *    (lib.rs:645-654).
   */
 final class Engine private[graft] (root: SparkSession, maxStatements: Int) {
+  import Engine.{CatalogsSchema, ColumnsSchema, DbSchemasSchema, StringOrder,
+    TablesSchema, like}
 
   /** Cached results live in driver memory (collect-then-cache, like the
     * reference's server-side cache at lib.rs:333-344) — a long-lived
@@ -72,16 +77,17 @@ final class Engine private[graft] (root: SparkSession, maxStatements: Int) {
   // session is "idle" only when NOTHING of it has been used (gcSessions)
   private val sessionTouched = new ConcurrentHashMap[String, Long]()
 
-  /** Result-size guards on execute. The reference materializes results
-    * unbounded (lib.rs:333-344) and so does the default here — but at
-    * 100× data a runaway `SELECT *` OOMs the DRIVER with only the
-    * statement-count cap standing between, so a deployment should set
+  /** Result-size guards on every result ([[capped]]). The reference
+    * materializes results unbounded (lib.rs:333-344) and so does the
+    * default here — but at 100× data a runaway `SELECT *` OOMs the
+    * DRIVER with only the statement-count cap standing between, so a
+    * deployment should set
     * GRAFT_MAX_RESULT_ROWS (enforced BEFORE materialization: the collect
     * runs under a limit probe of cap+1 rows, so an over-limit result
     * never becomes resident) and/or GRAFT_MAX_RESULT_BYTES (the exact
     * length of the encoded Arrow IPC stream — the bytes the statement
     * holds and a client receives — checked before it enters the
-    * statement cache). Read per execute — system properties override
+    * statement cache). Read per result — system properties override
     * env as the test hook. */
   private def sizeGuard(prop: String, env: String): Option[Long] =
     sys.props.get(prop).orElse(sys.env.get(env)).map(_.trim.toLong)
@@ -289,30 +295,15 @@ final class Engine private[graft] (root: SparkSession, maxStatements: Int) {
       st.runningAttempts.add(attempt)
       try { // the old result stays fetchable until the new one publishes
         val d = plan(st)
-        val rows = maxResultRows match {
-          case Some(cap) =>
-            // limit-probe: collect at most cap+1 rows — an over-limit
-            // result FAILS without ever being driver-resident (the
-            // CollectLimit stops executors early); an under-limit
-            // result is byte-identical to the unguarded collect
-            val lim = math.min(cap, Int.MaxValue.toLong - 1).toInt
-            val r = Internals.collectInternalRows(d.limit(lim + 1))
-            if (r.length > lim) throw new IllegalStateException(
-              s"result exceeds GRAFT_MAX_RESULT_ROWS=$cap for statement " +
-                s"$handle; narrow the query or raise the cap")
-            r
-          case None => Internals.collectInternalRows(d)
-        }
-        val (ipc, offsets) =
-          Internals.encodeArrowIpc(st.session, d.schema, rows.iterator)
-        maxResultBytes.foreach { cap =>
-          if (ipc.length > cap) throw new IllegalStateException(
-            s"result of ${ipc.length} Arrow IPC bytes exceeds " +
-              s"GRAFT_MAX_RESULT_BYTES=$cap for statement $handle; " +
-              "narrow the query or raise the cap")
-        }
+        // limit-probe: under a row cap, collect at most cap+1 rows — an
+        // over-limit result FAILS without ever being driver-resident (the
+        // CollectLimit stops executors early); an under-limit result is
+        // byte-identical to the unguarded collect
+        val rows = Internals.collectInternalRows(maxResultRows.fold(d) { cap =>
+          d.limit(math.min(cap, Int.MaxValue.toLong - 1).toInt + 1)
+        })
         outcome.set(Right(
-          Engine.Result(d.schema, rows.length.toLong, ipc, offsets)))
+          capped(st.session, d.schema, rows, s"statement $handle")))
       } catch { case e: Throwable => outcome.set(Left(e)) }
       finally {
         st.runningAttempts.remove(attempt)
@@ -403,43 +394,83 @@ final class Engine private[graft] (root: SparkSession, maxStatements: Int) {
     (r.ipc, r.offsets)
   }
 
-  /** One-shot statement (executeQuery and the get_* verbs): planned and
-    * run once, never registered, so it neither counts against the
+  /** Rows → the cached result form: the one Arrow IPC encode, under the
+    * result-size guards — more rows than GRAFT_MAX_RESULT_ROWS or more
+    * encoded bytes than GRAFT_MAX_RESULT_BYTES fail `what`. */
+  private def capped(s: SparkSession, schema: StructType,
+      rows: Array[InternalRow], what: String): Engine.Result = {
+    maxResultRows.foreach { cap =>
+      if (rows.length > cap) throw new IllegalStateException(
+        s"result exceeds GRAFT_MAX_RESULT_ROWS=$cap for $what; " +
+          "narrow the query or raise the cap")
+    }
+    val (ipc, offsets) = Internals.encodeArrowIpc(s, schema, rows.iterator)
+    maxResultBytes.foreach { cap =>
+      if (ipc.length > cap) throw new IllegalStateException(
+        s"result of ${ipc.length} Arrow IPC bytes exceeds " +
+          s"GRAFT_MAX_RESULT_BYTES=$cap for $what; " +
+          "narrow the query or raise the cap")
+    }
+    Engine.Result(schema, rows.length.toLong, ipc, offsets)
+  }
+
+  /** One-shot convenience: prepare + execute + fetch, planned and run
+    * once and never registered, so it neither counts against the
     * statement cap nor evicts a client's handle. */
-  private def runOnce(token: String, sql: String): Engine.Result =
-    run(Statement(session(token), token, sql), UUID.randomUUID().toString)
-
-  /** One-shot convenience: prepare + execute + fetch. */
   def executeQuery(token: String, sql: String): (StructType, Array[Row]) =
-    decode(runOnce(token, sql))
+    decode(run(Statement(session(token), token, sql),
+      UUID.randomUUID().toString))
 
-  /** SQL string literal with doubled quotes (introspection filters). */
-  private def sqlLit(s: String): String = "'" + s.replace("'", "''") + "'"
+  /** A metadata verb's result: `rows` picks, filters and orders values
+    * of the session's [[InfoSchema.list]] on the driver — no Spark job,
+    * no statement — and they are encoded once under the size guards. */
+  private def listing(token: String, verb: String, schema: StructType)(
+      rows: (Seq[InfoSchema.TableRow], Seq[InfoSchema.ColumnRow]) =>
+        Seq[Seq[Any]]): Engine.Result = {
+    val s = session(token)
+    val (tables, columns) = InfoSchema.list(s)
+    val internal = rows(tables, columns).map { r =>
+      InternalRow.fromSeq(r.map {
+        case v: String => UTF8String.fromString(v)
+        case v => v
+      })
+    }.toArray
+    capped(s, schema, internal, verb)
+  }
+
+  /** The verbs' shared filter over (catalog, schema, table): `catalog`
+    * exactly, the patterns with Spark's `LIKE`; an absent one keeps all. */
+  private def located(catalog: Option[String],
+      schemaPattern: Option[String], tablePattern: Option[String] = None)
+      : (String, String, String) => Boolean = {
+    val (schemaOk, tableOk) = (like(schemaPattern), like(tablePattern))
+    (c, s, t) => catalog.forall(_ == c) && schemaOk(s) && tableOk(t)
+  }
 
   /** Flight SQL's catalog metadata surface (CommandGetCatalogs shape).
     * The reference leaves the catalog metadata RPCs unimplemented
     * (lib.rs:382-482) and clients introspect through information_schema
     * SQL instead (lib.rs:92); these verbs serve exactly that listing —
-    * same snapshot, Flight SQL's column names — so a fresh client can
+    * the rows information_schema.tables / .columns show, Flight SQL's
+    * column names, sorted as ORDER BY sorts them — so a fresh client can
     * discover catalogs/schemas/tables without knowing the dialect. */
   def getCatalogs(token: String): Engine.Result =
-    runOnce(token,
-      "SELECT DISTINCT table_catalog AS catalog_name " +
-        "FROM information_schema.tables ORDER BY catalog_name")
+    listing(token, "get_catalogs", CatalogsSchema) { (tables, _) =>
+      tables.map(_.catalog).distinct.sorted(StringOrder).map(Seq(_))
+    }
 
   /** CommandGetDbSchemas shape: `catalog` filters exactly,
-    * `schemaPattern` is a SQL LIKE pattern (`%`/`_`), both optional —
-    * Flight SQL's filter semantics. */
+    * `schemaPattern` is a SQL LIKE pattern (`%`/`_`, escape `\`), both
+    * optional — Flight SQL's filter semantics. */
   def getDbSchemas(token: String, catalog: Option[String] = None,
       schemaPattern: Option[String] = None): Engine.Result = {
-    val conds = catalog.map(c => s"table_catalog = ${sqlLit(c)}").toSeq ++
-      schemaPattern.map(p => s"table_schema LIKE ${sqlLit(p)}")
-    val where = if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
-    runOnce(token,
-      "SELECT DISTINCT table_catalog AS catalog_name, " +
-        "table_schema AS db_schema_name " +
-        s"FROM information_schema.tables$where " +
-        "ORDER BY catalog_name, db_schema_name")
+    val keep = located(catalog, schemaPattern)
+    listing(token, "get_db_schemas", DbSchemasSchema) { (tables, _) =>
+      tables.filter(t => keep(t.catalog, t.schema, t.name))
+        .map(t => (t.catalog, t.schema)).distinct
+        .sorted(Ordering.Tuple2(StringOrder, StringOrder))
+        .map { case (c, sc) => Seq(c, sc) }
+    }
   }
 
   /** CommandGetTables shape: exact `catalog`, LIKE patterns for schema
@@ -450,40 +481,37 @@ final class Engine private[graft] (root: SparkSession, maxStatements: Int) {
       schemaPattern: Option[String] = None,
       tablePattern: Option[String] = None,
       tableTypes: Seq[String] = Nil): Engine.Result = {
-    val conds = catalog.map(c => s"table_catalog = ${sqlLit(c)}").toSeq ++
-      schemaPattern.map(p => s"table_schema LIKE ${sqlLit(p)}") ++
-      tablePattern.map(p => s"table_name LIKE ${sqlLit(p)}") ++
-      (if (tableTypes.isEmpty) None
-       else Some(tableTypes.map(sqlLit).mkString("table_type IN (", ", ", ")")))
-    val where = if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
-    runOnce(token,
-      "SELECT table_catalog AS catalog_name, " +
-        "table_schema AS db_schema_name, table_name, table_type " +
-        s"FROM information_schema.tables$where " +
-        "ORDER BY catalog_name, db_schema_name, table_name")
+    val keep = located(catalog, schemaPattern, tablePattern)
+    listing(token, "get_tables", TablesSchema) { (tables, _) =>
+      tables
+        .filter(t => keep(t.catalog, t.schema, t.name) &&
+          (tableTypes.isEmpty || tableTypes.contains(t.tableType)))
+        .sortBy(t => (t.catalog, t.schema, t.name))(
+          Ordering.Tuple3(StringOrder, StringOrder, StringOrder))
+        .map(t => Seq(t.catalog, t.schema, t.name, t.tableType))
+    }
   }
 
   /** GetColumns shape (JDBC/ADBC's column listing; Flight SQL serves it
     * as CommandGetTables with include_schema=true — same filter
     * semantics): exact `catalog`, LIKE patterns for schema / table /
-    * column name, over the engine's information_schema.columns snapshot.
+    * column name, over the rows information_schema.columns shows.
     * Ordinal position and nullability come from the live table schema
     * (InfoSchema reads the loaded table, not DESCRIBE strings). */
   def getColumns(token: String, catalog: Option[String] = None,
       schemaPattern: Option[String] = None,
       tablePattern: Option[String] = None,
       columnPattern: Option[String] = None): Engine.Result = {
-    val conds = catalog.map(c => s"table_catalog = ${sqlLit(c)}").toSeq ++
-      schemaPattern.map(p => s"table_schema LIKE ${sqlLit(p)}") ++
-      tablePattern.map(p => s"table_name LIKE ${sqlLit(p)}") ++
-      columnPattern.map(p => s"column_name LIKE ${sqlLit(p)}")
-    val where = if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
-    runOnce(token,
-      "SELECT table_catalog AS catalog_name, " +
-        "table_schema AS db_schema_name, table_name, column_name, " +
-        "ordinal_position, data_type, is_nullable " +
-        s"FROM information_schema.columns$where " +
-        "ORDER BY catalog_name, db_schema_name, table_name, ordinal_position")
+    val (keep, columnOk) =
+      (located(catalog, schemaPattern, tablePattern), like(columnPattern))
+    listing(token, "get_columns", ColumnsSchema) { (_, columns) =>
+      columns
+        .filter(c => keep(c.catalog, c.schema, c.table) && columnOk(c.column))
+        .sortBy(c => (c.catalog, c.schema, c.table, c.ordinal))(
+          Ordering.Tuple4(StringOrder, StringOrder, StringOrder, Ordering.Int))
+        .map(c => Seq(c.catalog, c.schema, c.table, c.column, c.ordinal,
+          c.dataType, c.nullable))
+    }
   }
 
   /** DDL/DML/SET path: runs the statement, returns -1 (lib.rs:653).
@@ -540,6 +568,35 @@ object Engine {
     * the result's size in bytes, in driver memory and on the wire. */
   final case class Result(schema: StructType, rowCount: Long,
       ipc: Array[Byte], offsets: Array[Int])
+
+  private def strings(names: String*): Seq[StructField] =
+    names.map(StructField(_, StringType))
+  // The metadata verbs' result schemas: what their information_schema
+  // text returned (strings nullable, ordinal and nullability not).
+  private val CatalogsSchema = StructType(strings("catalog_name"))
+  private val DbSchemasSchema =
+    StructType(strings("catalog_name", "db_schema_name"))
+  private val TablesSchema = StructType(strings("catalog_name",
+    "db_schema_name", "table_name", "table_type"))
+  private val ColumnsSchema = StructType(strings("catalog_name",
+    "db_schema_name", "table_name", "column_name") ++ Seq(
+    StructField("ordinal_position", IntegerType, nullable = false),
+    StructField("data_type", StringType),
+    StructField("is_nullable", BooleanType, nullable = false)))
+
+  /** Spark's string order (`UTF8String.compareTo`, UTF-8 byte order),
+    * the order ORDER BY gives a string column. */
+  private val StringOrder: Ordering[String] =
+    Ordering.by(UTF8String.fromString)
+
+  /** Spark's `LIKE` with escape `\` (`StringUtils.escapeLikeRegex`, the
+    * pattern compilation of Spark's `Like`); no pattern matches all. */
+  private def like(pattern: Option[String]): String => Boolean =
+    pattern.fold((_: String) => true) { p =>
+      val re = java.util.regex.Pattern.compile(
+        org.apache.spark.sql.catalyst.util.StringUtils.escapeLikeRegex(p, '\\'))
+      s => re.matcher(s).matches()
+    }
 
   /** Spark job-group name tagging every job a statement submits —
     * the cancellation key for [[Engine.cancelQuery]]. */

@@ -1,6 +1,7 @@
 package graft.engine
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftaccess.Internals
 
 /** `information_schema.{tables,columns,views,df_settings}` parity — the
   * reference enables DataFusion's information_schema so clients introspect
@@ -12,6 +13,8 @@ import org.apache.spark.sql.SparkSession
   */
 object InfoSchema {
   private val Marker = "information_schema."
+  /** Name prefix of the engine's snapshot views; never listed. */
+  private val ViewPrefix = "__infoschema_"
 
   /** `sql` with each `information_schema.` qualifier (any case, at a word
     * start, outside literals and comments) replaced by the snapshot
@@ -21,18 +24,29 @@ object InfoSchema {
     else Engine.rewriteOutsideQuotes(sql) { i =>
       if (sql.regionMatches(true, i, Marker, 0, Marker.length) &&
           (i == 0 || !Engine.isWordChar(sql.charAt(i - 1))))
-        Some(("__infoschema_", i + Marker.length))
+        Some((ViewPrefix, i + Marker.length))
       else None
     }
 
-  def refresh(spark: SparkSession): Unit = {
-    import spark.implicits._
+  /** One row of information_schema.tables. */
+  final case class TableRow(catalog: String, schema: String, name: String,
+      tableType: String, isTemporary: Boolean)
+
+  /** One row of information_schema.columns; `ordinal` counts from 1. */
+  final case class ColumnRow(catalog: String, schema: String, table: String,
+      column: String, ordinal: Int, dataType: String, nullable: Boolean)
+
+  /** The session's tables and their columns as driver values, with no
+    * Spark job: the session catalog's current database plus the
+    * session's temp views ([[Internals.sessionTables]]), then every
+    * table of every configured DSv2 catalog. information_schema's views
+    * and the `get_*` verbs both read this one listing. */
+  def list(spark: SparkSession): (Seq[TableRow], Seq[ColumnRow]) = {
     import scala.util.Try
 
-    val sessionTables = spark.catalog.listTables().collect().toSeq.map { t =>
-      (Option(t.catalog).getOrElse("spark_catalog"),
-        Option(t.database).getOrElse(""),
-        t.name, t.tableType, t.isTemporary)
+    val session = Internals.sessionTables(spark).collect {
+      case (db, name, tpe, schema) if !name.startsWith(ViewPrefix) =>
+        (TableRow("spark_catalog", db, name, tpe, tpe == "TEMPORARY"), schema)
     }
 
     // Configured DSv2 catalogs (spark.sql.catalog.<name> = impl class):
@@ -44,11 +58,10 @@ object InfoSchema {
       case k if k.matches("""spark\.sql\.catalog\.[^.]+""") =>
         k.stripPrefix("spark.sql.catalog.")
     }.distinct
-    import org.apache.spark.sql.connector.catalog.{SupportsNamespaces, TableCatalog, Table}
-    val v2Loaded: Seq[(String, String, String, Table)] = v2CatalogNames.flatMap { cat =>
+    import org.apache.spark.sql.connector.catalog.{SupportsNamespaces, TableCatalog}
+    val v2 = v2CatalogNames.flatMap { cat =>
       Try {
-        org.apache.spark.sql.graftaccess.Internals
-          .catalogPlugin(spark, cat) match {
+        Internals.catalogPlugin(spark, cat) match {
           case tc: TableCatalog with SupportsNamespaces =>
             // per-node Try: one unlistable namespace degrades to itself,
             // not to dropping the whole catalog from information_schema
@@ -58,53 +71,54 @@ object InfoSchema {
             val all = tc.listNamespaces().toSeq.flatMap(descend)
             all.flatMap { ns =>
               Try(tc.listTables(ns).toSeq).getOrElse(Seq.empty).flatMap { id =>
-                Try((cat, ns.mkString("."), id.name,
-                  tc.loadTable(id))).toOption
+                Try((TableRow(cat, ns.mkString("."), id.name, "MANAGED", false),
+                  tc.loadTable(id).schema())).toOption
               }
             }
           case _ => Seq.empty
         }
       }.getOrElse(Seq.empty)
     }
-    val v2Tables = v2Loaded.map { case (cat, ns, name, _) =>
-      (cat, ns, name, "MANAGED", false)
-    }
-    val tables = sessionTables ++ v2Tables
-    tables
-      .toDF("table_catalog", "table_schema", "table_name", "table_type",
-        "is_temporary")
-      .createOrReplaceTempView("__infoschema_tables")
 
-    tables.filter(_._4 == "VIEW")
-      .map { case (c, s, n, _, tmp) => (c, s, n, tmp) }
-      .toDF("table_catalog", "table_schema", "table_name", "is_temporary")
-      .createOrReplaceTempView("__infoschema_views")
-
-    // (table_catalog, table_schema) spellings MUST match the tables view
-    // row for row — the standard introspection join is
+    // (catalog, schema) spellings match the tables row for row: the
+    // standard introspection join is
     // tables JOIN columns USING (table_catalog, table_schema, table_name).
-    val sessionCols = sessionTables.flatMap { case (cat, db, name, _, _) =>
-      val ident = if (db.isEmpty) name else s"$db.$name"
-      scala.util.Try(spark.catalog.listColumns(ident).collect()).toOption
-        .getOrElse(Array.empty).zipWithIndex.map { case (c, i) =>
-          (cat, db, name, c.name, i + 1, c.dataType, c.nullable)
-        }
-    }
-    // v2 catalog tables: columns + nullability straight from the loaded
-    // table's schema (DESCRIBE strings would hardcode nullability).
-    val v2Cols = v2Loaded.flatMap { case (cat, ns, name, table) =>
-      table.schema().fields.zipWithIndex.map { case (f, i) =>
-        (cat, ns, name, f.name, i + 1, f.dataType.simpleString, f.nullable)
+    // Nullability comes from the table schema, not DESCRIBE strings.
+    val both = session ++ v2
+    val columns = both.flatMap { case (t, schema) =>
+      schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        ColumnRow(t.catalog, t.schema, t.name, f.name, i + 1,
+          f.dataType.simpleString, f.nullable)
       }
     }
-    val cols = sessionCols ++ v2Cols
-    cols
+    (both.map(_._1), columns)
+  }
+
+  /** (Re-)register the snapshot views the rewritten SQL reads, from
+    * [[list]]. */
+  def refresh(spark: SparkSession): Unit = {
+    import spark.implicits._
+    val (tables, columns) = list(spark)
+    val tableTuples = tables.map(t =>
+      (t.catalog, t.schema, t.name, t.tableType, t.isTemporary))
+    tableTuples
+      .toDF("table_catalog", "table_schema", "table_name", "table_type",
+        "is_temporary")
+      .createOrReplaceTempView(ViewPrefix + "tables")
+
+    tableTuples.filter(_._4 == "VIEW")
+      .map { case (c, s, n, _, tmp) => (c, s, n, tmp) }
+      .toDF("table_catalog", "table_schema", "table_name", "is_temporary")
+      .createOrReplaceTempView(ViewPrefix + "views")
+
+    columns.map(c => (c.catalog, c.schema, c.table, c.column, c.ordinal,
+        c.dataType, c.nullable))
       .toDF("table_catalog", "table_schema", "table_name", "column_name",
         "ordinal_position", "data_type", "is_nullable")
-      .createOrReplaceTempView("__infoschema_columns")
+      .createOrReplaceTempView(ViewPrefix + "columns")
 
     spark.conf.getAll.toSeq
       .toDF("name", "value")
-      .createOrReplaceTempView("__infoschema_df_settings")
+      .createOrReplaceTempView(ViewPrefix + "df_settings")
   }
 }

@@ -195,6 +195,27 @@ object Internals {
   def resolver(spark: SparkSession): (String, String) => Boolean =
     spark.asInstanceOf[ClassicSession].sessionState.conf.resolver
 
+  /** What `SHOW TABLES` lists in the session catalog (the current
+    * database's tables and views plus the session's local temp views),
+    * read from the catalog itself, so no Spark job runs: Spark's own
+    * `catalog.listTables()` collects a SHOW TABLES plan. Per entry:
+    * database ("" for a local temp view), name, table type (TEMPORARY
+    * for a temp view, else MANAGED / EXTERNAL / VIEW) and schema. An
+    * entry whose metadata cannot be read is left out, as
+    * `listTables()` leaves it out. */
+  def sessionTables(spark: SparkSession)
+      : Seq[(String, String, String, org.apache.spark.sql.types.StructType)] = {
+    val catalog = spark.asInstanceOf[ClassicSession].sessionState.catalog
+    catalog.listTables(catalog.getCurrentDatabase).flatMap { id =>
+      scala.util.Try(catalog.getTempViewOrPermanentTableMetadata(id)).toOption
+        .map { meta =>
+          val tableType =
+            if (catalog.isTempView(id)) "TEMPORARY" else meta.tableType.name
+          (id.database.getOrElse(""), id.table, tableType, meta.schema)
+        }
+    }
+  }
+
   /** A configured DSv2 catalog plugin by name (CatalogManager is
     * private[sql]); loads the catalog on first access like any query
     * referencing it would. */

@@ -853,4 +853,243 @@ class EngineSpec extends AnyFunSuite {
     assert(engine.fetch(h)._2.head.getStruct(0).getInt(1) == 2)
     engine.closeStatement(h)
   }
+
+  // ---- catalog metadata verbs: driver-side listing -------------------
+
+  private def rowsOf(r: Engine.Result): Seq[org.apache.spark.sql.Row] =
+    org.apache.spark.sql.graftaccess.Internals.arrowIpcToRows(r.schema, r.ipc)
+      .toSeq
+
+  /** Each verb's meaning as information_schema SQL: the oracle its
+    * driver-side result must equal, schema and row order included. */
+  private object VerbSql {
+    private def lit(s: String): String = "'" + s.replace("'", "''") + "'"
+    private def where(conds: Seq[String]): String =
+      if (conds.isEmpty) "" else conds.mkString(" WHERE ", " AND ", "")
+    val catalogs: String =
+      "SELECT DISTINCT table_catalog AS catalog_name " +
+        "FROM information_schema.tables ORDER BY catalog_name"
+    def dbSchemas(catalog: Option[String], schema: Option[String]): String =
+      "SELECT DISTINCT table_catalog AS catalog_name, " +
+        "table_schema AS db_schema_name FROM information_schema.tables" +
+        where(catalog.map(c => s"table_catalog = ${lit(c)}").toSeq ++
+          schema.map(p => s"table_schema LIKE ${lit(p)}")) +
+        " ORDER BY catalog_name, db_schema_name"
+    def tables(catalog: Option[String], schema: Option[String],
+        table: Option[String], types: Seq[String]): String =
+      "SELECT table_catalog AS catalog_name, " +
+        "table_schema AS db_schema_name, table_name, table_type " +
+        "FROM information_schema.tables" +
+        where(catalog.map(c => s"table_catalog = ${lit(c)}").toSeq ++
+          schema.map(p => s"table_schema LIKE ${lit(p)}") ++
+          table.map(p => s"table_name LIKE ${lit(p)}") ++
+          (if (types.isEmpty) None
+           else Some(types.map(lit).mkString("table_type IN (", ", ", ")")))) +
+        " ORDER BY catalog_name, db_schema_name, table_name"
+    def columns(catalog: Option[String], schema: Option[String],
+        table: Option[String], column: Option[String]): String =
+      "SELECT table_catalog AS catalog_name, " +
+        "table_schema AS db_schema_name, table_name, column_name, " +
+        "ordinal_position, data_type, is_nullable " +
+        "FROM information_schema.columns" +
+        where(catalog.map(c => s"table_catalog = ${lit(c)}").toSeq ++
+          schema.map(p => s"table_schema LIKE ${lit(p)}") ++
+          table.map(p => s"table_name LIKE ${lit(p)}") ++
+          column.map(p => s"column_name LIKE ${lit(p)}")) +
+        " ORDER BY catalog_name, db_schema_name, table_name, ordinal_position"
+  }
+
+  /** A fresh session with a graft.catalog.MetaCatalog named `catalog`
+    * over a temp warehouse. */
+  private def metaSession(catalog: String): String = {
+    val t = engine.handshake("admin", "password").toOption.get
+    val s = engine.session(t)
+    s.conf.set(s"spark.sql.catalog.$catalog", "graft.catalog.MetaCatalog")
+    s.conf.set(s"spark.sql.catalog.$catalog.warehouse",
+      java.nio.file.Files.createTempDirectory(s"graft_wh_$catalog").toString)
+    t
+  }
+
+  test("the engine's __infoschema_ views never show in a listing: two " +
+      "get_tables in a fresh session return the same bytes") {
+    val t = engine.handshake("admin", "password").toOption.get
+    def sqlNames(): Seq[String] = engine.executeQuery(t,
+      "SELECT table_name FROM information_schema.columns")._2
+      .map(_.getString(0)).toSeq
+    // the first query registers the views, so every listing after it
+    // runs while they exist
+    val before = sqlNames()
+    val first = engine.getTables(t)
+    val second = engine.getTables(t)
+    assert(java.util.Arrays.equals(first.ipc, second.ipc),
+      s"${rowsOf(first)} vs ${rowsOf(second)}")
+    val names = before ++ rowsOf(second).map(_.getString(2)) ++ sqlNames()
+    assert(!names.exists(_.startsWith("__infoschema_")), names)
+    engine.closeSession(t)
+  }
+
+  test("each get_* verb returns what its information_schema text returns " +
+      "(schema with nullability, rows in order) and starts no Spark job") {
+    val t = metaSession("vq")
+    val sessionDir = java.nio.file.Files.createTempDirectory("graft_vq_sc")
+    def ddl(sql: String): Unit = engine.executeUpdate(t, sql)
+    ddl("CREATE NAMESPACE vq.outer")
+    ddl("CREATE NAMESPACE vq.outer.inner")
+    ddl("CREATE TABLE vq.outer.inner.live_score (id BIGINT NOT NULL, v DOUBLE)")
+    ddl("CREATE TABLE vq.outer.liveXscore (vid INT, d STRING)")
+    ddl("CREATE TABLE vq_session_t (a INT, vd STRING) USING parquet " +
+      s"LOCATION '$sessionDir'")
+    ddl("CREATE OR REPLACE TEMPORARY VIEW live_s_view AS " +
+      "SELECT 1 AS v, 'x' AS dv")
+    // U+FB01 sorts before U+1F600 in UTF-8 byte order (Spark's string
+    // order) but after it in UTF-16 order (java.lang.String's)
+    ddl("CREATE OR REPLACE TEMPORARY VIEW `vq_ﬁ` AS SELECT 1 AS v")
+    ddl("CREATE OR REPLACE TEMPORARY VIEW `vq_😀` AS SELECT 1 AS v")
+    try {
+      def same(label: String, sql: String)(
+          verb: => Engine.Result): Seq[org.apache.spark.sql.Row] = {
+        var r: Engine.Result = null
+        val jobs = jobCallSitesDuring { r = verb }
+        assert(jobs.isEmpty, s"$label started Spark jobs: $jobs")
+        val (schema, rows) = engine.executeQuery(t, sql)
+        assert(r.schema == schema, s"$label schema")
+        assert(rowsOf(r) == rows.toSeq, s"$label rows")
+        rows.toSeq
+      }
+      def names(rows: Seq[org.apache.spark.sql.Row]): Seq[String] =
+        rows.map(_.getString(2))
+      same("catalogs", VerbSql.catalogs)(engine.getCatalogs(t))
+      val N = Option.empty[String]
+      for ((c, p) <- Seq(N -> N, Some("vq") -> N, N -> Some("out%"),
+          Some("spark_catalog") -> Some("defaul_"), Some("no_such") -> N))
+        same(s"db_schemas $c $p", VerbSql.dbSchemas(c, p))(
+          engine.getDbSchemas(t, c, p))
+      assert(names(same("escaped _", VerbSql.tables(N, N,
+        Some("live\\_s%"), Nil))(engine.getTables(t, N, N,
+        Some("live\\_s%")))) == Seq("live_s_view", "live_score"))
+      assert(names(same("wildcard _", VerbSql.tables(N, N,
+        Some("live_s%"), Nil))(engine.getTables(t, N, N,
+        Some("live_s%")))) == Seq("live_s_view", "liveXscore", "live_score"))
+      assert(names(same("temporary vq_", VerbSql.tables(N, N,
+        Some("vq_%"), Seq("TEMPORARY")))(engine.getTables(t, N, N,
+        Some("vq_%"), Seq("TEMPORARY")))) == Seq("vq_ﬁ", "vq_😀"))
+      for ((c, sc, tb, ty) <- Seq(
+          (N, N, N, Nil),
+          (Some("vq"), N, N, Nil),
+          (N, Some("outer._nner"), Some("%"), Nil),
+          (N, N, Some("no_such_%"), Nil),
+          (N, N, N, Seq("TEMPORARY")),
+          (N, N, N, Seq("MANAGED")),
+          (N, N, Some("vq_%"), Seq("TEMPORARY", "MANAGED")),
+          (Some("vq"), Some("outer%"), Some("live%"), Nil)))
+        same(s"tables $c $sc $tb $ty", VerbSql.tables(c, sc, tb, ty))(
+          engine.getTables(t, c, sc, tb, ty))
+      for ((c, sc, tb, col) <- Seq(
+          (N, N, N, N),
+          (N, N, Some("live%"), N),
+          (N, N, N, Some("v%")),
+          (N, N, N, Some("_d")),
+          (Some("vq"), Some("outer.inner"), N, N),
+          (N, N, Some("live\\_s%"), Some("%v%")),
+          (N, N, N, Some("no_such_%"))))
+        same(s"columns $c $sc $tb $col", VerbSql.columns(c, sc, tb, col))(
+          engine.getColumns(t, c, sc, tb, col))
+    } finally {
+      ddl("DROP TABLE IF EXISTS vq_session_t")
+      engine.closeSession(t)
+    }
+  }
+
+  test("the session-catalog listing equals Spark's catalog.listTables() and " +
+      "listColumns rows, with no Spark job") {
+    val t = engine.handshake("admin", "password").toOption.get
+    val s = engine.session(t)
+    val dir = java.nio.file.Files.createTempDirectory("graft_ls_ext")
+    engine.executeUpdate(t, "CREATE TABLE ls_managed (a INT, b VARCHAR(8)) " +
+      "USING parquet")
+    engine.executeUpdate(t, "CREATE TABLE ls_external (x DOUBLE) USING " +
+      s"parquet LOCATION '$dir'")
+    engine.executeUpdate(t, "CREATE VIEW ls_view AS SELECT a FROM ls_managed")
+    engine.executeUpdate(t, "CREATE OR REPLACE TEMPORARY VIEW ls_temp AS " +
+      "SELECT CAST(NULL AS DECIMAL(10, 2)) AS d, array(1.0f) AS fs, " +
+      "named_struct('k', 1) AS st")
+    try {
+      var listed: (Seq[graft.engine.InfoSchema.TableRow],
+        Seq[graft.engine.InfoSchema.ColumnRow]) = null
+      val jobs = jobCallSitesDuring {
+        listed = graft.engine.InfoSchema.list(s)
+      }
+      assert(jobs.isEmpty, s"the listing started Spark jobs: $jobs")
+      val (tables, columns) = listed
+      val spark = s.catalog.listTables().collect().toSeq
+      assert(tables.filter(_.catalog == "spark_catalog").map(t =>
+        (t.schema, t.name, t.tableType, t.isTemporary)) ==
+        spark.map(t => (Option(t.database).getOrElse(""), t.name,
+          t.tableType, t.isTemporary)))
+      assert(tables.exists(t => t.name == "ls_external" &&
+        t.tableType == "EXTERNAL"))
+      assert(tables.exists(t => t.name == "ls_view" && t.tableType == "VIEW"))
+      for (name <- Seq("ls_managed", "ls_external", "ls_view", "ls_temp")) {
+        val ident = if (name == "ls_temp") name else s"default.$name"
+        assert(columns.filter(_.table == name).map(c =>
+          (c.column, c.dataType, c.nullable)) ==
+          s.catalog.listColumns(ident).collect().toSeq.map(c =>
+            (c.name, c.dataType, c.nullable)), name)
+      }
+    } finally {
+      Seq("VIEW ls_view", "TABLE ls_managed", "TABLE ls_external").foreach(
+        o => engine.executeUpdate(t, s"DROP $o"))
+      engine.closeSession(t)
+    }
+  }
+
+  test("listings are fresh: a CREATE, an ALTER … ADD COLUMN and a DROP " +
+      "between two get_tables / get_columns calls show in the second") {
+    val t = metaSession("vf")
+    def tables(): Seq[String] =
+      rowsOf(engine.getTables(t, Some("vf"))).map(_.getString(2))
+    def columns(table: String): Seq[String] =
+      rowsOf(engine.getColumns(t, Some("vf"), None, Some(table)))
+        .map(_.getString(3))
+    engine.executeUpdate(t, "CREATE NAMESPACE vf.db")
+    engine.executeUpdate(t, "CREATE TABLE vf.db.keep (id BIGINT)")
+    assert(tables() == Seq("keep"))
+    engine.executeUpdate(t, "CREATE TABLE vf.db.added (id BIGINT)")
+    assert(tables() == Seq("added", "keep"))
+    assert(columns("added") == Seq("id"))
+    engine.executeUpdate(t, "ALTER TABLE vf.db.added ADD COLUMN note STRING")
+    assert(columns("added") == Seq("id", "note"))
+    engine.executeUpdate(t, "DROP TABLE vf.db.added")
+    assert(tables() == Seq("keep"))
+    assert(columns("added").isEmpty)
+    engine.closeSession(t)
+  }
+
+  test("a temp view is listed only in the session that created it") {
+    val a = engine.handshake("admin", "password").toOption.get
+    val b = engine.handshake("admin", "password").toOption.get
+    engine.executeUpdate(a,
+      "CREATE OR REPLACE TEMPORARY VIEW only_in_a AS SELECT 1 AS v")
+    def listed(tok: String): Seq[String] =
+      rowsOf(engine.getTables(tok, tablePattern = Some("only_in_a")))
+        .map(_.getString(2))
+    assert(listed(a) == Seq("only_in_a"))
+    assert(listed(b).isEmpty)
+    assert(rowsOf(engine.getColumns(b, tablePattern = Some("only_in_a")))
+      .isEmpty)
+    Seq(a, b).foreach(engine.closeSession)
+  }
+
+  test("GRAFT_MAX_RESULT_BYTES one byte below a verb's result fails the " +
+      "verb; at the exact length it passes") {
+    val n = engine.getTables(token).ipc.length
+    try {
+      sys.props("graft.max.result.bytes") = n.toString
+      assert(engine.getTables(token).ipc.length == n)
+      sys.props("graft.max.result.bytes") = (n - 1).toString
+      val err = intercept[IllegalStateException](engine.getTables(token))
+      assert(err.getMessage.contains(s"GRAFT_MAX_RESULT_BYTES=${n - 1}"),
+        err.getMessage)
+    } finally sys.props.remove("graft.max.result.bytes")
+  }
 }
