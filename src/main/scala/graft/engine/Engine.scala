@@ -139,11 +139,19 @@ final class Engine private[graft] (root: SparkSession, maxStatements: Int) {
         return lines.toDF("plan_with_metrics")
       case _ => ()
     }
-    val infoSql = InfoSchema.rewrite(st.sql)
-    if (infoSql != st.sql) InfoSchema.refresh(st.session)
-    val sql = Engine.rewriteSimilarTo(infoSql)
+    val sql = sparkSql(st.session, st.sql)
     if (st.params.nonEmpty) st.session.sql(sql, st.params.toArray[Any])
     else st.session.sql(sql)
+  }
+
+  /** The text Spark parses for `sql`, on every path that runs
+    * statements: information_schema references point at the session's
+    * views (registered afresh when the text names them), and SIMILAR TO
+    * becomes an anchored RLIKE. */
+  private def sparkSql(session: SparkSession, sql: String): String = {
+    val infoSql = InfoSchema.rewrite(sql)
+    if (infoSql != sql) InfoSchema.refresh(session)
+    Engine.rewriteSimilarTo(infoSql)
   }
 
   /** Serializes prepare's evict+put tail: check-then-act over the
@@ -518,8 +526,8 @@ final class Engine private[graft] (root: SparkSession, maxStatements: Int) {
     * Result rows are NEVER materialized on the driver: commands execute
     * eagerly at `sql()`, query-shaped text drains on the executors. */
   def executeUpdate(token: String, sql: String): Long = {
-    Internals.runWithoutCollect(
-      session(token).sql(Engine.rewriteSimilarTo(sql)))
+    val s = session(token)
+    Internals.runWithoutCollect(s.sql(sparkSql(s, sql)))
     -1L
   }
 

@@ -1189,8 +1189,8 @@ object Dedup {
     clusterPairsStarWithRounds(pairs, idaCol, idbCol, maxRounds)._1
 
   private[graft] def clusterPairsStarWithRounds(pairs: DataFrame,
-      idaCol: String, idbCol: String,
-      maxRounds: Int): (DataFrame, Int) = {
+      idaCol: String, idbCol: String, maxRounds: Int,
+      onDriver: Boolean = true): (DataFrame, Int) = {
     import org.apache.spark.sql.types._
     // Persisted: the loop input and the label assembly both read it, and
     // the pair subtree is usually an expensive upstream join that must
@@ -1217,9 +1217,9 @@ object Dedup {
     canon.schema("u").dataType match {
       case t @ (ByteType | ShortType | IntegerType | LongType) =>
         // widening to long round-trips losslessly
-        val (forest, rounds) = starLoopRdd(canon.select(
+        val (forest, rounds) = starLoop(canon.select(
           col("u").cast(LongType).as("u"), col("v").cast(LongType).as("v")),
-          maxRounds)
+          maxRounds, onDriver)
         (assembleLabels(forest.select(col("u").cast(t).as("u"),
           col("v").cast(t).as("v"))), rounds)
       case t =>
@@ -1241,7 +1241,7 @@ object Dedup {
             .select(col("__u").as("u"), col("__v").as("v"))
         }
         val (forest, rounds) =
-          starLoopRdd(recode(edges, "id", "code"), maxRounds)
+          starLoop(recode(edges, "id", "code"), maxRounds, onDriver)
         (assembleLabels(recode(forest, "code", "id")), rounds)
     }
   }
@@ -1266,150 +1266,251 @@ object Dedup {
     override def hashCode: Int = parts
   }
 
-  /** The alternating-star loop over RDD[((u, v), Unit)] of Long keys
-    * (see [[clusterPairsStar]] for the algorithm):
-    *   - 2 shuffles per round: each phase is ONE
-    *     repartitionAndSortWithinPartitions on the composite (u, v) key
-    *     (partitioned by u), and the phase function streams each sorted
-    *     group — the group's min is its first v, duplicates are
-    *     adjacent, so groupBy-min+join+distinct collapse into the sort.
-    *     smallStar's output keeps benign CROSS-group duplicates; the next
-    *     round's sorted shuffle dedups them for free, and the convergence
-    *     compare reads the explicitly deduped set.
-    *   - convergence is a co-partitioned zipPartitions stream-compare
-    *     of this round's deduped edge set against last round's (both
-    *     sorted, same partitioner) — no count job, no anti-join, and it
-    *     is the round's ONE action, so largeStar+smallStar+compare run
-    *     as a single back-to-back job with no Catalyst/AQE planning in
-    *     the loop.
-    *   - a giant component's hub lands its group in one task, but the
-    *     streaming iterators hold O(1) state, so a 10⁶-degree hub costs
-    *     sequential time, never memory (OperatorsSpec pins the skewed
-    *     hub case).
-    * Durability matches [[Checkpoints]]: when `graft.checkpoint.dir`
-    * is set, each round's deduped set is reliably checkpointed and the
-    * superseded round's files are deleted; the final round's files are
-    * left for the caller.
-    * Partition count is derived once from the measured input edge count
-    * (~2 MB of pair bytes per task, floor 1, cap 4× parallelism), fixed
-    * across rounds so consecutive rounds stay co-partitioned for the
-    * compare.
+  /** The alternating-star loop over (u, v) edges of Long keys (see
+    * [[clusterPairsStar]] for the algorithm). Each round:
+    *   - sorts both directions of every edge by (u, v) and keeps the
+    *     distinct forward (u > v) set ([[dedupForward]]);
+    *   - stops when that set equals the previous round's ([[sameSorted]]);
+    *   - otherwise runs [[largeStar]] over the symmetric groups, sorts
+    *     its output, and runs [[smallStar]] over that.
+    * Every phase streams one sorted neighbour group at a time with O(1)
+    * state, and sorting replaces groupBy-min + join + distinct: a
+    * group's min is its first v, duplicates are adjacent. smallStar's
+    * output keeps benign cross-group duplicates; the next sort dedups
+    * them.
+    *
+    * The partition count is derived once from the measured input edge
+    * count (~2 MB of pair bytes per task, floor 1, cap 4× parallelism)
+    * and fixed across rounds, so consecutive rounds stay co-partitioned
+    * for the compare. When it is 1, the rounds run on the driver over
+    * sorted packed arrays (`onDriver = false` forces the RDD rounds);
+    * both backends run the same phases through [[starRounds]], so they
+    * take the same number of rounds.
+    *
+    * RDD rounds: each sort is one repartitionAndSortWithinPartitions on
+    * the composite (u, v) key, partitioned by u; the convergence compare
+    * is a co-partitioned zipPartitions stream-compare and the round's ONE
+    * action, so largeStar + smallStar + compare run as a single job with
+    * no Catalyst/AQE planning in the loop. A giant component's hub lands
+    * its group in one task, but the phases hold O(1) state, so a
+    * 10⁶-degree hub costs sequential time, never memory (OperatorsSpec
+    * pins the skewed hub case).
+    *
+    * Durability matches [[Checkpoints]]: when `graft.checkpoint.dir` is
+    * set, each RDD round's deduped set is reliably checkpointed and the
+    * superseded round's files are deleted; the final forest's files are
+    * left for the caller (the driver rounds checkpoint only the forest).
     * Returns the fixpoint star forest as a (u, v) DataFrame. */
-  private def starLoopRdd(canon: DataFrame,
-      maxRounds: Int): (DataFrame, Int) = {
-    import org.apache.spark.rdd.RDD
-    import org.apache.spark.storage.StorageLevel
+  private def starLoop(canon: DataFrame, maxRounds: Int,
+      onDriver: Boolean): (DataFrame, Int) = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val parent = canon.sparkSession
     val sc = parent.sparkContext
     val ckDir = parent.conf.getOption(Checkpoints.DirKey).filter(_.nonEmpty)
     ckDir.foreach(d => if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(d))
-    def deleteCheckpoint(rdd: RDD[_]): Unit =
-      try rdd.getCheckpointFile.foreach { f =>
-        val p = new org.apache.hadoop.fs.Path(f)
-        p.getFileSystem(sc.hadoopConfiguration).delete(p, true)
-      } catch { case _: Exception => () } // reclamation must never fail
-    // No pre-distinct of the input: round 1's sorted shuffle dedups
-    // while streaming, and largeStar is duplicate-insensitive. The caller
+    val schema = StructType(Seq(StructField("u", LongType),
+      StructField("v", LongType)))
+    // No pre-distinct of the input: round 1's sort dedups while
+    // streaming, and largeStar is duplicate-insensitive. The caller
     // persists `canon`, so the sizing count and round 1 read it once.
     val input = canon.where(col("u") =!= col("v")).rdd
       .map(r => ((r.getLong(0), r.getLong(1)), ()))
-    val par = sc.defaultParallelism
     val n0 = input.count()
-    val part = new EdgeKeyPartitioner(
-      math.max(1L, math.min(n0 / 131072L + 1L, par.toLong * 4L)).toInt)
-    def dedupForward(sorted: RDD[((Long, Long), Unit)]) =
-      sorted.mapPartitions({ it =>
-        var any = false; var lu = 0L; var lv = 0L
-        it.flatMap { case ((u, v), _) =>
-          if (any && u == lu && v == lv) Iterator.empty
-          else {
-            any = true; lu = u; lv = v
-            if (u > v) Iterator.single(((u, v), ())) else Iterator.empty
-          }
-        }
-      }, preservesPartitioning = true)
-    // per node u over its sorted neighbour group: m = min(N(u) ∪ {u})
-    // = min(first v, u); re-point every strictly larger v at m
-    def largeStar(sorted: RDD[((Long, Long), Unit)]) =
-      sorted.mapPartitions { it =>
-        var any = false; var cu = 0L; var m = 0L; var lv = 0L
-        it.flatMap { case ((u, v), _) =>
-          if (!any || u != cu) {
-            any = true; cu = u; m = math.min(v, u); lv = v
-            if (v > u) Iterator.single(((v, m), ())) else Iterator.empty
-          } else if (v == lv) Iterator.empty
-          else {
-            lv = v
-            if (v > u) Iterator.single(((v, m), ())) else Iterator.empty
-          }
-        }
+    val parts = math.max(1L, math.min(n0 / 131072L + 1L,
+      sc.defaultParallelism.toLong * 4L)).toInt
+    if (parts == 1 && onDriver) {
+      val (forest, rounds) = driverStarLoop(input.keys.collect(), maxRounds)
+      val rows = forest.map { case (u, v) => Row(u, v) }
+      val df = ckDir match {
+        case None => parent.createDataFrame(
+          java.util.Arrays.asList(rows: _*), schema)
+        case Some(_) =>
+          val rdd = sc.parallelize(rows.toSeq, 1)
+          rdd.checkpoint()
+          rdd.count()
+          parent.createDataFrame(rdd, schema)
       }
-    // input invariant: u > v on every edge; m = min(N(u)) = first v;
-    // emit (u, m) once plus (v, m) for every other distinct v
-    def smallStar(sorted: RDD[((Long, Long), Unit)]) =
-      sorted.mapPartitions { it =>
-        var any = false; var cu = 0L; var m = 0L; var lv = 0L
-        it.flatMap { case ((u, v), _) =>
-          if (!any || u != cu) {
-            any = true; cu = u; m = v; lv = v
-            Iterator.single(((u, m), ()))
-          } else if (v == lv) Iterator.empty
-          else { lv = v; Iterator.single(((v, m), ())) }
-        }
-      }
-    def sameSets(a: RDD[((Long, Long), Unit)],
-        b: RDD[((Long, Long), Unit)]): Boolean =
-      a.zipPartitions(b, preservesPartitioning = false) { (ia, ib) =>
-        var same = true
-        while (same && ia.hasNext && ib.hasNext)
-          if (ia.next()._1 != ib.next()._1) same = false
-        Iterator.single(same && !ia.hasNext && !ib.hasNext)
-      }.fold(true)(_ && _)
-    var state: RDD[((Long, Long), Unit)] = input
-    var prevSet: RDD[((Long, Long), Unit)] = null
+      (df, rounds)
+    } else {
+      val (forest, rounds) =
+        starRounds(new RddEdges(new EdgeKeyPartitioner(parts), ckDir),
+          input, maxRounds)
+      (parent.createDataFrame(
+        forest.map { case ((u, v), _) => Row(u, v) }, schema), rounds)
+    }
+  }
+
+  /** The driver backend of [[starLoop]]: ids are replaced by their dense
+    * rank (order-preserving, so every phase makes the same choices and
+    * the min decodes to the min id), each edge is packed into one Long
+    * as `rank(u) << 32 | rank(v)`, and each sort is a primitive sort of
+    * the packed array. Ranks are array indices, below 2^31, so packed
+    * order is (u, v) order. */
+  private def driverStarLoop(edges: Array[(Long, Long)],
+      maxRounds: Int): (Array[(Long, Long)], Int) = {
+    val ids = edges.flatMap { case (u, v) => Array(u, v) }.distinct.sorted
+    def rank(x: Long): Long = java.util.Arrays.binarySearch(ids, x).toLong
+    val packed = edges.map { case (u, v) => (rank(u) << 32) | rank(v) }
+    val (forest, rounds) = starRounds(LocalEdges, packed, maxRounds)
+    (LocalEdges.pairs(forest).map { case (u, v) =>
+      (ids(u.toInt), ids(v.toInt)) }.toArray, rounds)
+  }
+
+  /** One backend of the star rounds: a set of (u, v) edges of type `C`,
+    * the sort, and a way to run a phase over every sorted group. */
+  private trait StarEdges[C <: AnyRef] {
+    /** Both directions of every edge, sorted by (u, v). */
+    def symSorted(state: C): C
+    def sorted(edges: C): C
+    def through(edges: C, phase: Iterator[(Long, Long)] =>
+      Iterator[(Long, Long)]): C
+    def same(a: C, b: C): Boolean
+    /** Hold a round's forward set until the next round's compare. */
+    def keep(edges: C): C = edges
+    def release(edges: C): Unit = ()
+  }
+
+  /** The round structure of [[starLoop]], the same for every backend. */
+  private def starRounds[C <: AnyRef](e: StarEdges[C], input: C,
+      maxRounds: Int): (C, Int) = {
+    var state = input
+    var prevSet: Option[C] = None
     var rounds = 0
-    var result: RDD[((Long, Long), Unit)] = null
-    while (result == null) {
-      val symSorted = state
-        .flatMap { case ((u, v), _) => Iterator(((u, v), ()), ((v, u), ())) }
-        .repartitionAndSortWithinPartitions(part)
-      val fwdSet = dedupForward(symSorted).persist(StorageLevel.MEMORY_AND_DISK)
-      ckDir.foreach(_ => fwdSet.checkpoint())
-      if (prevSet != null) {
-        // the round's ONE action: materializes the previous round's
-        // largeStar+smallStar, this round's sym shuffle, the deduped
-        // set, and the convergence compare, back to back
-        val same = sameSets(fwdSet, prevSet)
-        if (same) result = fwdSet
-      }
-      if (result == null) {
+    var result: Option[C] = None
+    while (result.isEmpty) {
+      val symSorted = e.symSorted(state)
+      val fwdSet = e.keep(e.through(symSorted, dedupForward))
+      if (prevSet.exists(e.same(fwdSet, _))) result = Some(fwdSet)
+      else {
         // a non-fixpoint edge list after maxRounds applications is NOT a
         // star forest — labels built from it would carry conflicting
         // clusters per id, so never return it (the paper bound is
         // O(log² n) rounds; hitting maxRounds means something is wrong)
         if (rounds >= maxRounds) throw new IllegalStateException(
           s"clusterPairsStar did not converge within $maxRounds rounds")
-        state = smallStar(
-          largeStar(symSorted).repartitionAndSortWithinPartitions(part))
-        if (prevSet != null) {
-          prevSet.unpersist(blocking = false)
-          deleteCheckpoint(prevSet)
-        }
-        prevSet = fwdSet
+        state = e.through(e.sorted(e.through(symSorted, largeStar)),
+          smallStar)
+        prevSet.foreach(e.release)
+        prevSet = Some(fwdSet)
         rounds += 1
-      } else if (prevSet != null && (prevSet ne result)) {
-        prevSet.unpersist(blocking = false)
-        deleteCheckpoint(prevSet)
       }
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("u",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("v",
-        org.apache.spark.sql.types.LongType)))
-    val rows = result.map { case ((u, v), _) =>
-      org.apache.spark.sql.Row(u, v) }
-    (parent.createDataFrame(rows, schema), rounds)
+    prevSet.foreach(e.release)
+    (result.get, rounds)
+  }
+
+  /** Sorted symmetric edges → the distinct forward (u > v) edges. */
+  private def dedupForward(
+      it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    var any = false; var lu = 0L; var lv = 0L
+    it.flatMap { case e @ (u, v) =>
+      if (any && u == lu && v == lv) Iterator.empty
+      else {
+        any = true; lu = u; lv = v
+        if (u > v) Iterator.single(e) else Iterator.empty
+      }
+    }
+  }
+
+  /** Per node u over its sorted neighbour group: m = min(N(u) ∪ {u}) =
+    * min(first v, u); re-point every strictly larger v at m. */
+  private def largeStar(
+      it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    var any = false; var cu = 0L; var m = 0L; var lv = 0L
+    it.flatMap { case (u, v) =>
+      if (!any || u != cu) {
+        any = true; cu = u; m = math.min(v, u); lv = v
+        if (v > u) Iterator.single((v, m)) else Iterator.empty
+      } else if (v == lv) Iterator.empty
+      else {
+        lv = v
+        if (v > u) Iterator.single((v, m)) else Iterator.empty
+      }
+    }
+  }
+
+  /** Input invariant: u > v on every edge; m = min(N(u)) = first v;
+    * emit (u, m) once plus (v, m) for every other distinct v. */
+  private def smallStar(
+      it: Iterator[(Long, Long)]): Iterator[(Long, Long)] = {
+    var any = false; var cu = 0L; var m = 0L; var lv = 0L
+    it.flatMap { case (u, v) =>
+      if (!any || u != cu) {
+        any = true; cu = u; m = v; lv = v
+        Iterator.single((u, m))
+      } else if (v == lv) Iterator.empty
+      else { lv = v; Iterator.single((v, m)) }
+    }
+  }
+
+  /** Two sorted, distinct edge streams hold the same set. */
+  private def sameSorted(a: Iterator[(Long, Long)],
+      b: Iterator[(Long, Long)]): Boolean = {
+    var same = true
+    while (same && a.hasNext && b.hasNext)
+      if (a.next() != b.next()) same = false
+    same && !a.hasNext && !b.hasNext
+  }
+
+  /** Driver edges: packed `u << 32 | v` Longs (see [[driverStarLoop]]). */
+  private object LocalEdges extends StarEdges[Array[Long]] {
+    def pairs(edges: Array[Long]): Iterator[(Long, Long)] =
+      edges.iterator.map(p => (p >>> 32, p & 0xFFFFFFFFL))
+    def symSorted(state: Array[Long]): Array[Long] = {
+      val out = new Array[Long](state.length * 2)
+      var i = 0
+      while (i < state.length) {
+        val p = state(i)
+        out(2 * i) = p
+        out(2 * i + 1) = (p << 32) | (p >>> 32)
+        i += 1
+      }
+      java.util.Arrays.sort(out)
+      out
+    }
+    def sorted(edges: Array[Long]): Array[Long] = {
+      java.util.Arrays.sort(edges)
+      edges
+    }
+    def through(edges: Array[Long], phase: Iterator[(Long, Long)] =>
+        Iterator[(Long, Long)]): Array[Long] =
+      phase(pairs(edges)).map { case (u, v) => (u << 32) | v }.toArray
+    def same(a: Array[Long], b: Array[Long]): Boolean =
+      sameSorted(pairs(a), pairs(b))
+  }
+
+  /** Spark edges: each sort is one shuffle under `part`; the round's
+    * forward set is persisted (and checkpointed under `ckDir`) until the
+    * next round's compare has read it. */
+  private final class RddEdges(part: EdgeKeyPartitioner,
+      ckDir: Option[String])
+      extends StarEdges[org.apache.spark.rdd.RDD[((Long, Long), Unit)]] {
+    import org.apache.spark.rdd.RDD
+    type E = RDD[((Long, Long), Unit)]
+    def symSorted(state: E): E = sorted(state.flatMap { case ((u, v), _) =>
+      Iterator(((u, v), ()), ((v, u), ())) })
+    def sorted(edges: E): E = edges.repartitionAndSortWithinPartitions(part)
+    def through(edges: E, phase: Iterator[(Long, Long)] =>
+        Iterator[(Long, Long)]): E =
+      edges.mapPartitions(it => phase(it.map(_._1)).map((_, ())))
+    def same(a: E, b: E): Boolean =
+      a.zipPartitions(b, preservesPartitioning = false) { (ia, ib) =>
+        Iterator.single(sameSorted(ia.map(_._1), ib.map(_._1)))
+      }.fold(true)(_ && _)
+    override def keep(edges: E): E = {
+      edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      ckDir.foreach(_ => edges.checkpoint())
+      edges
+    }
+    override def release(edges: E): Unit = {
+      edges.unpersist(blocking = false)
+      try edges.getCheckpointFile.foreach { f =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        p.getFileSystem(edges.sparkContext.hadoopConfiguration)
+          .delete(p, true)
+      } catch { case _: Exception => () } // reclamation must never fail
+    }
   }
 
   /** INCREMENTAL connected components — the continual-ingest shape (the

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.Join
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import org.apache.spark.storage.StorageLevel
 
 /** Shared operator-level helpers: the size signal and its limits behind
   * every tier choice, shuffle parallelism, kernel spreading, UTF-8 order. */
@@ -11,15 +13,41 @@ private[graft] object OpConf {
     * optimizer's size estimate of `df` (metadata-only, no job — for a
     * file scan it is the sum of file sizes, carried through filters,
     * projections and unions), or `None` when the optimized plan holds
-    * any `Join`. Without CBO a join's estimate is the product of its
-    * sides, which can be wrong by orders of magnitude, so it is treated
-    * as unknown. Callers test `sizeBytes(df).exists(_ <= Limit)`: an
-    * unknown size always takes the tier that is safe at 100 TB. */
+    * any `Join` or a cached relation whose buffers are not loaded yet.
+    * Without CBO a join's estimate is the product of its sides, which
+    * can be wrong by orders of magnitude, so it is treated as unknown;
+    * an unloaded `InMemoryRelation` reports the estimate of the plan it
+    * caches, which may hide such a join. Callers test
+    * `sizeBytes(df).exists(_ <= Limit)`: an unknown size always takes
+    * the tier that is safe at 100 TB. */
   def sizeBytes(df: DataFrame): Option[BigInt] = {
     val plan = df.queryExecution.optimizedPlan
-    if (plan.exists(_.isInstanceOf[Join])) None
-    else Some(plan.stats.sizeInBytes)
+    val unknown = plan.exists {
+      case _: Join => true
+      case r: InMemoryRelation => !r.cacheBuilder.isCachedColumnBuffersLoaded
+      case _ => false
+    }
+    if (unknown) None else Some(plan.stats.sizeInBytes)
   }
+
+  /** [[sizeBytes]], or, where that is unknown, the exact size of `df`:
+    * `df` is persisted through [[OperatorCache]] and materialized once
+    * (one `count()` job), and the loaded size of the cached relation is
+    * read from a fresh Dataset over the same plan (`df`'s own plan was
+    * optimized before the cache existed and keeps the estimate). For
+    * sites where the unknown-size tier costs more than one
+    * materialization; every frame built from `df` afterwards reads the
+    * cache. The second value says whether `df` was persisted here (not
+    * by its caller), so the caller can release it early. */
+  def measuredSizeBytes(df: DataFrame): (Option[BigInt], Boolean) =
+    sizeBytes(df) match {
+      case known @ Some(_) => (known, false)
+      case None =>
+        val mine = df.storageLevel == StorageLevel.NONE
+        if (mine) OperatorCache.persist(df)
+        df.count()
+        (sizeBytes(df.select("*")), mine)
+    }
 
   /** Largest input the single-task tiers take: a partition-less window,
     * a broadcast nested-loop pair scan, a pinned broadcast build. */

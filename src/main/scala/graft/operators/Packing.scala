@@ -31,20 +31,36 @@ object Packing {
     *
     * Size-dispatched: the PARTITION-BY-less window moves every row to
     * ONE task (WindowExec's single-partition warning), which is fine at
-    * probe scale but a serialization point at corpus scale — inputs not
-    * known to fit [[OpConf.SmallInputBytes]] (see [[OpConf.sizeBytes]])
-    * take [[cumsumDistributed]] (two-pass range-partitioned prefix sum)
-    * instead. Both tiers produce the IDENTICAL integer running totals
-    * (exact int64 sums over the same total order), so the dispatch can
-    * never change a result — OperatorsSpec pins tier equality. */
+    * probe scale but a serialization point at corpus scale — inputs
+    * larger than [[OpConf.SmallInputBytes]] take [[cumsumDistributed]]
+    * (two-pass range-partitioned prefix sum) instead. The size is
+    * [[OpConf.measuredSizeBytes]]: an input whose estimate is unknown
+    * (a join above it) is cached and measured, so a small join result
+    * still takes the window, and the distributed tier's range sampling
+    * reads the cache instead of re-running the upstream. Both tiers
+    * produce the IDENTICAL integer running totals (exact int64 sums
+    * over the same total order), so the dispatch can never change a
+    * result — OperatorsSpec pins tier equality. */
   def packByCumsum(df: DataFrame, orderCol: String, tokensCol: String,
-      budget: Long): DataFrame = {
-    val small = OpConf.sizeBytes(df).exists(_ <= OpConf.SmallInputBytes)
-    val cum = if (small) {
+      budget: Long): DataFrame =
+    packByCumsum(df, orderCol, tokensCol, budget, OpConf.SmallInputBytes)
+
+  /** [[packByCumsum]] with the window tier's size limit as a parameter,
+    * so tests can force either tier. */
+  private[graft] def packByCumsum(df: DataFrame, orderCol: String,
+      tokensCol: String, budget: Long, smallBytes: Long): DataFrame = {
+    val (size, persisted) = OpConf.measuredSizeBytes(df)
+    val cum = if (size.exists(_ <= smallBytes)) {
       val w = Window.orderBy(col(orderCol))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
       df.withColumn("cum_tokens", sum(col(tokensCol)).over(w))
-    } else cumsumDistributed(df, orderCol, tokensCol)
+    } else {
+      // the range-partitioned copy is cached and loaded once this
+      // returns, so the measured input need not stay cached beside it
+      val out = cumsumDistributed(df, orderCol, tokensCol)
+      if (persisted) df.unpersist(blocking = false)
+      out
+    }
     cum.withColumn("bin",
       floor((col("cum_tokens") - col(tokensCol)) / budget).cast("bigint"))
   }

@@ -260,11 +260,22 @@ object TextAnalysis {
 
   /** One-stop stats projection used by the probe suite.
     *
-    * Tokenization + every array traversal happens ONCE per document inside
-    * the [[graft.functions.TextStatsKernel]] one-pass kernel (the
+    * Tokenization + every array traversal happens inside the
+    * [[graft.functions.TextStatsKernel]] one-pass kernel (the
     * declarative form walked the words array ~10× through interpreted
     * lambdas); the remaining math is scalar codegen over the struct's
-    * counts, bit-identical to the declarative metrics. */
+    * counts, bit-identical to the declarative metrics.
+    *
+    * The kernel runs once per row because its struct `__k` is the output
+    * of a one-row `Generate` (`explode(array(kernel))`), not a plain
+    * alias. Keeping the two projections apart is not enough: filter
+    * pushdown substitutes aliases, so a filter on `quality` pushed
+    * through them would inline the kernel once per field it reads, and
+    * every consumer projection would run it again. A filter on a
+    * generator output stays above the `Generate`, and `CollapseProject`
+    * does not cross it. `array(k)` is never empty, so row count and
+    * nulls are unchanged: a null text still gives one row, with a null
+    * struct. */
   def stats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     import org.apache.spark.sql.graftaccess.Internals
     val t = col(textCol)
@@ -292,8 +303,8 @@ object TextAnalysis {
     // parallelizes naturally; Dedup's shingle stages keep their barrier
     // because their per-row work is ~100× heavier.
     df.select(col(idCol), t.as("__t"),
-        Internals.column(graft.functions.TextStatsKernel(
-          Internals.expression(t), stopSets)).as("__k"))
+        explode(array(Internals.column(graft.functions.TextStatsKernel(
+          Internals.expression(t), stopSets)))).as("__k"))
       .select(col(idCol),
         nTok.as("n_tokens"),
         ratio(k.getField("sum_len")).as("avg_word_len"),

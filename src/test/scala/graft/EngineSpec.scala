@@ -84,6 +84,16 @@ class EngineSpec extends AnyFunSuite {
     assert(conf.head.getString(0) == "UTC")
   }
 
+  test("executeUpdate rewrites information_schema like prepare/execute") {
+    engine.executeUpdate(token,
+      "CREATE OR REPLACE TEMPORARY VIEW info_upd_src AS SELECT 1 AS v")
+    engine.executeUpdate(token, "CREATE OR REPLACE TEMPORARY VIEW " +
+      "info_upd_tv AS SELECT table_name FROM information_schema.tables")
+    val (_, rows) = engine.executeQuery(token,
+      "SELECT count(*) FROM info_upd_tv")
+    assert(rows.head.getLong(0) > 0)
+  }
+
   test("unknown statement handle raises") {
     assert(scala.util.Try(engine.execute("nope")).isFailure)
   }

@@ -552,6 +552,44 @@ class OperatorsSpec extends AnyFunSuite {
     assert(rounds <= 12, s"expected O(log^2 n) rounds, took $rounds")
   }
 
+  test("clusterPairsStar: the driver rounds and the RDD rounds give " +
+      "equal labels and equal round counts") {
+    val sc = spark.sparkContext
+    var calls = 0
+    // labels, round count and Spark jobs of one run
+    def run(pairs: org.apache.spark.sql.DataFrame,
+        onDriver: Boolean): (Map[Any, Any], Int, Int) = {
+      calls += 1
+      val group = s"cc-rounds-$calls"
+      sc.setJobGroup(group, group)
+      try {
+        val (labels, rounds) = Dedup.clusterPairsStarWithRounds(
+          pairs, "ida", "idb", maxRounds = 100, onDriver = onDriver)
+        (labels.collect().map(r => r.get(0) -> r.get(1)).toMap, rounds,
+          sc.statusTracker.getJobIdsForGroup(group).length)
+      } finally sc.clearJobGroup()
+    }
+    def both(pairs: org.apache.spark.sql.DataFrame, what: String): Unit = {
+      val (dl, dr, dj) = run(pairs, onDriver = true)
+      val (rl, rr, rj) = run(pairs, onDriver = false)
+      assert(dl == rl && dr == rr, s"$what: driver ($dr rounds) $dl vs " +
+        s"RDD ($rr rounds) $rl")
+      // the RDD rounds run one job per round after the first; the
+      // driver rounds run none
+      if (rr >= 3) assert(dj < rj, s"$what: driver $dj jobs vs RDD $rj")
+    }
+    val rnd = new scala.util.Random(42)
+    for (trial <- 0 until 5) {
+      val edges = Seq.fill(30 + trial * 10)(
+        (rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
+      both(edges.toDF("ida", "idb"), s"random trial $trial")
+    }
+    both((1L until 64L).map(i => (i, i + 1)).toDF("ida", "idb"), "64-path")
+    both((1 until 64).map(i => (s"c$i", s"c${i + 1}")).toDF("ida", "idb"),
+      "string 64-path")
+    both(Seq((4L, 4L)).toDF("ida", "idb"), "self-pair only")
+  }
+
   test("IVF assignment + probed search recovers brute-force neighbors") {
     val emb = Tables.load(spark, "/root/testdata/sf0.001", "embeddings")
     val cents = Similarity.ivfCentroidsFrom(emb, "vec_id", "embedding", 8)
@@ -896,6 +934,37 @@ class OperatorsSpec extends AnyFunSuite {
     assert(out.getAs[Double]("distinct_ratio") === 8.0 / 9)
   }
 
+  test("text stats: the kernel runs once per surviving row under a " +
+      "quality filter; nulls and values are unchanged") {
+    import graft.functions.TextStatsKernel
+    val documents = Tables.load(spark, "/root/testdata/sf0.001", "documents")
+    val kept = TextAnalysis.stats(documents, "doc_id", "text")
+      .filter($"quality" >= 0.3).select("doc_id", "n_tokens")
+    val plan = kept.queryExecution.optimizedPlan
+    val kernels = plan.flatMap(_.expressions)
+      .flatMap(_.collect { case k: TextStatsKernel => k })
+    assert(kernels.size == 1, s"kernel evaluated ${kernels.size}× in:\n$plan")
+    // filtering first keeps exactly the rows and values of the full output
+    val all = TextAnalysis.stats(documents, "doc_id", "text").collect()
+    assert(kept.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap ==
+      all.filter(_.getAs[Double]("quality") >= 0.3)
+        .map(r => r.getAs[Long]("doc_id") -> r.getAs[Int]("n_tokens")).toMap)
+    assert(all.length == documents.count())
+    // a null text gives one row of null metrics (least/greatest skip the
+    // nulls, so quality reads 0.0 and the language "und")
+    val withNull = docs.select("doc_id", "text")
+      .unionByName(Seq((9L, null: String)).toDF("doc_id", "text"))
+    val out = TextAnalysis.stats(withNull, "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r).toMap
+    assert(out.size == 6)
+    val nul = out(9L)
+    assert(Seq("n_tokens", "avg_word_len", "distinct_ratio", "punct_ratio",
+      "stop_ratio", "fp").forall(c => nul.isNullAt(nul.fieldIndex(c))))
+    assert(nul.getAs[Double]("quality") == 0.0)
+    assert(nul.getAs[String]("lang_guess") == "und")
+    assert(out(1L).getAs[Int]("n_tokens") == 9)
+  }
+
   test("salted skew join equals the plain equi-join") {
     import graft.operators.SkewJoin
     val large = Tables.load(spark, "/root/testdata/sf0.001", "lineitem")
@@ -963,10 +1032,10 @@ class OperatorsSpec extends AnyFunSuite {
     assert(dist == global,
       "two-pass prefix sum must equal the single-window cumsum")
     // packByCumsum's size dispatch: forcing the distributed tier (a
-    // join above the input: unknown size) yields bit-identical
+    // window-tier limit below every size) yields bit-identical
     // (cum_tokens, bin) rows
-    val forced = Packing.packByCumsum(TestSpark.joinedAbove(docs, "doc_id"),
-        "doc_id", "tokens", budget = 512)
+    val forced = Packing.packByCumsum(docs, "doc_id", "tokens",
+        budget = 512, smallBytes = -1L)
       .select("doc_id", "cum_tokens", "bin").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     val viaWindow = Packing.packByCumsum(docs, "doc_id", "tokens", 512)
@@ -1007,13 +1076,13 @@ class OperatorsSpec extends AnyFunSuite {
       df.queryExecution.sparkPlan.collect {
         case w: WindowExec if w.partitionSpec.isEmpty => w
       }.size
-    // a tiny table self-joined: unknown, so packByCumsum takes the
-    // distributed tier
+    // a tiny table self-joined: unknown; packByCumsum forced past the
+    // window tier takes the distributed tier
     val tiny = Seq((1L, 3L), (2L, 5L), (3L, 7L)).toDF("doc_id", "tokens")
     val joined = TestSpark.joinedAbove(tiny, "doc_id")
     assert(sized(joined).isEmpty)
-    assert(partitionLessWindows(
-      Packing.packByCumsum(joined, "doc_id", "tokens", budget = 4)) == 0)
+    assert(partitionLessWindows(Packing.packByCumsum(joined, "doc_id",
+      "tokens", budget = 4, smallBytes = -1L)) == 0)
     // a 2^32-row range projection: known and far above every limit
     val huge = spark.range(1L << 32)
       .select($"id".as("doc_id"), ($"id" % 7).as("tokens"))
@@ -1024,6 +1093,65 @@ class OperatorsSpec extends AnyFunSuite {
     assert(partitionLessWindows(
       Packing.packByCumsum(documents, "doc_id", "n_chars", budget = 4096)) == 1)
     assert(sc.statusTracker.getJobIdsForGroup("opconf-sizebytes").isEmpty)
+  }
+
+  test("OpConf.sizeBytes: a persisted but unloaded cached leaf is " +
+      "unknown; once loaded, a fresh Dataset reads its exact size") {
+    import graft.operators.OpConf
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val sc = spark.sparkContext
+    def sized(df: DataFrame): Option[BigInt] = {
+      sc.setJobGroup("opconf-cached-leaf", "sizeBytes")
+      try OpConf.sizeBytes(df) finally sc.clearJobGroup()
+    }
+    val tiny = Seq((1L, 3L), (2L, 5L), (3L, 7L)).toDF("doc_id", "tokens")
+    val joined = TestSpark.joinedAbove(tiny, "doc_id").persist()
+    try {
+      // the unloaded InMemoryRelation would report the join's estimate
+      assert(sized(joined.select("*")).isEmpty)
+      assert(joined.count() == 3L)
+      val fresh = joined.select("*")
+      val loaded = fresh.queryExecution.optimizedPlan.collectFirst {
+        case r: InMemoryRelation => r.cacheBuilder.sizeInBytesStats.value
+      }
+      assert(loaded.exists(_ > 0L))
+      assert(sized(fresh) == loaded.map(BigInt(_)))
+      assert(sc.statusTracker.getJobIdsForGroup("opconf-cached-leaf").isEmpty)
+    } finally joined.unpersist(blocking = true)
+  }
+
+  test("packByCumsum measures an unknown-size input: a tiny join result " +
+      "takes the window tier, and the forced distributed tier agrees") {
+    import graft.operators.Packing
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.window.WindowExec
+    def partitionLessWindows(df: DataFrame): Int =
+      df.queryExecution.sparkPlan.collect {
+        case w: WindowExec if w.partitionSpec.isEmpty => w
+      }.size
+    def rows(df: DataFrame): Map[Long, (Long, Long)] =
+      df.select("doc_id", "cum_tokens", "bin").collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    val tiny = spark.range(1, 201).select($"id".as("doc_id"),
+      (($"id" * 31) % 97 + 3).as("tokens"))
+    val windowed = Packing.packByCumsum(
+      TestSpark.joinedAbove(tiny, "doc_id"), "doc_id", "tokens", budget = 64)
+    assert(partitionLessWindows(windowed) == 1)
+    val forced = Packing.packByCumsum(TestSpark.joinedAbove(tiny, "doc_id"),
+      "doc_id", "tokens", budget = 64, smallBytes = -1L)
+    assert(partitionLessWindows(forced) == 0)
+    assert(rows(forced) == rows(windowed))
+    assert(rows(windowed).size == 200)
+    // an input its caller persisted stays cached: the distributed tier
+    // releases only a cache it made itself
+    val callers = TestSpark.joinedAbove(tiny.where($"doc_id" > 0), "doc_id")
+      .persist()
+    try {
+      assert(rows(Packing.packByCumsum(callers, "doc_id", "tokens",
+        budget = 64, smallBytes = -1L)) == rows(windowed))
+      assert(callers.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    } finally callers.unpersist(blocking = true)
   }
 
   test("greedy packing: every doc once, no bin overflows, order respected") {

@@ -655,6 +655,7 @@ class PlanSpec extends AnyFunSuite {
       "q_skew_profile" -> s"$postAggregate (the distinct-key profile)",
       "q_dict_encode" -> s"$postAggregate (the distinct-token vocabulary)",
       "q_pack_cumsum" -> smallTier,
+      "q_pipeline_e2e" -> smallTier,
       "q_pack_cuseqlens" -> smallTier,
       "q_win_global" -> s"$globalRank (row_number over all orders)",
       "q_histogram_depth" -> s"$globalRank (equi-depth ntile bins)",
