@@ -1,6 +1,7 @@
 package graft.engine
 
-import java.io.{DataInputStream, DataOutputStream, EOFException}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream,
+  DataOutputStream, IOException}
 import java.net.{InetAddress, ServerSocket, Socket, SocketException}
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -131,29 +132,33 @@ final class SocketServer(engine: Engine, requestedPort: Int = 31337,
       }
     }
 
-  private def handle(sock: Socket): Unit = {
-    val in = new DataInputStream(sock.getInputStream)
-    val out = new DataOutputStream(sock.getOutputStream)
+  /** Serves one connection until the client leaves. Responses go out
+    * through one buffer and are flushed once each, with `TCP_NODELAY`
+    * set: a frame split over two writes would otherwise hold its second
+    * write (Nagle) until the client's delayed ACK of the first, ~40 ms
+    * per verb. A socket that fails on either side (the client left
+    * between frames, mid-body, or before its response was written) ends
+    * the connection quietly. */
+  private def handle(sock: Socket): Unit =
     try {
+      sock.setTcpNoDelay(true)
+      val in = new DataInputStream(
+        new BufferedInputStream(sock.getInputStream, SocketServer.BufferBytes))
+      val out = new DataOutputStream(
+        new BufferedOutputStream(sock.getOutputStream, SocketServer.BufferBytes))
       var open = true
       while (open) {
-        val len =
-          try in.readInt()
-          catch { case _: EOFException | _: SocketException => open = false; -1 }
-        if (open && (len < 0 || len > SocketServer.MaxRequestBytes)) {
+        val len = in.readInt()
+        if (len < 0 || len > SocketServer.MaxRequestBytes) {
           // the body was not read, so the next frame boundary is unknown
           writeError(out, s"request frame length $len is outside " +
             s"0..${SocketServer.MaxRequestBytes}")
           open = false
-        } else if (open) {
+        } else {
           val buf = new Array[Byte](len)
-          // a client that disconnects mid-body ends the connection
-          // like one that disconnects between frames
-          try in.readFully(buf)
-          catch { case _: EOFException | _: SocketException => open = false }
+          in.readFully(buf)
           val req =
-            if (!open) None
-            else try Some(mapper.readTree(new String(buf, UTF_8)))
+            try Some(mapper.readTree(new String(buf, UTF_8)))
             catch {
               case e: com.fasterxml.jackson.core.JsonProcessingException =>
                 writeError(out, s"request is not JSON: ${e.getOriginalMessage}")
@@ -162,22 +167,33 @@ final class SocketServer(engine: Engine, requestedPort: Int = 31337,
           req.foreach(respond(_, out))
         }
       }
+    } catch {
+      case _: IOException => () // EOF, reset, broken pipe, TLS failure
     } finally sock.close()
+
+  /** Appends one frame to `out` without flushing: the response's last
+    * frame is followed by the one flush in [[respond]] / [[writeError]]. */
+  private def writeFrame(out: DataOutputStream, bytes: Array[Byte],
+      from: Int, until: Int): Unit = {
+    out.writeInt(until - from)
+    out.write(bytes, from, until - from)
   }
 
-  private def writeFrame(out: DataOutputStream, bytes: Array[Byte]): Unit = {
-    out.writeInt(bytes.length)
-    out.write(bytes)
+  private def writeError(out: DataOutputStream, error: String): Unit = {
+    val b = mapper.createObjectNode().put("ok", false)
+      .put("error", error).toString.getBytes(UTF_8)
+    writeFrame(out, b, 0, b.length)
     out.flush()
   }
 
-  private def writeError(out: DataOutputStream, error: String): Unit =
-    writeFrame(out, mapper.createObjectNode().put("ok", false)
-      .put("error", error).toString.getBytes(UTF_8))
-
+  /** Answers one request: its JSON header frame, then the payload frames
+    * (`cuts` are end offsets into `payload`, each closing one frame),
+    * flushed once. */
   private def respond(req: JsonNode, out: DataOutputStream): Unit = {
     val res = mapper.createObjectNode()
-    var arrow: Array[Byte] = null
+    var payload: Array[Byte] = null
+    var from = 0
+    var cuts: Seq[Int] = Nil
     def text(field: String): String = {
       val n = req.get(field)
       require(n != null, s"missing field: $field")
@@ -204,8 +220,9 @@ final class SocketServer(engine: Engine, requestedPort: Int = 31337,
           res.put("ok", true)
             .put("rows", engine.executeUpdate(text("token"), text("sql")))
         case "fetch_arrow" =>
-          arrow = engine.fetchArrow(text("handle"))
-          res.put("ok", true).put("bytes", arrow.length)
+          payload = engine.fetchArrow(text("handle"))
+          cuts = Seq(payload.length)
+          res.put("ok", true).put("bytes", payload.length)
         case "fetch_arrow_stream" =>
           // Streamed variant of fetch_arrow — one frame per IPC message
           // (schema, then each record batch; EOS rides with the last),
@@ -236,16 +253,9 @@ final class SocketServer(engine: Engine, requestedPort: Int = 31337,
           res.put("ok", true).put("bytes", hi - lo)
             .put("frames", end - start).put("total_frames", total)
             .put("next_frame", if (end < total) end else -1)
-          writeFrame(out, res.toString.getBytes(UTF_8))
-          var prev = lo
-          (start until end).foreach { i =>
-            val off = offsets(i)
-            out.writeInt(off - prev)
-            out.write(bytes, prev, off - prev)
-            prev = off
-          }
-          out.flush()
-          return
+          payload = bytes
+          from = lo
+          cuts = offsets.slice(start, end).toSeq
         case cmd @ ("get_catalogs" | "get_db_schemas" | "get_tables" |
             "get_columns") =>
           val token = text("token")
@@ -267,9 +277,10 @@ final class SocketServer(engine: Engine, requestedPort: Int = 31337,
               engine.getTables(token, opt("catalog"),
                 opt("db_schema_pattern"), opt("table_pattern"), types)
           }
-          arrow = r.ipc
+          payload = r.ipc
+          cuts = Seq(payload.length)
           res.put("ok", true).put("rows", r.rowCount)
-            .put("bytes", arrow.length)
+            .put("bytes", payload.length)
         case "cancel_query" =>
           // Flight SQL CancelQuery (the reference's
           // do_action_cancel_query is Status::unimplemented,
@@ -291,10 +302,15 @@ final class SocketServer(engine: Engine, requestedPort: Int = 31337,
         res.removeAll()
         res.put("ok", false)
           .put("error", Option(e.getMessage).getOrElse(e.getClass.getName))
-        arrow = null
+        cuts = Nil
     }
-    writeFrame(out, res.toString.getBytes(UTF_8))
-    if (arrow != null) writeFrame(out, arrow)
+    val header = res.toString.getBytes(UTF_8)
+    writeFrame(out, header, 0, header.length)
+    cuts.foreach { until =>
+      writeFrame(out, payload, from, until)
+      from = until
+    }
+    out.flush()
   }
 }
 
@@ -303,6 +319,9 @@ object SocketServer {
     * a few fields, so 16 MiB is far above any real one; without a bound a
     * client's 4-byte header alone would choose the server's allocation. */
   val MaxRequestBytes: Int = 16 << 20
+
+  /** Size of each connection's read and write buffer. */
+  private val BufferBytes = 1 << 16
 
   /** Env-driven TTLs are clamped to >= 1s with a parse-failure fallback,
     * like GRAFT_MAX_STATEMENTS: an unvalidated `0`/negative value would

@@ -1,6 +1,7 @@
 package graft
 
-import java.io.{DataInputStream, DataOutputStream}
+import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream,
+  DataOutputStream}
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
@@ -18,11 +19,21 @@ class ServerSpec extends AnyFunSuite {
   private val mapper = new ObjectMapper()
   private lazy val spark = TestSpark.spark
 
+  /** Writes each request frame in one write, with `TCP_NODELAY`, so a
+    * request never waits on the server's delayed ACK. */
   private class Client(sock: Socket) {
     def this(port: Int) = this(new Socket("127.0.0.1", port))
-    private val out = new DataOutputStream(sock.getOutputStream)
-    private val in = new DataInputStream(sock.getInputStream)
+    sock.setTcpNoDelay(true)
+    private val out = new DataOutputStream(
+      new BufferedOutputStream(sock.getOutputStream, 1 << 16))
+    private val in = new DataInputStream(
+      new BufferedInputStream(sock.getInputStream, 1 << 16))
     def call(fields: (String, Any)*): JsonNode = {
+      send(fields: _*)
+      mapper.readTree(new String(readFrame(), UTF_8))
+    }
+    /** Writes one request frame without reading the response. */
+    def send(fields: (String, Any)*): Unit = {
       val node = mapper.createObjectNode()
       fields.foreach {
         case (k, v: String) => node.put(k, v)
@@ -33,7 +44,6 @@ class ServerSpec extends AnyFunSuite {
       }
       val b = node.toString.getBytes(UTF_8)
       out.writeInt(b.length); out.write(b); out.flush()
-      mapper.readTree(new String(readFrame(), UTF_8))
     }
     def readFrame(): Array[Byte] = {
       val len = in.readInt()
@@ -57,6 +67,44 @@ class ServerSpec extends AnyFunSuite {
       "password" -> "password")
     assert(r.get("ok").asBoolean, r.toString)
     r.get("token").asText
+  }
+
+  /** Half the 40 ms delayed-ACK floor, so a loaded machine still passes. */
+  private val RoundTripMs = 20.0
+
+  /** Asserts that 40 sequential `bind` round trips, and 40 4-frame
+    * `fetch_arrow_stream` ones, each have a median under [[RoundTripMs]].
+    * A response the server writes in pieces without `TCP_NODELAY` waits
+    * for the client's delayed ACK (at least 40 ms on Linux); one flush
+    * per response does not. */
+  private def assertOneRoundTrip(c: Client, token: String): Unit = {
+    assert(c.call("cmd" -> "execute_update", "token" -> token,
+      "sql" -> "SET spark.sql.execution.arrow.maxRecordsPerBatch=100")
+      .get("ok").asBoolean)
+    val handle = c.call("cmd" -> "prepare", "token" -> token,
+      "sql" -> "SELECT id FROM range(250)").get("handle").asText
+    assert(c.call("cmd" -> "execute", "handle" -> handle)
+      .get("rows").asLong == 250L)
+    def ms(f: => Unit): Double = {
+      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e6
+    }
+    val times = (1 to 40).map { _ =>
+      val bind = ms(assert(c.call("cmd" -> "bind", "handle" -> handle,
+        "params" -> Seq.empty[String]).get("ok").asBoolean))
+      val fetch = ms {
+        val st = c.call("cmd" -> "fetch_arrow_stream", "handle" -> handle)
+        assert(st.get("frames").asInt == 4, st.toString)
+        (1 to 4).foreach(_ => c.readFrame())
+      }
+      (bind, fetch)
+    }
+    assert(c.call("cmd" -> "close_statement", "handle" -> handle)
+      .get("ok").asBoolean)
+    def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.length / 2)
+    val (bind, fetch) = (median(times.map(_._1)), median(times.map(_._2)))
+    val medians = f"median bind $bind%.2f ms, fetch_arrow_stream $fetch%.2f ms"
+    info(medians)
+    assert(bind < RoundTripMs && fetch < RoundTripMs, medians)
   }
 
   test("full q1_agg lifecycle over localhost TCP with Arrow IPC payload") {
@@ -146,6 +194,8 @@ class ServerSpec extends AnyFunSuite {
       } finally { reader.close(); alloc.close() }
       assert(c.call("cmd" -> "close_statement", "handle" -> handle)
         .get("ok").asBoolean)
+      // each verb is one round trip over TLS too
+      assertOneRoundTrip(c, token)
       assert(c.call("cmd" -> "close_session", "token" -> token)
         .get("ok").asBoolean)
       // a PLAINTEXT client against the TLS port fails the handshake
@@ -677,6 +727,43 @@ class ServerSpec extends AnyFunSuite {
         try auth(fresh) finally fresh.close()
       }
       // every connection is closed now: wait for their threads to end
+      import scala.jdk.CollectionConverters._
+      Thread.getAllStackTraces.keySet.asScala
+        .filter(_.getName == "graft-server-conn").foreach(_.join(10000))
+      assert(uncaught.isEmpty, uncaught.asScala.mkString("; "))
+    } finally Thread.setDefaultUncaughtExceptionHandler(prev)
+  }
+
+  test("a verb costs one round trip: bind and a multi-frame " +
+      "fetch_arrow_stream answer without waiting on a delayed ACK") {
+    withServer { (_, c) =>
+      val token = auth(c)
+      assertOneRoundTrip(c, token)
+      c.call("cmd" -> "close_session", "token" -> token)
+    }
+  }
+
+  test("a client that resets its connection before its response is " +
+      "written ends its connection quietly; the next connection is served") {
+    val uncaught = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val prev = Thread.getDefaultUncaughtExceptionHandler
+    Thread.setDefaultUncaughtExceptionHandler((_, e) => uncaught.add(e))
+    try {
+      withServer { (server, _) =>
+        val sock = new Socket("127.0.0.1", server.port)
+        val c = new Client(sock)
+        val token = auth(c)
+        val handle = c.call("cmd" -> "prepare", "token" -> token,
+          "sql" -> "SELECT count(*) AS n FROM range(1000000)")
+          .get("handle").asText
+        c.send("cmd" -> "execute", "handle" -> handle)
+        // close with an RST while the server is still executing, so its
+        // response write meets a reset connection
+        sock.setSoLinger(true, 0)
+        sock.close()
+        val fresh = new Client(server.port)
+        try auth(fresh) finally fresh.close()
+      }
       import scala.jdk.CollectionConverters._
       Thread.getAllStackTraces.keySet.asScala
         .filter(_.getName == "graft-server-conn").foreach(_.join(10000))
