@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Multi-PROCESS catalog contention driver (VERDICT r12 stretch #8).
+/** Multi-PROCESS catalog contention driver.
   * The in-JVM concurrency pins (CatalogV2Spec) share one lock object by
   * construction; what a real deployment exercises is two separate JVMs
   * racing the file-lock CAS on one warehouse. `tools/contend.sh` runs
@@ -107,7 +107,7 @@ object ContendMain {
         println(s"CONTEND OK rows=${wRows + bRows} " +
           s"versions=${versions.head}..${versions.last}")
 
-      // crash-kill recovery gate (VERDICT r13 #4) ------------------------
+      // crash-kill recovery gate ------------------------------------------
       case "victim" =>
         // committed INSERTs until SIGKILLed from outside; each success is
         // acknowledged on stdout AFTER the commit returns, so the killer
@@ -129,7 +129,7 @@ object ContendMain {
         }
         println(s"victim done n=$n")
 
-      // merge-on-read contention (round 15) ------------------------------
+      // merge-on-read contention ------------------------------------------
       case "morinit" =>
         spark.sql("CREATE NAMESPACE IF NOT EXISTS gcont.s")
         spark.sql("""CREATE TABLE gcont.s.m (a INT, tag STRING)
@@ -151,7 +151,7 @@ object ContendMain {
         (1 to n).foreach { i =>
           spark.sql(s"DELETE FROM gcont.s.m WHERE a = ${base + i}")
           // EQUALITY delete racing position deletes, inserts and
-          // sidecar rewrites from the other JVM (round 16)
+          // sidecar rewrites from the other JVM
           spark.sql("CALL gcont.system.delete_by_key" +
             s"('s.m', 'a', '${1000 + base + i}')").collect()
           if (i % 3 == 0)
@@ -275,10 +275,10 @@ object ContendMain {
           s"versions=${versions.head}..${versions.last}")
 
       case "hpinit" =>
-        // stage 4 (r17, VERDICT r16 #8 — the pairwise-feature matrix):
+        // stage 4 (the pairwise-feature matrix):
         // ONE days()-partitioned table that two JVMs will hit with
         // hidden-partition MERGEs, equality deletes AND a mid-race type
-        // promotion. Every r16/r17 feature interaction on one table.
+        // promotion: every pairwise feature interaction on one table.
         spark.sql("CREATE NAMESPACE IF NOT EXISTS gcont.s")
         spark.sql("""CREATE TABLE gcont.s.h
           (k BIGINT, ts TIMESTAMP, q INT, tag STRING)
@@ -292,7 +292,7 @@ object ContendMain {
         // n rounds per process (base 0 / 100, disjoint effect slices):
         //  - MERGE INTO: one FIXED matched key incremented (+1 per
         //    round — exactly-once measurable) + one unmatched insert
-        //    into a derived day dir (the r17 hidden-partition V2 write
+        //    into a derived day dir (the hidden-partition V2 write
         //    under cross-JVM contention);
         //  - delete_by_key of one owned seed row (eq sidecars racing);
         //  - base=0 PROMOTES q int→bigint at the halfway round, while
@@ -300,7 +300,7 @@ object ContendMain {
         //  - an INSERT every 3rd round.
         // Every op retries on abort (schema-epoch, lost CAS): an abort
         // means nothing committed, so retry keeps exactly-once. ONLY
-        // the known abort types retry (ADVICE r17): an exception thrown
+        // the known abort types retry: an exception thrown
         // AFTER a successful commit (post-commit read failure,
         // transient I/O) would re-run the op and double-apply the MERGE
         // increment, tripping checkhp as a false alarm — and a blind
@@ -314,7 +314,7 @@ object ContendMain {
         // the stage's exactly-once arithmetic owns seed slices
         // base+1..base+n and fixed keys 181/182: n outside [2, 40]
         // would overlap them (or skip the promotion round) and raise
-        // FALSE alarms (r17 review)
+        // FALSE alarms
         require(n >= 2 && n <= 40, s"hpwriter: n=$n outside [2, 40]")
         require(base == 0 || base == 100, s"hpwriter: base=$base")
         val fixedKey = if (base == 0) 181 else 182
@@ -358,7 +358,7 @@ object ContendMain {
           if (base == 0 && i == n / 2)
             retry("promote")(spark.sql(
               "ALTER TABLE gcont.s.h ALTER COLUMN q TYPE BIGINT"))
-          // base=100 EVOLVES the partition spec mid-race (r18): the
+          // base=100 EVOLVES the partition spec mid-race: the
           // other JVM's in-flight writes (planned under the days-only
           // spec) epoch-abort and retry; later writes land nested
           // day/hour dirs while old files keep pruning under their era
@@ -366,7 +366,7 @@ object ContendMain {
             spark.sql(
               "CALL gcont.system.add_partition_field('s.h', 'hours(ts)')")
           // ...and REPLACES the whole spec on its LAST round with an
-          // IDENTITY field (repartition_table's two halves, r18 cont.):
+          // IDENTITY field (repartition_table's two halves):
           // the seal is a locked metadata write; the migrating compact
           // retries on a stale base when the other JVM commits between
           // its read and its publish. In-flight ops planned under the
@@ -419,7 +419,7 @@ object ContendMain {
         require(spark.table("gcont.s.h").schema("q").dataType ==
           org.apache.spark.sql.types.LongType, "promotion lost")
         // the mid-race spec evolution AND the end-of-race identity
-        // repartition both landed (r18): the era log holds the
+        // repartition both landed: the era log holds the
         // days+hours era historically, and the CURRENT spec is the
         // identity 'tag' layout; the day-prune twin check below must
         // stay exact across all three eras
@@ -428,8 +428,7 @@ object ContendMain {
         require(eras.exists(_.spec.map(_.spec) ==
           Seq("days(ts)", "hours(ts)")),
           s"mid-race evolution era lost: ${eras.map(_.spec.map(_.spec))}")
-        val spec = graft.catalog.SpecEras.currentSpecStrings(
-          hdir, graft.catalog.AlterOps.readProps(hdir))
+        val spec = graft.catalog.TableMeta.read(hdir).partitionCols
         require(spec == Seq("tag"),
           s"end-of-race identity repartition lost: $spec")
         // idempotent under check re-runs (a failed check may have

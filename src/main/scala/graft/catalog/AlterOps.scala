@@ -5,11 +5,11 @@ import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.connector.catalog.TableChange
-import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** The catalog-agnostic ALTER TABLE metadata transaction, shared by
-  * [[MetaCatalog]] and [[RestCatalog]] (round-16 stretch: REST ALTER
-  * parity — the REST catalog serves POINTERS and every commit already
+  * [[MetaCatalog]] and [[RestCatalog]] (the REST catalog serves
+  * POINTERS and every commit already
   * runs client-side against the table location, so schema evolution
   * does too, under the same per-table lock). Callers MUST hold
   * [[Snapshots.withRefsLock]] on `tableDir` — the transaction is
@@ -19,40 +19,6 @@ import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructType}
   * commits abort on the schema-epoch check instead of misclassifying
   * their files). */
 object AlterOps {
-
-  private val PartitionKey = "graft.partition.columns"
-
-  private def schemaFile(tableDir: Path): Path =
-    tableDir.resolve("_graft_schema.json")
-  private def propsFile(tableDir: Path): Path =
-    tableDir.resolve("_graft_props.properties")
-
-  private def readSchema(tableDir: Path): StructType =
-    DataType.fromJson(Files.readString(schemaFile(tableDir)))
-      .asInstanceOf[StructType]
-
-  /** The declared schema, or None for a bare data dir (pre-catalog
-    * layouts) — ONE reader shared by every consumer that needs the
-    * declared types next to raw parquet reads (r17 review). */
-  private[catalog] def readDeclaredSchema(tableDir: Path): Option[StructType] =
-    if (Files.exists(schemaFile(tableDir))) Some(readSchema(tableDir))
-    else None
-
-  private[graft] def readProps(tableDir: Path): Map[String, String] = {
-    val f = propsFile(tableDir)
-    if (!Files.exists(f)) return Map.empty
-    val p = new java.util.Properties()
-    val in = Files.newInputStream(f)
-    try p.load(in) finally in.close()
-    p.asScala.toMap
-  }
-
-  private[graft] def writeProps(tableDir: Path, props: Map[String, String]): Unit = {
-    val p = new java.util.Properties()
-    props.foreach { case (k, v) => p.setProperty(k, v) }
-    val out = Files.newOutputStream(propsFile(tableDir))
-    try p.store(out, null) finally out.close()
-  }
 
   /** Apply `changes` to the table metadata at `tableDir`. See
     * [[MetaCatalog.alterTable]] for the semantics (field-id generations
@@ -66,9 +32,12 @@ object AlterOps {
     // is a generation whose translation is a CAST); everything else
     // rejects — existing parquet keeps the narrow physical type and a
     // narrowing/kind-change would corrupt.
+    // one read of the metadata: the caller holds the table lock
+    val meta = TableMeta.read(tableDir)
+    val before = meta.schema
     changes.foreach {
       case u: TableChange.UpdateColumnType =>
-        val cur = readSchema(tableDir)
+        val cur = before
         val n = u.fieldNames().mkString(".")
         val from = cur.fields.find(_.name == n).map(_.dataType).getOrElse(
           throw new IllegalArgumentException(s"no such column $n"))
@@ -90,13 +59,13 @@ object AlterOps {
       case _ => false
     }
     if (schemaChanges.nonEmpty) {
-      // era-log aware (r18): evolution's latest spec is authoritative;
+      // era-log aware: evolution's latest spec is authoritative;
       // guards must see the CURRENT sources, not a stale property
-      val partSpec = SpecEras.currentSpecStrings(tableDir,
-        readProps(tableDir)).map(PartitionTransforms.parse)
+      val partSpec = meta.partitionCols.map(PartitionTransforms.parse)
+      val eras = meta.eras.toSeq.flatten
       // partition SOURCES — identity columns and hidden-transform
       // sources alike: dir layouts and the prune mapping carry the name.
-      // ALL ERAS, not just the current spec (r18): a field dropped by
+      // ALL ERAS, not just the current spec: a field dropped by
       // DROP PARTITION FIELD leaves old-era files whose dirs were
       // derived from the source — renaming it and re-ADDing a column
       // under the old name would make era pruning test the NEW column's
@@ -104,9 +73,8 @@ object AlterOps {
       // probe on the re-added column would wrongly prune all-NULL old
       // files outside the seed bucket). Loud rejection; CTAS migrates.
       val partSources = (partSpec.map(_.source) ++
-        SpecEras.read(tableDir).toSeq.flatten
-          .flatMap(_.spec.map(_.source))).distinct
-      // ERA-SOURCE RELEASE (r18 watchlist): a source referenced ONLY by
+        eras.flatMap(_.spec.map(_.source))).distinct
+      // ERA-SOURCE RELEASE: a source referenced ONLY by
       // old eras (DROP PARTITION FIELD removed it from the current
       // spec) unblocks once NO file referenced by ANY surviving
       // snapshot or branch belongs to a referencing era — i.e. after
@@ -118,8 +86,7 @@ object AlterOps {
       // usual generation machinery.
       def sourceReleased(n: String): Boolean = {
         if (partSpec.exists(_.source == n)) return false // current spec
-        val erasOpt = SpecEras.read(tableDir)
-        val eras = erasOpt.getOrElse(return false)
+        if (meta.eras.isEmpty) return false
         val refEras = eras.filter(_.spec.exists(_.source == n))
           .map(_.activeFrom).toSet
         if (refEras.isEmpty) return true
@@ -138,8 +105,8 @@ object AlterOps {
       // the current spec: old-era files still carry the old transform's
       // dirs, and a data column with that name would be served from DIR
       // VALUES by partition inference on those files' reads.
-      val derivedNames = (partSpec ++ SpecEras.read(tableDir).toSeq.flatten
-        .flatMap(_.spec)).filterNot(_.isIdentity).map(_.dirName).toSet
+      val derivedNames = (partSpec ++ eras.flatMap(_.spec))
+        .filterNot(_.isIdentity).map(_.dirName).toSet
       def requireNoDirCollision(n: String): Unit =
         if (derivedNames.contains(n))
           throw new IllegalArgumentException(
@@ -171,7 +138,7 @@ object AlterOps {
         case u: TableChange.UpdateColumnType
             if partSources.contains(u.fieldNames().mkString(".")) &&
               !sourceReleased(u.fieldNames().mkString(".")) =>
-          // PROMOTION-STABLE sources are exempt (r18): int→bigint on a
+          // PROMOTION-STABLE sources are exempt: int→bigint on a
           // source whose every transform (any era) derives through a
           // width-canonical expression — bucket under the v2 derivation
           // (hash(cast(k AS BIGINT))), truncate (floor over cast-to-
@@ -179,13 +146,11 @@ object AlterOps {
           // else (identity dirs parse under the declared type; v1
           // bucket hashes int and long differently) stays rejected.
           val n = u.fieldNames().mkString(".")
-          val from = readSchema(tableDir).fields.find(_.name == n)
-            .map(_.dataType)
-          val v2 = readProps(tableDir)
-            .get(PartitionTransforms.BucketDerivationKey)
+          val from = before.fields.find(_.name == n).map(_.dataType)
+          val v2 = meta.props.get(PartitionTransforms.BucketDerivationKey)
             .exists(_.trim == "v2")
-          val overSource = (partSpec ++ SpecEras.read(tableDir).toSeq
-            .flatten.flatMap(_.spec)).filter(_.source == n)
+          val overSource = (partSpec ++ eras.flatMap(_.spec))
+            .filter(_.source == n)
           val stable = from.contains(IntegerType) &&
             u.newDataType() == LongType && overSource.nonEmpty &&
             overSource.forall {
@@ -200,7 +165,6 @@ object AlterOps {
               "v2 hash derivation or truncate — both dir-stable)")
         case _ => ()
       }
-      val before = readSchema(tableDir)
       val evolved = schemaChanges.foldLeft(before)(
         MetaCatalog.applySchemaChange)
       // field-id bookkeeping: DROP/RENAME/promotion seal a generation
@@ -240,7 +204,7 @@ object AlterOps {
           // generation boundary would leave their keys pointing at
           // physical names old files don't carry — the scan-side mask
           // would silently miss. compact() folds the sidecars first.
-          // TYPE PROMOTION is exempt (r17): names are unchanged and
+          // TYPE PROMOTION is exempt: names are unchanged and
           // EqualityDeletes.loadBatches widens narrow sidecar keys to
           // the declared type at read, so pending masks stay exact.
           throw new IllegalStateException(
@@ -263,14 +227,14 @@ object AlterOps {
         case _ => ()
       }
       val activeFrom = latestV.getOrElse(0L) + 1L
-      var meta = FieldIds.readOrSynthesize(tableDir, before)
+      var ids = meta.fieldMeta.getOrElse(FieldIds.synthesize(before))
       schemaChanges.foreach {
         case a: TableChange.AddColumn =>
-          meta = FieldIds.addColumn(meta, a.fieldNames().head)
+          ids = FieldIds.addColumn(ids, a.fieldNames().head)
         case d: TableChange.DeleteColumn =>
-          meta = FieldIds.dropColumn(meta, d.fieldNames().head, activeFrom)
+          ids = FieldIds.dropColumn(ids, d.fieldNames().head, activeFrom)
         case r: TableChange.RenameColumn =>
-          meta = FieldIds.renameColumn(meta, r.fieldNames().head, r.newName(),
+          ids = FieldIds.renameColumn(ids, r.fieldNames().head, r.newName(),
             activeFrom)
         case u: TableChange.UpdateColumnType =>
           // promotion: stamp the OLD physical type into existing
@@ -280,7 +244,7 @@ object AlterOps {
           // the new type
           val oldType = before.fields
             .find(_.name == u.fieldNames().head).get.dataType
-          meta = FieldIds.promoteColumn(meta, u.fieldNames().head,
+          ids = FieldIds.promoteColumn(ids, u.fieldNames().head,
             oldType.json, activeFrom)
           // bloom sidecars for the column hashed NARROW values (the
           // catalyst XxHash64 of Int and Long differ): a wide-value
@@ -295,9 +259,9 @@ object AlterOps {
       // the reverse order would leave a renamed schema over un-evolved
       // ids, which reads the renamed column as silent NULLs through the
       // single-generation fast path
-      FieldIds.write(tableDir, meta)
-      Files.writeString(schemaFile(tableDir), evolved.json)
-      // bloom-column bookkeeping (r18): the recorded-columns property is
+      FieldIds.write(tableDir, ids)
+      TableMeta.writeSchema(tableDir, evolved)
+      // bloom-column bookkeeping: the recorded-columns property is
       // what lets compact() self-heal sidecars, so it must track the
       // schema — a DROPPED column leaves the record, a RENAMED column
       // renames it (its old-named sidecars are dropped; value hashes
@@ -305,7 +269,7 @@ object AlterOps {
       // compact rebuilds under it). A PROMOTED column deliberately
       // keeps its record — that is the self-healing hook.
       locally {
-        val props1 = readProps(tableDir)
+        val props1 = TableMeta.readProps(tableDir)
         val rec = BloomSidecars.recordedColumns(props1)
         if (rec.nonEmpty) {
           var next = rec
@@ -320,7 +284,7 @@ object AlterOps {
             case _ => ()
           }
           if (next != rec)
-            writeProps(tableDir,
+            TableMeta.writeProps(tableDir,
               if (next.isEmpty) props1 - BloomSidecars.ColumnsKey
               else props1 +
                 (BloomSidecars.ColumnsKey -> next.mkString(",")))
@@ -328,12 +292,12 @@ object AlterOps {
       }
     }
     if (propChanges.nonEmpty) {
-      val next = propChanges.foldLeft(readProps(tableDir)) {
+      val next = propChanges.foldLeft(TableMeta.readProps(tableDir)) {
         case (m, s: TableChange.SetProperty) => m + (s.property() -> s.value())
         case (m, r: TableChange.RemoveProperty) => m - r.property()
         case (m, _) => m
       }
-      writeProps(tableDir, next)
+      TableMeta.writeProps(tableDir, next)
     }
   }
 

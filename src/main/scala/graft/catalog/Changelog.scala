@@ -1,7 +1,5 @@
 package graft.catalog
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
@@ -67,9 +65,8 @@ object Changelog {
     require(fromVersion <= toVersion,
       s"changelog: fromVersion $fromVersion > toVersion $toVersion")
     val dir = Maintenance.tableDir(spark, ident)
-    val schema = DataType.fromJson(
-      Files.readString(dir.resolve("_graft_schema.json")))
-      .asInstanceOf[StructType]
+    val meta = TableMeta.read(dir)
+    val schema = meta.schema
 
     // The raw reads below map columns by PHYSICAL name: a file from an
     // older field-id generation (pre-RENAME, or pre-drop with a
@@ -78,7 +75,7 @@ object Changelog {
     // loudly; compact() rewrites history's files... but old SNAPSHOTS
     // keep referencing the old files, so the guard covers every file
     // any snapshot in the requested range references.
-    FieldIds.read(dir).foreach { m =>
+    meta.fieldMeta.foreach { m =>
       val rangeFiles = Snapshots.list(dir)
         .filter(s => s.version >= fromVersion && s.version <= toVersion)
         .flatMap(_.dataFiles).distinct
@@ -103,7 +100,7 @@ object Changelog {
         .withColumn("_commit_version", lit(v))
     }
 
-    // EXPLICIT declared schema (r17): a file set can span a type
+    // EXPLICIT declared schema: a file set can span a type
     // promotion (narrow + wide files in one read) — schema inference
     // would pick one file's physical type and break on the others;
     // Spark's parquet reader natively widens narrow files under the
@@ -112,22 +109,22 @@ object Changelog {
     // don't translate. Identity partition columns resolve from dir
     // names via basePath, same as an inferred read.
     def readRaw(fs: Seq[String]): DataFrame =
-      // one basePath read per spec era (r18): a rollback diff can
+      // one basePath read per spec era: a rollback diff can
       // re-reference files from several eras whose dir depths differ,
       // which Spark's partition inference rejects outright; the pinned
       // zone governs TIMESTAMP identity dir-value parsing
-      SpecEras.fileGroups(dir, fs, Seq.empty).map { case (_, eraFs) =>
+      SpecEras.fileGroups(dir, fs, meta.eras).map { eraFs =>
         val r0 = spark.read
           .option("basePath", dir.resolve("data").toString)
           .schema(schema)
-        AlterOps.readProps(dir).get(PartitionTransforms.ZoneKey)
+        meta.props.get(PartitionTransforms.ZoneKey)
           .fold(r0)(z => r0.option("timeZone", z))
           .parquet(eraFs.map(f => dir.resolve(f).toString): _*)
           // select the DECLARED columns per era frame: partition
           // inference appends each era's hidden dir columns and the
-          // union sides would disagree (soak seed 101, r18). `_metadata`
-          // rides along — the mask joins key on file_path/row_index and
-          // the pseudo-column only resolves on the direct file relation.
+          // union sides would disagree. `_metadata` rides along — the
+          // mask joins key on file_path/row_index and the pseudo-column
+          // only resolves on the direct file relation.
           .select(schema.fieldNames.map(col).toIndexedSeq :+
             col("_metadata"): _*)
       }.reduce(_ unionByName _)

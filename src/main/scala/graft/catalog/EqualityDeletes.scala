@@ -9,7 +9,7 @@ import org.apache.spark.sql.types._
 
 /** Equality-delete sidecars — Iceberg v2's SECOND delete-file type
   * (iceberg-rust ships both, Cargo.lock:2149-2151; position deletes
-  * landed in round 15). A DELETE-BY-KEY commits a parquet sidecar under
+  * are [[DeleteSidecars]]). A DELETE-BY-KEY commits a parquet sidecar under
   * `deletes/eq_<uuid>/` whose columns ARE the equality fields and whose
   * rows are the deleted key tuples — O(keys) metadata, no data file
   * read or rewritten, no positions computed. This is the streaming
@@ -58,7 +58,7 @@ object EqualityDeletes {
     * (`java.lang.Double.equals`: 0.0 != -0.0) while every SQL-level
     * consumer compares with `<=>` (0.0 = -0.0) — without this, a
     * -0.0-keyed row would be treated as deleted by rewrites/changelog
-    * but still served by interactive scans (ADVICE r16). Applied to
+    * but still served by interactive scans. Applied to
     * BOTH the key set (at load) and the read-side values
     * ([[org.apache.spark.sql.graftaccess.MorScans]]). NaN needs no
     * handling: `Double.equals` and `<=>` both treat NaN = NaN as true. */
@@ -90,9 +90,9 @@ object EqualityDeletes {
     // sidecars committed BEFORE a type promotion carry the NARROW key
     // type; read values arrive natively widened to the declared type,
     // so the key set must be widened too (exact — only legal widenings
-    // are castable here) or the hash compare would silently miss (r17:
-    // CDC keeps flowing across a promotion, no compact required)
-    val declared: Option[StructType] = AlterOps.readDeclaredSchema(tableDir)
+    // are castable here) or the hash compare would silently miss (CDC
+    // keeps flowing across a promotion, no compact required)
+    val declared: Option[StructType] = TableMeta.declaredSchema(tableDir)
     groupByCommit(eqFiles).map { case (commitDir, files) =>
       val version = files.map(addVersion).min
       val raw = spark.read.parquet(
@@ -123,7 +123,7 @@ object EqualityDeletes {
           "files, or raise the limit")
       // guard BEFORE collect: parquet footer row counts bound the
       // driver-side materialization, so one oversized sidecar fails
-      // loudly instead of OOMing the driver first (ADVICE r16)
+      // loudly instead of OOMing the driver first
       // commit-time stats cache serves the row counts (live-footer
       // fallback per uncached sidecar)
       val sidecarStats = FileStatsCache.forTable(tableDir,

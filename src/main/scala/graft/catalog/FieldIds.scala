@@ -2,8 +2,6 @@ package graft.catalog
 
 import java.nio.file.{Files, Path}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.types.StructType
 
 /** Iceberg-style FIELD-ID schema evolution for MetaCatalog tables — the
@@ -37,7 +35,7 @@ import org.apache.spark.sql.types.StructType
   * Scale note: per-file generation resolution scans the snapshot log
   * (first-seen version per file) — the same O(files) metadata Iceberg
   * keeps as a per-file schema-id in manifests; planning-time only,
-  * never a data read. Concurrency (ADVICE r15): ALTER's metadata
+  * never a data read. Concurrency: ALTER's metadata
   * transaction and every snapshot commit hold the same per-table lock
   * ([[Snapshots.withRefsLock]]), and commits re-validate the schema
   * epoch captured at handle build — a write planned pre-ALTER that
@@ -49,8 +47,8 @@ object FieldIds {
     * `activeFrom` or later (until the next generation). `types` records
     * a field's PHYSICAL type (Spark DataType json) where it differs from
     * the current declared type — i.e. the pre-promotion type of files
-    * written under this generation (type PROMOTION, round 16; absent =
-    * the current type, the pre-r16 format unchanged). */
+    * written under this generation (type PROMOTION; absent = the
+    * current type, so files without the column parse unchanged). */
   final case class Gen(activeFrom: Long, names: Map[Int, String],
       types: Map[Int, String] = Map.empty) {
     def idOf(name: String): Option[Int] =
@@ -101,8 +99,8 @@ object FieldIds {
       g.names.get(id).contains(name)
     }
     // Recorded physical TYPES for live fields (pre-promotion narrow
-    // files) deliberately do NOT break identity (r17, VERDICT r16
-    // #3/#4): every stamped type is a legal widening by construction
+    // files) deliberately do NOT break identity: every stamped type is
+    // a legal widening by construction
     // ([[graft.catalog.MetaCatalog.legalWidening]] gates the ALTER —
     // int→bigint, float→double, decimal precision growth), and Spark
     // 4's parquet reader serves ALL of them natively under the
@@ -137,9 +135,7 @@ object FieldIds {
     nonIdentityFiles(tableDir, meta, files).nonEmpty
 
   private def file(tableDir: Path): Path =
-    tableDir.resolve("_graft_fields.tsv")
-
-  def exists(tableDir: Path): Boolean = Files.exists(file(tableDir))
+    tableDir.resolve(TableMeta.FieldsFile)
 
   /** Single generation synthesized from a declared schema (ids by
     * position, active from the first snapshot). */
@@ -150,13 +146,16 @@ object FieldIds {
 
   def read(tableDir: Path): Option[Meta] = {
     val f = file(tableDir)
-    if (!Files.exists(f)) return None
-    val lines = Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
+    if (!Files.exists(f)) None else Some(parse(Files.readString(f)))
+  }
+
+  private[catalog] def parse(body: String): Meta = {
+    val lines = body.linesIterator.filter(_.nonEmpty).toSeq
     val nextId = lines.head.stripPrefix("nextId=").toInt
     val gens = lines.tail.map { l =>
       // line: <activeFrom>\t<id>\t<name>[\t<physical-type-json>] — the
-      // 4th column is the round-16 promotion extension; 3-column files
-      // (every pre-r16 table) parse unchanged
+      // 4th column is the promotion extension; 3-column files (tables
+      // that never promoted a type) parse unchanged
       val parts = l.split("\t", 4)
       (parts(0).toLong, parts(1).toInt, parts(2),
         if (parts.length == 4 && parts(3).nonEmpty) Some(parts(3)) else None)
@@ -164,17 +163,18 @@ object FieldIds {
       Gen(af, rows.map(r => r._2 -> r._3).toMap,
         rows.collect { case (_, id, _, Some(tj)) => id -> tj }.toMap)
     }
-    Some(Meta(nextId, gens))
+    Meta(nextId, gens)
   }
 
-  def readOrSynthesize(tableDir: Path, schema: StructType): Meta =
-    read(tableDir).getOrElse(synthesize(schema))
-
-  def write(tableDir: Path, meta: Meta): Unit = {
+  /** Reject names the line format cannot hold (tab, newline). */
+  def requireRecordable(meta: Meta): Unit =
     meta.gens.flatMap(_.names.values).foreach { n =>
       require(!n.contains("\t") && !n.contains("\n"),
         s"column name '$n' cannot be recorded in field-id metadata")
     }
+
+  def write(tableDir: Path, meta: Meta): Unit = {
+    requireRecordable(meta)
     val body = (s"nextId=${meta.nextId}" +:
       meta.gens.flatMap(g => g.names.toSeq.sortBy(_._1).map {
         case (id, n) => g.types.get(id) match {
@@ -205,7 +205,7 @@ object FieldIds {
     Meta(nextId, kept :+ Gen(activeFrom, names, meta.current.types))
   }
 
-  /** TYPE PROMOTION (round 16 — Iceberg spec §4 legal widenings): seal
+  /** TYPE PROMOTION (Iceberg spec §4 legal widenings): seal
     * a generation boundary at `activeFrom` and stamp `oldTypeJson` into
     * every EXISTING generation carrying the field (their files hold the
     * narrow physical type; generations that already recorded a type —

@@ -41,37 +41,27 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * .MultiGenScans]]) — old files serve their bytes under current names
   * with no rewrite; compaction migrates them to the current generation.
   */
-class GraftTable(
+class GraftTable private[catalog] (
     fullName: String,
     tableDir: Path,
-    declaredSchema: StructType,
-    partitionCols: Seq[String],
-    props: Map[String, String],
+    private[catalog] val meta: TableMeta,
     pinned: Option[Snapshots.Snap],
-    branch: Option[String] = None,
-    fieldMeta: Option[FieldIds.Meta] = None,
-    morCapOverride: Option[Long] = None) extends Table
+    branch: Option[String],
+    morCapOverride: Option[Long]) extends Table
     with SupportsRead with SupportsWrite with SupportsDelete
     with SupportsRowLevelOperations with SupportsMetadataColumns {
 
   private def spark: SparkSession = SparkSession.active
   private def dataDir: Path = tableDir.resolve("data")
   private def deletesDir: Path = tableDir.resolve("deletes")
-
-  /** Schema metadata captured when this handle was built. Every commit
-    * re-reads it inside the table lock and ABORTS on mismatch: a write
-    * planned under the pre-ALTER schema whose files commit after a
-    * RENAME/DROP generation boundary would otherwise be silently
-    * classified into the NEW generation and read wrong (NULLs for the
-    * renamed column) — ADVICE r15. ALTER's own metadata transaction
-    * holds the same lock, so there is no window between this check and
-    * the snapshot publish. */
-  private val schemaEpoch: String = GraftTable.schemaEpochOf(tableDir)
+  private def declaredSchema: StructType = meta.schema
+  private def props: Map[String, String] = meta.props
+  private def fieldMeta: Option[FieldIds.Meta] = meta.fieldMeta
 
   /** Whether this table records the v2 HASH-WIDTH-STABLE bucket
-    * derivation (`graft.bucket.derivation=v2`, set at CREATE since r18):
+    * derivation (`graft.bucket.derivation=v2`, set at CREATE):
     * integral bucket keys hash through BIGINT, so promoting the source
-    * int→bigint keeps every dir valid. Pre-r18 tables keep v1. */
+    * int→bigint keeps every dir valid. Older tables keep v1. */
   private def bucketWideDerivation: Boolean =
     props.get(PartitionTransforms.BucketDerivationKey)
       .exists(_.trim == "v2")
@@ -79,26 +69,26 @@ class GraftTable(
   /** The parsed partition spec ([[PartitionTransforms]]): `partitionCols`
     * carries raw spec strings — bare names (identity, the historical
     * format) and transform specs like `days(ts)` / `bucket(16,id)` /
-    * `truncate(4,name)` (hidden partitioning, round 16). */
+    * `truncate(4,name)` (hidden partitioning). */
   private val partSpec: Seq[PartitionTransforms.T] =
     PartitionTransforms.withBucketMode(
-      partitionCols.map(PartitionTransforms.parse), bucketWideDerivation)
+      meta.partitionCols.map(PartitionTransforms.parse), bucketWideDerivation)
   /** Identity partition sources — the dir columns that are ALSO schema
-    * columns (every pre-r16 fast path keys on these). */
+    * columns. */
   private def identityCols: Seq[String] =
     partSpec.collect { case PartitionTransforms.Identity(c) => c }
   private def hiddenTransforms: Seq[PartitionTransforms.T] =
     partSpec.filterNot(_.isIdentity)
-  /** The zone pinned at CREATE for `days()` boundaries (ADVICE r16);
-    * None on pre-r17 tables → session zone, the historical behavior. */
+  /** The zone pinned at CREATE for calendar-transform boundaries; None
+    * on tables created before the pin existed → session zone. */
   private def partitionZone: Option[String] =
     props.get(PartitionTransforms.ZoneKey)
-  /** Whether this handle must BACKFILL a zone pin: a pre-r17 table with
+  /** Whether this handle must BACKFILL a zone pin: an older table with
     * a calendar transform over a zoned TIMESTAMP but no [[PartitionTransforms.ZoneKey]]
-    * derives and prunes in whatever zone each session happens to run —
-    * an exposure the V2 row-level writes extended to rewrites (ADVICE
-    * r17). The first commit through this handle pins the zone the
-    * handle actually derived with, closing the window for good. */
+    * derives and prunes in whatever zone each session happens to run,
+    * and the V2 row-level writes extend that to rewrites. The first
+    * commit through this handle pins the zone the handle actually
+    * derived with, closing the window for good. */
   private lazy val zoneNeedsBackfill: Boolean = partitionZone.isEmpty &&
     PartitionTransforms.needsPinnedZone(partSpec, declaredSchema)
   /** ONE zone per handle, used by every derive and prune: the pinned
@@ -109,15 +99,15 @@ class GraftTable(
       Some(org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
     else None)
 
-  /** Partition-spec ERAS ([[SpecEras]], r18 — Iceberg spec §4 versioned
+  /** Partition-spec ERAS ([[SpecEras]] — Iceberg spec §4 versioned
     * partition specs): the era log when `ADD/DROP PARTITION FIELD` ever
     * ran, else one synthetic era over the current spec. Old files keep
     * their era's spec for pruning AND for scan slicing (mixed-era file
     * sets have mixed dir depths, which Spark's partition inference
     * rejects outright); new writes always use [[partSpec]] (the latest
-    * era — the catalogs load it through [[SpecEras.currentSpecStrings]]). */
+    * era, which [[TableMeta.read]] loads as the current spec). */
   private lazy val specEras: Seq[SpecEras.Era] =
-    SpecEras.read(tableDir)
+    meta.eras
       .map(_.map(e => e.copy(spec = PartitionTransforms.withBucketMode(
         e.spec, bucketWideDerivation))))
       .getOrElse(Seq(SpecEras.Era(1L, partSpec)))
@@ -160,7 +150,7 @@ class GraftTable(
   private def morDeletes: Boolean =
     props.get("write.delete.mode").exists(_.trim == "merge-on-read")
 
-  /** DECLARED WRITE SORT ORDER (r18 — the iceberg-rust-spec sort-order
+  /** DECLARED WRITE SORT ORDER (the iceberg-rust-spec sort-order
     * surface, `WRITE ORDERED BY` as the `graft.write.ordered-by` table
     * property): every INSERT / MERGE / rewrite lays rows out
     * range-distributed and sorted on these columns, so footer min/max
@@ -199,7 +189,7 @@ class GraftTable(
 
   /** The merge-on-read position index for the given sidecars, keyed by
     * tableDir-RELATIVE data-file path — loaded ONCE per scan build (it
-    * also drives the clean-vs-masked file split, VERDICT r15 #1). */
+    * also drives the clean-vs-masked file split). */
   private def morRelIndex(
       deleteFiles: Seq[String]): Map[String, Array[Long]] = {
     // morCapOverride: a maintenance handle (compact) lifts the
@@ -242,6 +232,32 @@ class GraftTable(
       f => seen.getOrElse(f, Long.MaxValue), maxKeys)
   }
 
+  /** The merge-on-read mask of one base snapshot's delete files: the
+    * position index, the equality batches with the first-seen versions
+    * they apply by, and ONE broadcast of both shared by every masked
+    * slice. Each part loads on first use: a row-level operation is built
+    * at analysis for every conditional DELETE and must read no sidecar
+    * unless it actually scans. */
+  private class DeleteMask(deleteFiles: Seq[String]) {
+    private val eqFiles = deleteFiles.filter(Snapshots.isEqualityDeleteFile)
+    private val posFiles = deleteFiles.filterNot(Snapshots.isEqualityDeleteFile)
+    lazy val relIndex: Map[String, Array[Long]] =
+      if (posFiles.isEmpty) Map.empty else morRelIndex(posFiles)
+    lazy val seen: Map[String, Long] =
+      if (eqFiles.isEmpty) Map.empty else firstSeenVersions()
+    lazy val eqBatches: Seq[EqualityDeletes.Batch] =
+      if (eqFiles.isEmpty) Seq.empty else loadEqBatches(eqFiles, seen)
+    /** A sidecar at version vB masks files first seen strictly before vB. */
+    def eqApplies(rel: String): Boolean =
+      eqBatches.exists(_.version > seen.getOrElse(rel, Long.MaxValue))
+    def isMasked(rel: String): Boolean =
+      relIndex.contains(rel) || eqApplies(rel)
+    lazy val broadcast = spark.sparkContext.broadcast(
+      org.apache.spark.sql.graftaccess.MorScans.MaskContext(
+        absKeyed(relIndex), eqBatches.toArray,
+        absKeyed(seen.filter { case (f, _) => eqApplies(f) })))
+  }
+
   // --- field-id schema generations (FieldIds) ---------------------------
 
   /** Field-id metadata only matters once a DROP/RENAME created a second
@@ -268,7 +284,7 @@ class GraftTable(
     val fields = declaredSchema.fields.map { f =>
       val id = cur.idOf(f.name).getOrElse(throw new IllegalStateException(
         s"$fullName: column ${f.name} missing from field-id metadata " +
-          "(_graft_fields.tsv out of sync with _graft_schema.json)"))
+          "(field ids out of sync with the declared schema)"))
       g.names.get(id) match {
         case Some(phys) =>
           val physType = g.types.get(id)
@@ -326,7 +342,7 @@ class GraftTable(
     // basePath keeps hive-style partition-dir inference rooted at data/
     // even though we hand the index leaf files, not the directory.
     // The pinned zone (when the spec needs one) also governs how
-    // TIMESTAMP identity-partition dir VALUES parse (r18): without it,
+    // TIMESTAMP identity-partition dir VALUES parse: without it,
     // the reader would interpret `ts=2024-01-01 10%3A00%3A00` in its
     // own session zone and serve different instants than were written.
     val opts = new CaseInsensitiveStringMap(
@@ -401,41 +417,25 @@ class GraftTable(
       case Some(s) => s.dataFiles
       case None => Snapshots.walkDataParquet(tableDir)
     }
-    val posDels = snap.map(_.posDeleteFiles).getOrElse(Seq.empty)
-    val eqDels = snap.map(_.eqDeleteFiles).getOrElse(Seq.empty)
     // ONE sidecar read per scan build (it also decides the clean/masked
     // split below) + ONE broadcast shared by every masked slice
-    val relIndex: Map[String, Array[Long]] =
-      if (posDels.isEmpty) Map.empty else morRelIndex(posDels)
-    val seen: Map[String, Long] =
-      if (eqDels.isEmpty) Map.empty else firstSeenVersions()
-    val eqBatches: Seq[EqualityDeletes.Batch] =
-      if (eqDels.isEmpty) Seq.empty else loadEqBatches(eqDels, seen)
-    // a sidecar at version vB masks files FIRST SEEN strictly before vB
-    def eqApplies(rel: String): Boolean =
-      eqBatches.exists(_.version > seen.getOrElse(rel, Long.MaxValue))
-    def isMasked(rel: String): Boolean =
-      relIndex.contains(rel) || eqApplies(rel)
-    lazy val sharedCtx = spark.sparkContext.broadcast(
-      org.apache.spark.sql.graftaccess.MorScans.MaskContext(
-        absKeyed(relIndex), eqBatches.toArray,
-        absKeyed(seen.filter { case (f, _) => eqApplies(f) })))
+    val mask = new DeleteMask(snap.map(_.deleteFiles).getOrElse(Seq.empty))
     val groups = generationGroups(dataRel)
     // equality keys are recorded under CURRENT column names; an
     // old-generation slice reads different physical names, so the mask
     // would silently miss — unreachable in normal operation (deleteByKey
     // rejects old-gen tables, ALTER rejects pending eq sidecars), kept
     // as defense in depth
-    if (eqBatches.nonEmpty && groups.nonEmpty)
+    if (mask.eqBatches.nonEmpty && groups.nonEmpty)
       throw new UnsupportedOperationException(
         s"$fullName has pending equality-delete sidecars AND data files " +
           "from an older schema generation; compact() the table first")
     // identity-partition key columns are served from DIR VALUES via
-    // readPartitionSchema (MorScans routes them there, r17); timestamp
+    // readPartitionSchema (MorScans routes them there); timestamp
     // partition keys stay rejected at deleteByKey (zone-dependent parse)
     def cleanWrap(plain: ScanBuilder): ScanBuilder =
       if (fileColShadowed) plain else new FileTaggedScans.Builder(plain)
-    // Clean-vs-masked split (VERDICT r15 #1): only files with pending
+    // Clean-vs-masked split: only files with pending
     // delete-sidecar entries (position or applicable equality) pay the
     // mask-read tax; every other file keeps the untouched vectorized
     // delegate. Masked slices stay columnar too (RemappedColumnVector),
@@ -443,7 +443,7 @@ class GraftTable(
     def slicesFor(files: Seq[String], schema: StructType,
         rename: Map[String, String], noPush: Set[String] = Set.empty)
         : Seq[MultiGenScans.GenSlice] = {
-      val (masked, clean) = files.partition(isMasked)
+      val (masked, clean) = files.partition(mask.isMasked)
       def delegate(fs: Seq[String]) =
         delegateFor(fs.map(f => tableDir.resolve(f).toString), schema)
           .newScanBuilder(options)
@@ -455,7 +455,7 @@ class GraftTable(
       val maskedSlice =
         if (masked.nonEmpty)
           Seq(MultiGenScans.GenSlice(new MorScans.Builder(
-            delegate(masked), !fileColShadowed, () => sharedCtx), rename,
+            delegate(masked), !fileColShadowed, () => mask.broadcast), rename,
             noPush))
         else Seq.empty
       cleanSlice ++ maskedSlice
@@ -470,7 +470,7 @@ class GraftTable(
       }
     def assemble(files: Seq[String]): ScanBuilder =
       eraFileGroups(files) match {
-        // SPEC ERAS (r18): one delegate stack per era — files of
+        // SPEC ERAS: one delegate stack per era — files of
         // different eras have different dir depths, and Spark's hive
         // partition inference rejects a mixed-depth file set outright
         // (CONFLICTING_PARTITION_COLUMN_NAMES); within one era the
@@ -493,15 +493,15 @@ class GraftTable(
                   val (sg, rename, promoted) = genSchema(fieldMeta.get, g)
                   slicesFor(fs, sg, rename, promoted)
                 },
-                if (relIndex.isEmpty) "schema generations"
+                if (mask.relIndex.isEmpty) "schema generations"
                 else "schema generations + mor split")
           }
       }
-    // HIDDEN PARTITIONING (round 16): the kept file list depends on the
+    // HIDDEN PARTITIONING: the kept file list depends on the
     // pushed filters, so the whole delegate stack is constructed at
     // build() time over the transform-pruned files — predicates on the
     // SOURCE column (`WHERE ts >= ...`) prune `ts_day=...` dirs with no
-    // user-visible partition column. Era-aware since r18: each file
+    // user-visible partition column. Era-aware: each file
     // prunes under the spec that wrote its dirs.
     if (!anyEraHidden) assemble(dataRel)
     else new org.apache.spark.sql.graftaccess.HiddenPruneScans.Builder(
@@ -527,10 +527,25 @@ class GraftTable(
     }
   }
 
+  /** Run `write` into a scratch dir, drop its zero-row part files, then
+    * publish the rest in ONE snapshot ([[publishAndCommit]]); the
+    * scratch dir is removed whatever happens. */
+  private def stagedCommit(overwrite: Boolean,
+      replacedBase: Option[Seq[String]], destRoot: Option[Path] = None,
+      knownDeletes: Option[Seq[String]] = None)(write: Path => Unit): Unit = {
+    val tmp = Files.createTempDirectory("graft_commit_")
+    try {
+      write(tmp)
+      stripZeroRowParts(tmp)
+      publishAndCommit(tmp, overwrite, replacedBase, destRoot = destRoot,
+        knownDeletes = knownDeletes)
+    } finally dropRecursively(tmp)
+  }
+
   /** Distributed write into a scratch dir, then move data files under
     * `data/` (preserving partition-dir structure) and append one snapshot.
-    * Spark part-file names embed a per-job UUID, so moves never collide. */
-  /** `replacedBase`: the snapshot file list a rewrite (DELETE) was
+    * Spark part-file names embed a per-job UUID, so moves never collide.
+    * `replacedBase`: the snapshot file list a rewrite (DELETE) was
     * computed FROM — the commit replaces exactly those files and keeps
     * anything committed since, so a concurrent INSERT between the
     * rewrite's read and its commit survives. `overwrite` without a base
@@ -538,9 +553,8 @@ class GraftTable(
     * request. */
   private def commitWrite(data: DataFrame, overwrite: Boolean,
       replacedBase: Option[Seq[String]] = None,
-      knownDeletes: Option[Seq[String]] = None): Unit = {
-    val tmp = Files.createTempDirectory(s"graft_commit_${UUID.randomUUID().toString.take(8)}")
-    try {
+      knownDeletes: Option[Seq[String]] = None): Unit =
+    stagedCommit(overwrite, replacedBase, knownDeletes = knownDeletes) { tmp =>
       val aligned = data.toDF(declaredSchema.fieldNames.toSeq: _*)
       // hidden transforms derive their dir column here; the derived
       // value lives ONLY in directory names (partitionBy drops it from
@@ -559,7 +573,7 @@ class GraftTable(
           laid0.repartitionByRange(keys: _*).sortWithinPartitions(keys: _*)
       }
       // the pinned zone also governs how TIMESTAMP identity-partition
-      // dir values RENDER (r18) — FileFormatWriter casts partition
+      // dir values RENDER — FileFormatWriter casts partition
       // values to string under the write job's timeZone option
       val w0 = laid.write.mode(SaveMode.Overwrite)
       val w = effectiveZone.fold(w0)(z => w0.option("timeZone", z))
@@ -567,11 +581,7 @@ class GraftTable(
         w.partitionBy(PartitionTransforms.dirColumns(partSpec): _*)
       else w)
         .parquet(tmp.toString)
-      stripZeroRowParts(tmp)
-      publishAndCommit(tmp, overwrite, replacedBase,
-        knownDeletes = knownDeletes)
-    } finally dropRecursively(tmp)
-  }
+    }
 
   /** The V1 writer emits a zero-row part file for an empty frame (a
     * rewrite whose pruned files left no survivors). Committing it
@@ -594,12 +604,6 @@ class GraftTable(
       }
     }
 
-  /** Merge-on-read DELETE commit: write `positions` (file, pos) as
-    * parquet sidecars under `deletes/` and append ONE snapshot that
-    * keeps every current file and adds the sidecars. `baseTouched` is
-    * the data-file set the positions were computed against — a
-    * concurrent rewrite of any of them aborts the commit (the
-    * positions would mask the wrong rows in the rewritten files). */
   /** EQUALITY-delete commit ([[EqualityDeletes]]): write the deleted
     * KEY TUPLES as one parquet sidecar under `deletes/eq_<uuid>/` and
     * append ONE snapshot keeping every current file plus the sidecar.
@@ -610,32 +614,26 @@ class GraftTable(
     * file aborts (the rewritten file would get a NEW first-seen version
     * at or after this commit and silently escape the mask). */
   private[catalog] def commitEqualityDeleteSidecar(keys: DataFrame,
-      baseData: Seq[String]): Unit = {
-    val tmp = Files.createTempDirectory(
-      s"graft_eqdel_${UUID.randomUUID().toString.take(8)}")
-    try {
+      baseData: Seq[String]): Unit =
+    stagedCommit(overwrite = false, Some(baseData), Some(deletesDir)) { tmp =>
       keys.coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(tmp.resolve(s"eq_${UUID.randomUUID().toString.take(8)}")
           .toString)
-      stripZeroRowParts(tmp)
-      publishAndCommit(tmp, overwrite = false,
-        replacedBase = Some(baseData), destRoot = Some(deletesDir))
-    } finally dropRecursively(tmp)
-  }
+    }
 
+  /** Merge-on-read DELETE commit: write `positions` (file, pos) as
+    * parquet sidecars under `deletes/` and append ONE snapshot that
+    * keeps every current file and adds the sidecars. `baseTouched` is
+    * the data-file set the positions were computed against — a
+    * concurrent rewrite of any of them aborts the commit (the
+    * positions would mask the wrong rows in the rewritten files). */
   private def commitDeleteSidecars(positions: DataFrame,
-      baseTouched: Seq[String]): Unit = {
-    val tmp = Files.createTempDirectory(
-      s"graft_mor_${UUID.randomUUID().toString.take(8)}")
-    try {
+      baseTouched: Seq[String]): Unit =
+    stagedCommit(overwrite = false, Some(baseTouched), Some(deletesDir)) { tmp =>
       positions
         .sortWithinPartitions("file", "pos") // read-side locality
         .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      stripZeroRowParts(tmp)
-      publishAndCommit(tmp, overwrite = false,
-        replacedBase = Some(baseTouched), destRoot = Some(deletesDir))
-    } finally dropRecursively(tmp)
-  }
+    }
 
   /** Move every parquet file under `tmp` into `data/` (preserving
     * partition-dir structure) and append ONE snapshot — read-latest +
@@ -675,13 +673,13 @@ class GraftTable(
       // Inside the table lock: ALTER holds the same lock for its whole
       // schema-metadata transaction, so a mid-write RENAME/DROP is
       // caught here (abort + retry) instead of silently misclassifying
-      // this commit's files into the post-ALTER generation.
-      val epochNow = GraftTable.schemaEpochOf(tableDir)
-      if (epochNow != schemaEpoch)
+      // this commit's files into the post-ALTER generation (renamed
+      // columns would read NULL).
+      if (TableMeta.epochOf(tableDir) != meta.epoch)
         throw new java.util.ConcurrentModificationException(
           s"$fullName: table schema metadata changed while this write " +
             "was in flight (concurrent ALTER TABLE); retry the operation")
-      // ZONE BACKFILL (ADVICE r17): the first commit through a handle
+      // ZONE BACKFILL: the first commit through a handle
       // on a legacy zoned calendar-transform table (no ZoneKey) pins
       // the zone the handle derived with, so the cross-session
       // day-boundary drift window closes instead of persisting
@@ -690,7 +688,7 @@ class GraftTable(
       // commit aborts — its dir derivations may disagree with the now-
       // authoritative pin.
       if (zoneNeedsBackfill) effectiveZone.foreach { z =>
-        val fresh = AlterOps.readProps(tableDir)
+        val fresh = TableMeta.readProps(tableDir)
         fresh.get(PartitionTransforms.ZoneKey) match {
           case Some(other) if other != z =>
             throw new java.util.ConcurrentModificationException(
@@ -699,7 +697,7 @@ class GraftTable(
                 "retry the operation")
           case Some(_) => () // same zone already pinned: nothing to do
           case None =>
-            AlterOps.writeProps(tableDir,
+            TableMeta.writeProps(tableDir,
               fresh + (PartitionTransforms.ZoneKey -> z))
         }
       }
@@ -764,18 +762,13 @@ class GraftTable(
     * Same surgical semantics as [[replaceFiles]]: a concurrent commit
     * that already folded `oldSidecars` aborts this rewrite. */
   private[catalog] def replaceDeleteSidecars(positions: DataFrame,
-      oldSidecars: Seq[String], targetFiles: Int): Unit = {
-    val tmp = Files.createTempDirectory(
-      s"graft_mor_rw_${UUID.randomUUID().toString.take(8)}")
-    try {
+      oldSidecars: Seq[String], targetFiles: Int): Unit =
+    // an all-dangling input writes only zero-row parts: a pure sidecar drop
+    stagedCommit(overwrite = true, Some(oldSidecars), Some(deletesDir)) { tmp =>
       positions.coalesce(math.max(1, targetFiles))
         .sortWithinPartitions("file", "pos")
         .write.mode(SaveMode.Overwrite).parquet(tmp.toString)
-      stripZeroRowParts(tmp) // all-dangling input → pure sidecar drop
-      publishAndCommit(tmp, overwrite = true,
-        replacedBase = Some(oldSidecars), destRoot = Some(deletesDir))
-    } finally dropRecursively(tmp)
-  }
+    }
 
   // --- SQL row-level commands (MERGE INTO / UPDATE / subquery DELETE) ---
 
@@ -834,28 +827,7 @@ class GraftTable(
     // ONE sidecar read + ONE broadcast for the whole operation (the
     // scan's toBatch can run several times — runtime group filtering
     // re-plans partitions from a fresh Batch)
-    private lazy val baseRelIndex: Map[String, Array[Long]] = {
-      val pos = baseDeletes.filterNot(Snapshots.isEqualityDeleteFile)
-      if (pos.isEmpty) Map.empty else morRelIndex(pos)
-    }
-    private lazy val baseSeen: Map[String, Long] =
-      if (baseDeletes.exists(Snapshots.isEqualityDeleteFile))
-        firstSeenVersions()
-      else Map.empty
-    private lazy val baseEqBatches: Seq[EqualityDeletes.Batch] = {
-      val eq = baseDeletes.filter(Snapshots.isEqualityDeleteFile)
-      if (eq.isEmpty) Seq.empty else loadEqBatches(eq, baseSeen)
-    }
-    private def baseEqApplies(rel: String): Boolean =
-      baseEqBatches.exists(
-        _.version > baseSeen.getOrElse(rel, Long.MaxValue))
-    private def baseMasked(rel: String): Boolean =
-      baseRelIndex.contains(rel) || baseEqApplies(rel)
-    private lazy val baseMorBroadcast =
-      spark.sparkContext.broadcast(
-        org.apache.spark.sql.graftaccess.MorScans.MaskContext(
-          absKeyed(baseRelIndex), baseEqBatches.toArray,
-          absKeyed(baseSeen.filter { case (f, _) => baseEqApplies(f) })))
+    private val baseMask = new DeleteMask(baseDeletes)
     // The group-based rewrite reads files under the DECLARED schema; a
     // pre-rename file would silently serve NULL for renamed columns and
     // the rewrite would persist the corruption — reject loudly. Checked
@@ -899,9 +871,8 @@ class GraftTable(
         // This scan REPORTS the declared schema, but ParquetScan
         // delegates serve identity-partition columns LAST — reorder the
         // batch to declared order or every non-trailing partition
-        // column reads misaligned ordinals (r18; latent since r16 for
-        // any identity-partitioned table whose partition column is not
-        // the final schema column).
+        // column reads misaligned ordinals (any identity-partitioned
+        // table whose partition column is not the final schema column).
         def reordered(scan: org.apache.spark.sql.connector.read.Scan)
             : org.apache.spark.sql.connector.read.Batch =
           org.apache.spark.sql.graftaccess.MultiGenScans.reorder(
@@ -911,7 +882,7 @@ class GraftTable(
         else {
           // pending MOR sidecars: masked rows must not enter the
           // rewrite — same clean/masked split as interactive scans.
-          // SPEC ERAS (r18): one slice group PER ERA — a mixed-era file
+          // SPEC ERAS: one slice group PER ERA — a mixed-era file
           // set has mixed dir depths, which partition inference rejects.
           // FIXED slice layout (per BASE-file era, clean+masked) even
           // when a side is empty: runtime group filtering re-plans
@@ -926,12 +897,12 @@ class GraftTable(
             if (baseDeletes.isEmpty)
               Seq(MultiGenScans.GenSlice(delegate(cur), Map.empty))
             else {
-              val (masked, clean) = cur.partition(baseMasked)
+              val (masked, clean) = cur.partition(baseMask.isMasked)
               Seq(
                 MultiGenScans.GenSlice(delegate(clean), Map.empty),
                 MultiGenScans.GenSlice(new MorScans.Builder(
                   delegate(masked), fileColAllowed = false,
-                  () => baseMorBroadcast), Map.empty))
+                  () => baseMask.broadcast), Map.empty))
             }
           }
           reordered(new MultiGenScans.Builder(slices,
@@ -962,7 +933,7 @@ class GraftTable(
           // hidden-partition dirs prune FIRST (a dir-value disproof
           // costs no footer read); footer stats + blooms refine within
           // the surviving dirs — same order as deleteWhere. Era-aware:
-          // each file prunes under the spec that wrote its dirs (r18).
+          // each file prunes under the spec that wrote its dirs.
           val dirKept = eraPrune(files, v1).toSet
           // commit-time stats cache: O(commits) sidecar reads instead of
           // O(files) footer opens on the driver (live-footer fallback
@@ -981,7 +952,7 @@ class GraftTable(
       // write path — translatable DELETEs on partitioned tables have
       // already been converted to metadata deleteWhere by this point.
       // Identity-partitioned tables route rows to hive-layout dirs in
-      // the V2 writer; HIDDEN transforms (r17, VERDICT r16 #1) derive
+      // the V2 writer; HIDDEN transforms derive
       // their dir value per row inside BatchWrites through the same
       // catalyst expressions the V1 path evaluates — MERGE INTO /
       // UPDATE / subquery DELETE are first-class on days/bucket/
@@ -989,13 +960,6 @@ class GraftTable(
       // to another partition dir.
       val staging = tableDir.resolve(s"_staging_${UUID.randomUUID().toString.take(8)}")
       Files.createDirectories(staging)
-      def dropStaging(): Unit =
-        if (Files.exists(staging)) {
-          scala.util.Using.resource(Files.walk(staging)) { st =>
-            st.sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(Files.deleteIfExists(_))
-          }
-        }
       new WriteBuilder {
         override def build(): Write =
           org.apache.spark.sql.graftaccess.BatchWrites.parquetWrite(
@@ -1007,8 +971,8 @@ class GraftTable(
               overwrite = true, replacedBase = Some(replaced),
               only = Some(paths.map(p => java.nio.file.Paths.get(p)).toSet),
               knownDeletes = Some(baseDeletes))
-            finally dropStaging(),
-            onAbort = _ => dropStaging(),
+            finally dropRecursively(staging),
+            onAbort = _ => dropRecursively(staging),
             partitionSpec = partSpec,
             partitionZone = effectiveZone,
             orderCols = writeOrderCols)
@@ -1029,7 +993,7 @@ class GraftTable(
     def readGroup(files: Seq[String], schema: StructType,
         rename: Map[String, String]): DataFrame = {
       val r0 = spark.read.option("basePath", dataDir.toString).schema(schema)
-      // pinned zone governs TIMESTAMP identity dir-value parsing (r18)
+      // pinned zone governs TIMESTAMP identity dir-value parsing
       effectiveZone.fold(r0)(z => r0.option("timeZone", z))
         .parquet(files.map(f => tableDir.resolve(f).toString): _*)
         .select(declaredSchema.fields.toSeq
@@ -1050,7 +1014,7 @@ class GraftTable(
             readGroup(fs, sg, rename)
           }.reduce(_ unionByName _)
     }
-    // SPEC ERAS (r18): one basePath read per era — a mixed-era file set
+    // SPEC ERAS: one basePath read per era — a mixed-era file set
     // has mixed dir depths, which partition inference rejects outright
     eraFileGroups(relFiles).map(g => readOneEra(g._2))
       .reduce(_ unionByName _)
@@ -1083,7 +1047,7 @@ class GraftTable(
       FieldIds.nonIdentityFiles(tableDir, m, baseData)).getOrElse(Set.empty)
     // hidden-partition transforms prune FIRST (a dir-value disproof
     // needs no footer read at all); footer stats and bloom sidecars
-    // refine within the surviving dirs. Era-aware (r18): each file
+    // refine within the surviving dirs. Era-aware: each file
     // prunes under the spec that wrote its dirs.
     val dirPruned = eraPrune(baseData, filters.toSeq).toSet
     // commit-time stats cache (live-footer fallback per uncached file)
@@ -1146,24 +1110,6 @@ object GraftTable {
   /** Table property declaring the write sort order (comma-separated
     * schema columns) — see `writeOrderCols`. */
   val OrderedByKey = "graft.write.ordered-by"
-
-  /** Fingerprint of a table's schema-defining metadata (`_graft_schema
-    * .json` + `_graft_fields.tsv`): captured at handle build, re-read at
-    * commit under the table lock — any difference means a concurrent
-    * ALTER landed mid-write and the commit must abort (retry semantics)
-    * rather than classify old-schema files into the new generation.
-    * Table PROPERTIES are deliberately excluded: a property tweak never
-    * changes how committed files resolve. */
-  private[catalog] def schemaEpochOf(tableDir: Path): String = {
-    def part(p: Path): String =
-      if (Files.exists(p)) Files.readString(p) else ""
-    part(tableDir.resolve("_graft_schema.json")) + "\u0000" +
-      part(tableDir.resolve("_graft_fields.tsv")) + "\u0000" +
-      // partition-spec eras (r18): a write laid out under the old spec
-      // committing after an ADD/DROP PARTITION FIELD would first-commit
-      // into the NEW era and be pruned under the wrong spec - abort it
-      part(tableDir.resolve("_graft_partspec.tsv"))
-  }
 }
 
 /** DSv2 `sources.Filter` → `Column` translation for copy-on-write DELETE. */

@@ -106,24 +106,22 @@ object Maintenance {
       keyCols: Seq[String]): (Int, Int) = {
     import org.apache.spark.sql.functions.{col, count, lit, max, min, sum, when}
     import org.apache.spark.sql.sources.{Filter, GreaterThanOrEqual, LessThanOrEqual}
-    import org.apache.spark.sql.types.{DataType, StructType}
     require(keyCols.nonEmpty, "upsert needs at least one key column")
     val dir = tableDir(spark, ident)
     val base = Snapshots.latest(dir).getOrElse(
       throw new IllegalArgumentException(s"no snapshots for $ident"))
-    val schema = DataType.fromJson(
-      Files.readString(dir.resolve("_graft_schema.json"))).asInstanceOf[StructType]
+    val table = TableMeta.load(ident, dir, None)
+    val schema = table.schema()
     require(keyCols.forall(schema.fieldNames.contains),
       s"key columns ${keyCols.mkString(",")} must exist in ${ident}")
     // Align source TYPES to the declared schema, not just names: a
     // wide-typed source (e.g. LongType for an INT column) would
     // otherwise be written VERBATIM — committing INT64 parquet files
-    // under an int-declared column that every later read fails on
-    // (found by RowLevelModelSpec, r17). Loss-free up-casts (canUpCast)
-    // apply silently, like SQL INSERT's store assignment; anything
-    // else rejects loudly.
+    // under an int-declared column that every later read fails on.
+    // Loss-free up-casts (canUpCast) apply silently, like SQL INSERT's
+    // store assignment; anything else rejects loudly.
     // source fields resolve with the SESSION resolver (case-insensitive
-    // by default — the pre-r17 col(name) select honored that too)
+    // by default)
     val resolve = org.apache.spark.sql.graftaccess.Internals.resolver(spark)
     val src = source.select(schema.fields.map { f =>
       val in = source.schema.fields.find(i => resolve(i.name, f.name))
@@ -167,9 +165,8 @@ object Maintenance {
     // them would be wrong), and upsert's survivor read is a raw
     // declared-schema parquet read — a pre-rename file would silently
     // serve NULLs and the rewrite would persist them. compact() is the
-    // migration path. (ADVICE r15: this was previously spelled as an
-    // always-equivalent opaque∩touched check.)
-    val opaque = FieldIds.read(dir).map(m =>
+    // migration path.
+    val opaque = table.meta.fieldMeta.map(m =>
       FieldIds.nonIdentityFiles(dir, m, base.dataFiles)).getOrElse(Set.empty)
     if (opaque.nonEmpty)
       throw new UnsupportedOperationException(
@@ -185,12 +182,12 @@ object Maintenance {
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
       else {
-        // one basePath read per spec era (r18): mixed-era file sets
-        // have mixed dir depths, which partition inference rejects;
-        // the pinned zone governs TIMESTAMP identity dir-value parsing
-        val zoneOpt = readProps(dir).get(PartitionTransforms.ZoneKey)
-        val raw = SpecEras.fileGroups(dir, touched, Seq.empty)
-          .map { case (_, fs) =>
+        // one basePath read per spec era: mixed-era file sets have
+        // mixed dir depths, which partition inference rejects; the
+        // pinned zone governs TIMESTAMP identity dir-value parsing
+        val zoneOpt = table.meta.props.get(PartitionTransforms.ZoneKey)
+        val raw = SpecEras.fileGroups(dir, touched, table.meta.eras)
+          .map { fs =>
             val r0 = spark.read
               .option("basePath", dir.resolve("data").toString)
               .schema(schema)
@@ -198,10 +195,10 @@ object Maintenance {
               .parquet(fs.map(f => dir.resolve(f).toString): _*)
               // select the DECLARED columns per era frame: partition
               // inference appends each era's hidden dir columns
-              // (k_bucket, v_trunc, ...) and the frames would disagree
-              // (soak seed 101, r18). `_metadata` rides along — the
-              // eq-delete mask joins on its file_path, and the pseudo-
-              // column only resolves on the direct file relation.
+              // (k_bucket, v_trunc, ...) and the frames would disagree.
+              // `_metadata` rides along — the eq-delete mask joins on
+              // its file_path, and the pseudo-column only resolves on
+              // the direct file relation.
               .select(schema.fieldNames.map(col).toSeq :+
                 col("_metadata"): _*)
           }.reduce(_ unionByName _)
@@ -213,16 +210,12 @@ object Maintenance {
           .join(src.select(keyCols.map(col).toSeq: _*), keyCols, "left_anti")
       }
 
-    val props = readProps(dir)
-    val parts = SpecEras.currentSpecStrings(dir, props)
-    val table = new GraftTable(ident, dir, schema, parts,
-      props - "graft.partition.columns", pinned = None)
     table.replaceFiles(survivors.unionByName(src), touched, base.deleteFiles)
     (touched.length, base.dataFiles.length)
   }
 
   /** DELETE BY KEY via an EQUALITY-delete sidecar ([[EqualityDeletes]] —
-    * Iceberg v2's second delete-file type; VERDICT r15 #2): commit the
+    * Iceberg v2's second delete-file type): commit the
     * distinct rows of `keys` (columns = the equality fields, a subset
     * of the table schema) as one `deletes/eq_<uuid>/` sidecar. O(keys)
     * metadata — no data file read, no positions computed, no rewrite;
@@ -241,30 +234,29 @@ object Maintenance {
   def deleteByKey(spark: SparkSession, ident: String,
       keys: DataFrame): Long = {
     import org.apache.spark.sql.functions.{col, count, lit, sum, when}
-    import org.apache.spark.sql.types.{DataType, StructType}
     val dir = tableDir(spark, ident)
     val base = Snapshots.latest(dir).getOrElse(
       throw new IllegalArgumentException(s"no snapshots for $ident"))
-    val schema = DataType.fromJson(
-      Files.readString(dir.resolve("_graft_schema.json"))).asInstanceOf[StructType]
+    val table = TableMeta.load(ident, dir, None)
+    val schema = table.schema()
     val keyCols = keys.columns.toSeq
     require(keyCols.nonEmpty, "deleteByKey needs at least one key column")
     // IDENTITY partition key columns are NOT physically stored in data
     // files (partitionBy drops them to dir names): the scan-side mask
     // routes them through readPartitionSchema, where the reader serves
-    // the DIR value (MorScans, r17 — a data-scratch read would serve
-    // NULL and silently miss). ZONED timestamp partition columns are
-    // fine once the table pins a zone (r18 — CREATE pins it, the first
-    // write backfills legacy tables): dir values render AND parse under
-    // the pinned zone, so the mask is session-independent. Only a
+    // the DIR value (MorScans — a data-scratch read would serve NULL
+    // and silently miss). ZONED timestamp partition columns are fine
+    // once the table pins a zone (CREATE pins it, the first write
+    // backfills legacy tables): dir values render AND parse under the
+    // pinned zone, so the mask is session-independent. Only a
     // never-written legacy table without the pin still rejects.
-    val identityParts = SpecEras.currentSpecStrings(dir, readProps(dir))
+    val identityParts = table.meta.partitionCols
       .map(PartitionTransforms.parse)
       .collect { case PartitionTransforms.Identity(c) => c }.toSet
     keyCols.foreach { c =>
       if (identityParts.contains(c) &&
           schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.TimestampType] &&
-          !readProps(dir).contains(PartitionTransforms.ZoneKey))
+          !table.meta.props.contains(PartitionTransforms.ZoneKey))
         throw new UnsupportedOperationException(
           s"deleteByKey: $c is a TIMESTAMP identity partition column of " +
             s"$ident and the table has no pinned partition zone " +
@@ -284,7 +276,7 @@ object Maintenance {
           s"declares ${f.dataType.simpleString}; cast the keys first " +
           "(values are compared exactly against read rows)")
     }
-    val opaque = FieldIds.read(dir).map(m =>
+    val opaque = table.meta.fieldMeta.map(m =>
       FieldIds.nonIdentityFiles(dir, m, base.dataFiles)).getOrElse(Set.empty)
     if (opaque.nonEmpty)
       throw new UnsupportedOperationException(
@@ -301,17 +293,10 @@ object Maintenance {
       keyCols.foreach(k => require(stats.getAs[Long](s"__nulls_$k") == 0L,
         s"deleteByKey: null key values in $k (null never matches a row; " +
           "delete nulls with a predicate DELETE instead)"))
-      val props = readProps(dir)
-      val parts = SpecEras.currentSpecStrings(dir, props)
-      val table = new GraftTable(ident, dir, schema, parts,
-        props - "graft.partition.columns", pinned = None)
       table.commitEqualityDeleteSidecar(distinctKeys, base.dataFiles)
       n
     } finally distinctKeys.unpersist()
   }
-
-  private def readProps(dir: Path): Map[String, String] =
-    AlterOps.readProps(dir) // one shared properties reader (r16 review)
 
   /** Shared rewrite plumbing: pin ONE snapshot for both the read and the
     * surgical commit — a writeTo().overwrite() would blanket-replace and
@@ -321,24 +306,10 @@ object Maintenance {
   private def rewriteClustered(spark: SparkSession, ident: String)(
       layout: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
       : (Int, Int) = {
-    import org.apache.spark.sql.types.{DataType, StructType}
     val dir = tableDir(spark, ident)
     val base = Snapshots.latest(dir).getOrElse(
       throw new IllegalArgumentException(s"no snapshots for $ident"))
     if (base.files.isEmpty) return (0, 0)
-    val schema = DataType.fromJson(
-      Files.readString(dir.resolve("_graft_schema.json"))).asInstanceOf[StructType]
-    val props = {
-      val f = dir.resolve("_graft_props.properties")
-      if (!Files.exists(f)) Map.empty[String, String]
-      else {
-        val p = new java.util.Properties()
-        val in = Files.newInputStream(f)
-        try p.load(in) finally in.close()
-        p.asScala.toMap
-      }
-    }
-    val parts = SpecEras.currentSpecStrings(dir, props)
     // Read EXACTLY the base snapshot through the table's OWN scan: the
     // generation-aware column mapping serves pre-rename files under
     // current names, and merge-on-read sidecars mask deleted rows — so
@@ -354,23 +325,22 @@ object Maintenance {
     // only escape). Lifted on THIS handle only (morCapOverride) — never
     // by mutating session conf, which would race concurrent compacts
     // and disable the guard for unrelated queries.
-    val table = new GraftTable(ident, dir, schema, parts,
-      props - "graft.partition.columns", pinned = Some(base),
-      fieldMeta = FieldIds.read(dir),
+    val table = TableMeta.load(ident, dir, Some(base),
       morCapOverride = Some(Long.MaxValue))
+    val schema = table.schema()
     val pinned = org.apache.spark.sql.graftaccess.Internals
       .tableDf(spark, table)
       .select(schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
     table.replaceFiles(layout(pinned), base.files, base.deleteFiles)
-    // re-derive bloom sidecars for the rewritten files (r18): the
+    // re-derive bloom sidecars for the rewritten files: the
     // rewrite produced NEW file names, so every recorded bloom column
     // is unindexed until rebuilt — and a type promotion deliberately
     // dropped its column's sidecars, making this the self-healing path
     // for point-lookup pruning. One extra column-pruned pass over the
     // fresh layout; only columns the user indexed before pay it.
-    val identityParts = parts.map(PartitionTransforms.parse)
+    val identityParts = table.meta.partitionCols.map(PartitionTransforms.parse)
       .collect { case PartitionTransforms.Identity(c) => c }.toSet
-    val bloomCols = BloomSidecars.recordedColumns(props)
+    val bloomCols = BloomSidecars.recordedColumns(table.meta.props)
       .filter(c => schema.fieldNames.contains(c) && !identityParts(c))
     if (bloomCols.nonEmpty) addBlooms(spark, ident, bloomCols)
     val after = Snapshots.latest(dir).map(_.files.length).getOrElse(0)
@@ -382,27 +352,16 @@ object Maintenance {
     * real concurrent statements). */
   private[graft] object CompactTestHook {
     def replaceWithStaleBase(spark: SparkSession, ident: String,
-        staleBase: Seq[String]): Unit = {
-      import org.apache.spark.sql.types.{DataType, StructType}
-      val dir = tableDir(spark, ident)
-      val schema = DataType.fromJson(
-        Files.readString(dir.resolve("_graft_schema.json"))).asInstanceOf[StructType]
-      val table = new GraftTable(ident, dir, schema, Seq.empty, Map.empty, None)
-      table.replaceFiles(spark.table(ident), staleBase)
-    }
+        staleBase: Seq[String]): Unit =
+      handleNow(spark, ident).replaceFiles(spark.table(ident), staleBase)
 
     /** A table handle built NOW (capturing the current schema epoch) for
-      * later use — the ALTER-vs-in-flight-writer race (ADVICE r15),
-      * impossible to time with real concurrent statements: build the
-      * handle, run an ALTER, then commit through the stale handle and
-      * assert the loud abort. */
-    def handleNow(spark: SparkSession, ident: String): GraftTable = {
-      import org.apache.spark.sql.types.{DataType, StructType}
-      val dir = tableDir(spark, ident)
-      val schema = DataType.fromJson(
-        Files.readString(dir.resolve("_graft_schema.json"))).asInstanceOf[StructType]
-      new GraftTable(ident, dir, schema, Seq.empty, Map.empty, None)
-    }
+      * later use — the ALTER-vs-in-flight-writer race, impossible to
+      * time with real concurrent statements: build the handle, run an
+      * ALTER, then commit through the stale handle and assert the loud
+      * abort. */
+    def handleNow(spark: SparkSession, ident: String): GraftTable =
+      TableMeta.load(ident, tableDir(spark, ident), None)
 
     /** Commit a full-table rewrite through a pre-built handle (see
       * [[handleNow]]). */
@@ -415,14 +374,9 @@ object Maintenance {
       * real concurrent statements). `baseFiles`/`baseDeletes` are the
       * rewrite's (stale) view of the snapshot. */
     def replaceWithStaleDeletes(spark: SparkSession, ident: String,
-        baseFiles: Seq[String], baseDeletes: Seq[String]): Unit = {
-      import org.apache.spark.sql.types.{DataType, StructType}
-      val dir = tableDir(spark, ident)
-      val schema = DataType.fromJson(
-        Files.readString(dir.resolve("_graft_schema.json"))).asInstanceOf[StructType]
-      val table = new GraftTable(ident, dir, schema, Seq.empty, Map.empty, None)
-      table.replaceFiles(spark.table(ident), baseFiles, baseDeletes)
-    }
+        baseFiles: Seq[String], baseDeletes: Seq[String]): Unit =
+      handleNow(spark, ident)
+        .replaceFiles(spark.table(ident), baseFiles, baseDeletes)
   }
 
   /** Rewrite the current snapshot's POSITION-DELETE sidecars without
@@ -438,7 +392,6 @@ object Maintenance {
   def rewritePositionDeletes(spark: SparkSession, ident: String,
       targetFiles: Int = 1): (Int, Int, Long, Long) = {
     import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.{DataType, StructType}
     val dir = tableDir(spark, ident)
     val base = Snapshots.latest(dir).getOrElse(
       throw new IllegalArgumentException(s"no snapshots for $ident"))
@@ -466,14 +419,8 @@ object Maintenance {
       val present = base.dataFiles.toSet
       val kept = pos.filter(col("file").isInCollection(present))
       val after = kept.count()
-      val schema = DataType.fromJson(
-        Files.readString(dir.resolve("_graft_schema.json")))
-        .asInstanceOf[StructType]
-      val props = readProps(dir)
-      val parts = SpecEras.currentSpecStrings(dir, props)
-      val table = new GraftTable(ident, dir, schema, parts,
-        props - "graft.partition.columns", pinned = None)
-      table.replaceDeleteSidecars(kept, posFiles ++ inertEq, targetFiles)
+      TableMeta.load(ident, dir, None)
+        .replaceDeleteSidecars(kept, posFiles ++ inertEq, targetFiles)
       val now = Snapshots.latest(dir).map(_.deleteFiles.length).getOrElse(0)
       (base.deleteFiles.length, now, before, after)
     } finally pos.unpersist()
@@ -495,10 +442,9 @@ object Maintenance {
     val dir = tableDir(spark, ident)
     // schema epoch captured FIRST — before the declared-schema read and
     // the file listing — so an ALTER landing anywhere during this run
-    // flips the under-lock re-check below (capturing it later left a
-    // TOCTOU window where a pre-alter reader passed a post-alter epoch
-    // check; r17 second review)
-    val epoch0 = GraftTable.schemaEpochOf(dir)
+    // flips the under-lock re-check below (capturing it later would let
+    // a pre-alter reader pass a post-alter epoch check)
+    val epoch0 = TableMeta.epochOf(dir)
     // pre-snapshot (v1-era) tables have data but no snapshot — the
     // SAME whole-data-dir fallback GraftTable's scan uses, rather than
     // silently writing zero sidecars for a table that has files.
@@ -516,18 +462,18 @@ object Maintenance {
     val aggs = cols.map(c =>
       graft.operators.BloomJoin.bloomAgg(col(c), expectedItems)
         .as(s"__bf_$c"))
-    // EXPLICIT declared types for the requested columns (r17): after a
+    // EXPLICIT declared types for the requested columns: after a
     // type promotion the file set mixes narrow and wide physical types
     // — inference would pick one file's type; with the declared type
     // Spark natively widens the narrow files, so every bloom hashes
     // WIDE values, matching the wide probe values scans use. Partition
     // columns have no bytes in data files — an explicit-schema read
     // would silently hash all-NULL blooms; reject instead.
-    val declared: Option[org.apache.spark.sql.types.StructType] =
-      AlterOps.readDeclaredSchema(dir)
-    declared.foreach { sch =>
-      val identityParts = SpecEras.currentSpecStrings(dir, readProps(dir))
-        .map(PartitionTransforms.parse)
+    val declared: Option[TableMeta] =
+      if (TableMeta.exists(dir)) Some(TableMeta.read(dir)) else None
+    declared.foreach { m =>
+      val sch = m.schema
+      val identityParts = m.partitionCols.map(PartitionTransforms.parse)
         .collect { case PartitionTransforms.Identity(c) => c }.toSet
       cols.foreach { c =>
         require(!identityParts.contains(c),
@@ -539,14 +485,14 @@ object Maintenance {
       }
     }
     val reader = declared match {
-      case Some(sch) => spark.read.schema(org.apache.spark.sql.types
-        .StructType(sch.fields.filter(f => cols.contains(f.name))))
+      case Some(m) => spark.read.schema(org.apache.spark.sql.types
+        .StructType(m.schema.fields.filter(f => cols.contains(f.name))))
       case None => spark.read
     }
     // a concurrent ALTER COLUMN TYPE drops this column's blooms
     // (narrow-value hashes would false-negative wide probes) — sidecars
     // built from the pre-promotion read must not be written after it,
-    // or the stale hashes come back (r17 review). The write loop below
+    // or the stale hashes come back. The write loop below
     // re-validates epoch0 under the same per-table lock ALTER holds.
     val rows = reader.parquet(abs: _*)
       .groupBy(input_file_name().as("__f"))
@@ -555,24 +501,24 @@ object Maintenance {
     var written = 0
     var unmatched = 0
     Snapshots.withRefsLock(dir) {
-      if (GraftTable.schemaEpochOf(dir) != epoch0)
+      if (TableMeta.epochOf(dir) != epoch0)
         throw new IllegalStateException(
           s"addBlooms: a concurrent ALTER changed $ident's schema while " +
             "the bloom pass ran; re-run addBlooms (no sidecar written)")
-      // record the indexed columns (r18): compact() re-derives sidecars
+      // record the indexed columns: compact() re-derives sidecars
       // for its rewritten files from this property, so a promotion's
       // sidecar drop heals at the next compact without a manual re-run
-      val props0 = readProps(dir)
+      val props0 = TableMeta.readProps(dir)
       val recorded =
         (BloomSidecars.recordedColumns(props0) ++ cols).distinct
-      AlterOps.writeProps(dir,
+      TableMeta.writeProps(dir,
         props0 + (BloomSidecars.ColumnsKey -> recorded.mkString(",")))
     rows.foreach { r =>
       // input_file_name() is a URI (percent-encoded): a data-file name
       // containing URL-encodable characters (spaces, '%', unicode)
       // would not equal its snapshot entry's raw name — decode the URI
       // path before the byName lookup, or those files silently get no
-      // sidecar (ADVICE r11). Fall back to the raw string when the
+      // sidecar. Fall back to the raw string when the
       // value isn't URI-parseable.
       val raw = r.getString(0)
       val decoded =
@@ -672,7 +618,7 @@ object Maintenance {
             s"file(s) (e.g. ${unsafe.head}) into the wrong schema " +
             "generation; compact() the table first to migrate them")
       }
-      // SPEC-ERA SAFETY (r18): partition-spec eras resolve through the
+      // SPEC-ERA SAFETY: partition-spec eras resolve through the
       // same first-seen versions as field-id generations — dropping the
       // snapshot a live file first appeared in can raise its first-seen
       // across an era boundary, and the file's dirs would then prune
@@ -696,7 +642,7 @@ object Maintenance {
             s"file(s) (e.g. ${unsafe.head}) into the wrong partition-" +
             "spec era; compact() the table first to migrate them")
       }
-      // EQUALITY-DELETE SAFETY (round 16): sidecar applicability is the
+      // EQUALITY-DELETE SAFETY: sidecar applicability is the
       // ORDER firstSeen(dataFile) < firstSeen(eqFile), and both sides
       // are computed from the surviving log — dropping the snapshot a
       // file first appeared in RAISES its first-seen version and can
@@ -775,7 +721,7 @@ object Maintenance {
     * staged commit (Iceberg's remove_orphan_files). Orphans come from
     * dropped branches, failed write attempts whose task files moved but
     * whose commit lost the CAS, and crashed drivers. Commits now hold
-    * the same per-table refs lock (ADVICE r15), so a LIVE writer can no
+    * the same per-table refs lock, so a LIVE writer can no
     * longer be observed between its data-file move and its snapshot
     * publish — but `olderThanMillis` (Iceberg's older_than) remains
     * load-bearing: a writer that CRASHED mid-commit released the lock
@@ -813,8 +759,8 @@ object Maintenance {
     // unlink outside the lock (thousands of slow-storage deletes must
     // not stall commits), plus each orphan's bloom sidecars and any
     // stale commit/ref tmp files a crashed writer stranded in the
-    // metadata dirs (round-14 crash-kill gate: a SIGKILL mid-commit
-    // leaves one .snap.*.tmp that nothing else reclaims)
+    // metadata dirs (a SIGKILL mid-commit leaves one .snap.*.tmp that
+    // nothing else reclaims)
     dead.foreach(Files.deleteIfExists(_))
     deleteBloomSidecars(dir, dead.map(_.getFileName.toString))
     Snapshots.staleTmpFiles(dir, cutoff).foreach(Files.deleteIfExists(_))

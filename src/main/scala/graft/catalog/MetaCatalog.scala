@@ -6,9 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog._
-import org.apache.spark.sql.connector.expressions.{IdentityTransform, Transform}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** Catalog-managed snapshot tables behind a Spark DSv2 `TableCatalog with
@@ -20,14 +20,13 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Layout under the warehouse root:
   * {{{
-  *   <warehouse>/<ns>/<table>/_graft_schema.json        table schema (Spark DDL json)
-  *   <warehouse>/<ns>/<table>/_graft_props.properties   table properties + partition spec
+  *   <warehouse>/<ns>/<table>/_graft_*                  table metadata ([[TableMeta]])
   *   <warehouse>/<ns>/<table>/_graft_snapshots/v*.snap  commit log (Snapshots)
   *   <warehouse>/<ns>/<table>/data/...                  parquet data files
   * }}}
   *
-  * v2 (this round) adds the Iceberg-shaped table semantics the reference
-  * gets from `datafusion_iceberg`: snapshot-isolated commits (INSERT INTO /
+  * Tables carry the Iceberg-shaped semantics the reference gets from
+  * `datafusion_iceberg`: snapshot-isolated commits (INSERT INTO /
   * INSERT OVERWRITE append one immutable snapshot each), `VERSION AS OF` /
   * `TIMESTAMP AS OF` time travel, copy-on-write `DELETE FROM`, ALTER TABLE
   * schema evolution (add/drop column — old files resolve by name, added
@@ -76,7 +75,7 @@ class MetaCatalog extends TableCatalog with SupportsNamespaces
     if (!Files.isDirectory(p))
       throw new NoSuchNamespaceException(catalogName +: namespace)
     listDir(p)(_.filter(d =>
-        Files.isDirectory(d) && !Files.exists(d.resolve("_graft_schema.json")))
+        Files.isDirectory(d) && !TableMeta.exists(d))
       .map(d => namespace :+ d.getFileName.toString).toArray)
   }
 
@@ -105,65 +104,28 @@ class MetaCatalog extends TableCatalog with SupportsNamespaces
     true
   }
 
-  // --- table metadata I/O ----------------------------------------------
+  // --- tables -----------------------------------------------------------
 
   private def tablePath(ident: Identifier): Path =
     nsPath(ident.namespace()).resolve(ident.name())
-
-  private def schemaFile(ident: Identifier): Path =
-    tablePath(ident).resolve("_graft_schema.json")
-
-  private def propsFile(ident: Identifier): Path =
-    tablePath(ident).resolve("_graft_props.properties")
-
-  private val PartitionKey = "graft.partition.columns"
-
-  private def readSchema(ident: Identifier): StructType =
-    DataType.fromJson(Files.readString(schemaFile(ident))).asInstanceOf[StructType]
-
-  private def readProps(ident: Identifier): Map[String, String] = {
-    val f = propsFile(ident)
-    if (!Files.exists(f)) return Map.empty
-    val p = new java.util.Properties()
-    val in = Files.newInputStream(f)
-    try p.load(in) finally in.close()
-    p.asScala.toMap
-  }
-
-  private def writeProps(ident: Identifier, props: Map[String, String]): Unit = {
-    val p = new java.util.Properties()
-    props.foreach { case (k, v) => p.setProperty(k, v) }
-    val out = Files.newOutputStream(propsFile(ident))
-    try p.store(out, null) finally out.close()
-  }
 
   private def fullName(ident: Identifier): String =
     s"$catalogName.${ident.namespace().mkString(".")}.${ident.name()}"
 
   private def buildTable(ident: Identifier, pinned: Option[Snapshots.Snap],
-      branch: Option[String] = None): GraftTable = {
-    val props = readProps(ident)
-    // era-log-aware spec load (r18): the latest era is authoritative
-    // once ADD/DROP PARTITION FIELD ever ran; the property is a synced
-    // legacy mirror
-    val parts = SpecEras.currentSpecStrings(tablePath(ident), props)
-    new GraftTable(fullName(ident), tablePath(ident), readSchema(ident),
-      parts, props - PartitionKey, pinned, branch,
-      FieldIds.read(tablePath(ident)))
-  }
-
-  // --- tables -----------------------------------------------------------
+      branch: Option[String] = None): GraftTable =
+    TableMeta.load(fullName(ident), tablePath(ident), pinned, branch)
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val p = nsPath(namespace)
     if (!Files.isDirectory(p))
       throw new NoSuchNamespaceException(catalogName +: namespace)
-    listDir(p)(_.filter(d => Files.exists(d.resolve("_graft_schema.json")))
+    listDir(p)(_.filter(TableMeta.exists)
       .map(d => Identifier.of(namespace, d.getFileName.toString)).toArray)
   }
 
   override def tableExists(ident: Identifier): Boolean =
-    Files.exists(schemaFile(ident))
+    TableMeta.exists(tablePath(ident))
 
   override def loadTable(ident: Identifier): Table = {
     if (!tableExists(ident)) {
@@ -251,37 +213,14 @@ class MetaCatalog extends TableCatalog with SupportsNamespaces
       partitions: Array[Transform], properties: java.util.Map[String, String]): Table = {
     if (tableExists(ident))
       throw new TableAlreadyExistsException((ident.namespace() :+ ident.name()).toSeq)
-    // identity columns plus HIDDEN partition transforms (round 16 —
-    // Iceberg spec §4): days(ts), bucket(n, col), truncate(w, col).
-    val partSpec: Seq[PartitionTransforms.T] =
-      PartitionTransforms.fromSparkTransforms(partitions.toSeq)
     val schema = new StructType(columns.map(c =>
       org.apache.spark.sql.types.StructField(c.name(), c.dataType(), c.nullable())))
-    schema.fieldNames.foreach(MetaCatalog.requireLegalColumnName)
-    partSpec.foreach(PartitionTransforms.validate(_, schema))
-    Files.createDirectories(tablePath(ident).resolve("data"))
-    Files.writeString(schemaFile(ident), schema.json)
-    FieldIds.write(tablePath(ident), FieldIds.synthesize(schema))
-    // pin the creating session's zone for calendar-transform boundaries
-    // (ADVICE r16): derive and prune must share ONE zone across sessions
-    val needsZone = PartitionTransforms.needsPinnedZone(partSpec, schema)
-    val baseProps = properties.asScala.toMap ++
-      (if (partSpec.nonEmpty)
-        Map(PartitionKey -> PartitionTransforms.formatSpec(partSpec))
-      else Map.empty) ++
-      (if (needsZone)
-        Map(PartitionTransforms.ZoneKey -> org.apache.spark.sql.internal
-          .SQLConf.get.sessionLocalTimeZone)
-      else Map.empty) ++
-      // NEW bucket tables record the v2 hash-width-stable derivation
-      // (r18): hash(cast(k AS BIGINT)) for integral keys, which makes a
-      // later int→bigint promotion of the source dir-stable. Existing
-      // tables keep v1 (their dirs hold v1 hashes) and the ALTER guard.
-      (if (partSpec.exists(_.isInstanceOf[PartitionTransforms.Bucket]))
-        Map(PartitionTransforms.BucketDerivationKey -> "v2")
-      else Map.empty)
-    if (baseProps.nonEmpty) writeProps(ident, baseProps)
-    Snapshots.commit(tablePath(ident), Seq.empty) // v1: empty table
+    // identity columns plus hidden transforms: days(ts), bucket(n, col),
+    // truncate(w, col), ...
+    TableMeta.create(tablePath(ident), schema,
+      PartitionTransforms.fromSparkTransforms(partitions.toSeq),
+      properties.asScala.toMap,
+      org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
     buildTable(ident, pinned = None)
   }
 
@@ -291,10 +230,9 @@ class MetaCatalog extends TableCatalog with SupportsNamespaces
     * a later re-ADD of the same name (fresh id) never resurrects the
     * dropped column's bytes; RENAME COLUMN keeps the field id and maps
     * old files' physical name at read time — no data rewrite. Type
-    * changes stay rejected (existing parquet keeps the old physical
-    * type).
+    * changes are limited to the legal widenings ([[legalWidening]]).
     *
-    * Serialization (ADVICE r15): the whole metadata transaction —
+    * Serialization: the whole metadata transaction —
     * read-latest, field-id read-modify-write, schema write — runs under
     * the table's cross-process lock ([[Snapshots.withRefsLock]]), the
     * SAME lock every snapshot commit takes, so `activeFrom = latest+1`
@@ -304,10 +242,10 @@ class MetaCatalog extends TableCatalog with SupportsNamespaces
     * files), and two concurrent ALTERs can no longer lose one's
     * field-id allocation to a last-write-wins race. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
-    // existence check BEFORE the lock (ADVICE r16), re-checked inside
-    // for the drop-table race; withRefsLock itself REQUIRES the dir
-    // (r17 — it used to create it, which left a stray warehouse dir on
-    // this path), so a DROP landing between the check and the lock
+    // existence check BEFORE the lock, re-checked inside for the
+    // drop-table race; withRefsLock itself REQUIRES the dir (creating
+    // it would leave a stray warehouse dir on this path), so a DROP
+    // landing between the check and the lock
     // surfaces here as a missing dir → map it back to the proper
     // NoSuchTableException.
     if (!tableExists(ident))
@@ -315,8 +253,8 @@ class MetaCatalog extends TableCatalog with SupportsNamespaces
     try Snapshots.withRefsLock(tablePath(ident)) {
       alterTableLocked(ident, changes)
     } catch {
-      // ONLY the dedicated missing-dir failure maps to NoSuchTable
-      // (ADVICE r17): a legitimate ALTER rejection that happens to use
+      // ONLY the dedicated missing-dir failure maps to NoSuchTable: a
+      // legitimate ALTER rejection that happens to use
       // IllegalStateException (pending-eq-sidecar guard, branch guard)
       // racing a concurrent DROP must surface AS ITSELF, not be
       // reported as a missing table.
@@ -413,11 +351,6 @@ object MetaCatalog {
     }
   }
 
-  /** Reject column names in the reserved absent-marker namespace
-    * (ADVICE r15): a user column literally named `__graft_absent_<n>`
-    * could match an old-generation scan's request for a DROPPED field
-    * id and serve real bytes where NULL is required. Enforced at
-    * CREATE TABLE, ADD COLUMN and RENAME ... TO. */
   /** The Iceberg-legal type widenings (spec §4): int→long,
     * float→double, decimal precision growth at the same scale. The
     * no-op (same type) is legal too. */
@@ -435,6 +368,11 @@ object MetaCatalog {
     }
   }
 
+  /** Reject column names in the reserved absent-marker namespace: a
+    * user column literally named `__graft_absent_<n>` could match an
+    * old-generation scan's request for a DROPPED field id and serve real
+    * bytes where NULL is required. Enforced at CREATE TABLE (both
+    * catalogs, [[TableMeta.create]]), ADD COLUMN and RENAME ... TO. */
   private[catalog] def requireLegalColumnName(name: String): Unit =
     if (name.startsWith(FieldIds.AbsentPrefix))
       throw new IllegalArgumentException(

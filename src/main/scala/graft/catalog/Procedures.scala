@@ -264,11 +264,8 @@ object Procedures {
         val raw = splitKeyValues(s(in, 2))
         // parse values as the table's declared type for the column
         val dir = Maintenance.tableDir(active, table)
-        val schema = org.apache.spark.sql.types.DataType.fromJson(
-          java.nio.file.Files.readString(dir.resolve("_graft_schema.json")))
-          .asInstanceOf[StructType]
-        val dt = schema.fields.find(_.name == keyCol).map(_.dataType)
-          .getOrElse(throw new IllegalArgumentException(
+        val dt = TableMeta.readSchema(dir).fields.find(_.name == keyCol)
+          .map(_.dataType).getOrElse(throw new IllegalArgumentException(
             s"delete_by_key: no column $keyCol in $table"))
         import org.apache.spark.sql.functions.col
         import active.implicits._
@@ -365,10 +362,8 @@ object Procedures {
         require(sortCols.nonEmpty,
           "repartition_table: sort_cols must name at least one column " +
             "for the migrating rewrite")
-        val declared = org.apache.spark.sql.types.DataType.fromJson(
-            java.nio.file.Files.readString(
-              dir.resolve("_graft_schema.json")))
-          .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames
+        val meta = TableMeta.read(dir)
+        val declared = meta.schema.fieldNames
         sortCols.foreach(c => require(declared.contains(c),
           s"repartition_table: sort column '$c' is not in the schema"))
         require(in.getInt(3) >= 1,
@@ -378,11 +373,10 @@ object Procedures {
         // (a prior call sealed, then its compact failed transiently)
         // skips the seal and just finishes the migration; the same call
         // on a fully-migrated table stays a loud no-op rejection
-        val curSpec = SpecEras.currentSpecStrings(dir,
-          AlterOps.readProps(dir))
+        val curSpec = meta.partitionCols
         val stranded =
           fields.map(PartitionTransforms.parse).map(_.spec) == curSpec && {
-            val eras = SpecEras.read(dir).getOrElse(Seq.empty)
+            val eras = meta.eras.getOrElse(Seq.empty)
             eras.size > 1 && {
               val seen = FieldIds.firstSeen(dir)
               val latest = eras.last.activeFrom
@@ -415,7 +409,7 @@ object Procedures {
     * type); a DOUBLE-QUOTED token carries literal commas, with `""`
     * escaping a quote (CSV quoting) — without this, a string key
     * containing a comma would silently split into two WRONG keys and
-    * mask the wrong rows (ADVICE r16). A lone `"` inside an unquoted
+    * mask the wrong rows. A lone `"` inside an unquoted
     * token or an unterminated quote fails loudly. */
   private[catalog] def splitKeyValues(input: String): Seq[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
@@ -440,7 +434,7 @@ object Procedures {
       } else c match {
         case ',' => flush()
         // after a closing quote, only whitespace may precede the comma —
-        // silently appending junk would corrupt the key (review r17)
+        // silently appending junk would corrupt the key
         case w if closed && w.isWhitespace => ()
         case _ if closed => throw new IllegalArgumentException(
           s"delete_by_key: unexpected character '$c' after a closing " +

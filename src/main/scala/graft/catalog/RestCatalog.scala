@@ -172,25 +172,15 @@ class RestCatalog extends TableCatalog with SupportsNamespaces {
     get(s"/v1/namespaces/${nsPart(ident.namespace())}/tables/${ident.name()}")
       .isDefined
 
-  private def tableFromMeta(ident: Identifier, j: JsonNode): GraftTable = {
-    val meta = j.get("metadata")
-    val schema = DataType.fromJson(meta.get("schema-json").asText())
-      .asInstanceOf[StructType]
-    val parts = Option(meta.get("partition-cols")).toSeq
-      .flatMap(_.elements().asScala.map(_.asText()))
-    val props = Option(meta.get("properties")).map { p =>
-      p.properties().asScala.map(e => e.getKey -> e.getValue.asText()).toMap
-    }.getOrElse(Map.empty[String, String])
-    val dir = Paths.get(meta.get("location").asText())
-    new GraftTable(
+  /** The handle loads from the reported `location`, through the same
+    * loader as [[MetaCatalog]]: schema, spec, properties, field-id
+    * generations and spec eras all come from one read of the table's
+    * own metadata (a handle lacking the generations would read renamed
+    * columns as NULL). */
+  private def tableFromMeta(ident: Identifier, j: JsonNode): GraftTable =
+    TableMeta.load(
       s"$name0.${ident.namespace().mkString(".")}.${ident.name()}",
-      dir, schema, parts, props, None,
-      // field-id generations MUST ride along (round 16 — previously a
-      // table renamed via the owning catalog silently read the renamed
-      // column as NULL through REST: the handle lacked the generation
-      // metadata and took the single-generation fast path)
-      fieldMeta = FieldIds.read(dir))
-  }
+      Paths.get(j.get("metadata").get("location").asText()), None)
 
   override def loadTable(ident: Identifier): Table = {
     val j = get(
@@ -203,13 +193,11 @@ class RestCatalog extends TableCatalog with SupportsNamespaces {
   override def createTable(ident: Identifier, schema: StructType,
       partitions: Array[org.apache.spark.sql.connector.expressions.Transform],
       properties: java.util.Map[String, String]): Table = {
-    // transform partitioning over REST (r17, VERDICT r16 #6 — the last
-    // createTable parity gap): the same named-transform parse
-    // MetaCatalog.createTable does, validated client-side, shipped as
-    // per-transform spec strings the server parses back
+    // the same named-transform parse MetaCatalog.createTable does,
+    // shipped as per-transform spec strings; the server validates and
+    // creates through the same TableMeta.create
     val partSpec: Seq[PartitionTransforms.T] =
       PartitionTransforms.fromSparkTransforms(partitions.toSeq)
-    partSpec.foreach(PartitionTransforms.validate(_, schema))
     // pin the CLIENT session's zone for calendar-transform boundaries —
     // the writers live client-side, the server only stores metadata
     val needsZone = PartitionTransforms.needsPinnedZone(partSpec, schema)
@@ -235,16 +223,14 @@ class RestCatalog extends TableCatalog with SupportsNamespaces {
       s"/v1/namespaces/${nsPart(ident.namespace())}/tables/${ident.name()}",
       None).statusCode() == 200
 
-  /** Schema evolution over REST (round-16 stretch — RestCatalogSpec
-    * round-trips a rename created and read purely via REST): the REST
-    * catalog serves POINTERS and every scan and snapshot commit already
-    * runs client-side against the table LOCATION, so the ALTER metadata
-    * transaction does too — the same [[AlterOps]] transaction
+  /** Schema evolution over REST: the REST catalog serves POINTERS and
+    * every scan and snapshot commit already runs client-side against
+    * the table LOCATION, so the ALTER metadata transaction does too — the same [[AlterOps]] transaction
     * [[MetaCatalog]] runs, under the same per-table lock, with the
     * full guard set (field-id generations, promotion legality,
     * eq-sidecar/branch/partition-source rejections). The server reads
-    * `_graft_schema.json` fresh per request, so the next REST
-    * loadTable serves the evolved schema with no cache invalidation. */
+    * the table metadata fresh per request, so the next REST loadTable
+    * serves the evolved schema with no cache invalidation. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val j = get(
       s"/v1/namespaces/${nsPart(ident.namespace())}/tables/${ident.name()}")
@@ -284,8 +270,9 @@ object RestAuth {
 /** In-process REST catalog server over a MetaCatalog warehouse directory —
   * the test/offline stand-in for an Iceberg REST service. Serves the
   * endpoint surface [[RestCatalog]] consumes, read AND write; table
-  * metadata is the warehouse's own `_graft_schema.json` /
-  * `_graft_props.properties`, and the reported `location` lets the engine
+  * metadata is the warehouse's own ([[TableMeta]]), created through the
+  * same [[TableMeta.create]] as MetaCatalog's, and the reported
+  * `location` lets the engine
   * scan and commit data files directly (the server never sits on the data
   * path). When `requiredAuth` is set, every request must carry that exact
   * Authorization header or it is rejected with 401 before routing. */
@@ -297,8 +284,7 @@ final class RestCatalogServer(warehouse: Path, requestedPort: Int = 0,
 
   def port: Int = server.getAddress.getPort
 
-  private def isTable(p: Path): Boolean =
-    Files.exists(p.resolve("_graft_schema.json"))
+  private def isTable(p: Path): Boolean = TableMeta.exists(p)
 
   private def childDirs(p: Path): Seq[Path] =
     if (!Files.isDirectory(p)) Seq.empty
@@ -333,7 +319,10 @@ final class RestCatalogServer(warehouse: Path, requestedPort: Int = 0,
         val reqBody = new String(ex.getRequestBody.readAllBytes(), UTF_8)
         try route(ex.getRequestMethod, ex.getRequestURI.getPath,
           Option(ex.getRequestURI.getQuery), reqBody)
-        catch { case e: Throwable => (500, s"""{"error":"${e.getMessage}"}""") }
+        catch {
+          case e: IllegalArgumentException => (400, error(e))
+          case e: Throwable => (500, error(e))
+        }
       }
     val bytes = body.getBytes(UTF_8)
     ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -342,29 +331,16 @@ final class RestCatalogServer(warehouse: Path, requestedPort: Int = 0,
     try os.write(bytes) finally os.close()
   }
 
+  private def error(e: Throwable): String =
+    json(Map("error" -> String.valueOf(e.getMessage)).asJava)
+
   private def tableMetaResponse(dir: Path): String = {
-    val schemaJson = Files.readString(dir.resolve("_graft_schema.json"))
-    val propsFile = dir.resolve("_graft_props.properties")
-    val props = new java.util.Properties()
-    if (Files.exists(propsFile)) {
-      val in = Files.newInputStream(propsFile)
-      try props.load(in) finally in.close()
-    }
-    // transform specs carry commas inside parens (bucket(8,k)) — the
-    // shared splitter handles both the ';'-joined r16 format and the
-    // legacy comma-joined identity list. Era-log aware (r18): the
-    // latest era wins once ADD/DROP PARTITION FIELD ever ran.
-    val partCols = SpecEras.currentSpecStrings(dir,
-      Option(props.getProperty("graft.partition.columns"))
-        .map(v => Map("graft.partition.columns" -> v)).getOrElse(Map.empty))
-    props.remove("graft.partition.columns")
-    val propMap = props.stringPropertyNames().asScala
-      .map(k => k -> props.getProperty(k)).toMap
+    val m = TableMeta.read(dir)
     val meta = Map(
       "location" -> dir.toString,
-      "schema-json" -> schemaJson,
-      "partition-cols" -> partCols.toArray,
-      "properties" -> propMap.asJava)
+      "schema-json" -> m.schema.json,
+      "partition-cols" -> m.partitionCols.toArray,
+      "properties" -> m.props.asJava)
     s"""{"metadata-location":${json(dir.toString)},""" +
       s""""metadata":${json(meta.asJava)}}"""
   }
@@ -454,51 +430,18 @@ final class RestCatalogServer(warehouse: Path, requestedPort: Int = 0,
           val dir = nsDir.resolve(t)
           if (isTable(dir)) (409, """{"error":"table exists"}""")
           else {
-            // same on-disk layout MetaCatalog.createTable writes: schema
-            // json + props (+ partition spec) + v1 empty snapshot
             val schema = DataType.fromJson(req.get("schema-json").asText())
-              .asInstanceOf[org.apache.spark.sql.types.StructType] // validate
-            Files.createDirectories(dir.resolve("data"))
-            Files.writeString(dir.resolve("_graft_schema.json"),
-              req.get("schema-json").asText())
-            // field-id metadata at creation, same as MetaCatalog —
-            // renames on REST-created tables key generations
-            // identically (and since r16, ALTER runs over REST too)
-            FieldIds.write(dir, FieldIds.synthesize(schema))
-            val props = new java.util.Properties()
-            Option(req.get("properties")).foreach(_.properties().asScala
-              .foreach(e => props.setProperty(e.getKey, e.getValue.asText())))
-            val partCols = Option(req.get("partition-cols")).toSeq
+              .asInstanceOf[StructType]
+            val spec = Option(req.get("partition-cols")).toSeq
               .flatMap(_.elements().asScala.map(_.asText())).filter(_.nonEmpty)
-            if (partCols.nonEmpty) {
-              val spec = partCols.map(PartitionTransforms.parse)
-              // validate SERVER-side too: a raw HTTP client could send
-              // a transform over a wrong-typed column or a derived
-              // dir-name collision the Spark client never sees
-              spec.foreach(PartitionTransforms.validate(_, schema))
-              props.setProperty("graft.partition.columns",
-                PartitionTransforms.formatSpec(spec))
-              // ADVICE r17: a raw HTTP client (the Spark client always
-              // pins) creating a calendar transform over a zoned
-              // TIMESTAMP without a pinned zone would silently fall
-              // back to per-session zones — the cross-session
-              // day-boundary mis-prune ZoneKey exists to prevent. Pin
-              // an explicit UTC default into the stored props.
-              if (PartitionTransforms.needsPinnedZone(spec, schema) &&
-                  props.getProperty(PartitionTransforms.ZoneKey) == null)
-                props.setProperty(PartitionTransforms.ZoneKey, "UTC")
-              // new bucket tables record the v2 hash-width-stable
-              // derivation, same as MetaCatalog.createTable (r18)
-              if (spec.exists(_.isInstanceOf[PartitionTransforms.Bucket]))
-                props.setProperty(
-                  PartitionTransforms.BucketDerivationKey, "v2")
-            }
-            if (!props.isEmpty) {
-              val out = Files.newOutputStream(
-                dir.resolve("_graft_props.properties"))
-              try props.store(out, null) finally out.close()
-            }
-            Snapshots.commit(dir, Seq.empty)
+              .map(PartitionTransforms.parse)
+            val props = Option(req.get("properties")).toSeq
+              .flatMap(_.properties().asScala)
+              .map(e => e.getKey -> e.getValue.asText()).toMap
+            // the Spark client always pins its session zone; a raw HTTP
+            // client that leaves a zoned calendar transform unpinned gets
+            // UTC rather than a per-session zone
+            TableMeta.create(dir, schema, spec, props, "UTC")
             (200, tableMetaResponse(dir))
           }
         }

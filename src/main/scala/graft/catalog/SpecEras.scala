@@ -2,8 +2,6 @@ package graft.catalog
 
 import java.nio.file.{Files, Path}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.types.StructType
 
 /** PARTITION-SPEC EVOLUTION for MetaCatalog tables — Iceberg spec §4's
@@ -52,7 +50,7 @@ import org.apache.spark.sql.types.StructType
   *
   * Concurrency: evolution runs under the same per-table lock as every
   * snapshot commit and ALTER, and the era file is part of the SCHEMA
-  * EPOCH ([[GraftTable.schemaEpochOf]]) — an in-flight write planned
+  * EPOCH ([[TableMeta.epochOf]]) — an in-flight write planned
   * under the old spec that tries to commit after an evolution aborts
   * loudly (its files were laid out under the old spec but would
   * first-commit into the new era and be pruned under the wrong spec). */
@@ -63,15 +61,16 @@ object SpecEras {
   final case class Era(activeFrom: Long, spec: Seq[PartitionTransforms.T])
 
   private def file(tableDir: Path): Path =
-    tableDir.resolve("_graft_partspec.tsv")
-
-  def exists(tableDir: Path): Boolean = Files.exists(file(tableDir))
+    tableDir.resolve(TableMeta.PartSpecFile)
 
   /** The era log, oldest first — None when the table never evolved. */
   def read(tableDir: Path): Option[Seq[Era]] = {
     val f = file(tableDir)
-    if (!Files.exists(f)) return None
-    val eras = Files.readAllLines(f).asScala.toSeq.filter(_.nonEmpty)
+    if (!Files.exists(f)) None else Some(parse(Files.readString(f), f))
+  }
+
+  private[catalog] def parse(body: String, f: Path): Seq[Era] = {
+    val eras = body.linesIterator.filter(_.nonEmpty).toSeq
       .map { l =>
         val parts = l.split("\t", 2)
         Era(parts(0).toLong,
@@ -81,7 +80,7 @@ object SpecEras {
     require(eras.nonEmpty &&
       eras.map(_.activeFrom).distinct.length == eras.length,
       s"corrupted partition-spec era log ${f}")
-    Some(eras)
+    eras
   }
 
   private def write(tableDir: Path, eras: Seq[Era]): Unit = {
@@ -101,38 +100,31 @@ object SpecEras {
     eras.reverse.find(_.activeFrom <= version).getOrElse(eras.head)
 
   /** The CURRENT (write-path) spec strings: the latest era when the
-    * era log exists, else the legacy property — ONE loader shared by
-    * MetaCatalog, RestCatalog and Maintenance so a half-synced props
-    * file (crash between the era write and the props write) can never
-    * make the consumers disagree. */
-  def currentSpecStrings(tableDir: Path,
-      props: Map[String, String]): Seq[String] =
-    read(tableDir) match {
-      case Some(eras) => eras.last.spec.map(_.spec)
-      case None => props.get(PartitionKey).toSeq
-        .flatMap(PartitionTransforms.splitSpec)
+    * era log exists, else the legacy property value — one rule, so a
+    * half-synced props file (crash between the era write and the props
+    * write) can never make two readers disagree. */
+  private[catalog] def currentSpecStrings(eras: Option[Seq[Era]],
+      legacy: Option[String]): Seq[String] =
+    eras match {
+      case Some(es) => es.last.spec.map(_.spec)
+      case None => legacy.toSeq.flatMap(PartitionTransforms.splitSpec)
     }
 
-  /** Group tableDir-relative data files by spec era, oldest era first
-    * — ONE group (the given spec) when the table never evolved. Every
-    * raw read with `basePath` partition-dir inference MUST split on
-    * this: mixed-era file sets have mixed dir depths and Spark rejects
-    * them outright. */
+  /** Group tableDir-relative data files by spec era (`eras` as
+    * [[TableMeta.read]] loaded them), oldest era first — ONE group when
+    * the table never evolved. Every raw read with `basePath`
+    * partition-dir inference MUST split on this: mixed-era file sets
+    * have mixed dir depths and Spark rejects them outright. */
   def fileGroups(tableDir: Path, files: Seq[String],
-      fallbackSpec: Seq[PartitionTransforms.T])
-      : Seq[(Seq[PartitionTransforms.T], Seq[String])] =
-    read(tableDir).filter(_.size > 1) match {
-      case None => Seq((fallbackSpec, files))
-      case Some(eras) =>
+      eras: Option[Seq[Era]]): Seq[Seq[String]] =
+    eras.filter(_.size > 1) match {
+      case None => Seq(files)
+      case Some(es) =>
         val seen = FieldIds.firstSeen(tableDir)
         files.groupBy(f =>
-            eraFor(eras, seen.getOrElse(f, Long.MaxValue)).activeFrom)
-          .toSeq.sortBy(_._1)
-          .map { case (af, fs) =>
-            (eras.find(_.activeFrom == af).get.spec, fs) }
+            eraFor(es, seen.getOrElse(f, Long.MaxValue)).activeFrom)
+          .toSeq.sortBy(_._1).map(_._2)
     }
-
-  private val PartitionKey = "graft.partition.columns"
 
   /** `ADD PARTITION FIELD <transform>`: seal a new era whose spec is
     * the current one plus `field` (a hidden transform — `days(ts)`,
@@ -215,8 +207,10 @@ object SpecEras {
       next: (Seq[PartitionTransforms.T], StructType)
         => Seq[PartitionTransforms.T]): (String, String) =
     Snapshots.withRefsLock(tableDir) {
-      val schema = AlterOps.readDeclaredSchema(tableDir).getOrElse(
-        throw new IllegalStateException(s"$fullName: no declared schema"))
+      if (!TableMeta.exists(tableDir))
+        throw new IllegalStateException(s"$fullName: no declared schema")
+      val meta = TableMeta.read(tableDir)
+      val schema = meta.schema
       val latestV = Snapshots.latest(tableDir).map(_.version).getOrElse(
         throw new UnsupportedOperationException(
           s"cannot evolve the partition spec of $fullName: it predates " +
@@ -233,12 +227,12 @@ object SpecEras {
             staged.map(_.name).mkString("[", ",", "]") +
             " hold staged files a spec-era boundary would misclassify; " +
             "publish or drop them first")
-      val props = AlterOps.readProps(tableDir)
-      val cur = currentSpecStrings(tableDir, props)
-        .map(PartitionTransforms.parse)
+      // meta.props lacks the partition key; nextProps re-adds it
+      val props = meta.props
+      val cur = meta.partitionCols.map(PartitionTransforms.parse)
       val newSpec = next(cur, schema)
       val activeFrom = latestV + 1L
-      val base = read(tableDir).getOrElse(Seq(Era(1L, cur)))
+      val base = meta.eras.getOrElse(Seq(Era(1L, cur)))
       // consecutive evolutions between two commits MERGE into one era
       // (two eras with equal activeFrom would make resolution ambiguous)
       val eras = base.filterNot(_.activeFrom == activeFrom) :+
@@ -267,11 +261,11 @@ object SpecEras {
           Map(PartitionTransforms.BucketDerivationKey -> "v2")
         else Map.empty[String, String]
       val nextProps =
-        (if (newSpec.isEmpty) props - PartitionKey
-        else props + (PartitionKey ->
+        (if (newSpec.isEmpty) props
+        else props + (TableMeta.PartitionKey ->
           PartitionTransforms.formatSpec(newSpec))) ++
           zoneProps ++ bucketProps
-      AlterOps.writeProps(tableDir, nextProps)
+      TableMeta.writeProps(tableDir, nextProps)
       (PartitionTransforms.formatSpec(cur),
         PartitionTransforms.formatSpec(newSpec))
     }

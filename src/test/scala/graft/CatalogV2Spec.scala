@@ -2190,7 +2190,7 @@ class CatalogV2Spec extends AnyFunSuite {
       "'o' FROM range(0, 50, 1, 1)")
     assert(graft.catalog.Maintenance.addBlooms(
       spark, "g2.db.blmheal", Seq("q")) == 2)
-    assert(graft.catalog.AlterOps.readProps(tdir("blmheal"))
+    assert(graft.catalog.TableMeta.readProps(tdir("blmheal"))
       .get(graft.catalog.BloomSidecars.ColumnsKey).contains("q"))
     def snapVersion: Long =
       graft.catalog.Snapshots.latest(tdir("blmheal")).get.version
@@ -2418,8 +2418,8 @@ class CatalogV2Spec extends AnyFunSuite {
         java.time.Instant.ofEpochSecond(1700000000L))).toDF("ts"))
     assert(spark.sql("SELECT k FROM g2.db.eqpartts").collect()
       .map(_.getLong(0)).toSeq == Seq(2L))
-    val p0 = graft.catalog.AlterOps.readProps(tdir("eqpartts"))
-    graft.catalog.AlterOps.writeProps(tdir("eqpartts"),
+    val p0 = graft.catalog.TableMeta.readProps(tdir("eqpartts"))
+    graft.catalog.TableMeta.writeProps(tdir("eqpartts"),
       p0 - graft.catalog.PartitionTransforms.ZoneKey)
     val e = intercept[UnsupportedOperationException] {
       graft.catalog.Maintenance.deleteByKey(spark, "g2.db.eqpartts",
@@ -2427,7 +2427,7 @@ class CatalogV2Spec extends AnyFunSuite {
           java.time.Instant.ofEpochSecond(1700003600L))).toDF("ts"))
     }
     assert(e.getMessage.contains("pinned partition zone"), e.getMessage)
-    graft.catalog.AlterOps.writeProps(tdir("eqpartts"), p0)
+    graft.catalog.TableMeta.writeProps(tdir("eqpartts"), p0)
   }
 
   test("row-level commands on an identity-partitioned table whose " +
@@ -3220,7 +3220,7 @@ class CatalogV2Spec extends AnyFunSuite {
     import spark.implicits._
     spark.sql("""CREATE TABLE g2.db.bktv2 (k INT, v STRING)
       PARTITIONED BY (bucket(8, k))""")
-    assert(graft.catalog.AlterOps.readProps(tdir("bktv2"))
+    assert(graft.catalog.TableMeta.readProps(tdir("bktv2"))
       .get("graft.bucket.derivation").contains("v2"))
     spark.sql("""INSERT INTO g2.db.bktv2
       SELECT CAST(id AS INT),
@@ -3277,8 +3277,8 @@ class CatalogV2Spec extends AnyFunSuite {
     spark.sql("""CREATE TABLE g2.db.bktv1 (k INT, v STRING)
       PARTITIONED BY (bucket(8, k))""")
     // simulate a pre-r18 table: strip the derivation property
-    val p0 = graft.catalog.AlterOps.readProps(dir)
-    graft.catalog.AlterOps.writeProps(dir, p0 - "graft.bucket.derivation")
+    val p0 = graft.catalog.TableMeta.readProps(dir)
+    graft.catalog.TableMeta.writeProps(dir, p0 - "graft.bucket.derivation")
     spark.sql("""INSERT INTO g2.db.bktv1
       SELECT CAST(id AS INT), concat('v', CAST(id AS STRING))
       FROM range(0, 32)""")
@@ -3300,7 +3300,7 @@ class CatalogV2Spec extends AnyFunSuite {
       spark.conf.set(zoneConf, "Asia/Tokyo")
       spark.sql("""CREATE TABLE g2.db.tsid (ts TIMESTAMP, v STRING)
         PARTITIONED BY (ts)""")
-      assert(graft.catalog.AlterOps.readProps(tdir("tsid"))
+      assert(graft.catalog.TableMeta.readProps(tdir("tsid"))
         .get(graft.catalog.PartitionTransforms.ZoneKey)
         .contains("Asia/Tokyo"))
       spark.sql("""INSERT INTO g2.db.tsid
@@ -3445,14 +3445,14 @@ class CatalogV2Spec extends AnyFunSuite {
       // simulate a pre-r17 table: strip the CREATE-time pin from props
       val dir = java.nio.file.Paths.get(
         spark.conf.get("spark.sql.catalog.g2.warehouse"), "db", "evzbf")
-      val props0 = graft.catalog.AlterOps.readProps(dir)
+      val props0 = graft.catalog.TableMeta.readProps(dir)
       assert(props0.contains(zk))
-      graft.catalog.AlterOps.writeProps(dir, props0 - zk)
+      graft.catalog.TableMeta.writeProps(dir, props0 - zk)
       // first write through the legacy table pins the WRITER's zone
       spark.sql("""INSERT INTO g2.db.evzbf
         SELECT id, timestamp_seconds(1700000000 + 82800 + id)
         FROM range(0, 4)""")
-      assert(graft.catalog.AlterOps.readProps(dir).get(zk)
+      assert(graft.catalog.TableMeta.readProps(dir).get(zk)
         .contains("Asia/Tokyo"))
       // a reader AND a second writer in another zone now agree with the
       // layout (pre-fix both would re-derive in their own session zone)

@@ -76,8 +76,8 @@ class EraReleaseSpec extends AnyFunSuite {
     spark.sql("""CREATE TABLE erel.db.relb (k INT, v STRING)
       PARTITIONED BY (bucket(4, k))""")
     // simulate a pre-r18 table: v1 hash derivation (promotion-unstable)
-    val p0 = graft.catalog.AlterOps.readProps(dir)
-    graft.catalog.AlterOps.writeProps(dir, p0 - "graft.bucket.derivation")
+    val p0 = graft.catalog.TableMeta.readProps(dir)
+    graft.catalog.TableMeta.writeProps(dir, p0 - "graft.bucket.derivation")
     spark.sql("""INSERT INTO erel.db.relb
       SELECT CAST(id AS INT), concat('v', CAST(id AS STRING))
       FROM range(0, 16)""")

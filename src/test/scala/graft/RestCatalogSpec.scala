@@ -214,6 +214,106 @@ class RestCatalogSpec extends AnyFunSuite {
     }
   }
 
+  /** Run `f` with a REST client catalog named `cat` over a served `wh`. */
+  private def withRestCatalog(cat: String)(f: => Unit): Unit =
+    withServer { port =>
+      spark.conf.set(s"spark.sql.catalog.$cat", "graft.catalog.RestCatalog")
+      spark.conf.set(s"spark.sql.catalog.$cat.uri", s"http://127.0.0.1:$port")
+      try f finally {
+        spark.conf.unset(s"spark.sql.catalog.$cat")
+        spark.conf.unset(s"spark.sql.catalog.$cat.uri")
+      }
+    }
+
+  test("CREATE TABLE over REST rejects a reserved column name, like " +
+      "the owning catalog, and leaves no table behind") {
+    withRestCatalog("rcat6") {
+      val e = intercept[Exception] {
+        spark.sql("CREATE TABLE rcat6.db.absent (__graft_absent_1 INT)")
+      }
+      assert(e.getMessage.contains("reserved"), e.getMessage)
+      assert(!Files.exists(Paths.get(wh, "db", "absent")))
+      assert(!spark.sql("SHOW TABLES IN rcat6.db").collect()
+        .exists(_.getString(1) == "absent"))
+    }
+  }
+
+  test("a raw REST create with an invalid transform is rejected before " +
+      "anything is written") {
+    withServer { port =>
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val body = mapper.writeValueAsString(java.util.Map.of(
+        "name", "rawbad",
+        "schema-json", new org.apache.spark.sql.types.StructType()
+          .add("s", org.apache.spark.sql.types.StringType).json,
+        "partition-cols", java.util.List.of("days(s)")))
+      val http = java.net.http.HttpClient.newHttpClient()
+      val url = s"http://127.0.0.1:$port/v1/namespaces/db/tables"
+      val post = http.send(java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(url))
+        .header("Content-Type", "application/json")
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString(body)).build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(post.statusCode() != 200, post.body())
+      assert(post.body().contains("timestamp/date"), post.body())
+      val get = http.send(java.net.http.HttpRequest.newBuilder(
+          java.net.URI.create(s"$url/rawbad")).GET().build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(get.statusCode() == 404, get.body())
+      assert(!Files.exists(Paths.get(wh, "db", "rawbad")))
+    }
+  }
+
+  test("REST and the owning catalog agree on a fully evolved table: " +
+      "field-id generation, spec era, write order, pinned zone, v2 bucket") {
+    spark.sql("""CREATE TABLE rsrc.db.evo (k INT, ts TIMESTAMP, v STRING)
+      PARTITIONED BY (bucket(4, k), days(ts))
+      TBLPROPERTIES ('graft.write.ordered-by'='k')""")
+    def insert(cat: String, from: Int, to: Int): Unit =
+      spark.sql(s"""INSERT INTO $cat.db.evo
+        SELECT CAST(id AS INT), timestamp_seconds(1700000000 + id * 7200),
+               concat('v', CAST(id AS STRING))
+        FROM range($from, $to)""")
+    insert("rsrc", 0, 10)
+    spark.sql("ALTER TABLE rsrc.db.evo RENAME COLUMN v TO w")
+    insert("rsrc", 10, 20)
+    spark.sql("CALL rsrc.system.add_partition_field('db.evo', 'hours(ts)')")
+    insert("rsrc", 20, 30)
+    withRestCatalog("rcat7") {
+      val queries = Seq(
+        "SELECT k, ts, w FROM %s.db.evo ORDER BY k",
+        "SELECT w FROM %s.db.evo WHERE k = 13",
+        "SELECT count(*) FROM %s.db.evo WHERE ts < timestamp_seconds(1700050000)")
+      def agree(): Unit = queries.foreach { q =>
+        val meta = spark.sql(q.format("rsrc")).collect().toSeq
+        assert(spark.sql(q.format("rcat7")).collect().toSeq == meta, q)
+        assert(meta.nonEmpty, q)
+      }
+      agree()
+      insert("rcat7", 30, 40)
+      agree()
+      assert(spark.sql("SELECT count(*) FROM rsrc.db.evo").collect()
+        .head.getLong(0) == 40)
+      val ident = org.apache.spark.sql.connector.catalog.Identifier
+        .of(Array("db"), "evo")
+      def handle(cat: String) = spark.sessionState.catalogManager
+        .catalog(cat)
+        .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
+        .loadTable(ident)
+      val (viaMeta, viaRest) = (handle("rsrc"), handle("rcat7"))
+      assert(viaRest.partitioning().map(_.toString).toSeq ==
+        viaMeta.partitioning().map(_.toString).toSeq)
+      assert(viaRest.partitioning().map(_.toString).toSeq ==
+        Seq("bucket(4, k)", "days(ts)", "hours(ts)"))
+      assert(viaRest.properties() == viaMeta.properties())
+      val props = viaRest.properties()
+      assert(props.get("graft.write.ordered-by") == "k")
+      assert(props.get("graft.bucket.derivation") == "v2")
+      assert(props.get(graft.catalog.PartitionTransforms.ZoneKey) != null)
+      assert(viaRest.schema() == viaMeta.schema())
+    }
+  }
+
   test("auth: configured server rejects missing/wrong credentials, accepts bearer and basic") {
     val tok = "sekrit-token-123"
     val srv = new RestCatalogServer(Paths.get(wh), 0, Some(s"Bearer $tok"))
