@@ -29,5 +29,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // bounded-heap per-group top-k) on every session built with these
     // extensions; TopK.perKey also self-registers at runtime.
     ext.injectPlannerStrategy(_ => graft.plans.TopKPerKeyStrategy)
+    // Stats-answered COUNT(*) and catalog metadata tables are
+    // LocalScans: fold the operators above them on the driver.
+    ext.injectPlannerStrategy(_ => org.apache.spark.sql.graftaccess.LocalScans)
   }
 }

@@ -47,6 +47,10 @@ object BloomSidecars {
 
   private def bloomsDir(tableDir: Path): Path = tableDir.resolve("blooms")
 
+  /** Whether the table has any bloom sidecar: without one, pruning
+    * skips the per-file sidecar lookups. */
+  def present(tableDir: Path): Boolean = Files.isDirectory(bloomsDir(tableDir))
+
   /** Sidecar path for a data file's RELATIVE path and a column. Keyed
     * by file NAME: part files embed the writing job's UUID, so names
     * are unique within a table and survive partition-dir nesting. */

@@ -140,8 +140,8 @@ object Changelog {
     // (BOTH types) cover
     def maskedRows(fs: Seq[String], mask: Seq[String], typ: String,
         v: Long): DataFrame =
-      align(EqualityDeletes.applyAll(readRaw(fs), spark, dir, fs, mask),
-        typ, v)
+      align(EqualityDeletes.applyAll(readRaw(fs), spark, dir, schema, fs,
+        mask), typ, v)
 
     // position-sidecar change: the rows at `pos` (file, pos) pairs that
     // live in still-present data files — reads ONLY those files.
@@ -166,7 +166,7 @@ object Changelog {
             col("_metadata.row_index") === col("pos"),
           "left_semi")
         Some(align(
-          EqualityDeletes.applyAll(rows, spark, dir, fs, alsoMask), typ, v))
+          EqualityDeletes.applyAll(rows, spark, dir, schema, fs, alsoMask), typ, v))
       }
     }
 
@@ -178,7 +178,7 @@ object Changelog {
     // row-group layer — eq batches are small by contract).
     def rowsMatchingEq(present: Seq[String], eqFiles: Seq[String],
         alsoMask: Seq[String], typ: String, v: Long): Option[DataFrame] = {
-      val batches = EqualityDeletes.loadBatches(spark, dir, eqFiles,
+      val batches = EqualityDeletes.loadBatches(spark, dir, schema, eqFiles,
         f => firstSeen.getOrElse(f, Long.MaxValue), maxKeys)
       val maxV = batches.map(_.version).maxOption.getOrElse(Long.MinValue)
       val subject = present.filter(f =>
@@ -211,7 +211,8 @@ object Changelog {
         .dropDuplicates("__rid_uri", "__rid_pos")
         .drop("__rid_uri", "__rid_pos", "__uri", "__fseen")
       Some(align(
-        EqualityDeletes.applyAll(matched, spark, dir, subject, alsoMask),
+        EqualityDeletes.applyAll(matched, spark, dir, schema, subject,
+          alsoMask),
         typ, v))
     }
 

@@ -82,32 +82,31 @@ object EqualityDeletes {
     * collect of small-by-contract sidecars, guarded by [[MaxKeysKey]].
     * `addVersion` maps a sidecar path to the version that committed it
     * ([[FieldIds.firstSeen]] over the snapshot log — same metadata the
-    * generation machinery already maintains). */
-  def loadBatches(spark: SparkSession, tableDir: Path,
+    * generation machinery already maintains). `declared` is the schema
+    * the caller reads data files under: sidecars committed BEFORE a
+    * type promotion carry the NARROW key type, read values arrive
+    * natively widened to the declared type, so the key set is widened
+    * to it too (exact — only legal widenings are castable here) or the
+    * hash compare would silently miss (CDC keeps flowing across a
+    * promotion, no compact required). It is the caller's schema, not a
+    * fresh read: keys must widen to the types the caller's scan serves,
+    * even when an ALTER committed since the caller's handle was built. */
+  def loadBatches(spark: SparkSession, tableDir: Path, declared: StructType,
       eqFiles: Seq[String], addVersion: String => Long,
       maxKeys: Long): Seq[Batch] = {
     var total = 0L
-    // sidecars committed BEFORE a type promotion carry the NARROW key
-    // type; read values arrive natively widened to the declared type,
-    // so the key set must be widened too (exact — only legal widenings
-    // are castable here) or the hash compare would silently miss (CDC
-    // keeps flowing across a promotion, no compact required)
-    val declared: Option[StructType] = TableMeta.declaredSchema(tableDir)
     groupByCommit(eqFiles).map { case (commitDir, files) =>
       val version = files.map(addVersion).min
       val raw = spark.read.parquet(
         files.map(f => tableDir.resolve(f).toString): _*)
-      val df = declared match {
-        case Some(sch) => raw.select(raw.schema.fields.map { f =>
-          sch.fields.find(_.name == f.name).map(_.dataType) match {
-            case Some(dt) if dt != f.dataType &&
-                MetaCatalog.legalWidening(f.dataType, dt) =>
-              col(f.name).cast(dt).as(f.name)
-            case _ => col(f.name)
-          }
-        }.toIndexedSeq: _*)
-        case None => raw
-      }
+      val df = raw.select(raw.schema.fields.map { f =>
+        declared.fields.find(_.name == f.name).map(_.dataType) match {
+          case Some(dt) if dt != f.dataType &&
+              MetaCatalog.legalWidening(f.dataType, dt) =>
+            col(f.name).cast(dt).as(f.name)
+          case _ => col(f.name)
+        }
+      }.toIndexedSeq: _*)
       val schema = df.schema
       schema.fields.foreach { f =>
         require(supportedKeyType(f.dataType),
@@ -148,7 +147,8 @@ object EqualityDeletes {
     * pos); each equality batch anti-joins on its key columns restricted
     * to data files first-seen before the batch's version. */
   def applyAll(df: DataFrame, spark: SparkSession, tableDir: Path,
-      dataFiles: Seq[String], deleteFiles: Seq[String]): DataFrame = {
+      declared: StructType, dataFiles: Seq[String],
+      deleteFiles: Seq[String]): DataFrame = {
     val (eq, pos) = deleteFiles.partition(Snapshots.isEqualityDeleteFile)
     val posApplied =
       DeleteSidecars.applyDeletes(df, spark, tableDir, dataFiles, pos)
@@ -156,7 +156,7 @@ object EqualityDeletes {
     val firstSeen = FieldIds.firstSeen(tableDir)
     val maxKeys = spark.conf.getOption(MaxKeysKey).map(_.toLong)
       .getOrElse(MaxKeysDefault)
-    val batches = loadBatches(spark, tableDir, eq,
+    val batches = loadBatches(spark, tableDir, declared, eq,
       f => firstSeen.getOrElse(f, Long.MaxValue), maxKeys)
     // per-file applicability by _metadata.file_path → first-seen version
     val uriToSeen = dataFiles.map(rel =>

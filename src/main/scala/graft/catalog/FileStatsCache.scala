@@ -339,15 +339,17 @@ object FileStatsCache {
 
     /** Could any row of `rel` satisfy the conjunction? Semantics match
       * [[ParquetStats.mayMatchAll]] (modulo per-file vs per-block
-      * granularity, which only ever KEEPS more files). */
-    def mayMatchAll(rel: String, filters: Seq[Filter]): Boolean =
+      * granularity, which only ever KEEPS more files). A file without a
+      * record opens its footer when `openFooter`, else may match. */
+    def mayMatchAll(rel: String, filters: Seq[Filter],
+        openFooter: Boolean): Boolean =
       if (filters.isEmpty) true
       else cached.get(rel) match {
         case Some(fs) =>
           if (fs.rows == 0L) false // no rows at all
           else ParquetStats.mayMatchAllViews(
             n => fs.cols.get(n).map(_.view), filters)
-        case None =>
+        case None => !openFooter ||
           ParquetStats.mayMatchAll(tableDir.resolve(rel).toString, filters, conf)
       }
 
@@ -359,8 +361,7 @@ object FileStatsCache {
       ParquetStats.rowCount(tableDir.resolve(rel).toString, conf))
   }
 
-  def forTable(tableDir: Path,
-      conf: Configuration = new Configuration()): TableStats =
+  def forTable(tableDir: Path, conf: Configuration): TableStats =
     new TableStats(tableDir, conf)
 
   // -------------------------------------------------------------------

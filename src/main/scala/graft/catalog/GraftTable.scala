@@ -139,10 +139,42 @@ class GraftTable private[catalog] (
       PartitionTransforms.prune(fs, spec, filters, declaredSchema,
         effectiveZone)
     }
-  /** Whether ANY era carries a hidden transform — the prune wrap must
-    * engage for old-era dirs even after every field was dropped. */
-  private def anyEraHidden: Boolean =
-    specEras.exists(_.spec.exists(!_.isIdentity))
+  /** The one file-pruning predicate of scans, [[deleteWhere]] and the
+    * row-level runtime filter: the files of `files` that may hold a row
+    * satisfying every filter. A file drops only when its partition dirs
+    * (under the spec era that wrote them, no metadata read), its
+    * commit-time stats record, or its bloom sidecar proves no row
+    * matches. Files of a schema generation that is not the identity
+    * translation are always kept: their stats are keyed by old physical
+    * names, and a same-named column from a dropped field would prune on
+    * the wrong column's stats. A file without a stats record opens its
+    * footer when `openFooters`, else it is kept — reads never open a
+    * footer on the driver. */
+  private def mayMatchFiles(files: Seq[String], filters: Seq[Filter],
+      openFooters: Boolean): Seq[String] =
+    if (filters.isEmpty || files.isEmpty) files
+    else {
+      val opaque = fieldMeta.map(m =>
+        FieldIds.nonIdentityFiles(tableDir, m, files)).getOrElse(Set.empty)
+      val dirKept = eraPrune(files, filters).toSet
+      val stats = FileStatsCache.forTable(tableDir,
+        spark.sparkContext.hadoopConfiguration)
+      val blooms = BloomSidecars.present(tableDir)
+      files.filter(f => opaque.contains(f) || (dirKept.contains(f) &&
+        stats.mayMatchAll(f, filters, openFooters) &&
+        (!blooms || BloomSidecars.mayMatchAll(tableDir, f, filters))))
+    }
+
+  /** The row count of `snap` from its files' stats records — what an
+    * unfiltered `COUNT(*)` returns — or None when a scan must count:
+    * no snapshot, any delete file (position or equality), or a data
+    * file without a record. */
+  private def recordedRowCount(snap: Option[Snapshots.Snap]): Option[Long] =
+    snap.filter(_.deleteFiles.isEmpty).flatMap { s =>
+      val recorded = FileStatsCache.load(tableDir)
+      s.dataFiles.foldLeft(Option(0L))((acc, f) =>
+        acc.flatMap(n => recorded.get(f).map(n + _.rows)))
+    }
 
   /** Whether row-level DELETEs on this table write position-delete
     * sidecars instead of rewriting files (Iceberg v2's
@@ -228,7 +260,7 @@ class GraftTable private[catalog] (
     val maxKeys = morCapOverride.map(_ => Long.MaxValue).getOrElse(
       spark.conf.getOption(EqualityDeletes.MaxKeysKey).map(_.toLong)
         .getOrElse(EqualityDeletes.MaxKeysDefault))
-    EqualityDeletes.loadBatches(spark, tableDir, eqFiles,
+    EqualityDeletes.loadBatches(spark, tableDir, declaredSchema, eqFiles,
       f => seen.getOrElse(f, Long.MaxValue), maxKeys)
   }
 
@@ -497,15 +529,15 @@ class GraftTable private[catalog] (
                 else "schema generations + mor split")
           }
       }
-    // HIDDEN PARTITIONING: the kept file list depends on the
-    // pushed filters, so the whole delegate stack is constructed at
-    // build() time over the transform-pruned files — predicates on the
-    // SOURCE column (`WHERE ts >= ...`) prune `ts_day=...` dirs with no
-    // user-visible partition column. Era-aware: each file
-    // prunes under the spec that wrote its dirs.
-    if (!anyEraHidden) assemble(dataRel)
-    else new org.apache.spark.sql.graftaccess.HiddenPruneScans.Builder(
-      dataRel, (files, v1) => eraPrune(files, v1), assemble)
+    // The kept file list depends on the pushed filters, so the whole
+    // delegate stack is constructed at build() time over the files
+    // [[mayMatchFiles]] keeps — predicates on a hidden transform's
+    // SOURCE column (`WHERE ts >= ...`) prune `ts_day=...` dirs, and a
+    // point lookup keeps only files whose recorded [min, max] covers
+    // the key. An unfiltered COUNT(*) is answered from the records.
+    new org.apache.spark.sql.graftaccess.HiddenPruneScans.Builder(
+      dataRel, (files, v1) => mayMatchFiles(files, v1, openFooters = false),
+      assemble, () => recordedRowCount(snap))
   }
 
   // --- write (V1 fallback: full commit control, still distributed) ------
@@ -588,13 +620,15 @@ class GraftTable private[catalog] (
     * would inflate every later snapshot's file inventory — Iceberg
     * skips empty files; so do we. Footer reads are bounded by the
     * write's own output size. */
-  private def stripZeroRowParts(tmp: Path): Unit =
+  private def stripZeroRowParts(tmp: Path): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
     scala.util.Using.resource(Files.walk(tmp)) { st =>
       st.iterator().asScala
         .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-        .filter(p => ParquetStats.rowCount(p.toString) == 0L)
+        .filter(p => ParquetStats.rowCount(p.toString, conf) == 0L)
         .toList.foreach(Files.deleteIfExists(_))
     }
+  }
 
   private def dropRecursively(dir: Path): Unit =
     if (Files.exists(dir)) {
@@ -929,19 +963,7 @@ class GraftTable private[catalog] (
         val v1 = org.apache.spark.sql.graftaccess.Internals
           .predicatesToV1(predicates)
         if (v1.nonEmpty) {
-          val conf = spark.sparkContext.hadoopConfiguration
-          // hidden-partition dirs prune FIRST (a dir-value disproof
-          // costs no footer read); footer stats + blooms refine within
-          // the surviving dirs — same order as deleteWhere. Era-aware:
-          // each file prunes under the spec that wrote its dirs.
-          val dirKept = eraPrune(files, v1).toSet
-          // commit-time stats cache: O(commits) sidecar reads instead of
-          // O(files) footer opens on the driver (live-footer fallback
-          // per uncached file)
-          val tstats = FileStatsCache.forTable(tableDir, conf)
-          files = files.filter(f => dirKept.contains(f) &&
-            tstats.mayMatchAll(f, v1) &&
-            BloomSidecars.mayMatchAll(tableDir, f, v1))
+          files = mayMatchFiles(files, v1, openFooters = true)
           replaced = files
         }
       }
@@ -1033,30 +1055,12 @@ class GraftTable private[catalog] (
     val baseSnap = headSnap
     val baseData = baseSnap.map(_.dataFiles).getOrElse(Seq.empty)
     val baseDeletes = baseSnap.map(_.deleteFiles).getOrElse(Seq.empty)
-    // FILE-LEVEL PRUNING: only files whose footer stats say the predicate
-    // MIGHT match get touched; provably-unaffected files stay in place
-    // (after compact() sorts on the predicate column, a key-range DELETE
-    // over 100 TB touches O(1) files). Bloom sidecars additionally skip
-    // point lookups over interleaved keys min/max can't separate.
-    // Conservative: stats/sidecar missing → touch. Files whose schema
-    // generation is NOT identity-translated bypass pruning entirely:
-    // their footer stats are keyed by OLD physical names, and a
-    // same-named column from a dropped field would prune on the WRONG
-    // column's stats, silently keeping rows the DELETE matched.
-    val opaque = fieldMeta.map(m =>
-      FieldIds.nonIdentityFiles(tableDir, m, baseData)).getOrElse(Set.empty)
-    // hidden-partition transforms prune FIRST (a dir-value disproof
-    // needs no footer read at all); footer stats and bloom sidecars
-    // refine within the surviving dirs. Era-aware: each file
-    // prunes under the spec that wrote its dirs.
-    val dirPruned = eraPrune(baseData, filters.toSeq).toSet
-    // commit-time stats cache (live-footer fallback per uncached file)
-    val tstats = FileStatsCache.forTable(tableDir,
-      spark.sparkContext.hadoopConfiguration)
-    val (touched, _) = baseData.partition(f => opaque.contains(f) ||
-      (dirPruned.contains(f) &&
-        tstats.mayMatchAll(f, filters.toSeq) &&
-        BloomSidecars.mayMatchAll(tableDir, f, filters.toSeq)))
+    // FILE-LEVEL PRUNING: only files that MIGHT hold a matching row get
+    // touched; provably-unaffected files stay in place (after compact()
+    // sorts on the predicate column, a key-range DELETE over 100 TB
+    // touches O(1) files). A file without a stats record opens its
+    // footer: a missed prune here costs a rewrite.
+    val touched = mayMatchFiles(baseData, filters.toSeq, openFooters = true)
     if (baseSnap.isDefined && touched.isEmpty) return // provably a no-op
 
     if (morDeletes && baseSnap.isDefined) {
@@ -1093,7 +1097,8 @@ class GraftTable private[catalog] (
         // rows already masked by pending MOR sidecars (position OR
         // equality) must NOT be resurrected into the rewrite
         val live = EqualityDeletes.applyAll(raw, spark, tableDir,
-          baseSnap.map(_.dataFiles).getOrElse(Seq.empty), baseDeletes)
+          declaredSchema, baseSnap.map(_.dataFiles).getOrElse(Seq.empty),
+          baseDeletes)
         // DSv2 DELETE removes rows where the predicate is TRUE; a NULL
         // predicate (e.g. `a > 5` with a NULL) must KEEP the row — a bare
         // not(cond) is NULL there and filter() would silently drop it.

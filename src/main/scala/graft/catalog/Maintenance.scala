@@ -175,7 +175,7 @@ object Maintenance {
     // commit-time stats cache (live-footer fallback per uncached file)
     val envelopeStats = FileStatsCache.forTable(dir, conf)
     val touched = base.dataFiles.filter(f =>
-      envelopeStats.mayMatchAll(f, envelope))
+      envelopeStats.mayMatchAll(f, envelope, openFooter = true))
 
     val survivors =
       if (touched.isEmpty)
@@ -205,7 +205,7 @@ object Maintenance {
         // rows masked by pending MOR sidecars (position OR equality)
         // must not be resurrected
         EqualityDeletes
-          .applyAll(raw, spark, dir, base.dataFiles, base.deleteFiles)
+          .applyAll(raw, spark, dir, schema, base.dataFiles, base.deleteFiles)
           .select(schema.fieldNames.map(col).toSeq: _*)
           .join(src.select(keyCols.map(col).toSeq: _*), keyCols, "left_anti")
       }

@@ -29,7 +29,7 @@ object ParquetStats {
   private[graft] val footerOpens = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Footer row count (sum of row-group counts); 0 when unreadable. */
-  def rowCount(file: String, conf: Configuration = new Configuration()): Long =
+  def rowCount(file: String, conf: Configuration): Long =
     try {
       footerOpens.incrementAndGet()
       val in = HadoopInputFile.fromPath(new Path(file), conf)
@@ -144,7 +144,7 @@ object ParquetStats {
     * `conf` should be the session's `sparkContext.hadoopConfiguration`
     * so object-store credentials apply. */
   def mayMatchAll(file: String, filters: Seq[Filter],
-      conf: Configuration = new Configuration()): Boolean = {
+      conf: Configuration): Boolean = {
     if (filters.isEmpty) return true
     footerOpens.incrementAndGet()
     val footer = try {

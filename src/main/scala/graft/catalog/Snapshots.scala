@@ -67,24 +67,32 @@ object Snapshots {
 
   private def dir(tableDir: Path): Path = tableDir.resolve("_graft_snapshots")
 
-  private def parse(p: Path): Snap = {
+  private def parse(v: Long, p: Path): Snap = {
     val lines = Files.readAllLines(p).asScala.toSeq
-    val v = p.getFileName.toString.stripPrefix("v").stripSuffix(".snap").toLong
     Snap(v, lines.head.toLong, lines.tail.filter(_.nonEmpty))
   }
 
-  private def listLog(d: Path): Seq[Snap] = {
+  /** The log's snapshot files by version, read from their names alone
+    * (a stray `.v….tmp` of a crashed writer is not a `.snap`). */
+  private def logFiles(d: Path): Seq[(Long, Path)] =
     if (!Files.isDirectory(d)) Seq.empty
     else scala.util.Using.resource(Files.list(d)) { st =>
       st.iterator().asScala
         .filter(_.getFileName.toString.endsWith(".snap"))
-        .map(parse).toSeq.sortBy(_.version)
+        .map(p => p.getFileName.toString.stripPrefix("v")
+          .stripSuffix(".snap").toLong -> p)
+        .toSeq.sortBy(_._1)
     }
-  }
+
+  private def listLog(d: Path): Seq[Snap] = logFiles(d).map((parse _).tupled)
+
+  /** The log's newest snapshot, parsing only its file. */
+  private def lastOfLog(d: Path): Option[Snap] =
+    logFiles(d).lastOption.map((parse _).tupled)
 
   def list(tableDir: Path): Seq[Snap] = listLog(dir(tableDir))
 
-  def latest(tableDir: Path): Option[Snap] = list(tableDir).lastOption
+  def latest(tableDir: Path): Option[Snap] = lastOfLog(dir(tableDir))
 
   /** All parquet data files under `tableDir/data`, RELATIVE to the
     * table dir — the pre-snapshot (v1-era) visibility fallback, shared
@@ -100,8 +108,13 @@ object Snapshots {
     }
   }
 
+  /** Snapshot `version`, parsing only its file; None when absent (or
+    * expired between the listing and the read). */
   def byVersion(tableDir: Path, version: Long): Option[Snap] =
-    list(tableDir).find(_.version == version)
+    logFiles(dir(tableDir)).find(_._1 == version).flatMap { case (v, p) =>
+      try Some(parse(v, p))
+      catch { case _: java.nio.file.NoSuchFileException => None }
+    }
 
   /** Latest snapshot whose commit time is <= tsMillis. filter, not
     * takeWhile: wall clocks step backwards (NTP), so timestamps aren't
@@ -454,7 +467,7 @@ object Snapshots {
     * no such branch exists. */
   def branchHead(tableDir: Path, name: String): Option[Snap] =
     branches(tableDir).find(_.name == name).flatMap { ref =>
-      listLog(branchLog(tableDir, name)).lastOption
+      lastOfLog(branchLog(tableDir, name))
         .orElse(byVersion(tableDir, ref.version))
     }
 
@@ -467,7 +480,7 @@ object Snapshots {
         s"no branch '$name' (have " +
           branches(tableDir).map(_.name).mkString("[", ",", "]") + ")"))
     casCommit(tableDir, branchLog(tableDir, name), () =>
-      listLog(branchLog(tableDir, name)).lastOption
+      lastOfLog(branchLog(tableDir, name))
         .orElse(byVersion(tableDir, ref.version)))(compute)
   }
 

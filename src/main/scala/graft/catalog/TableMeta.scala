@@ -45,10 +45,6 @@ private[graft] object TableMeta {
   def readSchema(dir: Path): StructType = parseSchema(
     Files.readString(dir.resolve(SchemaFile)))
 
-  /** The declared schema, or None for a bare data dir. */
-  def declaredSchema(dir: Path): Option[StructType] =
-    readIfExists(dir.resolve(SchemaFile)).map(parseSchema)
-
   private[catalog] def writeSchema(dir: Path, schema: StructType): Unit =
     Files.writeString(dir.resolve(SchemaFile), schema.json)
 

@@ -105,6 +105,7 @@ final class Engine private[graft] (root: SparkSession, maxStatements: Int) {
       val token = UUID.randomUUID().toString
       val s = root.newSession()
       DFCompat.install(s)
+      org.apache.spark.sql.graftaccess.LocalScans.install(s)
       // env-driven object store, exactly like the reference's server
       // bootstrap (main.rs:46-71): S3 when the credential triple is
       // present, local-FS fallback otherwise.

@@ -3471,4 +3471,144 @@ class CatalogV2Spec extends AnyFunSuite {
       assert(dayDirs == Seq("ts_day=2023-11-16"), s"got $dayDirs")
     } finally spark.conf.set(zoneConf, orig)
   }
+
+  // --- stats-planned reads ----------------------------------------------
+
+  /** File names the (already filter-pushed) scan of `df` plans. */
+  private def scanFileNames(df: org.apache.spark.sql.DataFrame): Set[String] = {
+    val scans = df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan
+    }
+    assert(scans.length == 1, df.queryExecution.executedPlan)
+    scans.head.toBatch.planInputPartitions().toSeq.flatMap {
+      case fp: org.apache.spark.sql.execution.datasources.FilePartition =>
+        fp.files.toSeq.map(_.toPath.getName)
+    }.toSet
+  }
+
+  test("a point lookup's scan lists only the files whose recorded " +
+      "[min, max] covers the key, and answers like the unpushable form " +
+      "over random keys, NULLs, strings and dates") {
+    import org.apache.spark.sql.functions.{max, min}
+    spark.sql("CREATE TABLE g2.db.ptl (id BIGINT, s STRING, d DATE)")
+    (0 until 6).foreach { c =>
+      spark.sql(s"""INSERT INTO g2.db.ptl
+        SELECT id, concat('s', lpad(CAST(id AS STRING), 4, '0')),
+               date_add(DATE'2024-01-01', CAST(id AS INT))
+        FROM range(${c * 40}, ${c * 40 + 40})""")
+    }
+    spark.sql("INSERT INTO g2.db.ptl VALUES (NULL, NULL, NULL), " +
+      "(500, NULL, DATE'2030-06-01')")
+    val dir = tdir("ptl")
+    val live = graft.catalog.Snapshots.latest(dir).get.dataFiles
+    // each file's real [min, max] per column, read from its rows
+    val ranges: Map[String, Seq[(Any, Any)]] = live.map { f =>
+      val r = spark.read.parquet(dir.resolve(f).toString)
+        .agg(min("id"), max("id"), min("s"), max("s"), min("d"), max("d"))
+        .collect().head
+      java.nio.file.Paths.get(f).getFileName.toString ->
+        (0 until 3).map(i => (r.get(2 * i), r.get(2 * i + 1)))
+    }.toMap
+    // a file whose column is all NULL has no recorded range and is kept
+    def covering(col: Int, key: Any)(lte: (Any, Any) => Boolean): Set[String] =
+      ranges.collect { case (f, rs) if rs(col)._1 == null ||
+          (lte(rs(col)._1, key) && lte(key, rs(col)._2)) => f }.toSet
+    def same(pushable: String, unpushable: String): Set[String] = {
+      val q = "SELECT id, s, d FROM g2.db.ptl WHERE "
+      val pushed = spark.sql(q + pushable)
+      val got = pushed.collect().map(_.toString).sorted.toSeq
+      assert(got == spark.sql(q + unpushable).collect().map(_.toString)
+        .sorted.toSeq, pushable)
+      scanFileNames(pushed)
+    }
+    val rnd = new scala.util.Random(12)
+    val keys = Seq(0L, 39L, 40L, 239L, 500L, -3L, 777L) ++
+      Seq.fill(12)(rnd.nextInt(520).toLong - 10)
+    keys.foreach { k =>
+      val scanned = same(s"id = $k", s"id + 0 = $k")
+      val expected = covering(0, k) { (a, b) =>
+        a.asInstanceOf[Long] <= b.asInstanceOf[Long] }
+      assert(scanned == expected, s"id = $k: $scanned vs $expected")
+      if (k >= 0 && k < 240)
+        assert(scanned.size <= 2 && scanned.size < live.size, s"id = $k")
+    }
+    Seq("s0007", "s0123", "s0239", "zzz", "s").foreach { v =>
+      val scanned = same(s"s = '$v'", s"concat(s, '') = '$v'")
+      assert(scanned == covering(1, v) { (a, b) =>
+        a.toString <= b.toString }, v)
+    }
+    Seq("2024-01-01", "2024-03-15", "2030-06-01", "1999-12-31").foreach { v =>
+      val scanned = same(s"d = DATE'$v'", s"date_add(d, 0) = DATE'$v'")
+      val day = java.sql.Date.valueOf(v)
+      assert(scanned == covering(2, day) { (a, b) =>
+        !a.asInstanceOf[java.sql.Date].after(b.asInstanceOf[java.sql.Date])
+      }, v)
+    }
+    // a NULL key matches nothing; IS NULL keeps only files holding NULLs
+    assert(spark.sql("SELECT id FROM g2.db.ptl WHERE id = NULL").collect()
+      .isEmpty)
+    val nullFiles = same("id IS NULL", "id + 0 IS NULL")
+    assert(nullFiles.size == 1, nullFiles)
+    same("s IS NULL AND d IS NOT NULL", "concat(s, '') IS NULL AND " +
+      "date_add(d, 0) IS NOT NULL")
+  }
+
+  test("old-generation files after a RENAME are never stats-pruned") {
+    spark.sql("CREATE TABLE g2.db.genswap (a INT, c INT)")
+    spark.sql("INSERT INTO g2.db.genswap VALUES (1, 100), (2, 200)")  // v2
+    // the old file's physical `a` now holds the field renamed to x, and
+    // current `a` is its physical `c`: its `a` stats ([1, 2]) describe
+    // another field
+    spark.sql("ALTER TABLE g2.db.genswap RENAME COLUMN a TO x")
+    spark.sql("ALTER TABLE g2.db.genswap RENAME COLUMN c TO a")
+    spark.sql("INSERT INTO g2.db.genswap VALUES (3, 300)")            // v3
+    val q = spark.sql("SELECT x FROM g2.db.genswap WHERE a = 100")
+    assert(q.collect().map(_.getInt(0)).toSeq == Seq(1))
+    assert(spark.sql("SELECT x FROM g2.db.genswap WHERE a = 1")
+      .collect().isEmpty)
+    assert(spark.sql("SELECT a FROM g2.db.genswap WHERE x = 3")
+      .collect().map(_.getInt(0)).toSeq == Seq(300))
+    assert(spark.sql("SELECT count(*) FROM g2.db.genswap WHERE a >= 100")
+      .collect().head.getLong(0) == 3L)
+  }
+
+  test("Snapshots.latest and byVersion agree with list over expired " +
+      "(gapped) versions and a stray commit temp file") {
+    import graft.catalog.Snapshots
+    spark.sql("CREATE TABLE g2.db.snapgap (a INT)")                   // v1
+    (1 to 5).foreach(i => spark.sql(s"INSERT INTO g2.db.snapgap VALUES ($i)"))
+    spark.sql("CALL g2.system.create_tag('db.snapgap', 'keep', 3)")
+    spark.sql("CALL g2.system.expire_snapshots('db.snapgap', 2)").collect()
+    val dir = tdir("snapgap")
+    java.nio.file.Files.writeString(dir.resolve("_graft_snapshots")
+      .resolve(".v00000009.snap.0b1c.tmp"), "not a snapshot")
+    val all = Snapshots.list(dir)
+    assert(all.map(_.version) == Seq(3L, 5L, 6L), all.map(_.version))
+    assert(Snapshots.latest(dir) == all.lastOption)
+    (0L to 10L).foreach { v =>
+      assert(Snapshots.byVersion(dir, v) == all.find(_.version == v), v)
+    }
+  }
+
+  test("equality-delete keys widen under the schema the handle planned " +
+      "with, not under one an ALTER committed later") {
+    import spark.implicits._
+    spark.sql("CREATE TABLE g2.db.eqhandle (k INT, v STRING)")
+    spark.sql("INSERT INTO g2.db.eqhandle VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+    graft.catalog.Maintenance.deleteByKey(spark, "g2.db.eqhandle",
+      Seq(2).toDF("k"))
+    val catalog = org.apache.spark.sql.graftaccess.Internals
+      .catalogPlugin(spark, "g2")
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
+    val ident = org.apache.spark.sql.connector.catalog.Identifier.of(
+      Array("db"), "eqhandle")
+    val handle = catalog.loadTable(ident)
+    spark.sql("ALTER TABLE g2.db.eqhandle ALTER COLUMN k TYPE BIGINT")
+    val viaHandle = org.apache.spark.sql.graftaccess.Internals
+      .tableDf(spark, handle).orderBy("k").collect()
+      .map(r => (r.getInt(0), r.getString(1))).toSeq
+    assert(viaHandle == Seq((1, "a"), (3, "c")), viaHandle)
+    assert(spark.sql("SELECT k FROM g2.db.eqhandle ORDER BY k").collect()
+      .map(_.getLong(0)).toSeq == Seq(1L, 3L))
+  }
 }

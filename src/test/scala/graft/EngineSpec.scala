@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.engine.Engine
@@ -124,6 +126,38 @@ class EngineSpec extends AnyFunSuite {
       .injectedFunctionNames(ext)
     assert(names.contains("date_bin") && names.contains("strpos") &&
       names.contains("regexp_match") && names.size >= 30)
+  }
+
+  test("GraftExtensions plans a stats-answered count(*) and a metadata " +
+      "table projection as one LocalTableScan") {
+    import org.apache.spark.sql.SparkSession
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    TestSpark.spark // the new session shares the running SparkContext
+    val (default, active) = (SparkSession.getDefaultSession,
+      SparkSession.getActiveSession)
+    val s = SparkSession.builder()
+      .withExtensions(new GraftExtensions()).create()
+    try {
+      s.conf.set("spark.sql.catalog.gx", "graft.catalog.MetaCatalog")
+      s.conf.set("spark.sql.catalog.gx.warehouse",
+        java.nio.file.Files.createTempDirectory("graft_wh_gx").toString)
+      s.sql("CREATE NAMESPACE gx.db")
+      s.sql("CREATE TABLE gx.db.t (id BIGINT)")
+      s.sql("INSERT INTO gx.db.t VALUES (1), (2), (3)")
+      def local(sql: String): Boolean =
+        s.sql(sql).queryExecution.executedPlan.isInstanceOf[LocalTableScanExec]
+      assert(local("SELECT count(*) AS n FROM gx.db.t"))
+      assert(s.sql("SELECT count(*) AS n FROM gx.db.t").collect().head
+        .getLong(0) == 3L)
+      assert(local("SELECT version + 1 AS v FROM gx.db.t.snapshots"))
+      assert(!local("SELECT count(*) AS n FROM gx.db.t WHERE id > 1"))
+    } finally {
+      // later suites resolve SparkSession.active to the shared session
+      default.fold(SparkSession.clearDefaultSession())(
+        SparkSession.setDefaultSession)
+      active.fold(SparkSession.clearActiveSession())(
+        SparkSession.setActiveSession)
+    }
   }
 
   test("empty results still carry their schema (lib.rs:282-286)") {
@@ -1101,5 +1135,104 @@ class EngineSpec extends AnyFunSuite {
       assert(err.getMessage.contains(s"GRAFT_MAX_RESULT_BYTES=${n - 1}"),
         err.getMessage)
     } finally sys.props.remove("graft.max.result.bytes")
+  }
+
+  /** `SELECT count(*)` over `table` through the engine: its value and
+    * the call sites of the Spark jobs it started. */
+  private def countWithJobs(t: String, table: String): (Long, Seq[String]) = {
+    var n = -1L
+    val jobs = jobCallSitesDuring {
+      n = engine.executeQuery(t, s"SELECT count(*) AS n FROM $table")
+        ._2.head.getLong(0)
+    }
+    (n, jobs)
+  }
+
+  /** The row count a scan computes (`sum(1)` is no `COUNT(*)`). */
+  private def scannedCount(t: String, table: String): Long =
+    engine.executeQuery(t,
+      s"SELECT coalesce(sum(1), 0) AS n FROM $table")._2.head.getLong(0)
+
+  private def warehouse(t: String, catalog: String): java.nio.file.Path =
+    java.nio.file.Paths.get(engine.session(t).conf
+      .get(s"spark.sql.catalog.$catalog.warehouse"))
+
+  test("an unfiltered count(*) is answered from the stats records with " +
+      "no Spark job: after INSERT, COW DELETE, compact, RENAME, VERSION " +
+      "AS OF, on a branch and on an empty table") {
+    val t = metaSession("sc")
+    def ddl(sql: String): Unit = engine.executeUpdate(t, sql)
+    def fromStats(table: String, expected: Long): Unit = {
+      val (n, jobs) = countWithJobs(t, table)
+      assert(jobs.isEmpty, s"$table started jobs: $jobs")
+      assert(n == expected && n == scannedCount(t, table), s"$table: $n")
+    }
+    try {
+      ddl("CREATE NAMESPACE sc.db")
+      ddl("CREATE TABLE sc.db.c (id BIGINT, k STRING)")            // v1
+      fromStats("sc.db.c", 0L)
+      ddl("INSERT INTO sc.db.c VALUES (1, 'a'), (2, 'b'), (3, 'c')") // v2
+      ddl("INSERT INTO sc.db.c VALUES (4, 'd'), (5, 'e')")         // v3
+      fromStats("sc.db.c", 5L)
+      ddl("DELETE FROM sc.db.c WHERE id = 2")                      // v4
+      fromStats("sc.db.c", 4L)
+      ddl("CALL sc.system.compact('db.c', 'id', 2)")               // v5
+      fromStats("sc.db.c", 4L)
+      ddl("ALTER TABLE sc.db.c RENAME COLUMN k TO tag")
+      ddl("INSERT INTO sc.db.c VALUES (6, 'f')")                   // v6
+      fromStats("sc.db.c", 5L)
+      fromStats("sc.db.c VERSION AS OF 2", 3L)
+      fromStats("sc.db.c VERSION AS OF 1", 0L)
+      ddl("CALL sc.system.create_branch('db.c', 'stage', 3)")
+      ddl("INSERT INTO sc.db.c.branch_stage VALUES (7, 'g'), (8, 'h')")
+      fromStats("sc.db.c.branch_stage", 7L)
+      fromStats("sc.db.c VERSION AS OF 'stage'", 7L)
+      fromStats("sc.db.c", 5L)
+      // several COUNT(*) columns share the one answer
+      val (_, both) = engine.executeQuery(t,
+        "SELECT count(*) AS a, count(1) AS b FROM sc.db.c")
+      assert(both.head.getLong(0) == 5L && both.head.getLong(1) == 5L)
+      val plan = engine.executeQuery(t,
+        "EXPLAIN SELECT count(*) AS n FROM sc.db.c")._2
+        .map(_.getString(0)).mkString("\n")
+      assert(plan.contains("LocalTableScan") && !plan.contains("BatchScan"),
+        plan)
+    } finally engine.closeSession(t)
+  }
+
+  test("count(*) falls back to a scan, with the right answer, under a " +
+      "merge-on-read DELETE, an equality delete and a file whose stats " +
+      "record was removed") {
+    val t = metaSession("sf")
+    def ddl(sql: String): Unit = engine.executeUpdate(t, sql)
+    def scanned(table: String, expected: Long): Unit = {
+      val (n, jobs) = countWithJobs(t, table)
+      assert(jobs.nonEmpty, s"$table was answered without a scan")
+      assert(n == expected && n == scannedCount(t, table), s"$table: $n")
+    }
+    try {
+      ddl("CREATE NAMESPACE sf.db")
+      ddl("CREATE TABLE sf.db.m (id BIGINT, k STRING) " +
+        "TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
+      ddl("INSERT INTO sf.db.m VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+      ddl("DELETE FROM sf.db.m WHERE id = 2")
+      scanned("sf.db.m", 2L)
+      ddl("CREATE TABLE sf.db.e (id BIGINT, k STRING)")
+      ddl("INSERT INTO sf.db.e VALUES (1, 'a'), (2, 'b'), (3, 'c')")
+      ddl("CALL sf.system.delete_by_key('db.e', 'id', '1,3')")
+      scanned("sf.db.e", 1L)
+      ddl("CREATE TABLE sf.db.r (id BIGINT)")
+      ddl("INSERT INTO sf.db.r VALUES (1), (2)")
+      ddl("INSERT INTO sf.db.r VALUES (3)")
+      val (n, jobs) = countWithJobs(t, "sf.db.r")
+      assert(n == 3L && jobs.isEmpty, s"$n $jobs")
+      // drop the newest commit's record: its file has no stats now
+      val statsDir = warehouse(t, "sf").resolve("db/r/_graft_filestats")
+      val newest = scala.util.Using.resource(
+        java.nio.file.Files.list(statsDir))(_.iterator().asScala.toSeq)
+        .filter(_.getFileName.toString.endsWith(".tsv")).maxBy(_.toString)
+      java.nio.file.Files.delete(newest)
+      scanned("sf.db.r", 3L)
+    } finally engine.closeSession(t)
   }
 }

@@ -108,7 +108,7 @@ class FileStatsCacheSpec extends AnyFunSuite {
     val ts = FileStatsCache.forTable(dir, conf)
     for (fs <- filterBattery; f <- files) {
       val live = ParquetStats.mayMatchAll(dir.resolve(f).toString, fs, conf)
-      val viaCache = ts.mayMatchAll(f, fs)
+      val viaCache = ts.mayMatchAll(f, fs, openFooter = true)
       // single-row-group test files: per-file aggregation == per-block,
       // so the verdicts must be IDENTICAL (and in general cached may
       // only ever keep MORE files, never fewer)
@@ -129,7 +129,7 @@ class FileStatsCacheSpec extends AnyFunSuite {
     val files = dataFiles("nofooter")
     val ts = FileStatsCache.forTable(dir, conf)
     val before = ParquetStats.footerOpens.get()
-    for (fs <- filterBattery; f <- files) ts.mayMatchAll(f, fs)
+    for (fs <- filterBattery; f <- files) ts.mayMatchAll(f, fs, openFooter = true)
     for (f <- files) ts.rowCount(f)
     assert(ParquetStats.footerOpens.get() == before,
       "cached prune must not open parquet footers")
@@ -150,9 +150,9 @@ class FileStatsCacheSpec extends AnyFunSuite {
     val files = dataFiles("fallback")
     val before = ParquetStats.footerOpens.get()
     for (f <- files) {
-      assert(ts.mayMatchAll(f, Seq(GreaterThanOrEqual("k", 0))),
+      assert(ts.mayMatchAll(f, Seq(GreaterThanOrEqual("k", 0)), openFooter = true),
         "k >= 0 matches every file")
-      assert(!ts.mayMatchAll(f, Seq(EqualTo("k", -5))), "k = -5 matches none")
+      assert(!ts.mayMatchAll(f, Seq(EqualTo("k", -5)), openFooter = true), "k = -5 matches none")
     }
     assert(ParquetStats.footerOpens.get() > before, "fallback must hit footers")
     // the NEXT commit records only its own files; old ones keep falling back
@@ -175,7 +175,7 @@ class FileStatsCacheSpec extends AnyFunSuite {
     val liveFiles = dataFiles("fold")
     val liveVerdicts = {
       val ts = FileStatsCache.forTable(dir, conf)
-      for (fs <- filterBattery; f <- liveFiles) yield ts.mayMatchAll(f, fs)
+      for (fs <- filterBattery; f <- liveFiles) yield ts.mayMatchAll(f, fs, openFooter = true)
     }
     val (dropped, _) = Maintenance.expireSnapshots(spark, "fsc.db.fold", 1)
     assert(dropped > 0)
@@ -187,11 +187,11 @@ class FileStatsCacheSpec extends AnyFunSuite {
     assert(cached.keySet == liveFiles.toSet,
       s"folded log must hold exactly the live files, got ${cached.keySet}")
     val ts2 = FileStatsCache.forTable(dir, conf)
-    val after = for (fs <- filterBattery; f <- liveFiles) yield ts2.mayMatchAll(f, fs)
+    val after = for (fs <- filterBattery; f <- liveFiles) yield ts2.mayMatchAll(f, fs, openFooter = true)
     assert(after == liveVerdicts, "fold must not change any verdict")
     // and the folded records still serve with zero footer opens
     val before = ParquetStats.footerOpens.get()
-    for (fs <- filterBattery; f <- liveFiles) ts2.mayMatchAll(f, fs)
+    for (fs <- filterBattery; f <- liveFiles) ts2.mayMatchAll(f, fs, openFooter = true)
     assert(ParquetStats.footerOpens.get() == before)
   }
 
@@ -245,17 +245,17 @@ class FileStatsCacheSpec extends AnyFunSuite {
     // multibyte codepoints): equality inside the range keeps, outside
     // prunes — on BOTH files, under UTF8 binary order ('zzz' < 'zü…'
     // because 0xC3 > 0x7A byte-wise, so it only prunes on the ASCII file)
-    assert(ts.mayMatchAll(fHello, Seq(EqualTo("s", "héllo\tworld"))))
-    assert(!ts.mayMatchAll(fHello, Seq(EqualTo("s", "zzz"))))
-    assert(ts.mayMatchAll(fZuri, Seq(EqualTo("s", "züri — ß"))))
-    assert(!ts.mayMatchAll(fZuri, Seq(EqualTo("s", "héllo\tworld"))))
+    assert(ts.mayMatchAll(fHello, Seq(EqualTo("s", "héllo\tworld")), openFooter = true))
+    assert(!ts.mayMatchAll(fHello, Seq(EqualTo("s", "zzz")), openFooter = true))
+    assert(ts.mayMatchAll(fZuri, Seq(EqualTo("s", "züri — ß")), openFooter = true))
+    assert(!ts.mayMatchAll(fZuri, Seq(EqualTo("s", "héllo\tworld")), openFooter = true))
     // Spark semantics: -0.0 == 0.0 — a 0.0 probe must keep the file
-    assert(ts.mayMatchAll(fHello, Seq(EqualTo("x", 0.0d))))
-    assert(!ts.mayMatchAll(fHello, Seq(EqualTo("x", 1.0d))))
+    assert(ts.mayMatchAll(fHello, Seq(EqualTo("x", 0.0d)), openFooter = true))
+    assert(!ts.mayMatchAll(fHello, Seq(EqualTo("x", 1.0d)), openFooter = true))
     // all-null column: IsNull keeps, equality prunes nothing (no min/max
     // stats → conservative keep, same as the footer path)
-    assert(ts.mayMatchAll(fHello, Seq(IsNull("allnull"))))
-    assert(!ts.mayMatchAll(fHello, Seq(IsNull("x"))))
+    assert(ts.mayMatchAll(fHello, Seq(IsNull("allnull")), openFooter = true))
+    assert(!ts.mayMatchAll(fHello, Seq(IsNull("x")), openFooter = true))
     assert(ParquetStats.footerOpens.get() == before, "all served from cache")
   }
 }

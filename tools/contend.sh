@@ -38,23 +38,22 @@ SPARK_DRIVER_MEM=3g ./tools/run.sh graft.ContendMain check "$WH" "$N_W" "$N_B" \
 SPARK_DRIVER_MEM=3g ./tools/run.sh graft.ContendMain victim "$WH" 200 \
   >"$WH.victim.out" 2>"$WH.victim.log" &
 V_PID=$!
-# session startup is ~5-7s; the random extra lands the kill anywhere in
-# the commit loop (a pre-first-commit kill still tests recovery: acked=0)
-sleep $((5 + RANDOM % 8))
+# Wait for the victim's first acknowledged commit, so the kill always
+# lands after at least one: a kill before it would test nothing.
+DEADLINE=$((SECONDS + 180))
+until grep -q "victim committed" "$WH.victim.out" 2>/dev/null; do
+  if ! kill -0 $V_PID 2>/dev/null || [ $SECONDS -ge $DEADLINE ]; then
+    kill -9 $V_PID 2>/dev/null; wait $V_PID 2>/dev/null
+    echo "CONTEND KILL STAGE INVALID: no acknowledged victim commit"
+    tail -5 "$WH.victim.log"; exit 1
+  fi
+  sleep 0.2
+done
+# then a random 0-5.9 s lands the kill anywhere in the commit loop
+sleep "$((RANDOM % 6)).$((RANDOM % 10))"
 kill -9 $V_PID 2>/dev/null
 wait $V_PID 2>/dev/null
 ACKED=$(grep -c "victim committed" "$WH.victim.out")
-# A victim that died at STARTUP (classpath/session error) commits
-# nothing and would make this stage pass vacuously (ADVICE r14): with
-# zero acked commits, require the log to show a healthy Spark bring-up
-# and no exception — otherwise the "kill test" never tested a kill.
-if [ "$ACKED" -eq 0 ]; then
-  if grep -qE 'Exception in thread|Could not find or load main class|NoClassDefFoundError' "$WH.victim.log"; then
-    echo "CONTEND KILL STAGE INVALID: victim failed at startup (acked=0)"
-    tail -5 "$WH.victim.log"; exit 1
-  fi
-  echo "contend: kill landed pre-first-commit (acked=0, startup healthy)"
-fi
 SPARK_DRIVER_MEM=3g ./tools/run.sh graft.ContendMain checkkill "$WH" "$ACKED" \
   2>"$WH.checkkill.log" | grep "CONTEND KILL OK" \
   || { echo "CONTEND KILL CHECK FAILED (acked=$ACKED)"; tail -10 "$WH.checkkill.log"; exit 1; }
