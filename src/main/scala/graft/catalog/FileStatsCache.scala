@@ -8,8 +8,6 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.sources.Filter
 
@@ -79,34 +77,26 @@ object FileStatsCache {
     * as one new stats file. Called by [[Snapshots]] inside the commit
     * lock; MUST never fail the commit — any per-file footer problem
     * skips that file (it falls back to live footer reads at prune
-    * time). Files already covered by an existing record (a WAP branch
-    * file being fast-forwarded onto main) are skipped, not re-read. */
+    * time). `known` holds stats the writer already read from its own
+    * files ([[readStaged]]); only an added file missing from it opens
+    * its footer here. Files already covered by an existing record (a
+    * WAP branch file being fast-forwarded onto main) are skipped, not
+    * re-read. */
   private[catalog] def record(tableDir: Path, version: Long,
-      added: Seq[String], conf: Configuration = sessionConf()): Unit = {
+      added: Seq[String], known: Map[String, FileStat] = Map.empty,
+      conf: Configuration = sessionConf()): Unit = {
     val parquet = added.filter(_.endsWith(".parquet"))
     if (parquet.isEmpty) return
     val existing = load(tableDir)
     val fresh = parquet.filterNot(existing.contains)
     if (fresh.isEmpty) return
-    val futures = fresh.map { rel =>
-      rel -> ParquetStats.footerPool.submit(
-        new java.util.concurrent.Callable[Seq[String]] {
-          override def call(): Seq[String] =
-            recordLines(tableDir, rel, conf).getOrElse(Seq.empty)
-        })
-    }
-    // ONE shared deadline across the batch, not 60 s per future — the
-    // same compounding-timeout reasoning as ParquetStats.footerStats
-    // (a compact can commit hundreds of new files at once)
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    val lines = futures.flatMap { case (_, fut) =>
-      val remaining = math.max(1L, deadline - System.nanoTime())
-      try fut.get(remaining, java.util.concurrent.TimeUnit.NANOSECONDS)
-      catch {
-        case _: java.util.concurrent.TimeoutException => fut.cancel(true); Seq.empty
-        case _: java.util.concurrent.ExecutionException => Seq.empty
-      }
-    }
+    val (given, unread) = fresh.partition(known.contains)
+    // a file past the footer pool's shared deadline gets no record
+    val read = ParquetStats.onFooterPool(unread, late = Some(Seq.empty[String])) { rel =>
+      try linesOf(rel, readStat(tableDir.resolve(rel), conf))
+      catch { case NonFatal(_) => Seq.empty }
+    }.flatten
+    val lines = given.flatMap(rel => linesOf(rel, known(rel))) ++ read
     if (lines.isEmpty) return
     val d = statsDir(tableDir)
     Files.createDirectories(d)
@@ -117,36 +107,43 @@ object FileStatsCache {
     memo.remove(tableDir.toAbsolutePath.toString)
   }
 
-  /** Footer → record lines for one file; None on any read failure (the
-    * file then has no record and prunes via live footer reads). A
-    * genuinely 0-row file gets a record with rows=0 — that is a REAL
-    * stat (prunes everything), distinct from a failed read. */
-  private def recordLines(tableDir: Path, rel: String,
-      conf: Configuration): Option[Seq[String]] =
-    try {
-      val abs = tableDir.resolve(rel)
-      ParquetStats.footerOpens.incrementAndGet()
-      val in = HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(abs.toString), conf)
-      val r = ParquetFileReader.open(in)
-      val footer = try r.getFooter finally r.close()
-      val blocks = footer.getBlocks.asScala.toSeq
-      val rows = blocks.map(_.getRowCount).sum
-      val bytes = Files.size(abs)
-      val relE = enc(rel)
-      val fLine = s"F\t$relE\t$rows\t$bytes"
-      // per-column: aggregate every block's view into one file view
-      val byCol = blocks.flatMap(_.getColumns.asScala.map { c =>
-        (c.getPath.toDotString, (tagOf(c), ParquetStats.viewOf(c)))
-      }).groupBy(_._1)
-      val cLines = byCol.toSeq.sortBy(_._1).flatMap { case (col, entries) =>
-        val tags = entries.map(_._2._1).distinct
-        if (tags.size != 1) None // mixed physical types: unrepresentable
-        else aggregate(tags.head, entries.map(_._2._2))
-          .map(v => colLine(relE, col, tags.head, v))
+  /** The footer stats of the files a write staged, read once each, in
+    * parallel on the footer pool: the commit drops the zero-row files
+    * and hands the rest to [[record]]. Unlike [[record]], a footer that
+    * cannot be read fails the whole pass — the write must publish
+    * nothing rather than drop or half-record a file holding rows. */
+  def readStaged(files: Seq[Path], conf: Configuration): Seq[FileStat] =
+    ParquetStats.onFooterPool(files)(readStat(_, conf))
+
+  /** One file's footer, aggregated per column across row groups; throws
+    * when the footer cannot be read. A genuinely 0-row file gets rows=0
+    * — a REAL stat (prunes everything), distinct from a failed read. */
+  private def readStat(abs: Path, conf: Configuration): FileStat = {
+    val blocks = ParquetStats.openFooter(abs.toString, conf)
+      .getBlocks.asScala.toSeq
+    // per-column: aggregate every block's view into one file view
+    val byCol = blocks.flatMap(_.getColumns.asScala.map { c =>
+      (c.getPath.toDotString, (tagOf(c), ParquetStats.viewOf(c)))
+    }).groupBy(_._1)
+    val cols = byCol.flatMap { case (col, entries) =>
+      val tags = entries.map(_._2._1).distinct
+      if (tags.size != 1) None // mixed physical types: unrepresentable
+      else aggregate(tags.head, entries.map(_._2._2))
+        .map(v => col -> ColRec(tags.head, v))
+    }
+    FileStat(blocks.map(_.getRowCount).sum, Files.size(abs), cols)
+  }
+
+  /** One file's record lines — the F line, then its C lines by column.
+    * Shared by [[record]] and [[compactTo]], which must serialize
+    * identically or a fold would corrupt records. */
+  private def linesOf(rel: String, fs: FileStat): Seq[String] = {
+    val relE = enc(rel)
+    s"F\t$relE\t${fs.rows}\t${fs.bytes}" +:
+      fs.cols.toSeq.sortBy(_._1).map { case (col, r) =>
+        colLine(relE, col, r.tag, r.view)
       }
-      Some(fLine +: cLines)
-    } catch { case NonFatal(_) => None }
+  }
 
   /** Fold block views into one per-file view; None when the column's
     * stats can't be represented (it then simply has no cached entry →
@@ -221,9 +218,7 @@ object FileStatsCache {
     }
   }
 
-  /** ONE C-line emitter shared by [[recordLines]] and [[compactTo]] —
-    * the two must serialize identically or a fold would corrupt
-    * records. */
+  /** The C-line emitter of [[linesOf]]. */
   private def colLine(relE: String, col: String, tag: String,
       v: ColView): String = {
     val ann =
@@ -348,7 +343,7 @@ object FileStatsCache {
         case Some(fs) =>
           if (fs.rows == 0L) false // no rows at all
           else ParquetStats.mayMatchAllViews(
-            n => fs.cols.get(n).map(_.view), filters)
+            n => fs.cols.get(n).map(_.view), fs.rows, filters)
         case None => !openFooter ||
           ParquetStats.mayMatchAll(tableDir.resolve(rel).toString, filters, conf)
       }
@@ -383,11 +378,7 @@ object FileStatsCache {
     val merged = load(tableDir).filter { case (rel, _) => live.contains(rel) }
     if (merged.nonEmpty) {
       val lines = merged.toSeq.sortBy(_._1).flatMap { case (rel, fs) =>
-        val relE = enc(rel)
-        val fLine = s"F\t$relE\t${fs.rows}\t${fs.bytes}"
-        fLine +: fs.cols.toSeq.sortBy(_._1).map { case (col, r) =>
-          colLine(relE, col, r.tag, r.view)
-        }
+        linesOf(rel, fs)
       }
       val name = s"m_${java.util.UUID.randomUUID().toString.take(8)}.tsv"
       val tmp = d.resolve(s".$name.tmp")

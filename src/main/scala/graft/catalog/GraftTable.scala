@@ -170,11 +170,17 @@ class GraftTable private[catalog] (
     * no snapshot, any delete file (position or equality), or a data
     * file without a record. */
   private def recordedRowCount(snap: Option[Snapshots.Snap]): Option[Long] =
-    snap.filter(_.deleteFiles.isEmpty).flatMap { s =>
-      val recorded = FileStatsCache.load(tableDir)
-      s.dataFiles.foldLeft(Option(0L))((acc, f) =>
-        acc.flatMap(n => recorded.get(f).map(n + _.rows)))
-    }
+    snap.filter(_.deleteFiles.isEmpty)
+      .flatMap(s => recordedSum(s.dataFiles)(_.rows))
+
+  /** `field` summed over the stats records of `files`; None when one of
+    * them has no record. */
+  private def recordedSum(files: Seq[String])(
+      field: FileStatsCache.FileStat => Long): Option[Long] = {
+    val recorded = FileStatsCache.load(tableDir)
+    files.foldLeft(Option(0L))((acc, f) =>
+      acc.flatMap(n => recorded.get(f).map(n + field(_))))
+  }
 
   /** Whether row-level DELETEs on this table write position-delete
     * sidecars instead of rewriting files (Iceberg v2's
@@ -212,11 +218,11 @@ class GraftTable private[catalog] (
 
   /** Commit the next snapshot of THIS handle's lineage: the branch's
     * private log for a WAP staging handle, the main log otherwise. */
-  private def commitVisible(
+  private def commitVisible(known: Map[String, FileStatsCache.FileStat])(
       compute: Option[Snapshots.Snap] => Seq[String]): Snapshots.Snap =
     branch match {
-      case Some(b) => Snapshots.commitToBranch(tableDir, b)(compute)
-      case None => Snapshots.commitWith(tableDir)(compute)
+      case Some(b) => Snapshots.commitToBranch(tableDir, b, known)(compute)
+      case None => Snapshots.commitWith(tableDir, known)(compute)
     }
 
   /** The merge-on-read position index for the given sidecars, keyed by
@@ -363,25 +369,23 @@ class GraftTable private[catalog] (
 
   private def delegateFor(files: Seq[String],
       schema: StructType = declaredSchema): ParquetTable = {
-    // Empty snapshot (fresh table, TRUNCATE, or time travel to v1): scan a
-    // dedicated empty dir — scanning data/ would leak files committed by
-    // LATER snapshots into the pinned view.
-    val paths = if (files.nonEmpty) files else {
-      val empty = dataDir.resolve("_graft_empty") // under basePath; underscore
-      Files.createDirectories(empty)              // dirs are invisible to scans
-      Seq(empty.toString)
-    }
     // basePath keeps hive-style partition-dir inference rooted at data/
     // even though we hand the index leaf files, not the directory.
     // The pinned zone (when the spec needs one) also governs how
     // TIMESTAMP identity-partition dir VALUES parse: without it,
     // the reader would interpret `ts=2024-01-01 10%3A00%3A00` in its
     // own session zone and serve different instants than were written.
+    // An empty snapshot (fresh table, TRUNCATE, or time travel to v1)
+    // hands the index no file and no root path, so it lists nothing —
+    // never files committed by LATER snapshots.
     val opts = new CaseInsensitiveStringMap(
       (Map("basePath" -> dataDir.toString) ++
         effectiveZone.map("timeZone" -> _)).asJava)
-    ParquetTable(fullName, spark, opts, paths,
-      Some(schema), classOf[ParquetFileFormat])
+    new KnownFilesParquetTable(fullName, spark, opts, Some(schema),
+      ParquetStats.onFooterPool(files) { f =>
+        val p = new org.apache.hadoop.fs.Path(f)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(p)
+      })
   }
 
   override def name(): String = fullName
@@ -537,7 +541,7 @@ class GraftTable private[catalog] (
     // the key. An unfiltered COUNT(*) is answered from the records.
     new org.apache.spark.sql.graftaccess.HiddenPruneScans.Builder(
       dataRel, (files, v1) => mayMatchFiles(files, v1, openFooters = false),
-      assemble, () => recordedRowCount(snap))
+      assemble, () => recordedRowCount(snap), recordedSum(_)(_.bytes))
   }
 
   // --- write (V1 fallback: full commit control, still distributed) ------
@@ -559,16 +563,15 @@ class GraftTable private[catalog] (
     }
   }
 
-  /** Run `write` into a scratch dir, drop its zero-row part files, then
-    * publish the rest in ONE snapshot ([[publishAndCommit]]); the
-    * scratch dir is removed whatever happens. */
+  /** Run `write` into a scratch dir, then publish its files in ONE
+    * snapshot ([[publishAndCommit]]); the scratch dir is removed
+    * whatever happens. */
   private def stagedCommit(overwrite: Boolean,
       replacedBase: Option[Seq[String]], destRoot: Option[Path] = None,
       knownDeletes: Option[Seq[String]] = None)(write: Path => Unit): Unit = {
     val tmp = Files.createTempDirectory("graft_commit_")
     try {
       write(tmp)
-      stripZeroRowParts(tmp)
       publishAndCommit(tmp, overwrite, replacedBase, destRoot = destRoot,
         knownDeletes = knownDeletes)
     } finally dropRecursively(tmp)
@@ -588,21 +591,33 @@ class GraftTable private[catalog] (
       knownDeletes: Option[Seq[String]] = None): Unit =
     stagedCommit(overwrite, replacedBase, knownDeletes = knownDeletes) { tmp =>
       val aligned = data.toDF(declaredSchema.fieldNames.toSeq: _*)
+      // rows already held in driver memory (INSERT … VALUES: a cast
+      // projection over a LocalRelation) go to ONE write task: more
+      // tasks would only mean more small files for every later scan,
+      // DELETE and compact to open
+      val local = data.queryExecution.analyzed match {
+        case org.apache.spark.sql.catalyst.planning.PhysicalOperation(_, _,
+            _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation) => true
+        case _ => false
+      }
       // hidden transforms derive their dir column here; the derived
       // value lives ONLY in directory names (partitionBy drops it from
       // the written files, and reads never request it)
       val laid0 =
-        PartitionTransforms.withDerived(partSpec, aligned, effectiveZone)
+        PartitionTransforms.withDerived(partSpec,
+          if (local) aligned.coalesce(1) else aligned, effectiveZone)
       // declared sort order: range-distribute on (partition dirs, sort
       // cols) and sort within tasks — dir-clustered, range-disjoint,
-      // internally sorted files whose footer stats actually prune
+      // internally sorted files whose footer stats actually prune; a
+      // one-task local input is one range already
       val laid = writeOrderCols match {
         case Seq() => laid0
         case cols =>
           import org.apache.spark.sql.functions.col
           val keys = (PartitionTransforms.dirColumns(partSpec) ++ cols)
             .map(col)
-          laid0.repartitionByRange(keys: _*).sortWithinPartitions(keys: _*)
+          (if (local) laid0 else laid0.repartitionByRange(keys: _*))
+            .sortWithinPartitions(keys: _*)
       }
       // the pinned zone also governs how TIMESTAMP identity-partition
       // dir values RENDER — FileFormatWriter casts partition
@@ -614,21 +629,6 @@ class GraftTable private[catalog] (
       else w)
         .parquet(tmp.toString)
     }
-
-  /** The V1 writer emits a zero-row part file for an empty frame (a
-    * rewrite whose pruned files left no survivors). Committing it
-    * would inflate every later snapshot's file inventory — Iceberg
-    * skips empty files; so do we. Footer reads are bounded by the
-    * write's own output size. */
-  private def stripZeroRowParts(tmp: Path): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    scala.util.Using.resource(Files.walk(tmp)) { st =>
-      st.iterator().asScala
-        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-        .filter(p => ParquetStats.rowCount(p.toString, conf) == 0L)
-        .toList.foreach(Files.deleteIfExists(_))
-    }
-  }
 
   private def dropRecursively(dir: Path): Unit =
     if (Files.exists(dir)) {
@@ -690,20 +690,42 @@ class GraftTable private[catalog] (
       destRoot: Option[Path] = None,
       knownDeletes: Option[Seq[String]] = None): Unit = {
     val destDir = destRoot.getOrElse(dataDir)
+    // ONE footer read per written file, before the lock: zero-row parts
+    // (the V1 writer emits one for an empty frame, e.g. a rewrite whose
+    // pruned files left no survivors) are not published — Iceberg skips
+    // empty files too — and the rest hand their stats to the commit's
+    // record. An unreadable footer fails the write before anything
+    // moves. `only`: publish just the task-committed files (V2 writes)
+    // — stragglers from attempts that died without abort() must not
+    // sneak into the snapshot.
+    val staged = scala.util.Using.resource(Files.walk(tmp)) { st =>
+      st.iterator().asScala
+        .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
+        .filter(p => only.forall(_.contains(p)))
+        .toList
+    }
+    val planned = staged
+      .zip(FileStatsCache.readStaged(staged,
+        spark.sparkContext.hadoopConfiguration))
+      .collect { case (p, fs) if fs.rows > 0 =>
+        (p, tableDir.relativize(destDir.resolve(tmp.relativize(p))).toString,
+          fs)
+      }
     // The tmp→data move runs EXACTLY ONCE even though the CAS compute
     // closure can run several times: a commit that loses the
     // cross-process createLink race retries with a fresh `latest`, and
-    // re-walking tmp on that retry would find NOTHING (the files moved
-    // on attempt 1) — the snapshot would commit an empty append and the
-    // write would be silently lost. tools/contend.sh caught exactly
+    // that retry must list the files moved on attempt 1 (a retry that
+    // re-walked tmp found NOTHING, committed an empty append and lost
+    // the write silently). tools/contend.sh caught exactly
     // this: two JVMs racing INSERTs dropped ~1 row in 16. (In ONE JVM
     // the casCommit monitor serializes commits, so the retry path never
     // ran and the hole was invisible to in-process tests.) A stale-base
     // abort AFTER the move leaves the moved files as snapshot-less
     // orphans in data/ — remove_orphan_files reclaims them, same as any
     // crashed write.
-    var movedOnce: Option[Seq[String]] = None
-    commitVisible { latest =>
+    var movedOnce = false
+    commitVisible(planned.map { case (_, rel, fs) => rel -> fs }.toMap) {
+        latest =>
       // Inside the table lock: ALTER holds the same lock for its whole
       // schema-metadata transaction, so a mid-write RENAME/DROP is
       // caught here (abort + retry) instead of silently misclassifying
@@ -752,25 +774,15 @@ class GraftTable private[catalog] (
             "rewrite read its base snapshot; the rewritten files would " +
             "resurrect the masked rows — retry the operation")
       }
-      val moved = movedOnce.getOrElse {
-        val m = scala.util.Using.resource(Files.walk(tmp)) { st =>
-          st.iterator().asScala
-            .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
-            // `only`: publish just the task-committed files (V2 writes) —
-            // stragglers from attempts that died without abort() must not
-            // sneak into the snapshot
-            .filter(p => only.forall(_.contains(p)))
-            .map { p =>
-              val rel = tmp.relativize(p)
-              val dest = destDir.resolve(rel)
-              Files.createDirectories(dest.getParent)
-              Files.move(p, dest)
-              tableDir.relativize(dest).toString
-            }.toSeq
+      if (!movedOnce) {
+        planned.foreach { case (p, rel, _) =>
+          val dest = tableDir.resolve(rel)
+          Files.createDirectories(dest.getParent)
+          Files.move(p, dest)
         }
-        movedOnce = Some(m)
-        m
+        movedOnce = true
       }
+      val moved = planned.map(_._2)
       val prev = (overwrite, replacedBase) match {
         case (true, Some(base)) => // surgical rewrite: drop base only
           latest.map(_.files).getOrElse(Seq.empty).diff(base)
@@ -1108,6 +1120,37 @@ class GraftTable private[catalog] (
     commitWrite(survivors, overwrite = true,
       replacedBase = Some(if (baseSnap.isDefined) touched else baseData),
       knownDeletes = Some(baseDeletes))
+  }
+}
+
+/** A `ParquetTable` over leaf files whose statuses the caller already
+  * holds. Its file index finds every file in its status cache, so it
+  * neither checks nor lists a path: above
+  * `spark.sql.sources.parallelPartitionDiscovery.threshold` files the
+  * plain index starts a Spark job to list what the snapshot already
+  * names. The statuses are real (`_metadata.file_size` and
+  * `file_modification_time` come from them); they carry no block
+  * locations, which only hint task placement. */
+private[catalog] final class KnownFilesParquetTable(name: String,
+    spark: SparkSession, options: CaseInsensitiveStringMap,
+    schema: Option[StructType],
+    files: Seq[org.apache.hadoop.fs.FileStatus])
+    extends ParquetTable(name, spark, options,
+      files.map(_.getPath.toString), schema, classOf[ParquetFileFormat]) {
+  override lazy val fileIndex
+      : org.apache.spark.sql.execution.datasources.PartitioningAwareFileIndex = {
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    val known = files.map(f => f.getPath -> Array(f)).toMap
+    val cache = new org.apache.spark.sql.execution.datasources.FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] =
+        known.get(path)
+      override def putLeafFiles(path: Path, leafFiles: Array[FileStatus])
+          : Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(spark,
+      files.map(_.getPath), options.asCaseSensitiveMap.asScala.toMap, schema,
+      cache)
   }
 }
 

@@ -4,6 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -28,15 +29,23 @@ object ParquetStats {
     * rewrite, dominates a narrow DELETE/MERGE's driver time). */
   private[graft] val footerOpens = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Open `file`'s footer with the caller's Hadoop conf. The conf goes
+    * into the read options too: parquet's default options build a fresh
+    * `Configuration`, which re-parses the Hadoop default resources on
+    * every open. */
+  def openFooter(file: String,
+      conf: Configuration): org.apache.parquet.hadoop.metadata.ParquetMetadata = {
+    footerOpens.incrementAndGet()
+    val path = new Path(file)
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+      HadoopReadOptions.builder(conf, path).build())
+    try r.getFooter finally r.close()
+  }
+
   /** Footer row count (sum of row-group counts); 0 when unreadable. */
   def rowCount(file: String, conf: Configuration): Long =
-    try {
-      footerOpens.incrementAndGet()
-      val in = HadoopInputFile.fromPath(new Path(file), conf)
-      val r = ParquetFileReader.open(in)
-      try r.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-      finally r.close()
-    } catch { case _: Exception => 0L }
+    try openFooter(file, conf).getBlocks.asScala.map(_.getRowCount).sum
+    catch { case _: Exception => 0L }
 
   /** ONE shared daemon pool for footer I/O, created lazily and reused
     * across every `.files`/`.partitions` metadata scan — a fresh pool
@@ -49,55 +58,60 @@ object ParquetStats {
       math.min(16, math.max(2, Runtime.getRuntime.availableProcessors())),
       r => { val t = new Thread(r, "graft-footer-io"); t.setDaemon(true); t })
 
+  /** `f` over `xs` on [[footerPool]], results in order, under ONE
+    * shared 60 s deadline — not 60 s per element: with the pool wedged,
+    * a per-element timeout would compound to n_files × 60 s. The first
+    * failure is thrown as an IOException naming its element, and the
+    * rest are cancelled. An element past the deadline is cancelled too
+    * (a queued task is removed, a running one interrupted, so it stops
+    * holding a shared pool thread); it then yields `late` when one is
+    * given, and otherwise fails the batch the same way. Callers that
+    * degrade per element catch inside `f` and pass `late`. Residual
+    * risk: a task that ignores interruption keeps its pool thread —
+    * storage where opens genuinely hang should front the filesystem
+    * with its own client-side timeouts. */
+  private[catalog] def onFooterPool[A, B](xs: Seq[A], late: Option[B] = None)(
+      f: A => B): Seq[B] = {
+    import java.util.concurrent.{Callable, ExecutionException, TimeUnit, TimeoutException}
+    val futures = xs.map(x => footerPool.submit(new Callable[B] {
+      override def call(): B = f(x)
+    }))
+    val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(60)
+    try xs.zip(futures).map { case (x, fut) =>
+      try fut.get(math.max(1L, deadline - System.nanoTime()), TimeUnit.NANOSECONDS)
+      catch {
+        case e: ExecutionException =>
+          throw new java.io.IOException(s"$x: ${e.getCause}", e.getCause)
+        case e: TimeoutException =>
+          fut.cancel(true)
+          late.getOrElse(throw new java.io.IOException(s"$x: timed out", e))
+      }
+    } finally futures.foreach(_.cancel(true))
+  }
+
   /** Per-file (footer row count, on-disk size) for a snapshot's file
-    * list, fetched on [[footerPool]]. A single unreadable file — e.g.
+    * list: the commit-time stats record where there is one, else a
+    * footer read on [[footerPool]]. A single unreadable file — e.g.
     * removed by a concurrent expire/orphan sweep between listing and
-    * stat — degrades to (0, 0) like [[rowCount]] already does, instead
-    * of failing the whole metadata query (ADVICE r12). */
+    * stat — or one past the pool's deadline degrades to (0, 0) like
+    * [[rowCount]] already does, instead of failing the whole metadata
+    * query (ADVICE r12). */
   private[catalog] def footerStats(tableDir: java.nio.file.Path,
       files: Seq[String], conf: Configuration): Map[String, (Long, Long)] = {
-    // commit-time stats cache first: only files WITHOUT a record (pre-
-    // cache commits) pay a live footer open
     val cachedAll = FileStatsCache.load(tableDir)
     val cachedHits = files.flatMap(f =>
       cachedAll.get(f).map(s => f -> (s.rows, s.bytes))).toMap
     val misses = files.filterNot(cachedHits.contains)
     if (misses.isEmpty) return cachedHits
-    val futures = misses.map { f =>
-      f -> footerPool.submit(new java.util.concurrent.Callable[(Long, Long)] {
-        override def call(): (Long, Long) = {
-          val p = tableDir.resolve(f)
-          val rows = rowCount(p.toString, conf) // catches internally → 0
-          val bytes =
-            try java.nio.file.Files.size(p)
-            catch { case _: java.io.IOException => 0L }
-          (rows, bytes)
-        }
-      })
+    val read = onFooterPool(misses, late = Some((0L, 0L))) { f =>
+      val p = tableDir.resolve(f)
+      val rows = rowCount(p.toString, conf) // catches internally → 0
+      val bytes =
+        try java.nio.file.Files.size(p)
+        catch { case _: java.io.IOException => 0L }
+      (rows, bytes)
     }
-    // ONE SHARED deadline, not 60 s per future: with the pool wedged, a
-    // per-future timeout would compound to n_files × 60 s (hours at
-    // 100k files — the round-13 second review); the whole map returns
-    // within ~60 s, each unfinished file degraded to (0, 0) like any
-    // other read failure. Residual risk: a task that never returns
-    // keeps its shared pool thread — ≥16 permanently hung opens would
-    // still starve later scans; storage where opens genuinely hang
-    // should front the filesystem with its own client-side timeouts.
-    val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-    futures.map { case (f, fut) =>
-      val remaining = math.max(1L, deadline - System.nanoTime())
-      f -> (try fut.get(remaining, java.util.concurrent.TimeUnit.NANOSECONDS)
-        catch {
-          case _: java.util.concurrent.TimeoutException =>
-            // cancel the straggler: a QUEUED task is removed outright and
-            // a RUNNING one interrupted — without this, tasks stuck behind
-            // a wedged open keep occupying (and later uselessly executing
-            // on) the SHARED pool's threads, delaying the next metadata
-            // scan past the deadline this map already paid (ADVICE r13)
-            fut.cancel(true); (0L, 0L)
-          case _: java.util.concurrent.ExecutionException => (0L, 0L)
-        })
-    }.toMap ++ cachedHits
+    misses.zip(read).toMap ++ cachedHits
   }
 
   /** Per-column statistics view — the shared shape [[mayMatch]] reasons
@@ -146,12 +160,8 @@ object ParquetStats {
   def mayMatchAll(file: String, filters: Seq[Filter],
       conf: Configuration): Boolean = {
     if (filters.isEmpty) return true
-    footerOpens.incrementAndGet()
-    val footer = try {
-      val in = HadoopInputFile.fromPath(new Path(file), conf)
-      val r = ParquetFileReader.open(in)
-      try r.getFooter finally r.close()
-    } catch { case _: Exception => return true }
+    val footer = try openFooter(file, conf)
+      catch { case _: Exception => return true }
     val blocks = footer.getBlocks.asScala
     if (blocks.isEmpty) return false // zero row groups: no rows at all
     // a row matching the AND must live in SOME row group matching every
@@ -160,7 +170,7 @@ object ParquetStats {
       val cols = block.getColumns.asScala.map { c =>
         c.getPath.toDotString -> viewOf(c)
       }.toMap
-      filters.forall { f => mayMatch(f, cols.get _) }
+      mayMatchAllViews(cols.get _, block.getRowCount, filters)
     }
   }
 
@@ -171,22 +181,32 @@ object ParquetStats {
     * block's), so a cached verdict can only keep a superset of what the
     * live footer pass keeps — never prune a file the footer would
     * rewrite. */
-  private[catalog] def mayMatchAllViews(col: ViewLookup,
+  private[catalog] def mayMatchAllViews(col: ViewLookup, rows: Long,
       filters: Seq[Filter]): Boolean =
-    filters.forall(f => mayMatch(f, col))
+    filters.forall(f => mayMatch(f, col, rows))
 
-  private def mayMatch(f: Filter, col: ViewLookup): Boolean = f match {
-    case EqualTo(a, v) => rangeOverlaps(col(a), v, v)
-    case GreaterThan(a, v) => maxAbove(col(a), v, strict = true)
-    case GreaterThanOrEqual(a, v) => maxAbove(col(a), v, strict = false)
-    case LessThan(a, v) => minBelow(col(a), v, strict = true)
-    case LessThanOrEqual(a, v) => minBelow(col(a), v, strict = false)
-    case In(a, vs) => vs.exists(v => rangeOverlaps(col(a), v, v))
-    case IsNull(a) => col(a).forall(v => v.numNulls.forall(_ > 0))
-    case And(l, r) => mayMatch(l, col) && mayMatch(r, col)
-    case Or(l, r) => mayMatch(l, col) || mayMatch(r, col)
-    case AlwaysFalse() => false
-    case _ => true // Not, string matchers, unknown: conservative
+  /** `rows` is the row count the views cover: a column whose null count
+    * equals it holds no value, so no comparison and no IS NOT NULL can
+    * match. */
+  private def mayMatch(f: Filter, col: ViewLookup, rows: Long): Boolean = {
+    def valued(a: String): Boolean =
+      col(a).forall(v => rows <= 0 || !v.numNulls.contains(rows))
+    f match {
+      case EqualTo(a, v) => valued(a) && rangeOverlaps(col(a), v, v)
+      case GreaterThan(a, v) => valued(a) && maxAbove(col(a), v, strict = true)
+      case GreaterThanOrEqual(a, v) =>
+        valued(a) && maxAbove(col(a), v, strict = false)
+      case LessThan(a, v) => valued(a) && minBelow(col(a), v, strict = true)
+      case LessThanOrEqual(a, v) =>
+        valued(a) && minBelow(col(a), v, strict = false)
+      case In(a, vs) => valued(a) && vs.exists(v => rangeOverlaps(col(a), v, v))
+      case IsNull(a) => col(a).forall(v => v.numNulls.forall(_ > 0))
+      case IsNotNull(a) => valued(a)
+      case And(l, r) => mayMatch(l, col, rows) && mayMatch(r, col, rows)
+      case Or(l, r) => mayMatch(l, col, rows) || mayMatch(r, col, rows)
+      case AlwaysFalse() => false
+      case _ => true // Not, string matchers, unknown: conservative
+    }
   }
 
   /** [lo, hi] of the filter value overlaps the chunk's [min, max]. */

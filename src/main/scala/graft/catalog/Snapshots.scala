@@ -311,9 +311,13 @@ object Snapshots {
     * `createLink` CAS stays as belt-and-braces: it FAILS with
     * FileAlreadyExistsException when the version file exists (unlike
     * POSIX ATOMIC_MOVE, which silently replaces an existing target), so
-    * even a lock-bypassing writer cannot clobber a committed version. */
-  def commitWith(tableDir: Path)(compute: Option[Snap] => Seq[String]): Snap =
-    casCommit(tableDir, dir(tableDir), () => latest(tableDir))(compute)
+    * even a lock-bypassing writer cannot clobber a committed version.
+    * `known`: footer stats the writer already read for files it adds,
+    * recorded without a second read ([[FileStatsCache.record]]). */
+  def commitWith(tableDir: Path,
+      known: Map[String, FileStatsCache.FileStat] = Map.empty)(
+      compute: Option[Snap] => Seq[String]): Snap =
+    casCommit(tableDir, dir(tableDir), () => latest(tableDir), known)(compute)
 
   /** The shared CAS append loop: `head` re-reads the current tip of the
     * target log each attempt (main log, or a branch log falling back to
@@ -321,7 +325,7 @@ object Snapshots {
     * top of it. Runs under the table's refs lock (reentrant for the
     * rollback/fast-forward callers that already hold it). */
   private def casCommit(tableDir: Path, logDir: Path,
-      head: () => Option[Snap])(
+      head: () => Option[Snap], known: Map[String, FileStatsCache.FileStat])(
       compute: Option[Snap] => Seq[String]): Snap =
     withRefsLock(tableDir) {
       Files.createDirectories(logDir)
@@ -348,7 +352,7 @@ object Snapshots {
           try {
             val prevSet = prev.map(_.files.toSet).getOrElse(Set.empty)
             FileStatsCache.record(tableDir, next,
-              files.filterNot(prevSet.contains))
+              files.filterNot(prevSet.contains), known)
           } catch {
             case scala.util.control.NonFatal(_) => ()
             case _: InterruptedException =>
@@ -473,7 +477,8 @@ object Snapshots {
 
   /** Stage a commit on a branch: same read-compute-CAS as [[commitWith]]
     * but against the branch's private log; main is untouched. */
-  def commitToBranch(tableDir: Path, name: String)(
+  def commitToBranch(tableDir: Path, name: String,
+      known: Map[String, FileStatsCache.FileStat] = Map.empty)(
       compute: Option[Snap] => Seq[String]): Snap = {
     val ref = branches(tableDir).find(_.name == name).getOrElse(
       throw new IllegalArgumentException(
@@ -481,7 +486,7 @@ object Snapshots {
           branches(tableDir).map(_.name).mkString("[", ",", "]") + ")"))
     casCommit(tableDir, branchLog(tableDir, name), () =>
       lastOfLog(branchLog(tableDir, name))
-        .orElse(byVersion(tableDir, ref.version)))(compute)
+        .orElse(byVersion(tableDir, ref.version)), known)(compute)
   }
 
   /** Publish a branch: append its head's file list as the next MAIN

@@ -6,6 +6,7 @@ import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountS
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{LocalScan, Scan, ScanBuilder, SupportsPushDownAggregates, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.execution.datasources.DataSourceStrategy
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -28,14 +29,27 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * filter, is answered by `countRows` (the pinned snapshot's summed
   * stats-record row counts) as a one-row [[LocalScan]]; when
   * `countRows` declines (None), Spark plans the normal scan. Any other
-  * aggregate is offered to the delegate over every file. */
+  * aggregate is offered to the delegate over every file.
+  *
+  * A built scan whose spread over cores buys no parallelism is marked
+  * [[LocalScans.SingleTaskScan]]: every file has a stats record
+  * (`recordedBytes` answers), the recorded bytes are at most
+  * `spark.sql.files.openCostInBytes` — Spark never makes a split
+  * smaller than that, so such a payload is one split's worth of reading
+  * and the spread over `minPartitionNum` would only parallelize file
+  * opens — and the bytes plus `openCostInBytes` per file stay within
+  * `spark.sql.files.maxPartitionBytes`, so `FilePartition` packing
+  * without that spread puts every file in one split. A larger table
+  * keeps Spark's split per core. A file without a record has an
+  * unknown size, and its scan plans as any other. */
 object HiddenPruneScans {
 
   final class Builder(
       allFiles: Seq[String],
       pruneFiles: (Seq[String], Seq[Filter]) => Seq[String],
       mkDelegate: Seq[String] => ScanBuilder,
-      countRows: () => Option[Long])
+      countRows: () => Option[Long],
+      recordedBytes: Seq[String] => Option[Long])
       extends ScanBuilder
       with SupportsPushDownRequiredColumns
       with SupportsPushDownCatalystFilters
@@ -100,12 +114,13 @@ object HiddenPruneScans {
         override def description(): String = s"graft stats count ($n rows)"
       }
       case None =>
-        val delegate = unfiltered.getOrElse {
+        val files = if (unfiltered.isDefined) allFiles else {
           val v1 = filters.flatMap(f =>
             DataSourceStrategy.translateFilter(f,
               supportNestedPredicatePushdown = true))
-          mkDelegate(pruneFiles(allFiles, v1))
+          pruneFiles(allFiles, v1)
         }
+        val delegate = unfiltered.getOrElse(mkDelegate(files))
         delegate match {
           case p: SupportsPushDownCatalystFilters => p.pushFilters(filters)
           case _ => ()
@@ -115,7 +130,17 @@ object HiddenPruneScans {
             required.foreach(p.pruneColumns)
           case _ => ()
         }
-        delegate.build()
+        val scan = delegate.build()
+        if (LocalScans.active && oneSplit(files)) LocalScans.SingleTaskScan(scan)
+        else scan
+    }
+
+    private def oneSplit(files: Seq[String]): Boolean = {
+      val conf = SQLConf.get
+      recordedBytes(files).exists(bytes =>
+        bytes <= conf.filesOpenCostInBytes &&
+          bytes + conf.filesOpenCostInBytes * files.length <=
+            conf.filesMaxPartitionBytes)
     }
   }
 }

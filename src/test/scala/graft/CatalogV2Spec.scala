@@ -1095,7 +1095,9 @@ class CatalogV2Spec extends AnyFunSuite {
   test("changelog reads only the rows that changed between versions") {
     import graft.catalog.Changelog
     spark.sql("CREATE TABLE g2.db.cdc (a INT, grp STRING)")       // v1
-    spark.sql("INSERT INTO g2.db.cdc VALUES (1,'k'), (2,'d')")    // v2
+    // one file per row: an INSERT … VALUES would write both to one file
+    spark.sql("INSERT INTO g2.db.cdc SELECT CAST(id AS INT), " +
+      "IF(id = 1, 'k', 'd') FROM range(1, 3, 1, 2)")              // v2
     spark.sql("INSERT INTO g2.db.cdc VALUES (3,'k')")             // v3
     spark.sql("DELETE FROM g2.db.cdc WHERE grp = 'd'")            // v4: COW
     def rows(from: Long, to: Long) =
@@ -3497,9 +3499,11 @@ class CatalogV2Spec extends AnyFunSuite {
                date_add(DATE'2024-01-01', CAST(id AS INT))
         FROM range(${c * 40}, ${c * 40 + 40})""")
     }
-    spark.sql("INSERT INTO g2.db.ptl VALUES (NULL, NULL, NULL), " +
-      "(500, NULL, DATE'2030-06-01')")
+    spark.sql("INSERT INTO g2.db.ptl VALUES (NULL, NULL, NULL)")
     val dir = tdir("ptl")
+    val nullFile = java.nio.file.Paths.get(
+      graft.catalog.Snapshots.latest(dir).get.dataFiles.last).getFileName.toString
+    spark.sql("INSERT INTO g2.db.ptl VALUES (500, NULL, DATE'2030-06-01')")
     val live = graft.catalog.Snapshots.latest(dir).get.dataFiles
     // each file's real [min, max] per column, read from its rows
     val ranges: Map[String, Seq[(Any, Any)]] = live.map { f =>
@@ -3509,10 +3513,10 @@ class CatalogV2Spec extends AnyFunSuite {
       java.nio.file.Paths.get(f).getFileName.toString ->
         (0 until 3).map(i => (r.get(2 * i), r.get(2 * i + 1)))
     }.toMap
-    // a file whose column is all NULL has no recorded range and is kept
+    // a file whose column is all NULL holds no value to compare: pruned
     def covering(col: Int, key: Any)(lte: (Any, Any) => Boolean): Set[String] =
-      ranges.collect { case (f, rs) if rs(col)._1 == null ||
-          (lte(rs(col)._1, key) && lte(key, rs(col)._2)) => f }.toSet
+      ranges.collect { case (f, rs) if rs(col)._1 != null &&
+          lte(rs(col)._1, key) && lte(key, rs(col)._2) => f }.toSet
     def same(pushable: String, unpushable: String): Set[String] = {
       val q = "SELECT id, s, d FROM g2.db.ptl WHERE "
       val pushed = spark.sql(q + pushable)
@@ -3528,27 +3532,31 @@ class CatalogV2Spec extends AnyFunSuite {
       val scanned = same(s"id = $k", s"id + 0 = $k")
       val expected = covering(0, k) { (a, b) =>
         a.asInstanceOf[Long] <= b.asInstanceOf[Long] }
-      assert(scanned == expected, s"id = $k: $scanned vs $expected")
+      assert(scanned == expected && !scanned.contains(nullFile),
+        s"id = $k: $scanned vs $expected")
       if (k >= 0 && k < 240)
         assert(scanned.size <= 2 && scanned.size < live.size, s"id = $k")
     }
     Seq("s0007", "s0123", "s0239", "zzz", "s").foreach { v =>
       val scanned = same(s"s = '$v'", s"concat(s, '') = '$v'")
       assert(scanned == covering(1, v) { (a, b) =>
-        a.toString <= b.toString }, v)
+        a.toString <= b.toString } && !scanned.contains(nullFile), v)
     }
     Seq("2024-01-01", "2024-03-15", "2030-06-01", "1999-12-31").foreach { v =>
       val scanned = same(s"d = DATE'$v'", s"date_add(d, 0) = DATE'$v'")
       val day = java.sql.Date.valueOf(v)
       assert(scanned == covering(2, day) { (a, b) =>
         !a.asInstanceOf[java.sql.Date].after(b.asInstanceOf[java.sql.Date])
-      }, v)
+      } && !scanned.contains(nullFile), v)
     }
     // a NULL key matches nothing; IS NULL keeps only files holding NULLs
     assert(spark.sql("SELECT id FROM g2.db.ptl WHERE id = NULL").collect()
       .isEmpty)
     val nullFiles = same("id IS NULL", "id + 0 IS NULL")
-    assert(nullFiles.size == 1, nullFiles)
+    assert(nullFiles == Set(nullFile), nullFiles)
+    assert(same("s = 's0007' OR s IS NOT NULL",
+      "concat(s, '') = 's0007' OR concat(s, '') IS NOT NULL").size ==
+      live.size - 2) // both files whose s is all NULL leave
     same("s IS NULL AND d IS NOT NULL", "concat(s, '') IS NULL AND " +
       "date_add(d, 0) IS NOT NULL")
   }

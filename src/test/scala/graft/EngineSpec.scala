@@ -456,17 +456,29 @@ class EngineSpec extends AnyFunSuite {
     * listener bus is async but FIFO: a uniquely-described marker job is
     * run after `body`, and once its start event is visible every event
     * from `body` has been delivered too. */
-  private def jobCallSitesDuring(body: => Unit): Seq[String] = {
+  private def jobCallSitesDuring(body: => Unit): Seq[String] =
+    jobsDuring(body)._1.map(_._1)
+
+  /** The jobs `body` started, by listener — (call site, description)
+    * each — and the number of tasks they ran. A marker job flushes the
+    * listener bus; its own job and tasks are not counted. */
+  private def jobsDuring(body: => Unit): (Seq[(String, String)], Int) = {
     import scala.jdk.CollectionConverters._
     val spark = TestSpark.spark
     val sc = spark.sparkContext
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[
+      (String, String, Seq[Int])]()
+    val taskStages = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         seen.add((
           Option(js.properties.getProperty("callSite.short")).getOrElse(""),
-          Option(js.properties.getProperty("spark.job.description")).getOrElse("")))
+          Option(js.properties.getProperty("spark.job.description")).getOrElse(""),
+          js.stageIds))
+      override def onTaskStart(
+          ts: org.apache.spark.scheduler.SparkListenerTaskStart): Unit =
+        taskStages.add(ts.stageId)
     }
     sc.addSparkListener(listener)
     try {
@@ -476,7 +488,10 @@ class EngineSpec extends AnyFunSuite {
       val deadline = System.currentTimeMillis() + 30000
       while (!seen.asScala.exists(_._2 == "graft-bus-marker") &&
         System.currentTimeMillis() < deadline) Thread.sleep(10)
-      seen.asScala.toSeq.filterNot(_._2 == "graft-bus-marker").map(_._1)
+      val (marker, real) = seen.asScala.toSeq.partition(_._2 == "graft-bus-marker")
+      val markerStages = marker.flatMap(_._3).toSet
+      (real.map(j => (j._1, j._2)),
+        taskStages.asScala.count(s => !markerStages.contains(s)))
     } finally sc.removeSparkListener(listener)
   }
 
@@ -1233,6 +1248,144 @@ class EngineSpec extends AnyFunSuite {
         .filter(_.getFileName.toString.endsWith(".tsv")).maxBy(_.toString)
       java.nio.file.Files.delete(newest)
       scanned("sf.db.r", 3L)
+    } finally engine.closeSession(t)
+  }
+
+  /** Rows of `sql` in an engine session, with the jobs and tasks the
+    * statement started and whether its plan holds an Exchange. */
+  private def runCounted(t: String, sql: String)
+      : (Seq[String], Int, Int, Boolean, Seq[String]) = {
+    var rows = Seq.empty[String]
+    val (jobs, tasks) = jobsDuring {
+      rows = engine.executeQuery(t, sql)._2.map(_.toString).toSeq
+    }
+    val plan = engine.executeQuery(t, s"EXPLAIN $sql")._2
+      .map(_.getString(0)).mkString("\n")
+    (rows, jobs.size, tasks, plan.contains("Exchange"), jobs.map(_._2))
+  }
+
+  private val groupBySql = "SELECT k, count(*) AS n, sum(v) AS s " +
+    "FROM %s GROUP BY k ORDER BY k"
+
+  /** What [[groupBySql]] returns over `id` in [0, n) with k = id % 7. */
+  private def groupByExpected(n: Long): Seq[String] =
+    (0L until n).groupBy(_ % 7).toSeq.sortBy(_._1).map { case (k, ids) =>
+      org.apache.spark.sql.Row(k, ids.size.toLong, ids.sum).toString
+    }
+
+  test("a GROUP BY … ORDER BY and a VERSION AS OF aggregate over a small " +
+      "recorded table run as one task in one job, with no Exchange") {
+    val t = metaSession("one")
+    def ddl(sql: String): Unit = engine.executeUpdate(t, sql)
+    try {
+      ddl("CREATE NAMESPACE one.db")
+      ddl("CREATE TABLE one.db.g (k BIGINT, v BIGINT)")
+      (0 until 12).foreach { i =>
+        ddl(s"INSERT INTO one.db.g SELECT id % 7, id FROM " +
+          s"range(${i * 10}, ${i * 10 + 10}, 1, 1)")
+      }
+      assert(graft.catalog.Snapshots.latest(warehouse(t, "one")
+        .resolve("db/g")).get.dataFiles.size == 12)
+      val (rows, jobs, tasks, exchange, _) =
+        runCounted(t, groupBySql.format("one.db.g"))
+      assert(rows == groupByExpected(120))
+      assert(jobs == 1 && tasks == 1 && !exchange, s"$jobs jobs, $tasks tasks")
+      // v13 holds the first 12 inserts' 120 rows; a later insert is not read
+      ddl("INSERT INTO one.db.g VALUES (0, 1000)")
+      val (vrows, vjobs, vtasks, vexchange, _) = runCounted(t,
+        "SELECT count(v) AS n, sum(v) AS s FROM one.db.g VERSION AS OF 13")
+      assert(vrows == Seq(org.apache.spark.sql.Row(120L, 7140L).toString))
+      assert(vjobs == 1 && vtasks == 1 && !vexchange, s"$vjobs jobs, $vtasks tasks")
+    } finally engine.closeSession(t)
+  }
+
+  test("a scan keeps its multi-task plan, with the same answer, when a " +
+      "file has no stats record, when maxPartitionBytes is lowered, when " +
+      "its files hold more than openCostInBytes and over 40 files, which " +
+      "it plans without a listing job") {
+    val t = metaSession("many")
+    def ddl(sql: String): Unit = engine.executeUpdate(t, sql)
+    def spread(table: String, n: Long): Seq[String] = {
+      val (rows, jobs, tasks, exchange, descs) =
+        runCounted(t, groupBySql.format(table))
+      assert(rows == groupByExpected(n), table)
+      assert(exchange && tasks > 1, s"$table: $jobs jobs, $tasks tasks")
+      descs
+    }
+    try {
+      ddl("CREATE NAMESPACE many.db")
+      ddl("CREATE TABLE many.db.r (k BIGINT, v BIGINT)")
+      ddl("INSERT INTO many.db.r SELECT id % 7, id FROM range(0, 60, 1, 2)")
+      ddl("INSERT INTO many.db.r SELECT id % 7, id FROM range(60, 120, 1, 2)")
+      // the newest commit's record is gone: its files' sizes are unknown
+      val statsDir = warehouse(t, "many").resolve("db/r/_graft_filestats")
+      val newest = scala.util.Using.resource(
+        java.nio.file.Files.list(statsDir))(_.iterator().asScala.toSeq)
+        .filter(_.getFileName.toString.endsWith(".tsv")).maxBy(_.toString)
+      java.nio.file.Files.delete(newest)
+      spread("many.db.r", 120)
+
+      ddl("CREATE TABLE many.db.s (k BIGINT, v BIGINT)")
+      ddl("INSERT INTO many.db.s SELECT id % 7, id FROM range(0, 120, 1, 4)")
+      ddl("SET spark.sql.files.maxPartitionBytes=4096")
+      try spread("many.db.s", 120)
+      finally ddl("RESET spark.sql.files.maxPartitionBytes")
+      val (_, _, tasks, exchange, _) = runCounted(t, groupBySql.format("many.db.s"))
+      assert(tasks == 1 && !exchange, "default maxPartitionBytes: one split")
+
+      ddl("CREATE TABLE many.db.p (k BIGINT, v BIGINT, pad STRING)")
+      // 64 hex chars per row barely compress: ~6 MB in 4 files, which
+      // would pack into one split but hold more than Spark's smallest one
+      ddl("INSERT INTO many.db.p SELECT id % 7, id, " +
+        "sha2(CAST(id AS STRING), 256) FROM range(0, 100000, 1, 4)")
+      val pDir = warehouse(t, "many").resolve("db/p")
+      val pFiles = graft.catalog.Snapshots.latest(pDir).get.dataFiles
+      val pStats = graft.catalog.FileStatsCache.load(pDir)
+      assert(pFiles.forall(pStats.contains), "every file has a record")
+      val bytes = pFiles.map(pStats(_).bytes).sum
+      val conf = engine.session(t).sessionState.conf
+      assert(bytes > conf.filesOpenCostInBytes &&
+        bytes + conf.filesOpenCostInBytes * pFiles.size <=
+          conf.filesMaxPartitionBytes, s"$bytes bytes in ${pFiles.size} files")
+      spread("many.db.p", 100000)
+
+      ddl("CREATE TABLE many.db.w (k BIGINT, v BIGINT)")
+      ddl("INSERT INTO many.db.w SELECT id % 7, id FROM range(0, 400, 1, 40)")
+      assert(graft.catalog.Snapshots.latest(warehouse(t, "many")
+        .resolve("db/w")).get.dataFiles.size == 40)
+      val descs = spread("many.db.w", 400)
+      assert(!descs.exists(_.startsWith("Listing leaf files")), descs)
+      // the scan's splits carry each file's real size and mtime
+      val plan = engine.session(t).sql("SELECT * FROM many.db.w")
+        .queryExecution.executedPlan
+      val files = plan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.scan.toBatch.planInputPartitions().toSeq
+      }.flatten.flatMap {
+        case fp: org.apache.spark.sql.execution.datasources.FilePartition =>
+          fp.files.toSeq
+      }
+      assert(files.size == 40)
+      files.foreach { f =>
+        val local = new java.io.File(f.toPath.toUri)
+        assert(f.fileSize == local.length() &&
+          f.modificationTime == local.lastModified(), f)
+      }
+    } finally engine.closeSession(t)
+  }
+
+  test("an INSERT … VALUES of 40 rows commits one data file") {
+    val t = metaSession("ins")
+    def ddl(sql: String): Unit = engine.executeUpdate(t, sql)
+    try {
+      ddl("CREATE NAMESPACE ins.db")
+      ddl("CREATE TABLE ins.db.v (id BIGINT, s STRING)")
+      ddl("INSERT INTO ins.db.v VALUES " +
+        (0 until 40).map(i => s"($i, 's$i')").mkString(", "))
+      val dir = warehouse(t, "ins").resolve("db/v")
+      assert(graft.catalog.Snapshots.latest(dir).get.dataFiles.size == 1)
+      assert(engine.executeQuery(t, "SELECT sum(id) AS s FROM ins.db.v")
+        ._2.head.getLong(0) == 780L)
     } finally engine.closeSession(t)
   }
 }

@@ -252,10 +252,36 @@ class FileStatsCacheSpec extends AnyFunSuite {
     // Spark semantics: -0.0 == 0.0 — a 0.0 probe must keep the file
     assert(ts.mayMatchAll(fHello, Seq(EqualTo("x", 0.0d)), openFooter = true))
     assert(!ts.mayMatchAll(fHello, Seq(EqualTo("x", 1.0d)), openFooter = true))
-    // all-null column: IsNull keeps, equality prunes nothing (no min/max
-    // stats → conservative keep, same as the footer path)
+    // all-null column: IsNull keeps; equality, ranges and IsNotNull
+    // prune (its null count equals the row count), same as the footer
     assert(ts.mayMatchAll(fHello, Seq(IsNull("allnull")), openFooter = true))
     assert(!ts.mayMatchAll(fHello, Seq(IsNull("x")), openFooter = true))
+    val valueFilters = Seq(EqualTo("allnull", "a"),
+      GreaterThan("allnull", "a"), In("allnull", Array[Any]("a")),
+      IsNotNull("allnull"))
+    for (f <- valueFilters)
+      assert(!ts.mayMatchAll(fHello, Seq(f), openFooter = true), f)
     assert(ParquetStats.footerOpens.get() == before, "all served from cache")
+    for (f <- valueFilters)
+      assert(!ParquetStats.mayMatchAll(dir.resolve(fHello).toString, Seq(f),
+        conf), f)
+  }
+
+  test("the publish-time footer pass fails on an unreadable part and " +
+      "deletes nothing") {
+    spark.sql("CREATE TABLE fsc.db.trunc (k INT)")
+    spark.sql("INSERT INTO fsc.db.trunc VALUES (1), (2)")
+    val valid = tdir("trunc").resolve(dataFiles("trunc").head)
+    val staged = Files.createTempDirectory("graft_staged")
+    val good = Files.copy(valid, staged.resolve("part-00000.parquet"))
+    val bytes = Files.readAllBytes(valid)
+    val cut = Files.write(staged.resolve("part-00001.parquet"),
+      bytes.take(bytes.length / 2))
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(FileStatsCache.readStaged(Seq(good), conf).map(_.rows) == Seq(2L))
+    val e = intercept[java.io.IOException](
+      FileStatsCache.readStaged(Seq(good, cut), conf))
+    assert(e.getMessage.contains("part-00001"), e.getMessage)
+    assert(Files.exists(good) && Files.exists(cut))
   }
 }
